@@ -178,7 +178,9 @@ class Service:
         """Parse/analyze the query so syntax/semantic errors surface
         BEFORE any response byte is written. The destination's plan
         cache keeps the analyzed plan, so the serializer that follows
-        re-uses this work rather than repeating it. Warehouse DML
+        re-uses this work rather than repeating it (except for texts
+        the cache refuses, which read the clock or draw random
+        values: those analyze twice). Warehouse DML
         statements validate WITHOUT executing (query_df would run the
         side effect; the one real execution happens when the
         serializer calls it)."""

@@ -91,33 +91,6 @@ def load(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def warm_cache(spark: SparkSession, sf_dir: str, parts: int | None = None) -> None:
-    """Pin the star schema in the in-memory columnar cache, repartitioned
-    for parallel scans.
-
-    The testdata parquet files are written as a SINGLE row group each, so
-    a plain ``spark.read.parquet`` scan is one task no matter what
-    ``maxPartitionBytes`` says — parquet can't split inside a row group.
-    Re-partitioning before caching restores scan parallelism for the
-    whole warm session (the cluster-scale analogue is the ingest path
-    writing many row groups per file; see sink.py).
-
-    Tiny dims (< 1000 rows) stay single-partition: fanning 5 rows over
-    32 tasks only adds scheduler overhead and they broadcast anyway.
-    """
-    if parts is None:
-        import os
-
-        parts = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    tabs = load(spark, sf_dir)
-    for name, df in tabs.items():
-        n = parts if df.count() >= 1000 else 1
-        rdf = df.repartition(n)
-        rdf.cache().count()
-        rdf.createOrReplaceTempView(name)
-        tabs[name] = rdf
-
-
 # ---- deterministic numeric helpers ------------------------------------
 
 

@@ -179,13 +179,3 @@ class FileSystemSink:
         for t in self._threads:
             t.join(timeout=5)
         self.flush()
-
-
-class MemorySink:
-    """Reference's trivial in-memory variant (memory/memory.go)."""
-
-    def __init__(self):
-        self.data: dict[tuple[str, str], list[bytes]] = {}
-
-    def write_data(self, database: str, table: str, data: bytes) -> None:
-        self.data.setdefault((database, table), []).append(data)

@@ -2,7 +2,7 @@
 stream — capability headroom beyond the reference (which has no
 stream processing; SURVEY §2 "Streaming-only operators: none").
 
-Tumbling / sliding / session windows with late-data handling; all
+Tumbling and session windows with late-data handling; all
 built-in Structured Streaming operators, no custom state. Outputs are
 append-mode with watermark-driven finalization, so at scale state
 size is bounded by (watermark horizon × key cardinality).
@@ -56,17 +56,6 @@ def tumbling_counts(events: DataFrame, width: str = "1 hour", watermark: str = "
             "n",
             "total_value",
         )
-    )
-
-
-def sliding_avg(
-    events: DataFrame, width: str = "1 hour", slide: str = "15 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"))
-        .agg(F.avg("value").alias("avg_value"), F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "avg_value", "n")
     )
 
 

@@ -3,6 +3,7 @@ modeled on the reference's only e2e test, clickhouse_test.go:87-102)."""
 
 from __future__ import annotations
 
+import csv
 import io
 import json
 
@@ -164,6 +165,96 @@ def test_plan_cache_reuse_and_invalidation(dest):
     df3 = dest.query_df(q)
     assert df3 is not df1  # write invalidated the cached plan
     assert df3.collect()[0]["n"] == 2
+
+
+def _serve(dest, fmt, sql):
+    buf = io.StringIO()
+    getattr(dest, f"query_{fmt}")(sql, buf)
+    return buf.getvalue()
+
+
+def _values(fmt, body, col):
+    """Column ``col`` of every row of a json/ndjson/csv response."""
+    if fmt == "json":
+        return [r[col] for r in json.loads(body)]
+    if fmt == "ndjson":
+        return [json.loads(line)[col] for line in body.splitlines()]
+    rows = list(csv.DictReader(io.StringIO(body)))
+    return [r[col] for r in rows]
+
+
+@pytest.mark.parametrize(
+    "sql",
+    ["SELECT rand() AS v", "SELECT uuid() AS v", "SELECT shuffle(sequence(1, 50)) AS v"],
+)
+def test_random_texts_are_never_cached(dest, sql):
+    """A reused plan would repeat its first draw: the analyzer pins the
+    seed of rand()/uuid()/shuffle(), so every request plans afresh."""
+    assert dest.query_df(sql) is not dest.query_df(sql)
+    for fmt in ("json", "ndjson", "csv"):
+        first = _values(fmt, _serve(dest, fmt, sql), "v")
+        second = _values(fmt, _serve(dest, fmt, sql), "v")
+        assert first != second, fmt
+
+
+def test_clock_texts_are_never_cached(dest):
+    """now()/current_timestamp() fold to a literal once per plan, so a
+    cached plan would serve the first request's time forever."""
+    import time
+
+    _insert(dest, "events", ['{"__row_id": 1, "v": 1}'])
+    sql = "SELECT current_timestamp() AS t, count(*) AS n FROM events"
+    assert dest.query_df(sql) is not dest.query_df(sql)
+    _serve(dest, "json", "CREATE VIEW stamped AS SELECT v, now() AS t FROM events")
+    for q in ("SELECT now() AS t", "SELECT current_date AS t",
+              "SELECT unix_timestamp() AS t", "SELECT t FROM stamped",
+              "SELECT v FROM events WHERE v IN (SELECT v FROM stamped)"):
+        assert dest.query_df(q) is not dest.query_df(q), q
+    for fmt in ("json", "ndjson", "csv"):
+        first = _serve(dest, fmt, sql)
+        time.sleep(0.05)
+        second = _serve(dest, fmt, sql)
+        assert _values(fmt, first, "t") != _values(fmt, second, "t"), fmt
+        assert [str(n) for n in _values(fmt, second, "n")] == ["1"]
+    # a timestamp given as a literal does not read the clock
+    fixed = "SELECT unix_timestamp('2020-01-01 00:00:00') AS t"
+    assert dest.query_df(fixed) is dest.query_df(fixed)
+
+
+def test_warm_request_reuses_planned_projection(dest):
+    """A cache hit serves the same bytes as the cold request in every
+    format, and a warm JSON request re-runs only the result stage: one
+    Spark job. A write still makes the next request see new rows."""
+    lines = [
+        json.dumps({"__row_id": i, "k": i % 3, "a b": None if i % 3 == 2 else i})
+        for i in range(1, 31)
+    ]
+    _insert(dest, "wr", lines)
+    sql = (
+        "SELECT k, count(*) AS n, sum(`a b`) AS `s``x` FROM wr"
+        " GROUP BY k ORDER BY k"
+    )
+    cold = {fmt: _serve(dest, fmt, sql) for fmt in ("json", "ndjson", "csv")}
+    assert json.loads(cold["json"])[2] == {"k": 2, "n": 10, "s`x": None}
+    assert cold["csv"].splitlines()[0] == "k,n,s`x"
+    assert cold["csv"].splitlines()[3] == "2,10,null"
+    for fmt in ("json", "ndjson", "csv"):
+        assert _serve(dest, fmt, sql) == cold[fmt], fmt
+
+    sc = dest.spark.sparkContext
+    group = "warm-json-request"
+    sc.setJobGroup(group, group)
+    try:
+        assert _serve(dest, "json", sql) == cold["json"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    _insert(dest, "wr", ['{"__row_id": 31, "k": 7, "a b": 5}'])
+    rows = json.loads(_serve(dest, "json", sql))
+    assert rows[-1] == {"k": 7, "n": 1, "s`x": 5}
+    assert _values("csv", _serve(dest, "csv", sql), "k")[-1] == "7"
 
 
 # ------------------------------------------------------------ compaction

@@ -74,6 +74,45 @@ def test_duckdb_dialect_text_through_http(app):
     assert [(r["g"], r["v"]) for r in json.loads(body)] == [(1, 10), (2, 30)]
 
 
+def test_concurrent_requests_share_cached_plan(app):
+    """Four clients repeat one cached text, so every request after the
+    first re-runs the same planned DataFrame from its own thread: every
+    body is identical and none fails."""
+    import sys
+    import threading
+    import urllib.parse
+
+    rows = [{"g": i % 4, "v": None if i % 5 == 0 else i} for i in range(40)]
+    code, _ = _req(app, "POST", "/api/data/insert/conc?api_key=local", rows)
+    assert code == 200
+    app.drain()
+    sql = "select g, count(*) as n, sum(v) as s from conc group by g order by g"
+    path = "/api/data/query?api_key=local&query=" + urllib.parse.quote(sql)
+    code, expected = _req(app, "GET", path)
+    assert code == 200 and len(json.loads(expected)) == 4
+
+    results = []
+
+    def client():
+        for _ in range(20):
+            results.append(_req(app, "GET", path))
+
+    threads = [threading.Thread(target=client) for _ in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(results) == 80
+    assert all(code < 500 for code, _ in results)
+    assert {body for _, body in results} == {expected}
+
+
 def test_insert_query_roundtrip_and_evolution(app):
     code, body = _req(
         app, "POST", "/api/data/insert/evolve?api_key=local", {"msg": "hello world"}
