@@ -226,6 +226,7 @@ remaining (type-width / printed-type / locale-table) list:
 
 from __future__ import annotations
 
+import logging
 import re
 
 
@@ -233,6 +234,9 @@ class DialectError(ValueError):
     """A DuckDB construct this layer refuses to bridge silently,
     raised with the exact replacement so the saved query is a
     one-token edit away from running."""
+
+
+_LOG = logging.getLogger(__name__)
 
 
 # --------------------------------------------------------------- masking
@@ -3732,9 +3736,9 @@ def _sql_literal(v, typ: str) -> str:
     if isinstance(v, int):
         return f"CAST({v} AS {typ})"
     if isinstance(v, float):
-        if v != v or v in (float("inf"), float("-inf")):
-            raise ValueError("non-finite float literal")
-        return f"CAST({v!r} AS {typ})"
+        # a bare 1.5 parses as DECIMAL (CAST(-0.0 AS double) is 0.0);
+        # the string cast parses repr exactly, nan/inf/-0.0 included
+        return f"CAST('{v!r}' AS {typ})"
     if isinstance(v, str):
         out = []
         for ch in v:
@@ -3742,28 +3746,37 @@ def _sql_literal(v, typ: str) -> str:
                 out.append("\\\\")
             elif ch == "'":
                 out.append("\\'")
-            elif ord(ch) < 0x20 or ord(ch) == 0x7F:
+            elif ord(ch) < 0x20 or ord(ch) == 0x7F or ch == "$":
+                # '$' too: spark.sql substitutes ${...} before parsing
                 out.append(f"\\u{ord(ch):04X}")
             else:
                 out.append(ch)
         return f"CAST('{''.join(out)}' AS {typ})"
+    if isinstance(v, list) and typ.lower().startswith("array<"):
+        elem = typ[typ.index("<") + 1:typ.rindex(">")]
+        items = ", ".join(_sql_literal(x, elem) for x in v)
+        return f"CAST(ARRAY({items}) AS {typ})"
     raise ValueError(f"no literal rendering for {type(v).__name__}")
 
 
 def local_result_df(spark, rows, ddl: str):
-    """Driver-built small result (DML count, DESCRIBE/SHOW shape,
-    compaction summary) as a TRUE LocalRelation via a VALUES
-    statement.  createDataFrame yields a LogicalRDD over a PythonRDD,
-    so every action on it — even the serializers' direct collect()
-    fast path — launches a defaultParallelism-task Python-worker job
-    (~0.5 s per one-row result in local[32], measured r14).  A VALUES
-    LocalRelation plans as LocalTableScan, whose executeCollect
-    returns rows with NO job, and the serializers' to_json projection
-    constant-folds into it too (ConvertToLocalRelation) — ~6 ms
-    end to end, measured r14.  Empty row sets use LIMIT 0, which
-    OptimizeLimitZero folds to an empty LocalRelation.  Values the
-    literal renderer doesn't cover fall back to createDataFrame
-    (correct, just slower).  Either way the result carries
+    """Driver-built rows (DML counts, DESCRIBE/SHOW shapes, compaction
+    summaries, operator query frames, registry fixtures) as a VALUES
+    LocalRelation with the column types of ``createDataFrame(rows,
+    ddl)``.  It plans as LocalTableScan: collecting it, or broadcasting
+    it into a join, submits no job, where a createDataFrame frame is a
+    PythonRDD that launches a Python-worker job on every action.
+
+    Vocabulary, each value CAST to its DDL column type: NULL, bool,
+    int, str (backslash, quote, control characters and ``$`` escaped)
+    and float, plus lists of those for ``array<…>`` columns (NULL
+    elements and empty lists included).  Every float renders as
+    ``CAST('<repr>' AS <type>)``, which is bit-exact for finite values,
+    -0.0, subnormals, NaN and ±inf.  Empty row sets use LIMIT 0, which
+    folds to an empty LocalRelation.  A value outside the vocabulary
+    (a ``datetime.date``, say) falls back to createDataFrame — same
+    rows, one job per action — and logs a WARNING naming the value
+    type and the DDL.  Either way the result carries
     ``_sd_local_result`` for engine._fetch_rows."""
     cols = _split_ddl_cols(ddl)
     try:
@@ -3782,7 +3795,12 @@ def local_result_df(spark, rows, ddl: str):
                 for n, t in cols
             )
             df = spark.sql(f"SELECT {body} LIMIT 0")
-    except Exception:
+    except Exception as err:
+        reason = (str(err).splitlines() or [type(err).__name__])[0]
+        _LOG.warning(
+            "local_result_df: createDataFrame fallback for %r: %s",
+            ddl, reason,
+        )
         df = spark.createDataFrame(rows, ddl)
     df._sd_local_result = True
     return df

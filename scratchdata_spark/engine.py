@@ -381,7 +381,6 @@ class SparkDestination(DataFrameSerializers, Destination):
         spark: SparkSession,
         catalog: TableCatalog,
         database: str = "default",
-        duckdb_compat: bool = True,
         export_root: str | None = None,
         retain_generations: int = 2,
     ):
@@ -405,33 +404,31 @@ class SparkDestination(DataFrameSerializers, Destination):
         # them run unchanged (dialect.py — alias functions are inlined
         # SQL UDFs, and query_df rewrites only AFTER stock Spark
         # rejects the text, so valid Spark SQL never crosses it).
-        self.duckdb_compat = duckdb_compat
-        if duckdb_compat:
-            from scratchdata_spark.dialect import register_compat_functions
+        from scratchdata_spark.dialect import register_compat_functions
 
-            # DuckDB (and the standard) read "x" as an IDENTIFIER;
-            # stock Spark reads it as a string literal, so a saved
-            # query touching a quoted column silently projected the
-            # literal text instead of the column (r12 DML probe
-            # catch).  Session-scoped: destinations own their session
-            # (the service calls newSession per destination), and the
-            # reference dialect never spells STRING literals with
-            # double quotes — those stay '…' on both engines.
-            spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-            # Backslash parity is handled by TEXT preprocessing, not
-            # a parser flag: DuckDB literals don't process backslash
-            # escapes ('\d' is backslash-d) where stock Spark's
-            # parser eats them ('\d' → 'd') — every regex class in a
-            # saved query silently matched the wrong thing (r12 probe
-            # wave, the largest silent-divergence class found to
-            # date).  escapedStringLiterals=true would fix that but
-            # BREAKS quote-doubling ('a''b' stops collapsing —
-            # probed), DuckDB's one escape; Spark offers no config
-            # with both semantics.  So query_df/validate_statement
-            # double the backslashes inside '…' literals instead
-            # (dialect.escape_backslashes_for_spark) and the default
-            # parser collapses them back — both paritys hold.
-            register_compat_functions(spark)
+        # DuckDB (and the standard) read "x" as an IDENTIFIER;
+        # stock Spark reads it as a string literal, so a saved
+        # query touching a quoted column silently projected the
+        # literal text instead of the column (r12 DML probe
+        # catch).  Session-scoped: destinations own their session
+        # (the service calls newSession per destination), and the
+        # reference dialect never spells STRING literals with
+        # double quotes — those stay '…' on both engines.
+        spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
+        # Backslash parity is handled by TEXT preprocessing, not
+        # a parser flag: DuckDB literals don't process backslash
+        # escapes ('\d' is backslash-d) where stock Spark's
+        # parser eats them ('\d' → 'd') — every regex class in a
+        # saved query silently matched the wrong thing (r12 probe
+        # wave, the largest silent-divergence class found to
+        # date).  escapedStringLiterals=true would fix that but
+        # BREAKS quote-doubling ('a''b' stops collapsing —
+        # probed), DuckDB's one escape; Spark offers no config
+        # with both semantics.  So query_df/validate_statement
+        # double the backslashes inside '…' literals instead
+        # (dialect.escape_backslashes_for_spark) and the default
+        # parser collapses them back — both paritys hold.
+        register_compat_functions(spark)
 
     # ------------------------------------------------------------- read
     def table_df(self, table: str) -> DataFrame:
@@ -628,31 +625,28 @@ class SparkDestination(DataFrameSerializers, Destination):
         try:
             return self.spark.sql(sql)
         except Exception:
-            if not self.duckdb_compat:
-                raise
             from scratchdata_spark.dialect import rewrite
 
             return self.spark.sql(rewrite(sql))
 
     def query_df(self, query: str) -> DataFrame:
         query = trim_query(query)
-        if self.duckdb_compat:
-            # pre-parse bridges (see __init__): the r12 literal-
-            # semantics pass ('\d' must stay backslash-d through
-            # Spark's escape-processing parser) plus the r13 call-
-            # semantics pass (2-arg trim/regexp_extract, ^, 1-arg
-            # log, 3-arg regexp_replace — valid in both dialects,
-            # different meanings; DuckDB's wins) — applied ONCE at
-            # this public boundary so every downstream consumer
-            # (stock parse, dialect fallback, warehouse DML fragments
-            # via F.expr) sees one consistent text.  Re-entrant
-            # internal calls (script statements, embedded INSERT/CTAS
-            # sources) use _query_df_prepared: a second pass would
-            # double the literal doubling and re-bridge replacement
-            # strings (r12/r13 regression tests).
-            from scratchdata_spark.dialect import prepare_query_text
+        # pre-parse bridges (see __init__): the r12 literal-
+        # semantics pass ('\d' must stay backslash-d through
+        # Spark's escape-processing parser) plus the r13 call-
+        # semantics pass (2-arg trim/regexp_extract, ^, 1-arg
+        # log, 3-arg regexp_replace — valid in both dialects,
+        # different meanings; DuckDB's wins) — applied ONCE at
+        # this public boundary so every downstream consumer
+        # (stock parse, dialect fallback, warehouse DML fragments
+        # via F.expr) sees one consistent text.  Re-entrant
+        # internal calls (script statements, embedded INSERT/CTAS
+        # sources) use _query_df_prepared: a second pass would
+        # double the literal doubling and re-bridge replacement
+        # strings (r12/r13 regression tests).
+        from scratchdata_spark.dialect import prepare_query_text
 
-            query = prepare_query_text(query)
+        query = prepare_query_text(query)
         return self._query_df_prepared(query)
 
     def _query_df_prepared(self, query: str) -> DataFrame:
@@ -686,20 +680,19 @@ class SparkDestination(DataFrameSerializers, Destination):
             # engine-specific surface, deliberately outside the
             # DuckDB dialect fallback (DuckDB has no equivalent).
             sql_text = self._rewrite_table_at(query)
-            if self.duckdb_compat:
-                # DESCRIBE / SHOW TABLES parse in stock Spark with
-                # SPARK's catalog shapes — the speaks-DuckDB contract
-                # intercepts them first (dialect.describe_form_df)
-                from scratchdata_spark.dialect import describe_form_df
+            # DESCRIBE / SHOW TABLES parse in stock Spark with
+            # SPARK's catalog shapes — the speaks-DuckDB contract
+            # intercepts them first (dialect.describe_form_df)
+            from scratchdata_spark.dialect import describe_form_df
 
-                shaped = describe_form_df(
-                    self.spark,
-                    sql_text,
-                    tables=self._catalog_names,
-                    run_sql=self._query_df_prepared,
-                )
-                if shaped is not None:
-                    return shaped
+            shaped = describe_form_df(
+                self.spark,
+                sql_text,
+                tables=self._catalog_names,
+                run_sql=self._query_df_prepared,
+            )
+            if shaped is not None:
+                return shaped
             try:
                 return self.spark.sql(sql_text)
             except Exception as stock_err:
@@ -707,8 +700,6 @@ class SparkDestination(DataFrameSerializers, Destination):
                 # accepts is never rewritten, so a valid Spark query
                 # can't be corrupted by the DuckDB bridging (every
                 # bridged token is a parse/analysis error here).
-                if not self.duckdb_compat:
-                    raise
                 from scratchdata_spark.dialect import (
                     expand_columns_macro,
                     rewrite,
@@ -756,12 +747,11 @@ class SparkDestination(DataFrameSerializers, Destination):
         from scratchdata_spark import warehouse_dml
 
         query = trim_query(query)
-        if self.duckdb_compat:
-            # same pre-parse bridges as query_df — validation must
-            # analyze exactly the text execution will see
-            from scratchdata_spark.dialect import prepare_query_text
+        # same pre-parse bridges as query_df — validation must
+        # analyze exactly the text execution will see
+        from scratchdata_spark.dialect import prepare_query_text
 
-            query = prepare_query_text(query)
+        query = prepare_query_text(query)
         stmt_text = warehouse_dml.normalize(query)
         script = warehouse_dml.split_script(stmt_text)
         if len(script) > 1:

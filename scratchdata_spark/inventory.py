@@ -1382,13 +1382,16 @@ def b_window_frame_rows(spark, sf_dir):
 # ======================================================================
 
 _MRG_TABLES = ("lineitem", "orders", "customer", "supplier", "nation", "region")
-# Only the PROBE side needs the split layout: the q01/q03/q05 plans
-# broadcast every other table, and the scaling signal lives in the
-# big-table scan's task count.  Splitting the broadcast sides too
-# costs their build jobs a many-small-files scan for no signal (at
+# Only the PROBE side (lineitem) needs the split layout: the scaling
+# signal lives in the big-table scan's task count.  The other tables
+# are build sides.  q05's bench text hints BROADCAST only for
+# supplier/nation/region; customer_mrg and orders_mrg carry no hint,
+# so the q03/q05 variants rely on AQE (or the size threshold with AQE
+# off) choosing the broadcast for them.  Splitting the build sides
+# too costs their scans many small files for no signal (at
 # synthesized sf1 the 64-file dimension scans made q03_mrg ~50%
-# SLOWER than q03 — measured r14); they register as straight views
-# over the source parquet instead.
+# SLOWER than q03), so they register as straight views over the
+# source parquet instead.
 _MRG_SPLIT = ("lineitem",)
 _MRG_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from scratchdata_spark.dialect import local_result_df
 from scratchdata_spark.inventory import load, q
 from scratchdata_spark.operators import ensure_parallelism
 from scratchdata_spark.operators import text as T
@@ -3308,7 +3309,7 @@ def x_bpe_token_counts(spark, sf_dir):
     from scratchdata_spark.operators.bpe import bpe_token_counts, bpe_train
 
     expected_merges, _ = _bpe_fixture()
-    df = _fixture_values_df(
+    df = local_result_df(
         spark,
         [(i, t) for i, t in enumerate(_BPE_TEXTS)],
         "doc_id long, text string",
@@ -3661,37 +3662,6 @@ def _chain_fixture_dir() -> str:
 # idiom) and the engine-shared [^a-z0-9]+ tokenizer.
 
 _QC_BUCKETS = 1024
-def _fixture_values_df(spark, rows, ddl: str):
-    """Small literal fixture (ints/strings) as a VALUES LocalRelation
-    with the exact schema of ``createDataFrame(rows, ddl)``.  A
-    createDataFrame fixture plans as a PythonRDD, so every action a
-    training pass runs over it at plan-BUILD time launches a
-    defaultParallelism Python-worker job (~0.1–0.3 s each in
-    local[32], measured r14); a VALUES relation is a LocalTableScan —
-    no Python source job.  Values the renderer doesn't cover fall
-    back to createDataFrame (correct, just slower)."""
-
-    def lit(v, typ):
-        t = typ.strip().lower()
-        if v is None:
-            return f"CAST(NULL AS {t})"
-        if t in ("string",):
-            return "'" + str(v).replace("'", "''") + "'"
-        if t in ("long", "bigint", "int", "integer", "smallint", "tinyint"):
-            return f"CAST({int(v)} AS {t})"
-        raise ValueError(f"unsupported fixture literal type {typ}")
-
-    cols = [c.strip().rsplit(" ", 1) for c in ddl.split(",")]
-    try:
-        vals = ", ".join(
-            "(" + ", ".join(lit(v, t) for v, (_, t) in zip(row, cols)) + ")"
-            for row in rows
-        )
-        names = ", ".join(n for n, _ in cols)
-        return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t({names})")
-    except Exception:  # pragma: no cover - defensive fallback
-        return spark.createDataFrame(rows, ddl)
-
 
 _QC_POS = [
     "the quick brown fox jumps over the lazy dog and then it rests",
@@ -3821,14 +3791,11 @@ def x_quality_classifier(spark, sf_dir):
     )
 
     w_ref, b_ref = _qc_fixture()
-    # VALUES LocalRelation, not createDataFrame: the training pass
-    # runs several actions over this fixture at plan-BUILD time, and
-    # a createDataFrame plans as a PythonRDD whose every action
-    # launches a defaultParallelism Python-worker job (~1 s of build
-    # wall per invocation measured r14; LocalTableScan builds in
-    # ~0.3 s).  Same rows, same schema — the learned weights stay
-    # bit-identical (train_matches still asserts it).
-    fdf = _fixture_values_df(
+    # a LocalRelation, not createDataFrame: the training pass runs
+    # several actions over this fixture at plan-build time, and each
+    # action over a PythonRDD launches a Python-worker job.  Same rows,
+    # same types — train_matches still asserts the learned weights.
+    fdf = local_result_df(
         spark,
         [(i, t, 1) for i, t in enumerate(_QC_POS)]
         + [(100 + i, t, 0) for i, t in enumerate(_QC_NEG)],
@@ -4103,7 +4070,7 @@ def x_crawl_chain(spark, sf_dir):
     )
     admitted = R.filter_robots_disallowed(docs, rules, tier="join")
     w_fix, b_fix = _qc_fixture()
-    target = _fixture_values_df(
+    target = local_result_df(
         spark,
         [(j, _chain_prose(0, j)) for j in (0, 6, 7, 8)],
         "doc_id long, text string",

@@ -68,8 +68,6 @@ brute-force cosine_topk instead.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -468,41 +466,6 @@ def _collect_queries(queries, query_id_col, vec_col, dim):
     return qids, qvecs
 
 
-def _local_query_df(spark, qids, qvecs):
-    """The refine stage's query frame (tens of rows by the broadcast
-    contract) as a VALUES LocalRelation.  createDataFrame here yields
-    a LogicalRDD over a PythonRDD, so building the refine's broadcast
-    launches a defaultParallelism-task Python-worker job — ~0.3 s per
-    execution in local[32] (measured r14, ~half of x_ann_pq_topk's
-    bench line); a VALUES relation plans as LocalTableScan, which
-    broadcasts with no job.  Doubles are rendered through
-    CAST('<repr>' AS DOUBLE): repr round-trips binary64 exactly, so
-    the vectors are bit-identical to the collected ones.  Any
-    rendering surprise falls back to createDataFrame (correct, just
-    slower)."""
-
-    def lit(x):
-        x = float(x)
-        if math.isnan(x):
-            return "CAST('NaN' AS DOUBLE)"
-        if math.isinf(x):
-            return "CAST('%sInfinity' AS DOUBLE)" % ("-" if x < 0 else "")
-        return "CAST('%r' AS DOUBLE)" % x
-
-    try:
-        vals = ", ".join(
-            "(CAST(%d AS BIGINT), ARRAY(%s))"
-            % (int(q), ", ".join(lit(v) for v in vec))
-            for q, vec in zip(qids, qvecs)
-        )
-        return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t(__qid, __qvec)")
-    except Exception:  # pragma: no cover - defensive fallback
-        return spark.createDataFrame(
-            [(int(q), [float(x) for x in v]) for q, v in zip(qids, qvecs)],
-            "__qid long, __qvec array<double>",
-        )
-
-
 def _finalize_topk(
     part, corpus, qids, qvecs, id_col, vec_col, query_id_col, k, kk, rerank
 ):
@@ -514,6 +477,7 @@ def _finalize_topk(
         F.col("__cos").desc(), F.col("neighbor_id")
     )
     if rerank:
+        from scratchdata_spark.dialect import local_result_df
         from scratchdata_spark.operators.similarity import _dot, _norm
 
         shortlist = (
@@ -521,7 +485,13 @@ def _finalize_topk(
             .filter(F.col("__r") <= kk)
             .select("__qid", "neighbor_id")
         )
-        qdf = _local_query_df(corpus.sparkSession, qids, qvecs)
+        # the refine's query frame (tens of rows by the broadcast
+        # contract) as a LocalRelation: it broadcasts with no job
+        qdf = local_result_df(
+            corpus.sparkSession,
+            [(q, [float(x) for x in v]) for q, v in zip(qids, qvecs)],
+            "__qid bigint, __qvec array<double>",
+        )
         cvec = corpus.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("__cvec"),

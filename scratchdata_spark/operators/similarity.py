@@ -27,6 +27,7 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from scratchdata_spark.operators import ensure_parallelism, triangular_pairs
 
@@ -946,7 +947,10 @@ def ivf_topk(
                 ),
             )
         )
-        if top == 1:
+        numeric_cells = isinstance(
+            sims.schema["__cent_id"].dataType, T.NumericType
+        )
+        if top == 1 and numeric_cells:
             # Corpus-side assignment: one best cell per row.  A window
             # here shuffles every (row × centroid) copy — n_centroids
             # copies of each VECTOR through the exchange — only to
@@ -960,20 +964,19 @@ def ivf_topk(
             # coalesce to -Infinity (desc NULLS LAST ≡ smallest), and
             # the negated id breaks ties toward the lowest cell; NaN
             # sorts above every double in both forms (Spark's total
-            # order).  Verified output-identical vs the window shape
-            # at sf0.1 (same result hash).
+            # order).  The winning cell, vector and norm travel in one
+            # struct, so duplicate-id rows never mix.  Negating the id
+            # needs a numeric cell id (with train_iters=0 it is the
+            # corpus id); other id types take the window below.
             ordkey = F.struct(
                 F.coalesce(F.col("__csim"), F.lit(float("-inf"))).alias("s"),
                 (-F.col("__cent_id")).alias("negid"),
             )
+            best = F.struct(F.col("__cent_id"), F.col(svec), F.col(snorm))
             return (
                 sims.groupBy(sid)
-                .agg(
-                    F.max_by(F.col("__cent_id"), ordkey).alias("__cent_id"),
-                    F.first(svec).alias(svec),
-                    F.first(snorm).alias(snorm),
-                )
-                .select(sid, "__cent_id", svec, snorm)
+                .agg(F.max_by(best, ordkey).alias("__best"))
+                .select(sid, "__best.*")
             )
         w = Window.partitionBy(sid).orderBy(F.col("__csim").desc(), "__cent_id")
         return (

@@ -249,9 +249,7 @@ def statement_kind(query: str) -> str | None:
 
 def _count_df(dest, n: int):
     # driver-built one-row result as a LocalRelation: the serializers
-    # collect() it with NO job — createDataFrame's PythonRDD paid a
-    # defaultParallelism-task job per action (~0.5 s per DML
-    # statement, measured r14 — dialect.local_result_df)
+    # collect() it with no job (dialect.local_result_df)
     from scratchdata_spark.dialect import local_result_df
 
     return local_result_df(dest.spark, [(int(n),)], "count bigint")

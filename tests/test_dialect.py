@@ -6,9 +6,12 @@ and compares values."""
 from __future__ import annotations
 
 import json
+import struct
 
 import duckdb
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from scratchdata_spark.dialect import (
     DialectError,
@@ -1480,10 +1483,11 @@ def test_frame_exclude_guard():
     assert "EXCEPT" in rewrite("SELECT * EXCLUDE (v) FROM t // 1")
 
 
-def test_local_result_df_values_relation(spark):
-    """r14: local_result_df renders driver-built rows as a VALUES
+def test_local_result_df_values_relation(spark, caplog):
+    """local_result_df renders driver-built rows as a VALUES
     LocalRelation (no-job collect), pinning types, NULLs, reserved
-    names, and escaping; empty row sets fold to an empty relation."""
+    names, and escaping; empty row sets fold to an empty relation;
+    a value outside the vocabulary falls back with a WARNING."""
     from scratchdata_spark.dialect import local_result_df
 
     df = local_result_df(
@@ -1512,11 +1516,81 @@ def test_local_result_df_values_relation(spark):
     ]
 
     # values outside the literal vocabulary fall back to
-    # createDataFrame — correct rows, just not a LocalRelation
+    # createDataFrame — correct rows, just not a LocalRelation — and
+    # say so in one WARNING naming the value type and the DDL
     import datetime
+    import logging
 
-    fb = local_result_df(
-        spark, [(datetime.date(2026, 1, 2),)], "d date"
-    )
+    with caplog.at_level(logging.WARNING, logger="scratchdata_spark.dialect"):
+        fb = local_result_df(
+            spark, [(datetime.date(2026, 1, 2),)], "d date"
+        )
     assert getattr(fb, "_sd_local_result", False)
     assert [tuple(r) for r in fb.collect()] == [(datetime.date(2026, 1, 2),)]
+    warned = [
+        r for r in caplog.records if r.name == "scratchdata_spark.dialect"
+    ]
+    assert [r.levelno for r in warned] == [logging.WARNING]
+    assert "date" in warned[0].getMessage()
+    assert "'d date'" in warned[0].getMessage()
+
+
+_LR_DDL = "s string, d double, i bigint, b boolean, v array<double>"
+_lr_doubles = st.one_of(
+    st.floats(),
+    st.sampled_from(
+        [-0.0, 5e-324, -5e-324, 2.2250738585072009e-308, float("nan"),
+         float("inf"), float("-inf"), 0.1, 1e300]
+    ),
+)
+_lr_strings = st.one_of(
+    st.text(max_size=12),
+    st.sampled_from(
+        ["a\\db", "it's", "\\'", "${env:HOME}", "${spark.app.name}",
+         "\x00\n\t\r\x1b\x7f", "ü€😀", "-- x /* y */", ""]
+    ),
+)
+_lr_rows = st.lists(
+    st.tuples(
+        st.none() | _lr_strings,
+        st.none() | _lr_doubles,
+        st.none() | st.integers(min_value=-(2**63), max_value=2**63 - 1),
+        st.none() | st.booleans(),
+        st.none() | st.lists(st.none() | _lr_doubles, max_size=4),
+    ),
+    max_size=4,
+)
+
+
+def _lr_bits(v):
+    """Doubles by their IEEE-754 bytes (so -0.0 != 0.0); NaN as one
+    value, since repr — and Spark — carry no NaN payload."""
+    if isinstance(v, float):
+        return struct.pack("<d", v) if v == v else "nan"
+    if isinstance(v, list):
+        return [_lr_bits(x) for x in v]
+    return v
+
+
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(_lr_rows)
+def test_local_result_df_matches_create_data_frame(spark, rows):
+    """For any rows over the renderer's vocabulary, local_result_df
+    gives the column types and the exact values of
+    createDataFrame(rows, ddl) — doubles bit for bit — and plans as
+    LocalTableScan, i.e. it never fell back."""
+    from scratchdata_spark.dialect import local_result_df
+
+    df = local_result_df(spark, rows, _LR_DDL)
+    ref = spark.createDataFrame(rows, _LR_DDL)
+    assert [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in ref.schema.fields
+    ]
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    got = [[_lr_bits(v) for v in r] for r in df.collect()]
+    want = [[_lr_bits(v) for v in r] for r in ref.collect()]
+    assert got == want

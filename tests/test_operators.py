@@ -450,28 +450,32 @@ def test_cosine_topk_lsh_truncation_keeps_queries(spark):
 
 def test_ivf_topk_matches_brute_force_with_full_probe(spark):
     """Probing every cell makes IVF exhaustive — results must equal
-    the brute-force ranking exactly."""
+    the brute-force ranking exactly, for long and for string ids."""
     import random
+    from collections import Counter
 
     from scratchdata_spark.operators.similarity import cosine_topk, ivf_topk
 
     rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    queries = df.filter("vec_id < 3").selectExpr(
-        "vec_id as query_id", "embedding"
-    )
-    brute = cosine_topk(df, queries, k=3).collect()
-    full = ivf_topk(df, queries, dim=8, k=3, n_centroids=4, nprobe=4).collect()
-    assert sorted([(r.query_id, r.rank, r.neighbor_id) for r in brute]) == sorted(
-        [(r.query_id, r.rank, r.neighbor_id) for r in full]
-    )
-    # partial probe returns ≤ k per query and only real neighbors
-    part = ivf_topk(df, queries, dim=8, k=3, n_centroids=8, nprobe=2).collect()
-    from collections import Counter
-
-    per_q = Counter(r.query_id for r in part)
-    assert all(v <= 3 for v in per_q.values())
+    vecs = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(40)]
+    for ids in (list(range(40)), [f"v{i:03d}" for i in range(40)]):
+        df = spark.createDataFrame(list(zip(ids, vecs)), ["vec_id", "embedding"])
+        queries = df.filter(F.col("vec_id").isin(ids[:3])).selectExpr(
+            "vec_id as query_id", "embedding"
+        )
+        brute = cosine_topk(df, queries, k=3).collect()
+        full = ivf_topk(
+            df, queries, dim=8, k=3, n_centroids=4, nprobe=4
+        ).collect()
+        assert sorted(
+            (r.query_id, r.rank, r.neighbor_id) for r in brute
+        ) == sorted((r.query_id, r.rank, r.neighbor_id) for r in full)
+        # partial probe returns ≤ k per query and only real neighbors
+        part = ivf_topk(
+            df, queries, dim=8, k=3, n_centroids=8, nprobe=2
+        ).collect()
+        per_q = Counter(r.query_id for r in part)
+        assert all(v <= 3 for v in per_q.values())
 
 
 def test_resize_and_frames_and_features(spark):

@@ -5,7 +5,9 @@ action, best-of-N after one warm pass).  Usage:
     python tools/ab_one.py <label> <query> [query ...]
 
 Prints one JSON line per query.  Run it once per code state (the label
-tags the state); alternate states to control box drift.
+tags the state); alternate states to control box drift.  AQE follows the
+bench default (off; SPARK_GRAFT_BENCH_AQE=1 to A/B the production AQE-on
+config).
 """
 
 from __future__ import annotations
@@ -32,7 +34,11 @@ def main() -> None:
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8")),
         extra_conf={
             "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
-            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.adaptive.enabled": (
+                "true"
+                if os.environ.get("SPARK_GRAFT_BENCH_AQE") == "1"
+                else "false"
+            ),
         },
     )
     from scratchdata_spark.inventory import load

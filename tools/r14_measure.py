@@ -1,7 +1,6 @@
 """Optimization-round measurement harness, round 14 (guide §1).
 
-Same contract as tools/r13_measure.py, with the r14 bench protocol
-(bench.py module docstring):
+Follows the bench protocol (bench.py module docstring):
 
 * captures ``df.explain("formatted")`` to ``plans/r14/<name>_<tag>.txt``
 * times the computation with the noop sink (guide §1.4) — every column
