@@ -25,7 +25,6 @@ equivalents for already-loaded nested DataFrames are in
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 from typing import Any
 
@@ -154,11 +153,3 @@ def flatten(table: str, doc: dict[str, Any], style: str = "horizontal") -> list[
     # any other value falls back to horizontal, exactly like the
     # reference's else-branch (data.go:116-123 has no error path)
     return flatten_horizontal(table, doc)
-
-
-def to_ndjson(rows: list[JSONData]) -> dict[str, str]:
-    """Group flattened rows by table as NDJSON payloads."""
-    by_table: dict[str, list[str]] = {}
-    for r in rows:
-        by_table.setdefault(r.table, []).append(json.dumps(r.row, default=str))
-    return {t: "\n".join(lines) + "\n" for t, lines in by_table.items()}

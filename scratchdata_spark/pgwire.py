@@ -75,9 +75,11 @@ class PGWireConnection:
     def _connect_socket(self):
         if self._sock_factory is not None:
             return self._sock_factory()
-        return socket.create_connection(
-            (self.host, self.port), timeout=self.timeout
-        )
+        sock = socket.create_connection((self.host, self.port), timeout=self.timeout)
+        # like libpq: a small CopyDone/Terminate after CopyData frames
+        # must not wait for the server's delayed ACK
+        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        return sock
 
     def _send(self, data: bytes) -> None:
         self._sock.sendall(data)

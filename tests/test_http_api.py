@@ -288,6 +288,51 @@ def test_insert_errors(app):
     assert code == 400  # scalar array elements are not documents
 
 
+def test_rejected_insert_writes_nothing(app):
+    """A request with one non-object element is refused whole: the
+    documents before it are not buffered, so no drain creates the
+    table."""
+    code, _ = _req(
+        app, "POST", "/api/data/insert/rejected?api_key=local",
+        [{"a": 1}, {"a": 2}, 5],
+    )
+    assert code == 400
+    app.drain()
+    code, body = _req(app, "GET", "/api/tables?api_key=local")
+    assert code == 200 and "rejected" not in json.loads(body)
+
+
+def test_keepalive_requests_are_not_delayed(app):
+    """On one keep-alive connection, small responses are not held back
+    by Nagle until the client's delayed ACK (about 40 ms): the server's
+    sockets are TCP_NODELAY."""
+    import http.client
+    import statistics
+    import time
+
+    conn = http.client.HTTPConnection("127.0.0.1", app.port, timeout=60)
+
+    def median_ms(method, path, body=None):
+        times = []
+        for _ in range(20):
+            t0 = time.perf_counter()
+            conn.request(method, path, body=body)
+            resp = conn.getresponse()
+            resp.read()
+            times.append((time.perf_counter() - t0) * 1000)
+            assert resp.status == 200
+        return statistics.median(times)
+
+    try:
+        health = median_ms("GET", "/healthcheck")
+        insert = median_ms(
+            "POST", "/api/data/insert/keepalive?api_key=local", b'{"a": 1}'
+        )
+    finally:
+        conn.close()
+    assert health < 20 and insert < 20, (health, insert)
+
+
 def test_query_response_is_chunked(app):
     """Large results stream with chunked framing and no Content-Length
     (bounded driver memory — VERDICT r1 'What's wrong' #2)."""

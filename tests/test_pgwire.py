@@ -263,6 +263,18 @@ def test_rollback_sends_copyfail():
     assert sqls[-1] == "ROLLBACK"
 
 
+def test_tcp_connection_disables_nagle():
+    """A socket the client opens itself is TCP_NODELAY (as libpq's
+    are), so a small CopyDone or Terminate after CopyData frames does
+    not wait for the server's delayed ACK."""
+    with socket.create_server(("127.0.0.1", 0)) as listener:
+        conn = PGWireConnection(
+            "127.0.0.1", listener.getsockname()[1], user="u", timeout=5
+        )
+        with conn._connect_socket() as sock:
+            assert sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY) == 1
+
+
 # ---------------------------------------------------------- live gate
 _PG_URL = os.environ.get("SCRATCHDATA_POSTGRES_URL")
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 import json
 import math
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from scratchdata_spark.flatten import (
@@ -193,3 +193,107 @@ def test_dialect_rewrite_preserves_literals(a, b):
     sql = f"SELECT '{inner}' AS c, 4//2 FROM t"
     out = rewrite(sql)
     assert out == f"SELECT '{inner}' AS c, 4 DIV 2 FROM t"
+
+
+# Ingest: the one-pass Service.insert against the per-document
+# algorithm it replaced. Keys may be any text here (flatten's path aliasing is the
+# same on both sides); leaves add unbounded ints and any finite or
+# infinite double.
+_insert_docs = st.recursive(
+    st.one_of(
+        _leaves,
+        st.integers(min_value=-(2**80), max_value=2**80),
+        st.floats(allow_nan=False),
+    ),
+    lambda children: st.one_of(
+        st.lists(children, max_size=3),
+        st.dictionaries(st.text(min_size=1, max_size=6), children, max_size=3),
+    ),
+    max_leaves=15,
+).filter(lambda v: isinstance(v, dict))
+
+
+class _RecordingSink:
+    def __init__(self):
+        self.writes = []
+
+    def write_data(self, database, table, data):
+        self.writes.append((database, table, data))
+
+
+def _parent_insert_rows(flattened_docs):
+    """The per-document ingest that Service.insert replaced: group
+    the rows by table as NDJSON (the deleted ``flatten.to_ndjson``),
+    split the payload, parse each line and fill a missing or null
+    ``__row_id`` (here with None, where it drew a fresh id).
+    Returns each table's rows across the request, in write order, as
+    key/value pair lists."""
+    by_table = {}
+    for rows in flattened_docs:
+        payloads = {}
+        for r in rows:
+            payloads.setdefault(r.table, []).append(json.dumps(r.row, default=str))
+        for tbl, lines in payloads.items():
+            for line in "\n".join(lines).strip().split("\n"):
+                row = json.loads(line)
+                row.setdefault("__row_id", None)
+                by_table.setdefault(tbl, []).append(list(row.items()))
+    return by_table
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(_insert_docs, min_size=1, max_size=4),
+       st.sampled_from(["horizontal", "vertical", "multitable"]))
+@example([{"__row_id": 7, "a": [1, 2]}, {"b": "é"}], "vertical")
+@example([{"__row_id": None, "a": {"b": 1.5}}, {"a": 2**70}], "horizontal")
+def test_insert_matches_per_document_algorithm(docs, style):
+    """One pass over the request writes the same rows as the
+    per-document round trip: same tables, rows in the same order, keys
+    in the same order and equal values. ``__row_id`` keeps a supplied
+    non-null value and is otherwise set and unique in the request.
+    Each table gets exactly one write."""
+    import copy
+    from types import SimpleNamespace
+    from unittest import mock
+
+    from scratchdata_spark import api_server
+
+    flattened = []
+    real_flatten = api_server.flatten
+
+    def recording_flatten(table, doc, flatten_style):
+        rows = real_flatten(table, doc, flatten_style)
+        flattened.append(copy.deepcopy(rows))
+        return rows
+
+    sink = _RecordingSink()
+    service = api_server.Service(
+        {}, sink, SimpleNamespace(depth=lambda: 0, dead_letters=lambda: []),
+        SimpleNamespace(errors=[]), None, None,
+    )
+    body = json.dumps(docs, ensure_ascii=False).encode()
+    with mock.patch.object(api_server, "flatten", recording_flatten):
+        n = service.insert("db", "t", body, style)
+
+    want = _parent_insert_rows(flattened)
+    tables = [tbl for _, tbl, _ in sink.writes]
+    assert sorted(tables) == sorted(want) and len(set(tables)) == len(tables)
+    assert {db for db, _, _ in sink.writes} <= {"db"}
+    generated = []
+    for _, tbl, data in sink.writes:
+        assert data.endswith(b"\n")
+        got = [
+            json.loads(line, object_pairs_hook=list)
+            for line in data.decode().split("\n")[:-1]
+        ]
+        assert [[k for k, _ in r] for r in got] == [[k for k, _ in r] for r in want[tbl]]
+        for g, w in zip(got, want[tbl]):
+            g, w = dict(g), dict(w)
+            if w["__row_id"] is None:
+                assert isinstance(g["__row_id"], int)
+                generated.append(g["__row_id"])
+            else:
+                assert g["__row_id"] == w["__row_id"]
+            assert g == {**w, "__row_id": g["__row_id"]}
+    assert len(set(generated)) == len(generated)
+    assert n == sum(len(rows) for rows in want.values())
