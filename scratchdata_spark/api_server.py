@@ -225,11 +225,13 @@ class Service:
 class _ChunkedOut:
     """File-like text sink emitting HTTP/1.1 chunked frames as it fills.
 
-    Driver memory stays bounded at ~chunk_size regardless of result
-    size — the engine feeds it from ``toLocalIterator`` partition by
-    partition, and each filled buffer goes straight to the socket as
-    one chunk (the Spark analogue of the reference's fifo pump,
-    ``duckdb/query.go:15-116``).
+    The buffer stays bounded at ~chunk_size regardless of result size:
+    the engine feeds it row by row — for a one-partition answer from
+    one ``collect()`` job read off its socket batch by batch, for a
+    larger one from ``toLocalIterator`` partition by partition
+    (``engine.DataFrameSerializers``) — and each filled buffer goes
+    straight to the socket as one chunk (the Spark analogue of the
+    reference's fifo pump, ``duckdb/query.go:15-116``).
     """
 
     def __init__(self, wfile, chunk_size: int = 64 * 1024):

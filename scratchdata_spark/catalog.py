@@ -28,7 +28,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql.types import LongType, StructField, StructType
 
-from scratchdata_spark.jtypes import SPARK_TYPES, merge_schemas
+from scratchdata_spark.jtypes import SPARK_TYPES
 
 ROW_ID = "__row_id"
 
@@ -341,9 +341,3 @@ class TableCatalog:
         # parent-generation files would silently resurrect into a
         # later CREATE of the same name (gen 0 reads the root dir)
         shutil.rmtree(self.table_root(database, table), ignore_errors=True)
-
-    def merged_struct(self, database: str, table: str, batch: StructType) -> StructType:
-        info = self.get(database, table)
-        if info is None:
-            return batch
-        return merge_schemas(info.struct(), batch)

@@ -17,9 +17,17 @@ holds its physical plan, and the JSON/NDJSON ``to_json`` projection
 over it is built once and kept with it, so a warm request re-runs only
 the result stage of that plan (its shuffle and broadcast outputs are
 reused). Texts whose answer depends on the clock or on randomness are
-never cached. Results stream via ``toLocalIterator`` so a 100 GB result
-never materializes on the driver (the moral equivalent of the
-reference's fifo streaming, ``duckdb/query.go:15-116``).
+never cached. A miss re-registers only the tables whose state changed
+(``SparkDestination.register_views``).
+
+Result delivery: an answer whose executed plan has one partition is
+fetched with one ``collect()``; a larger answer streams through
+``toLocalIterator`` one partition at a time, so a 100 GB result never
+materializes on the driver (the moral equivalent of the reference's
+fifo streaming, ``duckdb/query.go:15-116``). Streaming costs ~40 ms per
+partition: the JVM serves each partition in small frames on a socket
+with Nagle on while the Python reader delays its ACK, so the common
+small answer is collected instead.
 """
 
 from __future__ import annotations
@@ -28,11 +36,15 @@ import functools
 import json
 import os
 import re
+import time
 from abc import ABC, abstractmethod
 from typing import IO, Iterator
 
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.traceback_utils import SCCallSiteSync
+from pyspark.util import _load_from_socket
 
 from scratchdata_spark.catalog import ROW_ID, TableCatalog
 from scratchdata_spark.jtypes import infer_types_file, to_struct
@@ -174,69 +186,101 @@ class PlanCache:
 
 
 class DataFrameSerializers:
-    """JSON / NDJSON / CSV streaming serializers (A13–A15) for any
-    backend exposing ``query_df`` — shared by the Spark and JDBC
-    destinations.
+    """JSON / NDJSON / CSV serializers (A13–A15) for any backend
+    exposing ``query_df`` — shared by the Spark and JDBC destinations.
 
     JSON and NDJSON run ``to_json`` in the JVM over a projection of the
     query's DataFrame. The projection is built once per DataFrame and
     memoized on it, so for a ``PlanCache`` hit it is already planned and
     a warm request re-runs only its result stage; CSV executes the
-    DataFrame itself. All three stream through ``toLocalIterator``, so
-    the driver holds one partition at a time — EXCEPT local-relation
-    results (DML counts, command results), which ``collect()``: that
-    launches no job, and the whole relation is already on the driver,
-    so the peak driver memory is the same."""
+    DataFrame itself.
+
+    How rows are fetched is decided once per DataFrame and memoized
+    with it (``_collects``): a driver-local result (DML counts, command
+    results) or an answer whose executed plan has exactly one partition
+    is fetched with one ``collect()``; anything larger streams through
+    ``toLocalIterator``. Memory bound: the driver JVM holds one
+    partition at a time (a streamed answer also the prefetched next
+    one) and Python one pickled batch of rows, so a 100 GB
+    multi-partition result still never materializes on the driver. A
+    one-partition answer is not necessarily small (a large ``LIMIT``, a
+    single-file table, a JDBC scan); it is held whole in the JVM, as
+    it was when streamed.
+    Collecting avoids the ~40 ms delayed-ACK stall ``toLocalIterator``
+    pays per partition."""
 
     def query_df(self, query: str) -> DataFrame:  # pragma: no cover - abstract
         raise NotImplementedError
 
     @staticmethod
-    def _fetch_rows(out: DataFrame, local: bool):
-        if local:
-            return iter(out.collect())
-        # prefetchPartitions lets the JVM serve the next partition
-        # while the driver consumes the current one (same one-
-        # partition-at-a-time driver memory bound, minus the ack
-        # round trip per partition)
+    def _fetch_rows(out: DataFrame, collect: bool):
+        # ``collect`` only for driver-local or one-partition answers
+        # (``_collects``): one job, and the JVM holds that one
+        # partition; Python reads it off the socket in pickled batches
+        # as it writes (``collect()`` minus its ``list()``), so its own
+        # memory stays at one batch. Otherwise stream: the driver
+        # holds the partition being consumed, and prefetchPartitions
+        # lets the JVM fetch the next one meanwhile (one job per
+        # partition, each served after a ~40 ms delayed-ACK stall).
+        if collect:
+            with SCCallSiteSync(out._sc):
+                sock_info = out._jdf.collectToPython()
+            return _load_from_socket(
+                sock_info, BatchedSerializer(CPickleSerializer())
+            )
         return out.toLocalIterator(prefetchPartitions=True)
 
-    def _json_rows(self, df: DataFrame) -> Iterator[str]:
-        # The (projection, is-local) pair is memoized on ``df``: for a
-        # cached plan it keeps its own physical plan and shuffle
-        # outputs, and goes with the cache entry. Concurrent first uses
-        # may each build one; the last one stored wins.
-        memo = getattr(df, "_sd_json_projection", None)
+    @staticmethod
+    def _collects(df: DataFrame, out: DataFrame) -> bool:
+        """Whether ``out`` (``df`` or its JSON projection) is fetched
+        with ``collect()``; memoized on ``out``.
+
+        Locality is checked on ``df``: the analyzed plan of the
+        ``to_json`` projection is a Project over the LocalRelation,
+        which isLocal() no longer recognizes (the optimizer folds it
+        back into a LocalRelation before execution, so collect() still
+        runs without a job). ``_sd_local_result`` is the engine's own
+        tag on driver-built small results (DML counts, DESCRIBE/SHOW
+        shapes) — createDataFrame yields a LogicalRDD, which isLocal()
+        reports False even for one literal row.
+
+        The partition count is read from ``out``'s own executed plan:
+        ``toRdd`` runs the adaptive map stages the fetch would run
+        anyway, and the fetch then reuses that final plan."""
+        memo = getattr(out, "_sd_collect", None)
         if memo is None:
-            memo = df._sd_json_projection = self._json_projection(df)
-        out, local = memo
-        return (r["__j"] for r in self._fetch_rows(out, local))
+            memo = out._sd_collect = bool(
+                getattr(df, "_sd_local_result", False)
+                or df.isLocal()
+                or out._jdf.queryExecution().toRdd().getNumPartitions() == 1
+            )
+        return memo
+
+    def _json_rows(self, df: DataFrame) -> Iterator[str]:
+        # The projection is memoized on ``df``: for a cached plan it
+        # keeps its own physical plan, shuffle outputs and fetch
+        # decision, and goes with the cache entry. Concurrent first
+        # uses may each build one; the last one stored wins.
+        out = getattr(df, "_sd_json_projection", None)
+        if out is None:
+            out = df._sd_json_projection = self._json_projection(df)
+        collect = self._collects(df, out)
+        return (r["__j"] for r in self._fetch_rows(out, collect))
 
     @staticmethod
-    def _json_projection(df: DataFrame) -> tuple[DataFrame, bool]:
+    def _json_projection(df: DataFrame) -> DataFrame:
         # NULL fields are kept explicitly (ignoreNullFields=false):
         # every reference backend writer emits them — DuckDB's COPY
         # (FORMAT JSON), ClickHouse JSONEachRow, the Postgres
         # json.Encoder — so a consumer checking ``row["v"] is None``
         # must see the key.  Plain df.toJSON() silently DROPS null
         # fields.
-        #
-        # isLocal is checked on the INPUT df: the analyzed plan of the
-        # to_json projection is a Project over the LocalRelation, which
-        # isLocal() no longer recognizes (the optimizer folds it back
-        # into a LocalRelation before execution, so collect() still
-        # runs without a job).  _sd_local_result is the engine's own
-        # tag on driver-built small results (DML counts, DESCRIBE/SHOW
-        # shapes) — createDataFrame yields a LogicalRDD, which
-        # isLocal() reports False even for one literal row.
-        local = getattr(df, "_sd_local_result", False) or df.isLocal()
         cols = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
-        out = df.select(
+        return df.select(
             F.to_json(
                 F.struct(*cols), {"ignoreNullFields": "false"}
             ).alias("__j")
         )
-        return out, local
 
     def query_json(self, query: str, out: IO[str]) -> None:
         out.write("[")
@@ -258,8 +302,7 @@ class DataFrameSerializers:
         writer = csv.writer(out)
         writer.writerow(df.columns)  # deterministic column order
         # (fixes the reference's BigQuery map-iteration bug, query.go:112-180)
-        local = getattr(df, "_sd_local_result", False) or df.isLocal()
-        for row in self._fetch_rows(df, local):
+        for row in self._fetch_rows(df, self._collects(df, df)):
             writer.writerow(["null" if v is None else v for v in row])
 
 
@@ -435,7 +478,10 @@ class SparkDestination(DataFrameSerializers, Destination):
         info = self.catalog.get(self.database, table)
         if info is None:
             raise KeyError(f"no such table: {table}")
-        d = self.catalog.data_dir(self.database, table)
+        return self._scan(info, self.catalog.data_dir(self.database, table))
+
+    def _scan(self, info, d: str) -> DataFrame:
+        """Parquet scan of one generation dir with the catalog schema."""
         reader = self.spark.read.schema(info.struct())
         if info.partition_col:
             # hive-layout dirs: basePath makes the partition column
@@ -491,29 +537,45 @@ class SparkDestination(DataFrameSerializers, Destination):
                 " keep a deeper history)"
             )
         root = self.catalog.table_root(self.database, table)
-        reader = self.spark.read.schema(info.struct())
         if generation == 0:
             # g0 = loose files in the table root; list explicitly so
             # the scan never descends into sibling g<N> snapshot dirs
             files = self._list_parquet(root)
             if not files:
                 return self.spark.createDataFrame([], info.struct())
+            reader = self.spark.read.schema(info.struct())
             if info.partition_col:
                 reader = reader.option("basePath", root)
             return reader.parquet(
                 *[os.path.join(root, f) for f in files]
             )
-        d = os.path.join(root, f"g{generation}")
-        if info.partition_col:
-            reader = reader.option("basePath", d)
-        return reader.parquet(d)
+        return self._scan(info, os.path.join(root, f"g{generation}"))
 
     def register_views(self) -> None:
-        """Expose every catalog table as a temp view for spark.sql.
+        """Expose every catalog table, then every stored view, as a temp
+        view for spark.sql.
 
-        Metadata-only (a parquet scan node per view); Catalyst prunes
-        columns/partitions per query, so registering all tables is
-        cheap even with thousands of tables.
+        Tables: a table's temp view is re-created only when its
+        fingerprint changed — the catalog entry as read now (columns,
+        generation, partition column), its current data dir, the
+        ``mtime_ns`` of the table root (a flip creates a new g<N> dir
+        there) and of the data dir (files landing in it), and
+        ``plan_cache.epoch``. Every local write and drop bumps the
+        epoch via invalidate(); writes by another instance sharing the
+        warehouse dir show up through the generation and the two
+        mtimes. Creating a scan lists the table's files; an unchanged
+        table costs two catalog reads and two stats instead.
+        The fingerprints and the lock that serializes registration
+        live on the Spark session, next to the temp views they
+        describe, so destinations sharing a session cannot mistake
+        each other's registrations for their own.
+
+        Racy mtimes (as git treats a racy index entry): a write landing
+        in the same timestamp tick as the stat leaves the mtime
+        unchanged. So when either mtime is less than 1 s older than
+        the registration, the fingerprint is not remembered and the
+        next call registers the table again; a write by another
+        instance is therefore always visible at the next miss.
 
         Logical views (catalog.views — CREATE VIEW statements) are
         registered after the tables they read, looping until the
@@ -523,27 +585,58 @@ class SparkDestination(DataFrameSerializers, Destination):
         referencing it then fails with table-not-found — loud, not
         stale results.
 
-        View registration eagerly ANALYZES each view's SQL (unlike
-        the lazy table scan nodes), so it is fingerprint-cached. The
-        fingerprint covers the (name, sql) set AND cheap monotonic
-        mutation state — NOT a parquet file listing (walking every
-        table's files per query is O(total files) and contradicts the
-        many-files scale story; round-5 advisor finding). Local
-        mutations (insert, DML copy-on-write, compaction flip, drops)
-        all bump ``plan_cache.epoch`` via invalidate(); cross-instance
-        mutations on a shared warehouse dir surface through each base
-        table's generation counter plus two O(1) directory mtime_ns
-        stats (table root — a flip creates a new g<N> dir there — and
-        the current data dir, whose mtime changes when files land in
-        it). Granularity note: a FOREIGN instance appending into an
-        existing partition subdir of a partitioned table only moves
-        that subdir's mtime; Spark's per-job _SUCCESS rewrite at the
-        output root covers it in practice. DuckDB (the reference)
-        re-resolves views per query; the stats only run when views
-        exist at all, so tables-only destinations pay nothing.
+        View registration eagerly ANALYZES each view's SQL, so the
+        whole view set is fingerprint-cached too: on the (name, sql)
+        set, the epoch and every table's fingerprint, never a parquet
+        file listing (walking every table's files per query is
+        O(total files) and contradicts the many-files scale story).
+        DuckDB (the reference) re-resolves views per query.
+
+        Appends into an existing partition subdir of a partitioned
+        table move the data dir's mtime too: a direct Spark append
+        creates and removes its ``_temporary`` dir there, and a staged
+        DML write touches it after adoption (warehouse_dml
+        ``_adopt_staged``).
         """
+        # one registration at a time per session (the scope of the
+        # temp views and their fingerprints): a slower concurrent call
+        # must not re-create an older scan after a newer fingerprint
+        # was stored for it
+        lock = self.spark.__dict__.setdefault(
+            "_sd_register_lock", _threading.Lock()
+        )
+        with lock:
+            self._register_views_locked()
+
+    def _register_views_locked(self) -> None:
+        registered = self.spark.__dict__.setdefault("_sd_table_fps", {})
+        racy_after = time.time_ns() - 1_000_000_000
+        state = []
         for t in self.catalog.tables(self.database):
-            self.table_df(t).createOrReplaceTempView(t)
+            info = self.catalog.get(self.database, t)
+            if info is None:
+                continue  # dropped since the listing
+            d = self.catalog.data_dir(self.database, t)
+            mtimes = (
+                self._dir_mtime(self.catalog.table_root(self.database, t)),
+                self._dir_mtime(d),
+            )
+            fp = (
+                json.dumps(info.columns),
+                info.generation,
+                info.partition_col,
+                d,
+                *mtimes,
+                self.plan_cache.epoch,
+            )
+            state.append((t, fp))
+            if registered.get(t) == fp:
+                continue
+            self._scan(info, d).createOrReplaceTempView(t)
+            if max(mtimes) > racy_after:
+                registered.pop(t, None)
+            else:
+                registered[t] = fp
         views = self.catalog.views(self.database)
         # a view dropped from the catalog must leave the session too —
         # only names THIS destination registered are ever dropped
@@ -553,18 +646,6 @@ class SparkDestination(DataFrameSerializers, Destination):
         if not views:
             self._views_fp = None
             return
-        state = []
-        for t in self.catalog.tables(self.database):
-            info = self.catalog.get(self.database, t)
-            root = self.catalog.table_root(self.database, t)
-            d = self.catalog.data_dir(self.database, t)
-            state.append((
-                t,
-                d,
-                info.generation if info is not None else -1,
-                self._dir_mtime(root),
-                self._dir_mtime(d),
-            ))
         fp = hash((
             tuple(sorted(views.items())),
             self.plan_cache.epoch,
@@ -595,7 +676,7 @@ class SparkDestination(DataFrameSerializers, Destination):
     @staticmethod
     def _dir_mtime(d: str) -> int:
         """mtime_ns of a directory, -1 when absent — one stat call,
-        the cross-instance half of the view-staleness fingerprint."""
+        the cross-instance half of a table's fingerprint."""
         try:
             return os.stat(d).st_mtime_ns
         except OSError:

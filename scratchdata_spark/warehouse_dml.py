@@ -636,7 +636,12 @@ def _adopt_staged(dest, staging: str, data_dir: str) -> list[str]:
     """Rename the staged parquet files into the live directory —
     Spark part-file names carry a job UUID, so appends can't collide.
     Returns the adopted destination paths (INSERT … RETURNING reads
-    exactly these files back, never the whole table)."""
+    exactly these files back, never the whole table).
+
+    Files renamed into an existing partition subdir move only that
+    subdir's mtime, so the data dir is touched afterwards: another
+    instance's ``register_views`` fingerprints the data dir's mtime,
+    not every subdir's."""
     adopted: list[str] = []
     for dirpath, _dirs, names in os.walk(staging):
         for f in names:
@@ -647,6 +652,8 @@ def _adopt_staged(dest, staging: str, data_dir: str) -> list[str]:
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.replace(os.path.join(dirpath, f), dst)
             adopted.append(dst)
+    if adopted:
+        os.utime(data_dir)
     shutil.rmtree(staging, ignore_errors=True)
     return adopted
 

@@ -6,6 +6,8 @@ from __future__ import annotations
 import csv
 import io
 import json
+import os
+import time
 
 import pytest
 
@@ -255,6 +257,191 @@ def test_warm_request_reuses_planned_projection(dest):
     rows = json.loads(_serve(dest, "json", sql))
     assert rows[-1] == {"k": 7, "n": 1, "s`x": 5}
     assert _values("csv", _serve(dest, "csv", sql), "k")[-1] == "7"
+
+
+def _spy(monkeypatch, spark, method, keep=lambda *a: True):
+    """Count calls of a DataFrame method (on the class Spark's
+    DataFrames really are, not pyspark.sql's abstract base)."""
+    cls = type(spark.range(1))
+    orig = getattr(cls, method)
+    calls = []
+
+    def spy(self, *args, **kwargs):
+        if keep(*args):
+            calls.append(args)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, method, spy)
+    return calls
+
+
+def test_one_partition_answers_are_collected(dest, monkeypatch):
+    """An answer whose executed plan has one partition is fetched with
+    collect(), cold and warm, in every format, with the same bytes as
+    the streamed path served; a multi-partition answer still streams
+    through toLocalIterator, once per request."""
+    _insert(dest, "op", [
+        json.dumps({"__row_id": i, "v": i, **({"g": g} if g else {})})
+        for i, g in enumerate(["x,y", "z", None, "x,y", "z", None], start=1)
+    ])
+    grouped = "SELECT g, count(*) AS n, sum(v) AS s FROM op GROUP BY g ORDER BY g"
+    top = "SELECT g, v FROM op ORDER BY v DESC LIMIT 2"
+    expected = {
+        (grouped, "json"):
+            '[{"g":null,"n":2,"s":9},{"g":"x,y","n":2,"s":5},{"g":"z","n":2,"s":7}]',
+        (grouped, "ndjson"):
+            '{"g":null,"n":2,"s":9}\n{"g":"x,y","n":2,"s":5}\n{"g":"z","n":2,"s":7}\n',
+        (grouped, "csv"): 'g,n,s\r\nnull,2,9\r\n"x,y",2,5\r\nz,2,7\r\n',
+        (top, "json"): '[{"g":null,"v":6},{"g":"z","v":5}]',
+        (top, "ndjson"): '{"g":null,"v":6}\n{"g":"z","v":5}\n',
+        (top, "csv"): "g,v\r\nnull,6\r\nz,5\r\n",
+    }
+    streams = _spy(monkeypatch, dest.spark, "toLocalIterator")
+    for (sql, fmt), body in expected.items():
+        dest.plan_cache.invalidate()  # each format gets a cold request
+        assert _serve(dest, fmt, sql) == body, (sql, fmt)  # cold
+        assert _serve(dest, fmt, sql) == body, (sql, fmt)  # warm
+    assert streams == []
+
+    spread = "SELECT /*+ REPARTITION(3, v) */ v FROM op"
+    for fmt in ("json", "ndjson", "csv"):
+        dest.plan_cache.invalidate()
+        for _ in range(2):
+            before = len(streams)
+            body = _serve(dest, fmt, spread)
+            assert len(streams) == before + 1, fmt
+            assert sorted(map(int, _values(fmt, body, "v"))) == [1, 2, 3, 4, 5, 6]
+
+
+def _age_dirs(dest, tables, seconds=60):
+    """Set the table-root and data-dir mtimes ``seconds`` into the
+    past, as if the tables had been written that long ago."""
+    past = time.time_ns() - seconds * 1_000_000_000
+    for t in tables:
+        for d in {
+            dest.catalog.table_root(dest.database, t),
+            dest.catalog.data_dir(dest.database, t),
+        }:
+            os.utime(d, ns=(past, past))
+
+
+def test_miss_reregisters_only_changed_tables(dest, monkeypatch):
+    names = [f"t{i:02d}" for i in range(50)]
+    for t in names:
+        dest.create_empty_table(t)
+    _insert(dest, "t00", ['{"__row_id": 1, "k": 1}'])
+    _age_dirs(dest, names)
+    assert json.loads(_serve(dest, "json", "SELECT count(*) AS n FROM t00")) == [
+        {"n": 1}
+    ]
+    registered = _spy(
+        monkeypatch, dest.spark, "createOrReplaceTempView", lambda n: n in names
+    )
+    assert json.loads(_serve(dest, "json", "SELECT k FROM t00")) == [{"k": 1}]
+    assert registered == []
+
+
+def test_writes_stay_visible_to_the_next_miss(spark, dest):
+    """A table written through a second destination over the same
+    catalog (its own session) is visible at the first destination's
+    next plan-cache miss — also when the write leaves the directory
+    mtimes where they were at the registration (a write in the same
+    timestamp tick); so is a local insert."""
+    def values(tag):
+        sql = f"SELECT v, '{tag}' AS q FROM x ORDER BY v"
+        return [r["v"] for r in json.loads(_serve(dest, "json", sql))]
+
+    _insert(dest, "x", ['{"__row_id": 1, "v": 1}'])
+    other = SparkDestination(spark.newSession(), dest.catalog, dest.database)
+    root = dest.catalog.table_root(dest.database, "x")
+    data = dest.catalog.data_dir(dest.database, "x")
+
+    # the directories are old at the registration
+    _age_dirs(dest, ["x"])
+    assert values("aged") == [1]
+    _insert(other, "x", ['{"__row_id": 2, "v": 2}'])
+    assert values("after-aged-write") == [1, 2]
+
+    # the directories were written just now (racy), and another
+    # instance's write lands in the same mtime tick
+    now = time.time_ns()
+    for d in {root, data}:
+        os.utime(d, ns=(now, now))
+    assert values("racy") == [1, 2]
+    _insert(other, "x", ['{"__row_id": 3, "v": 3}'])
+    for d in {root, data}:
+        os.utime(d, ns=(now, now))
+    assert values("after-racy-write") == [1, 2, 3]
+
+    _insert(dest, "x", ['{"__row_id": 4, "v": 4}'])
+    assert values("after-local-write") == [1, 2, 3, 4]
+
+
+def test_partition_appends_stay_visible_to_the_next_miss(spark, dest):
+    """A SQL INSERT by a second destination into an EXISTING partition
+    of a partitioned table lands files only in that partition's subdir;
+    it is still visible at the first destination's next miss."""
+    def values(tag):
+        sql = f"SELECT v, '{tag}' AS q FROM pt ORDER BY v"
+        return [r["v"] for r in json.loads(_serve(dest, "json", sql))]
+
+    dest.create_empty_table("pt")
+    dest.create_columns("pt", _write_tmp(['{"day": "d1", "v": 0}']))
+    dest.set_partitioning("pt", "day")
+    _insert(dest, "pt", ['{"__row_id": 1, "day": "d1", "v": 1}'])
+    other = SparkDestination(spark.newSession(), dest.catalog, dest.database)
+
+    _age_dirs(dest, ["pt"])
+    assert values("aged") == [1]
+    _serve(other, "json", "INSERT INTO pt (day, v) VALUES ('d1', 2)")
+    assert values("after-partition-append") == [1, 2]
+
+
+def test_concurrent_misses_never_see_rows_disappear(dest):
+    """Misses on 8 threads race local inserts. Each thread's row
+    counts never go down (a slower registration must not put back an
+    older scan after a newer one was remembered), and after the last
+    insert every miss sees every row."""
+    import sys
+    import threading
+
+    _insert(dest, "cc", ['{"__row_id": 1, "v": 1}'])
+    _age_dirs(dest, ["cc"])
+    stop = threading.Event()
+    seen: dict[int, list[int]] = {i: [] for i in range(8)}
+    errors = []
+
+    def reader(i):
+        n = 0
+        try:
+            while not stop.is_set():
+                n += 1
+                sql = f"SELECT count(*) AS n, {i * 10_000 + n} AS q FROM cc"
+                seen[i].append(json.loads(_serve(dest, "json", sql))[0]["n"])
+        except Exception as err:  # noqa: BLE001 — reported below
+            errors.append(err)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=reader, args=(i,)) for i in range(8)]
+    try:
+        for t in threads:
+            t.start()
+        for k in (2, 3, 4):
+            _insert(dest, "cc", [json.dumps({"__row_id": k, "v": k})])
+        stop.set()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        stop.set()
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    for counts in seen.values():
+        assert counts == sorted(counts)
+    assert json.loads(_serve(dest, "json", "SELECT count(*) AS n FROM cc")) == [
+        {"n": 4}
+    ]
 
 
 # ------------------------------------------------------------ compaction
