@@ -1,109 +1,22 @@
 """Headline benchmark: wall-clock per query at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...},
+   "oracle_comparable_total": N, "pass_walls": [...], "sf": ...}
 
-Query set per BASELINE.md §2: pricing summary (Q1), join+agg (Q3/Q5),
-window top-k, grouping sets, semi/anti join, set ops, approx distinct,
-plus the LLM-pipeline headliners once present.
-
-Tuning applied (BASELINE target: within 2× DuckDB at sf0.1 on a warm
-session): low shuffle-partition count sized to cores (sf0.1 partitions
-are tiny; 200 default tasks = pure scheduler overhead), AQE partition
-coalescing, broadcast joins for dims. The same settings scale: on a
-real cluster SPARK_GRAFT_SHUFFLE rises with parallelism.
-
-Round-5 drift investigation (VERDICT r4 #4): the r3→r4 +14% total
-drift (0.9202 → 1.0538 s) did NOT reproduce on an idle machine —
-two fresh best-of-5 runs measured 0.8294 s and 0.7373 s total
-(0.57/0.52 s oracle-comparable), better than both prior rounds. The
-r4 number was taken while the driver shared the box with other work;
-cause: machine load during measurement, not a plan or session
-regression. No code change was warranted.
-
-Round-7 drift investigation (VERDICT r6 #2): the r5→r6 +63%
-shared-query drift (0.848 → 1.383 s) did NOT reproduce on an idle
-box — a fresh best-of-5 run measured the same 22 shared queries at
-0.778 s, 8% BETTER than r5. Attribution: machine load during the r6
-measurement (same mechanism as the r4 drift, above). The one real
-per-query residual — x_dedup_embedding_lsh at 0.15-0.21 s vs r5's
-0.066 s, the grouped-GEMM verify's fixed ~0.15 s Arrow round trip at
-tiny scale (profiled: pre-Arrow stages 0.06 s) — is fixed by the
-corpus_size-hinted SIZE DISPATCH in near_dup_pairs (HOF verify at or
-under the measured crossover — grouped-GEMM above, the tier that wins
-31.2→2.5 s at the 10× soak): 0.081 s after.
-
-Round-8 crossover measurement (VERDICT r7 #5/#8): the dispatch
-threshold is now MEASURED, not bracketed — tools/dispatch_crossover.py
-(bench regime: warm reused plan, cached input, toArrow action,
-best-of-3) puts HOF/GEMM at 0.131/0.195 s @2k, 0.132/0.176 @4k,
-0.192/0.179 @8k, 0.540/0.225 @20k; crossover between 4k and 8k,
-default small_corpus_rows=6144 (BENCH_scale.json dispatch_crossover).
-x_dedup_embedding_lsh's sf0.1 residual vs r5 (0.096 s vs 0.066 s) is
-the FLOOR of this shape: the winning HOF verify alone measures
-0.131 s best-of-3 in isolation at 2k vectors, and the pre-verify
-bucketing stages profile at ~0.06 s — the r5 number predates the
-count-first bucket cap and NaN containment the tier now carries.
-Not recoverable by tier choice; at sf1+ the GEMM tier takes over and
-the 100× soak holds 17.8 s (BENCH_scale embedding_lsh).
-
-Known floor: a PySpark query round trip (py4j submit + job schedule +
-Arrow collect socket) costs ~25 ms no matter how small the query —
-``SELECT 1`` measures the same. Queries whose DuckDB time is below
-that floor (q_intersect ~10 ms, x_multimodal_meta ~8 ms at sf0.1)
-cannot reach 2× here by plan quality; their plans are already minimal
-(one scan, zero or one shuffle). The floor amortizes at any real
-scale — at sf1+ the same queries clear it and track DuckDB.
-
-ROUND-13 METHODOLOGY FIX (OPTIMIZATION_r13.md §1 — a measurement bug,
-fixed explicitly per the optimization-round rules; numbers before and
-after the fix are both recorded there).  Two compounding artifacts
-made every pre-r13 rep time only a warm final stage instead of the
-query: (a) the star schema was pinned in the in-memory columnar cache
-before the timed region, and (b) each rep re-ran an action on the
-SAME Dataset object, so Spark re-submitted the same RDD lineage and
-skipped every stage whose shuffle files survived from the previous
-rep (plus reused operator-internal ``persist()`` intermediates such
-as the LM count tables).  Measured at sf0.1: x_quality_classifier
-re-executed on the same Dataset costs 0.12 s, on a fresh plan 16 s —
-the old protocol measured the 0.12.  Since r13 every timed rep
-executes a FRESH physical plan (fresh shuffle IDs — no stage
-skipping) after ``spark.catalog.clearCache()`` (no persisted
-intermediates), with no base-table cache: each rep computes from the
-parquet inputs, warm only at the OS page-cache level — the same
-warmth the DuckDB baseline gets.  Plan construction (parse/analyze)
-is still amortized via the plan dict, mirroring the engine's
-PlanCache; physical planning and codegen are timed, as the product
-pays them per query.
-
-ROUND-14 METHODOLOGY FIX (OPTIMIZATION_r14.md §1 — second-order bug
-in the r13 protocol, fixed explicitly per the optimization-round
-rules; before/after numbers recorded there): reusing ONE built
-Dataset across reps meant the per-rep ``clearCache()`` permanently
-dropped operator-internal ``persist()`` registrations after the
-warm-up pass — from then on multi-branch operators (minhash, LM,
-DSIR) ran WITHOUT their designed materialization points, leaning on
-ReuseExchange only.  That config exists nowhere outside the bench
-loop (a fresh caller re-registers the persists; production never
-clears them), and it is what made AQE look 2.9× worse on minhash in
-r13.  Every timed rep now re-builds the query DataFrame (fresh plan,
-fresh shuffle IDs, persists re-registered); ``clearCache()`` between
-reps still drops the cached DATA, so each rep recomputes everything
-from parquet inside the timed action.
-
-ROUND-14 AQE POSITION (VERDICT r13 #1/#2): with the persists restored
-the production AQE-on config was re-A/B'd.  At sf1, minhash AQE-on is
-within 12% of AQE-off (4.94 vs 4.40 s best; medians equal) — the
-operator no longer depends on ReuseExchange, so the production
-session (AQE on) carries NO operator-specific penalty.  At sf0.1,
-AQE-on still costs +30–130% on EVERY sub-second query (paired
-same-session A/B: q_window_frame_rows 2.3×, x_ann_cosine_topk 2.0×,
-minhash 1.7×) — the fixed per-stage materialization barrier AQE
-inserts at each exchange, a latency floor that amortizes at scale,
-not a plan difference.  The bench therefore keeps AQE OFF by default
-at this scale (comparable with the r13 protocol and with DuckDB's
-sub-100 ms times), parameterized via SPARK_GRAFT_BENCH_AQE=1 for
-at-scale runs; the production session (session.py) keeps AQE on.
+Protocol (its history: OPTIMIZATION_r13.md §1, OPTIMIZATION_r14.md §1
+and §12). ``bench_session`` runs AQE off (SPARK_GRAFT_BENCH_AQE=1
+benches the production AQE-on config) with SPARK_GRAFT_SHUFFLE shuffle
+partitions (default 8); no base table is cached. Each query gets one
+warm pass (codegen + JIT), then SPARK_GRAFT_BENCH_PASSES full passes
+(default 2) of SPARK_GRAFT_BENCH_REPS reps (default 3). Every rep is
+``timed_reps``' loop: ``clearCache()``, a fresh build of the query
+(``_fresh``: new plan and shuffle IDs, operator persists
+re-registered), then the timed ``toArrow()`` action, so each rep
+computes from the parquet inputs, warm only at the OS page-cache
+level. The clock starts after the build, except for BUILD_TIMED
+entries. A query's value is its best rep over all passes; both pass
+walls are printed, so machine load shows in the output.
 """
 
 from __future__ import annotations
@@ -134,18 +47,14 @@ HEADLINE = [
     "q_approx_count_distinct",
     "q_window_frame_rows",
     "q_json_funcs",
-    # r14 ADDITIONS (never renamed/removed — the driver contract): the
-    # same q01/q03/q05 against a row-group-split copy of the inputs
-    # (inventory.load_mrg, VERDICT r13 #5).  The single-row-group
-    # testdata makes every scan one task at any core count, so the
-    # driver's 8-vs-32 scaling block read ≈1 for every scan-bound
-    # query; these rows give the scaling measurement a real signal.
+    # the same q01/q03/q05 over a row-group-split copy of the inputs
+    # (inventory.load_mrg), so scans parallelize at any core count
     "q01_pricing_summary_mrg",
     "q03_shipping_priority_mrg",
     "q05_local_supplier_volume_mrg",
 ]
 
-EXTRAS = [  # included once implemented (operators/ extras)
+EXTRAS = [  # entries are never renamed or removed
     "x_dedup_exact",
     "x_dedup_minhash_lsh",
     "x_dedup_embedding_lsh",
@@ -153,25 +62,16 @@ EXTRAS = [  # included once implemented (operators/ extras)
     "x_ann_ivf_topk",
     "x_text_quality",
     "x_multimodal_meta",
-    "x_semantic_dedup",  # round 5: +1 query — adds ~0.03 s to the total
-    "x_lm_perplexity",  # round 6: the newest heavy operator (judge #8)
-    "x_dedup_substring",  # round 6: exact-substring span metrics
-    "x_ann_pq_topk",  # round 6: PQ codes + exact refine (ANN scale path)
-    "x_quality_classifier",  # round 10: hashed-ngram quality scoring
-    "x_dsir_select",  # round 10: DSIR importance resampling top-k
+    "x_semantic_dedup",
+    "x_lm_perplexity",
+    "x_dedup_substring",
+    "x_ann_pq_topk",  # fit-once / probe-many: encode+score+rerank timed
+    "x_quality_classifier",
+    "x_dsir_select",
     # x_dedup_minhash_oracle is deliberately NOT benched: it is the
-    # correctness twin with BOTH scale valves off (exhaustive bucket
-    # pairs, no estimator screen) and an md5-based portable hash —
-    # ~12 s at sf0.1 by design, ~100× the production tier. The
-    # performance path is x_dedup_minhash_lsh above.
-    "x_ann_pq_topk_coldfit",  # r14 ADDITION (VERDICT r13 #9): the
-    # cold-fit PQ row — same query as x_ann_pq_topk, but the timer
-    # starts before the plan BUILD (BUILD_TIMED below) so the
-    # driver-side codebook fit is inside the timed region.  The
-    # existing x_ann_pq_topk row keeps its meaning: the fit-once /
-    # probe-many contract (externally persisted codebooks, like lm's
-    # external count tables), where only encode+score+rerank is paid
-    # per query round.
+    # correctness twin with both scale valves off, ~100× the cost of
+    # the production tier (x_dedup_minhash_lsh above)
+    "x_ann_pq_topk_coldfit",  # x_ann_pq_topk with the codebook fit timed
 ]
 
 # Entries whose plan BUILD does real work (driver-side fits) and is
@@ -179,152 +79,56 @@ EXTRAS = [  # included once implemented (operators/ extras)
 BUILD_TIMED = {"x_ann_pq_topk_coldfit"}
 
 
+def bench_names() -> list[str]:
+    """The timed entries, in bench order."""
+    return [n for n in HEADLINE + EXTRAS if n in REGISTRY or n in BENCH_VARIANTS]
+
+
 def _fetch(df) -> int:
     """Materialize the result on the driver (Arrow batches — the
     engine-fair analogue of DuckDB's fetchall; Row-object collect()
     spends its time in pickling, not in the engine)."""
-    try:
-        return df.toArrow().num_rows
-    except Exception:  # pragma: no cover - older pyspark
-        return len(df.collect())
+    return df.toArrow().num_rows
 
 
 def _fresh(name, spark, sf_dir):
-    """A fresh build of the query for one timed rep.
-
-    r13 forced a fresh physical plan by wrapping the once-built
-    Dataset in ``select("*")`` (fresh shuffle IDs — no stage
-    skipping).  That had a side effect found in r14: the per-rep
-    ``clearCache()`` drops the CacheManager REGISTRATION of every
-    operator-internal ``persist()`` (minhash signatures/candidates,
-    LM count tables, DSIR feature relations), and since the plan was
-    built only once, nothing ever re-registered them — so from rep 2
-    onward the bench executed a configuration neither production nor
-    any fresh caller sees: multi-consumer operators fell back to
-    ReuseExchange alone, which AQE's stage barriers defeat (the
-    r13-measured "AQE makes minhash 2.9× worse" was THIS artifact,
-    not the production plan).  Re-invoking the operator per rep
-    re-registers its persists; their materialization happens inside
-    the timed action and ``clearCache()`` still drops the DATA
-    between reps, so every rep computes from the parquet inputs.
-    Plan construction stays outside the timer, as before."""
-    return _query_fn(name)(spark, sf_dir)
+    """A fresh build of the query: a new plan with new shuffle IDs (no
+    stage skipping), and operator-internal persists registered again."""
+    fn = BENCH_VARIANTS[name] if name in BENCH_VARIANTS else REGISTRY[name][0]
+    return fn(spark, sf_dir)
 
 
-def _query_fn(name):
-    if name in BENCH_VARIANTS:
-        return BENCH_VARIANTS[name]
-    fn, _ = REGISTRY[name]
-    return fn
-
-
-def _prepared(cache: dict, name: str, spark, sf_dir):
-    """Warm-session protocol: the engine's PlanCache (engine.py) reuses
-    the analyzed plan for a repeated query text, so re-executions pay
-    only job scheduling + execution — parse/analyze/optimize (100–500
-    ms of driver latency per plan shape) amortizes to zero exactly as
-    it does in the product's query path. DuckDB's per-rep re-parse is
-    microseconds, so the comparison stays engine-fair."""
-    df = cache.get(name)
-    if df is None:
-        df = _query_fn(name)(spark, sf_dir)
-        cache[name] = df
-    return df
+def timed_reps(spark, name: str, sf_dir: str, reps: int, action=_fetch) -> list[float]:
+    """Seconds of each of ``reps`` reps: clear the cache (operator
+    persists included), build the query fresh, time ``action`` on it."""
+    runs = []
+    for _ in range(reps):
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        df = _fresh(name, spark, sf_dir)
+        if name not in BUILD_TIMED:
+            t0 = time.perf_counter()
+        action(df)
+        runs.append(time.perf_counter() - t0)
+    return runs
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    spark = get_spark(
-        app_name="scratchdata-bench",
-        # sf0.1 shuffle payloads are KB-scale: 8 reduce tasks saturate
-        # the work; 32 just quadruples scheduling on every exchange.
-        # This is the knob that MUST scale with data volume — the
-        # production session sizes it from SPARK_GRAFT_CPUS, a cluster
-        # run raises it with parallelism (AQE coalescing handles the
-        # in-between). Compute-heavy operators are insensitive to it:
-        # they fan their input out via ensure_parallelism.
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8")),
-        extra_conf={
-            # The testdata parquet is single-row-group, so this does NOT
-            # parallelize the scan (parquet cannot split inside a row
-            # group; the extra splits are empty tasks — measured noise-
-            # level either way at sf0.1).  Kept for protocol continuity;
-            # the production session uses the 128 MB default, and
-            # compute-heavy operators fan out via ensure_parallelism.
-            "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
-            # AQE off at bench scale, on in production (session.py):
-            # r13's "AQE 2.9× worse on minhash" was a bench artifact
-            # (persist registrations silently dropped — module
-            # docstring), and with the designed plans restored the
-            # at-scale A/B shows parity (sf1 minhash 1.12×, within the
-            # ±20% VERDICT bar).  What remains at sf0.1 is AQE's fixed
-            # per-exchange stage-barrier latency, +30–130% on EVERY
-            # sub-second query — a small-scale latency floor, not a
-            # plan difference, so it is parameterized rather than
-            # hard-coded: SPARK_GRAFT_BENCH_AQE=1 benches the
-            # production config (OPTIMIZATION_r14.md §1).
-            "spark.sql.adaptive.enabled": (
-                "true" if os.environ.get("SPARK_GRAFT_BENCH_AQE") == "1" else "false"
-            ),
-        },
-    )
-
-    # r13 OPTIMIZATION-ROUND METHODOLOGY FIX (OPTIMIZATION_r13.md §1):
-    # this loop used to pin every base table in the in-memory columnar
-    # cache before the timed region.  Combined with re-executing the
-    # same Dataset per rep (which reuses shuffle files and SKIPS every
-    # upstream stage), the old numbers timed a warm final stage over
-    # cached data, not query execution — result caching outside the
-    # timed region, which the optimization round forbids.  Now every
-    # timed rep computes from the parquet inputs: no base-table cache,
-    # a fresh physical plan per rep (_fresh), and operator-internal
-    # persisted intermediates cleared between reps (the clearCache in
-    # the rep loop).  OS page cache stays warm, exactly like the
-    # DuckDB baseline's warm protocol (tools/bench_duckdb.py).
-    from scratchdata_spark.inventory import load
-
-    load(spark, sf_dir)  # register temp views / parquet footers only
-
-    # The first executions of a plan shape pay whole-stage-codegen +
-    # C2 JIT compilation (multi-second, amortized to zero in any
-    # long-lived session), so run each query REPS+1 times, best wins.
+    spark = bench_session("scratchdata-bench", sf_dir)
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    names = [n for n in HEADLINE + EXTRAS if n in REGISTRY or n in BENCH_VARIANTS]
-    plans: dict = {}
+    names = bench_names()
     for name in names:
-        _fetch(_prepared(plans, name, spark, sf_dir))  # warm pass + plan build
+        _fetch(_fresh(name, spark, sf_dir))  # warm pass
 
-    # Best-of-2 FULL passes (VERDICT r10 #6): r10's driver wall ran
-    # ~40% above the judge's idle-box rerun of identical code, burning
-    # judge time on box-state adjudication. Two complete measurement
-    # passes make transient machine load visible in the output itself:
-    # per-query value = min across passes, and BOTH pass walls are
-    # recorded so a noisy pass is self-evident (large wall spread +
-    # stable best = load, not regression).
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     timings: dict[str, float] = {}
     walls: list[float] = []
     for _ in range(passes):
         pass_wall = 0.0
         for name in names:
-            best = float("inf")
-            for _ in range(reps):
-                # Drop operator-internal persisted intermediates (LM
-                # count tables, DSIR feature frames, minhash signature
-                # stages) so this rep recomputes them from parquet;
-                # the fresh build below re-registers them, and their
-                # materialization is part of the timed action — the
-                # same cost any fresh caller of the operator pays.
-                spark.catalog.clearCache()
-                if name in BUILD_TIMED:
-                    t0 = time.perf_counter()
-                    _fetch(_fresh(name, spark, sf_dir))
-                else:
-                    df = _fresh(name, spark, sf_dir)
-                    t0 = time.perf_counter()
-                    _fetch(df)
-                best = min(best, time.perf_counter() - t0)
+            best = min(timed_reps(spark, name, sf_dir, reps))
             pass_wall += best
             if best < timings.get(name, float("inf")):
                 timings[name] = round(best, 4)
@@ -350,6 +154,31 @@ def main() -> None:
             }
         )
     )
+
+
+def bench_session(app_name: str, sf_dir: str):
+    """The bench's Spark session, with the star schema at ``sf_dir``
+    registered (temp views and parquet footers only, nothing cached)."""
+    spark = get_spark(
+        app_name=app_name,
+        # the knob that must scale with data volume: sf0.1 shuffle
+        # payloads are KB-scale, and 8 reduce tasks saturate them
+        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8")),
+        extra_conf={
+            # the testdata is single-row-group, so this adds only
+            # empty splits; production keeps the 128 MB default
+            "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
+            # off: at sf0.1 AQE's per-exchange stage barrier adds
+            # +30–130% to every sub-second query; production keeps it on
+            "spark.sql.adaptive.enabled": (
+                "true" if os.environ.get("SPARK_GRAFT_BENCH_AQE") == "1" else "false"
+            ),
+        },
+    )
+    from scratchdata_spark.inventory import load
+
+    load(spark, sf_dir)
+    return spark
 
 
 if __name__ == "__main__":

@@ -29,6 +29,7 @@ client delays by up to 40 ms.
 from __future__ import annotations
 
 import json
+import logging
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -36,6 +37,8 @@ from urllib.parse import parse_qs, urlparse
 
 from scratchdata_spark.flatten import flatten
 from scratchdata_spark.ids import next_row_id
+
+_LOG = logging.getLogger(__name__)
 
 CONTENT_TYPES = {
     "json": "application/json",
@@ -600,6 +603,7 @@ def make_handler(service: Service):
             except Exception:  # noqa: BLE001
                 # headers are gone: a mid-stream failure can only abort
                 # the connection (same contract as the reference's fifo)
+                _LOG.exception("query failed after the 200 headers: %s", q)
                 self.close_connection = True
 
     return Handler

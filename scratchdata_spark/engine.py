@@ -96,9 +96,7 @@ class Destination(ABC):
     @abstractmethod
     def insert_ndjson_file(self, table: str, ndjson_path: str) -> None: ...
 
-    def insert_ndjson(
-        self, table: str, ndjson_path: str | list[str], skip_malformed: bool = False
-    ) -> None:
+    def insert_ndjson(self, table: str, ndjson_path: str | list[str]) -> None:
         """Full batch insert: ensure table, register columns, load.
         Backends override to make the whole sequence atomic."""
         self.create_empty_table(table)
@@ -590,7 +588,10 @@ class SparkDestination(DataFrameSerializers, Destination):
         set, the epoch and every table's fingerprint, never a parquet
         file listing (walking every table's files per query is
         O(total files) and contradicts the many-files scale story).
-        DuckDB (the reference) re-resolves views per query.
+        DuckDB (the reference) re-resolves views per query. A pass
+        that leaves any table's fingerprint unremembered (racy) leaves
+        the view set's unremembered too, so stored views follow a
+        write in the same tick as their tables do.
 
         Appends into an existing partition subdir of a partitioned
         table move the data dir's mtime too: a direct Spark append
@@ -611,6 +612,7 @@ class SparkDestination(DataFrameSerializers, Destination):
     def _register_views_locked(self) -> None:
         registered = self.spark.__dict__.setdefault("_sd_table_fps", {})
         racy_after = time.time_ns() - 1_000_000_000
+        racy = False
         state = []
         for t in self.catalog.tables(self.database):
             info = self.catalog.get(self.database, t)
@@ -635,6 +637,7 @@ class SparkDestination(DataFrameSerializers, Destination):
             self._scan(info, d).createOrReplaceTempView(t)
             if max(mtimes) > racy_after:
                 registered.pop(t, None)
+                racy = True
             else:
                 registered[t] = fp
         views = self.catalog.views(self.database)
@@ -666,12 +669,11 @@ class SparkDestination(DataFrameSerializers, Destination):
             if len(failed) == len(pending):
                 break  # nothing resolved this pass: remaining are broken
             pending = failed
-        if not pending:
-            # cache only a fully-registered set: a broken view must be
-            # retried next call (its base table may just have returned)
-            self._views_fp = fp
-        else:
-            self._views_fp = None
+        # cache only a fully-registered set over remembered tables: a
+        # broken view must be retried next call (its base table may
+        # just have returned), and a racy table may change under an
+        # unchanged fingerprint
+        self._views_fp = None if pending or racy else fp
 
     @staticmethod
     def _dir_mtime(d: str) -> int:
@@ -918,59 +920,24 @@ class SparkDestination(DataFrameSerializers, Destination):
         self.catalog.create_empty_table(self.database, _check_ident(table))
         self.plan_cache.invalidate()
 
-    def create_columns(
-        self, table: str, ndjson_path: str | list[str], skip_malformed: bool = False
-    ) -> None:
-        types = infer_types_file(ndjson_path, skip_malformed=skip_malformed)
+    def create_columns(self, table: str, ndjson_path: str | list[str]) -> None:
+        types = infer_types_file(ndjson_path)
         self.catalog.add_columns(self.database, _check_ident(table), types)
         self.plan_cache.invalidate()
 
-    def insert_ndjson(
-        self,
-        table: str,
-        ndjson_path: str | list[str],
-        skip_malformed: bool = False,
-        dedupe_keys: list[str] | None = None,
-    ) -> None:
+    def insert_ndjson(self, table: str, ndjson_path: str | list[str]) -> None:
         """Atomic batch insert: the per-table catalog lock is held
         across schema registration AND the data write, so two
         concurrent batches on one table can't interleave their
         read-modify-write of the schema JSON (the losing batch's new
-        columns would silently unregister). Accepts a file list — a
-        streaming micro-batch inserts all its source files in one call,
-        executor-side, without rows ever visiting the driver.
-
-        ``dedupe_keys`` makes the insert IDEMPOTENT BY KEY (the SQL
-        ``INSERT … ON CONFLICT DO NOTHING`` semantics): rows whose
-        keys already exist in the table are dropped, so an
-        at-least-once producer resending the same logical rows in new
-        files cannot double-insert. The read-check-write then holds
-        the compaction lock (before the catalog lock, the same order
-        every copy-on-write rewrite uses), serializing with
-        concurrent dedupe inserts and mutations."""
+        columns would silently unregister). Accepts a file list."""
         table = _check_ident(table)
-        if dedupe_keys:
-            with self._compaction_lock(table):
-                with self.catalog.lock(self.database, table):
-                    self.create_empty_table(table)
-                    self.create_columns(
-                        table, ndjson_path, skip_malformed=skip_malformed
-                    )
-                    self.insert_ndjson_file(
-                        table, ndjson_path, dedupe_keys=dedupe_keys
-                    )
-            return
         with self.catalog.lock(self.database, table):
             self.create_empty_table(table)
-            self.create_columns(table, ndjson_path, skip_malformed=skip_malformed)
+            self.create_columns(table, ndjson_path)
             self.insert_ndjson_file(table, ndjson_path)
 
-    def insert_ndjson_file(
-        self,
-        table: str,
-        ndjson_path: str | list[str],
-        dedupe_keys: list[str] | None = None,
-    ) -> None:
+    def insert_ndjson_file(self, table: str, ndjson_path: str | list[str]) -> None:
         """Bulk load one NDJSON micro-batch (A9) — one file or a list.
 
         Read every field as string (exact token preservation), then
@@ -1003,19 +970,6 @@ class SparkDestination(DataFrameSerializers, Destination):
             from scratchdata_spark.ids import snowflake_column
 
             out = out.withColumn(ROW_ID, F.coalesce(F.col(ROW_ID), snowflake_column()))
-            if dedupe_keys:
-                keys = list(dedupe_keys)
-                missing = [k for k in keys if k not in out.columns]
-                if missing:
-                    raise ValueError(
-                        f"dedupe_keys not in table schema: {missing}"
-                    )
-                # within-batch dup keys collapse, then only keys cross
-                # the anti-join against the table — never the payload
-                out = out.dropDuplicates(keys)
-                out = out.join(
-                    self.table_df(table).select(*keys), keys, "left_anti"
-                )
             writer = out.write.mode("append")
             if info.partition_col:
                 writer = writer.partitionBy(info.partition_col)

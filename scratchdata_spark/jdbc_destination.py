@@ -314,8 +314,8 @@ class JDBCDestination(DataFrameSerializers, Destination):
     def create_empty_table(self, table: str) -> None:
         self._execute(_CREATE[self.engine].format(t=self._q_table(table)))
 
-    def create_columns(self, table: str, ndjson_path, skip_malformed: bool = False) -> None:
-        types = infer_types_file(ndjson_path, skip_malformed=skip_malformed)
+    def create_columns(self, table: str, ndjson_path) -> None:
+        types = infer_types_file(ndjson_path)
         tmap = TYPE_MAPS[self.engine]
         have = {c["name"] for c in self.columns(table)}
         for name, jt in types.items():

@@ -76,10 +76,11 @@ def merge_type_counts(counts: dict[str, int]) -> str:
 def infer_types(lines: Iterable[str], skip_malformed: bool = False) -> dict[str, str]:
     """Scan an NDJSON batch → {column: jsontype}.
 
-    ``skip_malformed`` tolerates unparseable lines (streaming-ingest
-    path, where a poisoned file must not wedge the stream); the batch
-    path keeps strict mode so corruption fails the job → retry →
-    dead-letter."""
+    Strict by default, so a corrupt batch fails the job → retry →
+    dead-letter (``create_columns``). ``skip_malformed`` tolerates
+    unparseable lines: an insert's second pass only lists which
+    columns the batch carries, and its reader drops the same lines
+    (DROPMALFORMED)."""
     counts: dict[str, dict[str, int]] = {}
     for line in lines:
         line = line.strip()
@@ -103,8 +104,7 @@ def infer_types(lines: Iterable[str], skip_malformed: bool = False) -> dict[str,
 def infer_types_file(
     path: str | list[str], skip_malformed: bool = False
 ) -> dict[str, str]:
-    """Infer over one NDJSON file or a list of them (a streaming
-    micro-batch is a file list)."""
+    """Infer over one NDJSON file or a list of them."""
     paths = [path] if isinstance(path, str) else list(path)
 
     def _lines():

@@ -182,40 +182,3 @@ def screen_new_against_bloom(
 
     return staged.mapInPandas(run, schema)
 
-
-def bloom_prescreened_exact_dups(
-    new_df: DataFrame,
-    corpus_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fpp: float = 0.01,
-    bloom: dict | None = None,
-) -> DataFrame:
-    """End to end: new_df + ``dup_exact`` where only the Bloom-maybe
-    slice pays the corpus semi-join (sha256 fingerprints, digests-only
-    shuffle — the dedup_against_corpus exact tier on ~fpp·|new| +
-    |true dups| rows instead of |new|).  Pass a prebuilt ``bloom`` to
-    amortize the corpus pass across increments (the production
-    lifecycle)."""
-    if bloom is None:
-        bloom = build_bloom(corpus_df, text_col, fpp=fpp)
-    screened = screen_new_against_bloom(new_df, bloom, text_col)
-    fp = F.sha2(normalize_text(F.col(text_col)), 256)
-    corpus_fps = corpus_df.select(fp.alias("__fp")).distinct().withColumn(
-        "__hit", F.lit(True)
-    )
-    # single pass: the fingerprint only computes on Bloom-maybe rows
-    # (NULL keys never equi-join), and the join is a LEFT against the
-    # distinct corpus digest set — no id self-join, so the screen's
-    # mapInPandas subtree evaluates ONCE and duplicate doc_ids in the
-    # increment cannot multiply output rows (two reviewer catches:
-    # the previous shape re-ran the screen in both join legs and
-    # diverged from dedup_against_corpus on duplicate ids)
-    return (
-        screened.withColumn(
-            "__fp", F.when(F.col("maybe_dup"), fp)
-        )
-        .join(corpus_fps, "__fp", "left")
-        .withColumn("dup_exact", F.coalesce(F.col("__hit"), F.lit(False)))
-        .drop("__fp", "__hit", "maybe_dup")
-    )

@@ -367,9 +367,10 @@ def record_parser(
     on_error: str = "fail",
     keep_paragraphs: bool = False,
 ):
-    """The mapInPandas function the batch readers (WARC and WET) and
-    the streaming ingest all share: (path, content) file rows →
-    WARC_SCHEMA record rows, one inflated archive in memory per core.
+    """The mapInPandas function the batch reader and the streaming
+    admission chain (streaming/admission.py) share: (path, content)
+    file rows → WARC_SCHEMA record rows, one inflated archive in
+    memory per core.
 
     Text derivation is content-type aware: HTML bodies go through
     the tag-stripping extractor, plain-text bodies (WET conversion
@@ -379,9 +380,9 @@ def record_parser(
 
     ``on_error='fail'`` (batch default) keeps the fail-loud contract:
     a structurally corrupt archive fails its file task.  ``'skip'``
-    (the streaming path's poison-pill escape — a foreachBatch retry
+    (the admission stream's poison-pill escape — a foreachBatch retry
     replays the SAME file set, so one bad archive would otherwise
-    wedge the stream forever; advisor catch) drops the bad archive's
+    wedge the stream forever) drops the bad archive's
     records and emits one :data:`PARSE_ERROR_TYPE` sentinel row
     naming the file and the error, so callers can quarantine it.
     Records already yielded before the corruption point are kept —
@@ -464,7 +465,8 @@ def read_warc(
     keep_paragraphs: bool = False,
 ) -> DataFrame:
     """Read WARC archives at ``path`` (glob ok; .warc and .warc.gz)
-    into one row per record of ``record_types``.
+    into one row per record of ``record_types``.  WET archives are
+    read with ``record_types=("conversion",)``.
 
     Distribution contract: one file = one task (binaryFile source —
     WARC is unsplittable mid-record), parsing inside mapInPandas so
@@ -480,29 +482,6 @@ def read_warc(
             record_types, extract_text, keep_paragraphs=keep_paragraphs
         ),
         WARC_SCHEMA,
-    )
-
-
-def read_wet(
-    spark: SparkSession,
-    path: str,
-    keep_paragraphs: bool = False,
-) -> DataFrame:
-    """WET convenience reader (Common Crawl's extracted-text sibling:
-    the same ISO 28500 container whose ``conversion`` records carry
-    ``text/plain`` blocks — the text extraction already done
-    upstream).  Exactly :func:`read_warc` with the conversion record
-    type — one shared parser, so corruption handling and the schema
-    evolve in one place, and the streaming ingest accepts WET via the
-    same ``record_types`` knob.  ``keep_paragraphs`` preserves the
-    conversion records' line structure for the boilerplate stage —
-    WET text is exactly the text/plain case the line-preserving
-    branch targets (review catch)."""
-    return read_warc(
-        spark,
-        path,
-        record_types=("conversion",),
-        keep_paragraphs=keep_paragraphs,
     )
 
 

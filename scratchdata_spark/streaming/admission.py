@@ -25,13 +25,13 @@ micro-batch needs, nothing accumulates, and the only driver traffic
 is the valved robots-rules collect at plan-build time.
 
 Sink: the ``foreachBatch`` overwrite-``batch_id=N`` idiom shared with
-streaming/ingest.py and streaming/semantic.py — a replayed micro-batch
+streaming/semantic.py — a replayed micro-batch
 rewrites its own partition instead of double-appending, and the
 file-source checkpoint makes each archive exactly-once.  Parse-error
 sentinel rows ride THROUGH the admission stages (every gate passes
 ``__quarantined`` rows, text transforms skip them) and split out to
 ``out_dir/_quarantine/batch_id=N`` at the sink — sidelined, never
-silently dropped (the streaming-ingest quarantine contract).
+silently dropped.
 """
 
 from __future__ import annotations

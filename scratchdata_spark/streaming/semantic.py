@@ -3,7 +3,7 @@ standing corpus — the production shape of SemDeDup in an ingest
 pipeline (new embeddings arrive continuously; each must be flagged
 against the corpus before it is admitted).
 
-Structured-Streaming shape, same pattern as streaming/ingest.py:
+Structured-Streaming shape, same pattern as streaming/admission.py:
 
 * the corpus index — centroids + capped cluster assignment
   (operators/semantic.prepare_corpus_index) — is built ONCE when the
@@ -17,7 +17,7 @@ Structured-Streaming shape, same pattern as streaming/ingest.py:
   so an at-least-once foreachBatch replay is idempotent) — downstream
   admission filters ``dup_of IS NULL``;
 * the file-source checkpoint makes each input file exactly-once
-  across restarts, exactly like the ingest stream.
+  across restarts.
 
 The corpus index is a SNAPSHOT: vectors admitted during the stream's
 lifetime do not join the corpus until the index is rebuilt (restart

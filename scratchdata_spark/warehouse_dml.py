@@ -1477,40 +1477,6 @@ def _parse_num(text: str):
     return float(text) if "." in text else int(text)
 
 
-def _split_top_level_and(masked: str) -> list[str]:
-    """Split on AND at parenthesis depth 0 only.  A plain regex split
-    also cut inside function arguments (`f(a AND b = 2)`), lifting an
-    inner comparison to a false 'top-level conjunct' and making the
-    file prune unsound (r10 review catch)."""
-    parts: list[str] = []
-    depth = 0
-    start = 0
-    i = 0
-    n = len(masked)
-    while i < n:
-        ch = masked[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and masked[i : i + 3].upper() == "AND"
-            and (i == 0 or not (masked[i - 1].isalnum() or masked[i - 1] == "_"))
-            and (
-                i + 3 >= n
-                or not (masked[i + 3].isalnum() or masked[i + 3] == "_")
-            )
-        ):
-            parts.append(masked[start:i])
-            i += 3
-            start = i
-            continue
-        i += 1
-    parts.append(masked[start:])
-    return parts
-
-
 def _numeric_conjuncts(info, pred_text: str) -> list[tuple[str, str, object]]:
     """(col_lowercase, op, literal) for every top-level AND conjunct
     of the simple numeric-comparison shape. Soundness: the full
@@ -1524,7 +1490,7 @@ def _numeric_conjuncts(info, pred_text: str) -> list[tuple[str, str, object]]:
     writer-truncated. Column names compare lowercase, matching
     Spark's (and _prunable_partitions') case-insensitive
     resolution."""
-    from scratchdata_spark.dialect import _mask_literals
+    from scratchdata_spark.dialect import _mask_literals, _split_top_and
 
     masked, _ = _mask_literals(pred_text)
     if re.search(r"\bOR\b|\bNOT\b|\bCASE\b|\x00", masked, re.I):
@@ -1537,7 +1503,10 @@ def _numeric_conjuncts(info, pred_text: str) -> list[tuple[str, str, object]]:
         # catch: `CASE WHEN flag AND b = 2 ...` pruned on b = 2)
         conjuncts = []
     else:
-        conjuncts = _split_top_level_and(masked)
+        # depth-0 only: a split inside function arguments
+        # (`f(a AND b = 2)`) would lift an inner comparison to a false
+        # top-level conjunct and make the file prune unsound
+        conjuncts = _split_top_and(masked)
     numeric = {
         f.name.lower()
         for f in info.struct().fields

@@ -37,7 +37,6 @@ _HEAVY_TESTS = {
     # streaming/batch equivalence soaks (~100 s)
     "test_streaming.py::test_semantic_dedup_stream_matches_batch",
     "test_streaming.py::test_stream_dedup_and_stream_join",
-    "test_streaming.py::test_ingest_stream_idempotent_by_key",
     "test_admission_stream.py::test_streamed_union_equals_batch",
     "test_admission_stream.py::test_exactly_once_restart",
     "test_admission_gate_tiers.py::test_tier_parity_both_gates",
@@ -76,12 +75,9 @@ def _bench_names() -> set[str]:
     import sys
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    try:
-        from bench import EXTRAS, HEADLINE
+    from bench import EXTRAS, HEADLINE
 
-        return set(HEADLINE) | set(EXTRAS)
-    except Exception:  # pragma: no cover - bench.py moved/renamed
-        return set()
+    return set(HEADLINE) | set(EXTRAS)
 
 
 def pytest_collection_modifyitems(config, items):

@@ -1,7 +1,6 @@
 """Bloom-filter dedup pre-screen (operators/bloom.py): parameter
-math, no-false-negatives guarantee, fpp ballpark, end-to-end parity
-with the exact tier, and the plan shape (one byte-fold shuffle on
-build; screen is map-only)."""
+math, no-false-negatives guarantee, fpp ballpark, and the plan shape
+(one byte-fold shuffle on build; screen is map-only)."""
 
 from __future__ import annotations
 
@@ -65,34 +64,6 @@ def test_bloom_normalization_agrees_with_exact_tier(spark):
     assert got.maybe_dup
 
 
-def test_bloom_prescreened_exact_dups_matches_plain_join(spark):
-    """End to end: identical dup_exact verdicts to the unscreened
-    exact tier (the screen may only PRUNE rows the join would reject
-    anyway)."""
-    corpus = _corpus(spark, 200)
-    new = spark.createDataFrame(
-        [(1000 + i, f"doc text number {i} with some words") for i in range(30)]
-        + [(2000 + i, f"brand new page {i}") for i in range(70)],
-        "doc_id long, text string",
-    )
-    got = {
-        r.doc_id: r.dup_exact
-        for r in B.bloom_prescreened_exact_dups(corpus_df=corpus, new_df=new).collect()
-    }
-    assert len(got) == 100
-    assert all(got[1000 + i] for i in range(30))
-    assert not any(got[2000 + i] for i in range(70))
-    # prebuilt-bloom path (the per-increment production lifecycle)
-    bl = B.build_bloom(corpus, "text")
-    got2 = {
-        r.doc_id: r.dup_exact
-        for r in B.bloom_prescreened_exact_dups(
-            new, corpus, bloom=bl
-        ).collect()
-    }
-    assert got2 == got
-
-
 def test_bloom_build_plan_single_shuffle(spark):
     """The build's only exchange is the byte-index fold (≤ m/8 rows,
     asserted on the build's OWN plan — reviewer catch: gating only
@@ -130,21 +101,3 @@ def test_bloom_dict_carries_normalization(spark):
     got = B.screen_new_against_bloom(corpus, raw, "text").collect()[0]
     assert got.maybe_dup  # raw build + raw screen agree
 
-
-def test_bloom_prescreen_duplicate_increment_ids(spark):
-    """Duplicate doc_ids in the increment must not multiply output
-    rows (parity with dedup_against_corpus's exact tier)."""
-    corpus = _corpus(spark, 50)
-    new = spark.createDataFrame(
-        [
-            (5, "doc text number 1 with some words"),
-            (5, "doc text number 2 with some words"),
-            (6, "brand new"),
-        ],
-        "doc_id long, text string",
-    )
-    out = B.bloom_prescreened_exact_dups(new, corpus).collect()
-    assert len(out) == 3
-    assert sorted((r.doc_id, r.dup_exact) for r in out) == [
-        (5, True), (5, True), (6, False),
-    ]

@@ -346,12 +346,18 @@ def test_writes_stay_visible_to_the_next_miss(spark, dest):
     catalog (its own session) is visible at the first destination's
     next plan-cache miss — also when the write leaves the directory
     mtimes where they were at the registration (a write in the same
-    timestamp tick); so is a local insert."""
+    timestamp tick); so is a local insert. A stored view over the
+    table follows it."""
     def values(tag):
         sql = f"SELECT v, '{tag}' AS q FROM x ORDER BY v"
         return [r["v"] for r in json.loads(_serve(dest, "json", sql))]
 
+    def view_count(tag):
+        sql = f"SELECT count(*) AS n, '{tag}' AS q FROM xv"
+        return json.loads(_serve(dest, "json", sql))[0]["n"]
+
     _insert(dest, "x", ['{"__row_id": 1, "v": 1}'])
+    _serve(dest, "json", "CREATE VIEW xv AS SELECT v FROM x")
     other = SparkDestination(spark.newSession(), dest.catalog, dest.database)
     root = dest.catalog.table_root(dest.database, "x")
     data = dest.catalog.data_dir(dest.database, "x")
@@ -368,9 +374,11 @@ def test_writes_stay_visible_to_the_next_miss(spark, dest):
     for d in {root, data}:
         os.utime(d, ns=(now, now))
     assert values("racy") == [1, 2]
+    assert view_count("racy") == 2
     _insert(other, "x", ['{"__row_id": 3, "v": 3}'])
     for d in {root, data}:
         os.utime(d, ns=(now, now))
+    assert view_count("after-racy-write") == 3
     assert values("after-racy-write") == [1, 2, 3]
 
     _insert(dest, "x", ['{"__row_id": 4, "v": 4}'])

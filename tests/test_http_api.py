@@ -366,6 +366,36 @@ def test_query_error_before_headers(app):
     assert code == 500
 
 
+def test_query_error_mid_stream_is_logged(app, monkeypatch, caplog):
+    """A failure after the 200 headers can only abort the chunked
+    body, so the server logs it with its traceback."""
+    import http.client
+
+    from scratchdata_spark.api_server import Service
+
+    def fail_after_one_row(self, dest, query, fmt, out):
+        out.write('[{"pad": "' + "x" * (70 * 1024) + '"}')  # one chunk
+        raise RuntimeError("boom mid-stream")
+
+    monkeypatch.setattr(Service, "query", fail_after_one_row)
+    conn = http.client.HTTPConnection("127.0.0.1", app.port, timeout=60)
+    try:
+        conn.request("GET", "/api/data/query?api_key=local&query=select%201")
+        r = conn.getresponse()
+        assert r.status == 200
+        with pytest.raises(http.client.IncompleteRead) as e:
+            r.read()
+    finally:
+        conn.close()
+    assert e.value.partial.startswith(b'[{"pad": "xxx')
+    assert any(
+        rec.name == "scratchdata_spark.api_server"
+        and rec.exc_info
+        and "boom mid-stream" in str(rec.exc_info[1])
+        for rec in caplog.records
+    )
+
+
 def test_admin_unknown_destination_rejected(app):
     """ADVICE fix: admin key + unknown destination_id must 401, not
     crash the handler or enqueue poison jobs."""

@@ -1,4 +1,5 @@
-"""Structured Streaming: ingest stream, windowed aggs, stateful op.
+"""Structured Streaming: stateful op, stream dedup/join, rollup,
+semantic dedup stream.
 
 All tests use availableNow/one-shot triggers over file sources so
 they're deterministic and fast.
@@ -6,69 +7,8 @@ they're deterministic and fast.
 
 from __future__ import annotations
 
-import json
 import os
 import time
-
-import pytest
-from pyspark.sql import functions as F
-
-from scratchdata_spark.catalog import TableCatalog
-from scratchdata_spark.engine import SparkDestination
-
-
-@pytest.fixture()
-def events_parquet(spark, sf_dir, tmp_path):
-    """events as (event_id, ts_us, user_id, event_type, value) parquet."""
-    from scratchdata_spark.inventory import load
-
-    e = load(spark, sf_dir)["events"]
-    out = str(tmp_path / "events_us")
-    e.select(
-        "event_id", F.col("ts").alias("ts_us"), "user_id", "event_type", "value"
-    ).write.parquet(out)
-    return out
-
-
-def test_ingest_stream_end_to_end(spark, tmp_path):
-    from scratchdata_spark.streaming.ingest import start_table_ingest_stream
-
-    dest = SparkDestination(spark, TableCatalog(str(tmp_path / "wh")), "default")
-    src = str(tmp_path / "incoming")
-    os.makedirs(src)
-    with open(os.path.join(src, "batch1.ndjson"), "w") as f:
-        f.write('{"__row_id": 1, "msg": "first"}\n{"__row_id": 2, "msg": "second"}\n')
-
-    q = start_table_ingest_stream(
-        spark, dest, "stream_t", src, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    rows = dest.query_df("select msg from stream_t order by __row_id").collect()
-    assert [r.msg for r in rows] == ["first", "second"]
-
-    # second file: schema evolves between micro-batches
-    with open(os.path.join(src, "batch2.ndjson"), "w") as f:
-        f.write('{"__row_id": 3, "msg": "third", "extra": 7}\n')
-    q2 = start_table_ingest_stream(
-        spark, dest, "stream_t", src, str(tmp_path / "ckpt")
-    )
-    q2.awaitTermination(120)
-    rows = dest.query_df(
-        "select msg, extra from stream_t order by __row_id"
-    ).collect()
-    assert [(r.msg, r.extra) for r in rows] == [
-        ("first", None),
-        ("second", None),
-        ("third", 7),
-    ]
-
-    # exactly-once: re-running the stream over the same checkpoint
-    # must NOT re-insert already-consumed files
-    q3 = start_table_ingest_stream(
-        spark, dest, "stream_t", src, str(tmp_path / "ckpt")
-    )
-    q3.awaitTermination(120)
-    assert dest.query_df("select count(*) as n from stream_t").collect()[0].n == 3
 
 
 def _run_to_memory(df, name, mode="append"):
@@ -85,46 +25,6 @@ def _run_to_memory(df, name, mode="append"):
     q.stop()
     q.awaitTermination()
     return q
-
-
-def test_tumbling_window_counts(spark, events_parquet, sf_dir):
-    from scratchdata_spark.streaming.windows import events_stream_from_dir, tumbling_counts
-
-    stream = events_stream_from_dir(spark, events_parquet)
-    assert stream.isStreaming
-    _run_to_memory(tumbling_counts(stream, "1 hour", "2 hours"), "tumbling")
-    got = spark.sql(
-        "select sum(n) as total, count(*) as n_windows from tumbling"
-    ).collect()[0]
-    # append mode emits only watermark-finalized windows; everything
-    # except the tail of the stream must be present
-    from scratchdata_spark.inventory import load
-
-    n_events = load(spark, sf_dir)["events"].count()
-    assert got.total is not None and got.total > 0.8 * n_events
-    assert got.n_windows > 10
-    # batch cross-check on a finalized window
-    batch = load(spark, sf_dir)["events"]
-    first_hour = batch.filter(
-        (F.col("ts") >= 1704067200000000) & (F.col("ts") < 1704070800000000)
-    ).count()
-    streamed = spark.sql(
-        "select sum(n) as n from tumbling where window_start = timestamp_micros(1704067200000000)"
-    ).collect()[0].n
-    if streamed is not None and first_hour > 0:
-        assert streamed == first_hour
-
-
-def test_session_windows(spark, events_parquet):
-    from scratchdata_spark.streaming.windows import events_stream_from_dir, session_windows
-
-    stream = events_stream_from_dir(spark, events_parquet)
-    _run_to_memory(session_windows(stream, "30 minutes", "2 hours"), "sessions")
-    rows = spark.sql(
-        "select user_id, n_events, session_start, session_end from sessions"
-    ).collect()
-    assert len(rows) > 0
-    assert all(r.session_end > r.session_start for r in rows)
 
 
 def test_stateful_session_operator(spark, tmp_path):
@@ -267,40 +167,6 @@ def test_continuous_rollup_multibatch_and_replay(spark, tmp_path):
         map(tuple, rollup_result(spark, str(tmp_path / "rollup"), ["event_type"]).collect())
     )
     assert again == first
-
-
-def test_ingest_stream_idempotent_by_key(spark, tmp_path):
-    """dedupe_keys: an at-least-once producer resending the same
-    logical rows in NEW files (fresh to the checkpoint) must not
-    double-insert — key-level idempotency on top of the file-level
-    exactly-once the checkpoint already gives."""
-    import os
-
-    from scratchdata_spark.streaming.ingest import start_table_ingest_stream
-
-    dest = SparkDestination(
-        spark, TableCatalog(str(tmp_path / "whk")), "default"
-    )
-    src = str(tmp_path / "in_k")
-    os.makedirs(src)
-    with open(os.path.join(src, "a.ndjson"), "w") as f:
-        f.write('{"k": 1, "v": "one"}\n{"k": 2, "v": "two"}\n')
-    q = start_table_ingest_stream(
-        spark, dest, "idem_t", src, str(tmp_path / "ck_k"),
-        dedupe_keys=["k"],
-    )
-    q.awaitTermination(120)
-
-    # the producer retries: same rows + one new, in a NEW file
-    with open(os.path.join(src, "b.ndjson"), "w") as f:
-        f.write('{"k": 1, "v": "one"}\n{"k": 2, "v": "two"}\n{"k": 3, "v": "three"}\n')
-    q2 = start_table_ingest_stream(
-        spark, dest, "idem_t", src, str(tmp_path / "ck_k"),
-        dedupe_keys=["k"],
-    )
-    q2.awaitTermination(120)
-    rows = dest.query_df("select k, v from idem_t order by k").collect()
-    assert [(r.k, r.v) for r in rows] == [(1, "one"), (2, "two"), (3, "three")]
 
 
 def test_semantic_dedup_stream_matches_batch(spark, tmp_path):

@@ -157,44 +157,6 @@ def test_warc_chunked_and_gzip_bodies_decode():
     assert W.parse_http_response(broken)[2] == b"not-gzip"
 
 
-def test_warc_streaming_ingest(spark, tmp_path):
-    """Streaming crawl ingestion: archives land as batch_id=N parquet
-    partitions (idempotent overwrite per batch), a restarted stream
-    only consumes NEW archives, and the output schema matches the
-    batch reader's."""
-    from scratchdata_spark.streaming.ingest import start_warc_ingest_stream
-
-    src = tmp_path / "in"
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-    (src / "a.warc").write_bytes(_archive(2))
-    q = start_warc_ingest_stream(
-        spark, str(src), str(out), str(ckpt),
-        trigger={"availableNow": True},
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(out))
-    assert got.count() == 2
-    assert "batch_id" in got.columns
-    # second stream run with one NEW archive: checkpoint skips a.warc
-    (src / "b.warc.gz").write_bytes(
-        __import__("gzip").compress(_archive(3))
-    )
-    q2 = start_warc_ingest_stream(
-        spark, str(src), str(out), str(ckpt),
-        trigger={"availableNow": True},
-    )
-    q2.awaitTermination(120)
-    got2 = spark.read.parquet(str(out))
-    assert got2.count() == 5
-    assert got2.select("batch_id").distinct().count() >= 2
-    uris = {r.target_uri for r in got2.collect()}
-    assert uris == {f"https://example.com/{i}" for i in range(3)} | {
-        "https://example.com/0", "https://example.com/1",
-    }
-
-
 def test_warc_hostile_http_bodies_never_hang_or_fail():
     """Negative hex chunk sizes refuse (they walked pos backwards into
     an infinite loop) and truncated gzip degrades to raw bytes
@@ -232,7 +194,9 @@ def test_wet_reader(spark, tmp_path):
     ]
     (tmp_path / "c.warc.wet").write_bytes(b"".join(recs))
     rows = sorted(
-        W.read_wet(spark, str(tmp_path) + "/*").collect(),
+        W.read_warc(
+            spark, str(tmp_path) + "/*", record_types=("conversion",)
+        ).collect(),
         key=lambda r: r.target_uri,
     )
     assert len(rows) == 3
@@ -285,39 +249,6 @@ def test_warc_corrupt_gzip_archive_raises_valueerror():
 def test_warc_record_parser_on_error_validates():
     with pytest.raises(ValueError, match="on_error"):
         W.record_parser(on_error="quarantine")
-
-
-def test_warc_streaming_poison_archive_quarantined(spark, tmp_path):
-    """on_error='skip' (the streaming default): one structurally
-    corrupt archive must not wedge the stream — a foreachBatch retry
-    replays the SAME file set, so 'fail' loops forever (advisor
-    catch).  The bad archive lands as a sentinel row under
-    out/_quarantine (hidden from normal parquet discovery by the
-    leading underscore); good archives ingest normally."""
-    from scratchdata_spark.streaming.ingest import start_warc_ingest_stream
-
-    src = tmp_path / "in"
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ck"
-    src.mkdir()
-    (src / "good.warc").write_bytes(_archive(2))
-    (src / "bad.warc").write_bytes(b"WARC/1.0\r\nbroken")
-    q = start_warc_ingest_stream(
-        spark, str(src), str(out), str(ckpt),
-        trigger={"availableNow": True},
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(out))
-    assert got.count() == 2  # the good records only
-    assert (
-        got.filter(got.warc_type == W.PARSE_ERROR_TYPE).count() == 0
-    )
-    bad = spark.read.parquet(str(out / "_quarantine"))
-    rows = bad.collect()
-    assert len(rows) == 1
-    assert rows[0].warc_type == W.PARSE_ERROR_TYPE
-    assert rows[0].warc_file.endswith("bad.warc")
-    assert "truncated" in rows[0].text
 
 
 def test_warc_multimember_gzip_body_decodes_fully():
@@ -437,7 +368,10 @@ def test_read_wet_keep_paragraphs(spark, tmp_path):
         target_uri="https://x/w",
     )
     (tmp_path / "c.warc.wet").write_bytes(rec)
-    got = W.read_wet(
-        spark, str(tmp_path) + "/*", keep_paragraphs=True
+    got = W.read_warc(
+        spark,
+        str(tmp_path) + "/*",
+        record_types=("conversion",),
+        keep_paragraphs=True,
     ).collect()
     assert got[0].text == "para one line\npara two line"
