@@ -35,6 +35,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from scratchdata_spark.engine import PreparedQuery
 from scratchdata_spark.flatten import flatten
 from scratchdata_spark.ids import next_row_id
 
@@ -183,40 +184,34 @@ class Service:
         return sum(map(len, lines.values()))
 
     # ------------------------------------------------------------- query
-    def validate_query(self, destination: str, q: str) -> None:
+    def validate_query(self, destination: str, query: PreparedQuery) -> None:
         """Parse/analyze the query so syntax/semantic errors surface
-        BEFORE any response byte is written. The destination's plan
-        cache keeps the analyzed plan, so the serializer that follows
-        re-uses this work rather than repeating it (except for texts
-        the cache refuses, which read the clock or draw random
-        values: those analyze twice). Warehouse DML
-        statements validate WITHOUT executing (query_df would run the
-        side effect; the one real execution happens when the
-        serializer calls it)."""
+        BEFORE any response byte is written. A SELECT becomes its
+        plan-cache DataFrame, kept on ``query.df`` for ``query`` to
+        serve; warehouse DML validates WITHOUT executing (it executes
+        once, when ``query`` serves it)."""
         dest = self.destinations[destination]  # KeyError → 404 upstream
         validate_stmt = getattr(dest, "validate_statement", None)
-        if validate_stmt is not None:
-            try:
-                if validate_stmt(q):
-                    return
-            except KeyError as err:
-                # 'no such table' must NOT reuse the KeyError →
-                # 404-unknown-destination mapping of the line above
-                raise ValueError(str(err)) from err
         try:
-            dest.query_df(q)
+            if validate_stmt is None or not validate_stmt(query):
+                query.df = dest.query_df(query)
+        except KeyError as err:
+            # 'no such table' must NOT reuse the KeyError →
+            # 404-unknown-destination mapping of the line above
+            raise ValueError(str(err)) from err
         except NotImplementedError:  # backend without a DataFrame surface
             pass
 
-    def query(self, destination: str, q: str, fmt: str, out) -> None:
+    def query(self, destination: str, query: PreparedQuery, fmt: str, out) -> None:
+        """Serve ``query`` as ``fmt`` (lower-case; anything but csv or
+        ndjson is JSON)."""
         dest = self.destinations[destination]
-        fmt = (fmt or "").lower()  # reference matches case-insensitively
         if fmt == "csv":
-            dest.query_csv(q, out)
+            dest.query_csv(query, out)
         elif fmt == "ndjson":
-            dest.query_ndjson(q, out)
+            dest.query_ndjson(query, out)
         else:
-            dest.query_json(q, out)
+            dest.query_json(query, out)
 
     def copy(self, source: str, query: str, destination: str, table: str) -> int:
         return self.queue.enqueue(
@@ -242,7 +237,6 @@ class _ChunkedOut:
         self._chunk = chunk_size
         self._buf: list[str] = []
         self._n = 0
-        self.chunks_sent = 0
         self.total_bytes = 0
 
     def write(self, s: str) -> int:
@@ -259,25 +253,12 @@ class _ChunkedOut:
             return
         data = "".join(self._buf).encode()
         self._w.write(f"{len(data):x}\r\n".encode() + data + b"\r\n")
-        self.chunks_sent += 1
         self.total_bytes += len(data)
         self._buf, self._n = [], 0
 
     def close(self) -> None:
         self._flush()
         self._w.write(b"0\r\n\r\n")
-
-
-def _needs_admin(q: str) -> bool:
-    """True if any statement of ``q`` (scripts included) is an
-    admin-gated maintenance statement (COMPACT TABLE)."""
-    from scratchdata_spark import warehouse_dml as W
-
-    try:
-        stmts = W.split_script(W.normalize(q))
-    except Exception:  # noqa: BLE001 — malformed text fails later anyway
-        return False
-    return any(W.statement_kind(W.normalize(s)) == "compact" for s in stmts)
 
 
 def _route_pattern(path: str) -> str:
@@ -342,11 +323,14 @@ def make_handler(service: Service):
         def _json(self, code: int, obj) -> None:
             self._send(code, json.dumps(obj).encode())
 
-        def _auth(self, params) -> str | None:
-            key = params.get("api_key") or (
+        def _key(self, params) -> str | None:
+            """The API key: ``api_key`` param or ``Authorization: Bearer``."""
+            return params.get("api_key") or (
                 self.headers.get("Authorization", "").removeprefix("Bearer ") or None
             )
-            dest = service.keys.resolve(key, params.get("destination_id"))
+
+        def _auth(self, params) -> str | None:
+            dest = service.keys.resolve(self._key(params), params.get("destination_id"))
             if dest is not None and dest not in service.destinations:
                 # admin key + unknown ?destination_id: reject here so no
                 # route ever KeyErrors and no poison job gets enqueued
@@ -433,10 +417,7 @@ def make_handler(service: Service):
             return self._json(404, {"error": "not found"})
 
         def _is_admin(self, params) -> bool:
-            key = params.get("api_key") or (
-                self.headers.get("Authorization", "").removeprefix("Bearer ") or None
-            )
-            return service.keys.is_admin(key)
+            return service.keys.is_admin(self._key(params))
 
         def _post(self, path, params):
             dash = getattr(service, "dashboard", None)
@@ -571,33 +552,37 @@ def make_handler(service: Service):
             return self._json(404, {"error": "not found"})
 
         def _run_query(self, dest: str, q: str, fmt: str, is_admin=False):
-            # Maintenance statements are admin-gated like their HTTP
-            # route twins: a plain query key must not trigger a
-            # full-table rewrite + generation flip (which also retires
-            # time-travel history). Checked against every statement of
-            # a script, so a COMPACT can't hide mid-script.
-            if not is_admin and _needs_admin(q):
-                return self._json(
-                    401, {"error": "admin key required for COMPACT TABLE"}
-                )
-            # Analyze first: errors still get a clean 4xx/5xx because no
-            # header has been sent yet (plan-cached — not repeated work).
+            fmt = (fmt or "").lower()  # reference matches case-insensitively
+            # Prepare and analyze first: errors still get a clean
+            # 4xx/5xx because no header has been sent yet.
             try:
-                service.validate_query(dest, q)
+                # the request's one PreparedQuery: the admin gate,
+                # validation and serving all read it
+                query = service.destinations[dest].prepare(q)
+                # Maintenance statements are admin-gated like their HTTP
+                # route twins: a plain query key must not trigger a
+                # full-table rewrite + generation flip (which also
+                # retires time-travel history). Checked against every
+                # statement of a script, so a COMPACT can't hide
+                # mid-script.
+                if not is_admin and query.needs_admin:
+                    return self._json(
+                        401, {"error": "admin key required for COMPACT TABLE"}
+                    )
+                service.validate_query(dest, query)
             except KeyError:
                 return self._json(404, {"error": f"unknown destination {dest}"})
             except Exception as e:  # noqa: BLE001 — surface backend errors as 500
                 return self._json(500, {"error": str(e).split("\n")[0][:500]})
             self.send_response(200)
             self.send_header(
-                "Content-Type",
-                CONTENT_TYPES.get((fmt or "").lower(), "application/json"),
+                "Content-Type", CONTENT_TYPES.get(fmt, "application/json")
             )
             self.send_header("Transfer-Encoding", "chunked")
             self.end_headers()
             out = _ChunkedOut(self.wfile)
             try:
-                service.query(dest, q, fmt, out)
+                service.query(dest, query, fmt, out)
                 out.close()
                 self._resp_bytes = out.total_bytes
             except Exception:  # noqa: BLE001

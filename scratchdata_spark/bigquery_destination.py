@@ -27,12 +27,10 @@ pattern test_blobstore.py uses for S3/GCS).
 
 from __future__ import annotations
 
-import json
 import os
-from typing import IO
 
 from scratchdata_spark.blobstore import BlobStore
-from scratchdata_spark.engine import Destination, _check_ident, trim_query
+from scratchdata_spark.engine import Destination, RowSerializers, _check_ident
 from scratchdata_spark.jtypes import infer_types_file
 
 # insert.go:19-31 jsonTypeToBQType
@@ -66,7 +64,7 @@ def _check_column(name: str) -> str:
     return name
 
 
-class BigQueryDestination(Destination):
+class BigQueryDestination(RowSerializers, Destination):
     def __init__(
         self,
         client,
@@ -84,30 +82,8 @@ class BigQueryDestination(Destination):
         self._types_cache: dict[tuple[str, float], dict[str, str]] = {}
 
     # ------------------------------------------------------------ query
-    def query_df(self, query: str):
-        raise NotImplementedError("BigQuery destination has no DataFrame surface")
-
-    def _rows(self, query: str):
-        return self.client.query(trim_query(query))
-
-    def query_json(self, query: str, out: IO[str]) -> None:
-        cols, rows = self._rows(query)
-        out.write(json.dumps([dict(zip(cols, r)) for r in rows], default=str))
-
-    def query_ndjson(self, query: str, out: IO[str]) -> None:
-        cols, rows = self._rows(query)
-        for r in rows:
-            out.write(json.dumps(dict(zip(cols, r)), default=str))
-            out.write("\n")
-
-    def query_csv(self, query: str, out: IO[str]) -> None:
-        import csv
-
-        cols, rows = self._rows(query)
-        w = csv.writer(out)
-        w.writerow(cols)
-        for r in rows:
-            w.writerow(["null" if v is None else v for v in r])
+    def _rows(self, text: str):
+        return self.client.query(text)
 
     # ----------------------------------------------------- introspection
     def tables(self) -> list[str]:

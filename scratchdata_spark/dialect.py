@@ -4471,7 +4471,7 @@ def escape_backslashes_for_spark(sql: str) -> str:
 # r11/r12 probe waves documented as fallback blind spots.  The fallback
 # rewriter can never see them (stock Spark ACCEPTS the text, with the
 # wrong meaning), so they are bridged HERE — an always-on pass at the
-# same query_df/validate_statement boundary as the r12 literal bridge,
+# same engine boundary (SparkDestination.prepare) as the r12 literal bridge,
 # under the same contract: the engine's query surface speaks DuckDB.
 # Like that bridge, this one deliberately changes the meaning of valid
 # Spark text (trim('x', s), log(x)=ln, a ^ b as XOR — spell XOR as the
@@ -5576,8 +5576,8 @@ def normalize_dollar_literals(sql: str) -> str:
 
 
 def prepare_query_text(sql: str) -> str:
-    """The engine's single pre-parse boundary (query_df /
-    validate_statement): dollar-quoted literals normalized, then
+    """The engine's single pre-parse boundary
+    (``SparkDestination.prepare``): dollar-quoted literals normalized, then
     DuckDB semantics for the ambiguous call shapes, then DuckDB
     literal semantics through Spark's escape-processing parser.
     Order matters: the call bridge reads replacement literals in

@@ -13,14 +13,12 @@ Mirrors the reference's DuckDB driver behavior:
 
 from __future__ import annotations
 
-import json
 import re
 import threading
-from typing import IO
 
 import duckdb
 
-from scratchdata_spark.engine import Destination, _check_ident, trim_query
+from scratchdata_spark.engine import Destination, RowSerializers, _check_ident
 from scratchdata_spark.jtypes import DUCKDB_TYPES, infer_types_file
 
 
@@ -38,7 +36,7 @@ def motherduck_connection_string(database: str, token: str) -> str:
     return f"md:{database}?motherduck_saas_mode=true&motherduck_token={token}"
 
 
-class DuckDBDestination(Destination):
+class DuckDBDestination(RowSerializers, Destination):
     def __init__(self, path: str = ":memory:", export_root: str | None = None):
         self.conn = duckdb.connect(path)
         self._lock = threading.Lock()  # duckdb conn is not thread-safe
@@ -87,9 +85,6 @@ class DuckDBDestination(Destination):
         """Connect to MotherDuck instead of a local file/in-memory db
         (requires network + the motherduck extension at runtime)."""
         return cls(motherduck_connection_string(database, token))
-
-    def query_df(self, query: str):
-        raise NotImplementedError("DuckDB destination has no DataFrame surface")
 
     # Statement heads that reach the filesystem / extension dir /
     # settings outside the in-database surface.  duckdb.execute() runs
@@ -202,10 +197,10 @@ class DuckDBDestination(Destination):
         finally:
             self._fs.execute("DROP TABLE IF EXISTS __stage_in")
 
-    def _rows(self, query: str):
+    def _rows(self, text: str):
         with self._lock:
             out = None
-            for action in self._confine(trim_query(query)):
+            for action in self._confine(text):
                 if action[0] == "copy_to":
                     out = self._staged_copy_to(*action[1:])
                 elif action[0] == "copy_from":
@@ -214,25 +209,6 @@ class DuckDBDestination(Destination):
                     res = self.conn.execute(action[1])
                     out = ([d[0] for d in res.description], res.fetchall())
             return out
-
-    def query_json(self, query: str, out: IO[str]) -> None:
-        cols, rows = self._rows(query)
-        out.write(json.dumps([dict(zip(cols, r)) for r in rows], default=str))
-
-    def query_ndjson(self, query: str, out: IO[str]) -> None:
-        cols, rows = self._rows(query)
-        for r in rows:
-            out.write(json.dumps(dict(zip(cols, r)), default=str))
-            out.write("\n")
-
-    def query_csv(self, query: str, out: IO[str]) -> None:
-        import csv
-
-        cols, rows = self._rows(query)
-        w = csv.writer(out)
-        w.writerow(cols)
-        for r in rows:
-            w.writerow(["null" if v is None else v for v in r])
 
     def tables(self) -> list[str]:
         _, rows = self._rows("SELECT table_name FROM information_schema.tables ORDER BY 1")

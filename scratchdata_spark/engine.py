@@ -7,11 +7,15 @@ InsertFromNDJsonFile / Close — kept as a Python ABC so other OLAP
 backends (DuckDB, JDBC engines) can slot in behind the same API,
 with Spark as the primary.
 
-Query semantics: raw SQL passthrough. The only rewrite is the
-reference's whitespace/trailing-``;`` trim (``pkg/util/sql.go:9-13``);
-Spark's parser is the validator.
+Query semantics: raw SQL passthrough, prepared once per request
+(``Destination.prepare`` → ``PreparedQuery``): the reference's trim
+(``pkg/util/sql.go:9-13``), on Spark the dialect pre-parse bridges,
+then the script split and statement kinds. The HTTP path gates,
+validates and serves that one value, and serving writes the DataFrame
+validation built; the text API (``query_df(text)``, …) prepares its
+text the same way. Spark's parser is the validator.
 
-Serving path: ``query_df`` returns the DataFrame for a query text from
+Serving path: ``query_df`` returns the DataFrame for a query from
 the destination's ``PlanCache``. A hit is a DataFrame that already
 holds its physical plan, and the JSON/NDJSON ``to_json`` projection
 over it is built once and kept with it, so a warm request re-runs only
@@ -38,6 +42,7 @@ import os
 import re
 import time
 from abc import ABC, abstractmethod
+from dataclasses import dataclass
 from typing import IO, Iterator
 
 from pyspark.serializers import BatchedSerializer, CPickleSerializer
@@ -66,20 +71,60 @@ def trim_query(query: str) -> str:
     return query
 
 
+@dataclass
+class PreparedQuery:
+    """One query text, prepared once by ``Destination.prepare`` and
+    passed whole through a request: the admin gate reads
+    ``needs_admin``, validation stores a SELECT's DataFrame in ``df``,
+    and serving writes that DataFrame or executes the statements."""
+
+    text: str
+    df: DataFrame | None = None
+
+    @functools.cached_property
+    def statements(self) -> list[tuple[str, str | None]]:
+        """(statement, ``warehouse_dml.statement_kind``) per script
+        statement; kind None is a query, kept as written (it keys the
+        plan cache), while a warehouse statement is ``normalize``d."""
+        from scratchdata_spark import warehouse_dml
+
+        script = warehouse_dml.split_script(warehouse_dml.normalize(self.text))
+        out = []
+        for part in script if len(script) > 1 else [self.text]:
+            norm = warehouse_dml.normalize(part)
+            kind = warehouse_dml.statement_kind(norm)
+            out.append((norm if kind else part, kind))
+        return out
+
+    @property
+    def needs_admin(self) -> bool:
+        """Some statement is admin-gated maintenance (COMPACT TABLE)."""
+        return any(kind == "compact" for _, kind in self.statements)
+
+
 class Destination(ABC):
-    """One analytics backend holding many tables (unit of multi-tenancy)."""
+    """One analytics backend holding many tables (unit of multi-tenancy).
+    The query methods take a text or a ``PreparedQuery``."""
+
+    def prepare(self, query: str) -> PreparedQuery:
+        """The request value for ``query``, trimmed as the reference
+        trims it."""
+        return PreparedQuery(trim_query(query))
+
+    def _prepared(self, query: str | PreparedQuery) -> PreparedQuery:
+        return query if isinstance(query, PreparedQuery) else self.prepare(query)
 
     @abstractmethod
-    def query_df(self, query: str) -> DataFrame | None: ...
+    def query_df(self, query: str | PreparedQuery) -> DataFrame | None: ...
 
     @abstractmethod
-    def query_json(self, query: str, out: IO[str]) -> None: ...
+    def query_json(self, query: str | PreparedQuery, out: IO[str]) -> None: ...
 
     @abstractmethod
-    def query_ndjson(self, query: str, out: IO[str]) -> None: ...
+    def query_ndjson(self, query: str | PreparedQuery, out: IO[str]) -> None: ...
 
     @abstractmethod
-    def query_csv(self, query: str, out: IO[str]) -> None: ...
+    def query_csv(self, query: str | PreparedQuery, out: IO[str]) -> None: ...
 
     @abstractmethod
     def tables(self) -> list[str]: ...
@@ -205,10 +250,12 @@ class DataFrameSerializers:
     single-file table, a JDBC scan); it is held whole in the JVM, as
     it was when streamed.
     Collecting avoids the ~40 ms delayed-ACK stall ``toLocalIterator``
-    pays per partition."""
+    pays per partition. A ``PreparedQuery`` validation turned into a
+    DataFrame is served from that DataFrame."""
 
-    def query_df(self, query: str) -> DataFrame:  # pragma: no cover - abstract
-        raise NotImplementedError
+    def _answer(self, query) -> DataFrame:
+        query = self._prepared(query)
+        return query.df if query.df is not None else self.query_df(query)
 
     @staticmethod
     def _fetch_rows(out: DataFrame, collect: bool):
@@ -280,28 +327,56 @@ class DataFrameSerializers:
             ).alias("__j")
         )
 
-    def query_json(self, query: str, out: IO[str]) -> None:
+    def query_json(self, query, out: IO[str]) -> None:
         out.write("[")
-        for i, row in enumerate(self._json_rows(self.query_df(query))):
+        for i, row in enumerate(self._json_rows(self._answer(query))):
             if i:
                 out.write(",")
             out.write(row)
         out.write("]")
 
-    def query_ndjson(self, query: str, out: IO[str]) -> None:
-        for row in self._json_rows(self.query_df(query)):
+    def query_ndjson(self, query, out: IO[str]) -> None:
+        for row in self._json_rows(self._answer(query)):
             out.write(row)
             out.write("\n")
 
-    def query_csv(self, query: str, out: IO[str]) -> None:
+    def query_csv(self, query, out: IO[str]) -> None:
         import csv
 
-        df = self.query_df(query)
+        df = self._answer(query)
         writer = csv.writer(out)
         writer.writerow(df.columns)  # deterministic column order
         # (fixes the reference's BigQuery map-iteration bug, query.go:112-180)
         for row in self._fetch_rows(df, self._collects(df, df)):
             writer.writerow(["null" if v is None else v for v in row])
+
+
+class RowSerializers:
+    """JSON / NDJSON / CSV for a backend that answers a query's text
+    with ``_rows(text) -> (columns, rows)`` and has no DataFrame
+    surface (DuckDB, BigQuery)."""
+
+    def query_df(self, query):
+        raise NotImplementedError(f"{type(self).__name__} has no DataFrame surface")
+
+    def query_json(self, query, out: IO[str]) -> None:
+        cols, rows = self._rows(self._prepared(query).text)
+        out.write(json.dumps([dict(zip(cols, r)) for r in rows], default=str))
+
+    def query_ndjson(self, query, out: IO[str]) -> None:
+        cols, rows = self._rows(self._prepared(query).text)
+        for r in rows:
+            out.write(json.dumps(dict(zip(cols, r)), default=str))
+            out.write("\n")
+
+    def query_csv(self, query, out: IO[str]) -> None:
+        import csv
+
+        cols, rows = self._rows(self._prepared(query).text)
+        w = csv.writer(out)
+        w.writerow(cols)
+        for r in rows:
+            w.writerow(["null" if v is None else v for v in r])
 
 
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -456,19 +531,13 @@ class SparkDestination(DataFrameSerializers, Destination):
         # reference dialect never spells STRING literals with
         # double quotes — those stay '…' on both engines.
         spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-        # Backslash parity is handled by TEXT preprocessing, not
-        # a parser flag: DuckDB literals don't process backslash
-        # escapes ('\d' is backslash-d) where stock Spark's
-        # parser eats them ('\d' → 'd') — every regex class in a
-        # saved query silently matched the wrong thing (r12 probe
-        # wave, the largest silent-divergence class found to
-        # date).  escapedStringLiterals=true would fix that but
-        # BREAKS quote-doubling ('a''b' stops collapsing —
-        # probed), DuckDB's one escape; Spark offers no config
-        # with both semantics.  So query_df/validate_statement
-        # double the backslashes inside '…' literals instead
-        # (dialect.escape_backslashes_for_spark) and the default
-        # parser collapses them back — both paritys hold.
+        # Backslash parity is TEXT preprocessing, not a parser flag:
+        # DuckDB keeps '\d' as backslash-d where Spark's parser eats
+        # it, and escapedStringLiterals=true would break DuckDB's
+        # quote doubling ('a''b'). So prepare() doubles the
+        # backslashes inside '…' literals
+        # (dialect.escape_backslashes_for_spark) and the parser
+        # collapses them back.
         register_compat_functions(spark)
 
     # ------------------------------------------------------------- read
@@ -712,47 +781,45 @@ class SparkDestination(DataFrameSerializers, Destination):
 
             return self.spark.sql(rewrite(sql))
 
-    def query_df(self, query: str) -> DataFrame:
-        query = trim_query(query)
-        # pre-parse bridges (see __init__): the r12 literal-
-        # semantics pass ('\d' must stay backslash-d through
-        # Spark's escape-processing parser) plus the r13 call-
-        # semantics pass (2-arg trim/regexp_extract, ^, 1-arg
-        # log, 3-arg regexp_replace — valid in both dialects,
-        # different meanings; DuckDB's wins) — applied ONCE at
-        # this public boundary so every downstream consumer
-        # (stock parse, dialect fallback, warehouse DML fragments
-        # via F.expr) sees one consistent text.  Re-entrant
-        # internal calls (script statements, embedded INSERT/CTAS
-        # sources) use _query_df_prepared: a second pass would
-        # double the literal doubling and re-bridge replacement
-        # strings (r12/r13 regression tests).
-        from scratchdata_spark.dialect import prepare_query_text
+    def prepare(self, query: str) -> PreparedQuery:
+        """Trim, then the dialect pre-parse bridges (see __init__ and
+        ``dialect.prepare_query_text``), once per text: every consumer
+        (stock parse, dialect fallback, DML fragments via F.expr) sees
+        one consistent text, and a second pass would double the
+        literal doubling (r12/r13 regression tests)."""
+        from scratchdata_spark import dialect
 
-        query = prepare_query_text(query)
-        return self._query_df_prepared(query)
+        return PreparedQuery(dialect.prepare_query_text(trim_query(query)))
+
+    def query_df(self, query: str | PreparedQuery) -> DataFrame:
+        return self._script_df(self._prepared(query))
 
     def _query_df_prepared(self, query: str) -> DataFrame:
+        """``query_df`` for text that is already prepared: the
+        re-entrant internal calls (embedded INSERT/CTAS/COPY sources,
+        DESCRIBE bodies)."""
+        return self._script_df(PreparedQuery(query))
+
+    def _script_df(self, query: PreparedQuery) -> DataFrame:
+        # a saved multi-statement script: DuckDB executes every
+        # statement and answers with the LAST one's result.
+        # Intermediate DML runs for its side effects; an intermediate
+        # SELECT is built (analyzed) but its rows are never
+        # materialized — it has no observable effect.
+        for stmt, kind in query.statements:
+            df = self._statement_df(stmt, kind)
+        return df
+
+    def _statement_df(self, stmt: str, kind: str | None) -> DataFrame:
         # warehouse DML/DDL executes HERE, bypassing the plan cache —
         # caching would make a repeated INSERT/DELETE text a no-op —
         # and never reaches spark.sql, whose session catalog would
         # swallow CREATE/DROP invisibly (warehouse_dml module doc)
-        from scratchdata_spark import warehouse_dml
+        if kind is not None:
+            from scratchdata_spark import warehouse_dml
 
-        stmt_text = warehouse_dml.normalize(query)
-        script = warehouse_dml.split_script(stmt_text)
-        if len(script) > 1:
-            # a saved multi-statement script: DuckDB executes every
-            # statement and answers with the LAST one's result.
-            # Intermediate DML runs for its side effects; an
-            # intermediate SELECT is built (analyzed) but its rows are
-            # never materialized — it has no observable effect.
-            for stmt in script[:-1]:
-                self._query_df_prepared(stmt)
-            return self._query_df_prepared(script[-1])
-        if warehouse_dml.statement_kind(stmt_text) is not None:
             self.register_views()
-            return warehouse_dml.execute(self, stmt_text)
+            return warehouse_dml.execute(self, stmt, kind)
 
         def build() -> DataFrame:
             self.register_views()
@@ -762,7 +829,7 @@ class SparkDestination(DataFrameSerializers, Destination):
             # swaps the call for the view name BEFORE spark.sql —
             # engine-specific surface, deliberately outside the
             # DuckDB dialect fallback (DuckDB has no equivalent).
-            sql_text = self._rewrite_table_at(query)
+            sql_text = self._rewrite_table_at(stmt)
             # DESCRIBE / SHOW TABLES parse in stock Spark with
             # SPARK's catalog shapes — the speaks-DuckDB contract
             # intercepts them first (dialect.describe_form_df)
@@ -789,9 +856,9 @@ class SparkDestination(DataFrameSerializers, Destination):
                     statement_form_df,
                 )
 
-                stmt = statement_form_df(self.spark, sql_text)
-                if stmt is not None:
-                    return stmt
+                form = statement_form_df(self.spark, sql_text)
+                if form is not None:
+                    return form
                 # COLUMNS() macros expand against the registered
                 # views' schemas (r13); unresolvable shapes pass
                 # through to rewrite's loud refusal
@@ -803,7 +870,7 @@ class SparkDestination(DataFrameSerializers, Destination):
                     raise stock_err
                 return self.spark.sql(rewritten)
 
-        return self.plan_cache.get(query, build)
+        return self.plan_cache.get(stmt, build)
 
     def _catalog_names(self) -> list[str]:
         """Table + view names of the engine's database, for SHOW
@@ -821,23 +888,16 @@ class SparkDestination(DataFrameSerializers, Destination):
         except Exception:
             return None
 
-    def validate_statement(self, query: str) -> bool:
-        """True if ``query`` is a warehouse DML/DDL statement, after
-        side-effect-free validation (shape, target table, embedded
-        SELECT analysis). The HTTP layer calls this BEFORE streaming:
-        query_df would EXECUTE the statement, and the API's
+    def validate_statement(self, query: str | PreparedQuery) -> bool:
+        """True if ``query`` is a warehouse DML/DDL statement or a
+        script, after side-effect-free validation (shape, target table,
+        embedded SELECT analysis). The HTTP layer calls this BEFORE
+        streaming: query_df would EXECUTE the statement, and the API's
         validate-then-serialize shape would run it twice."""
         from scratchdata_spark import warehouse_dml
 
-        query = trim_query(query)
-        # same pre-parse bridges as query_df — validation must
-        # analyze exactly the text execution will see
-        from scratchdata_spark.dialect import prepare_query_text
-
-        query = prepare_query_text(query)
-        stmt_text = warehouse_dml.normalize(query)
-        script = warehouse_dml.split_script(stmt_text)
-        if len(script) > 1:
+        statements = self._prepared(query).statements
+        if len(statements) > 1:
             # validate each DML statement WITHOUT executing; plain
             # SELECT parts are left to execution, and a failure that
             # names a table an EARLIER script statement creates is
@@ -845,9 +905,8 @@ class SparkDestination(DataFrameSerializers, Destination):
             # genuine error surfaced before the HTTP 200
             self.register_views()
             pending: set[str] = set()
-            for stmt in script:
-                part = warehouse_dml.normalize(stmt)
-                if warehouse_dml.statement_kind(part) is not None:
+            for part, kind in statements:
+                if kind is not None:
                     try:
                         warehouse_dml.validate(self, part)
                     except Exception as err:  # noqa: BLE001
@@ -877,14 +936,12 @@ class SparkDestination(DataFrameSerializers, Destination):
                     if m:
                         pending.add(m.group(gi))
             return True
-        if warehouse_dml.statement_kind(stmt_text) is None:
+        [(stmt, kind)] = statements
+        if kind is None:
             return False
         self.register_views()
-        warehouse_dml.validate(self, stmt_text)
+        warehouse_dml.validate(self, stmt)
         return True
-
-    # serializers (A13-A15) come from DataFrameSerializers — streamed,
-    # constant driver memory
 
     # ---------------------------------------------------------- metadata
     def tables(self) -> list[str]:
@@ -921,8 +978,10 @@ class SparkDestination(DataFrameSerializers, Destination):
         self.plan_cache.invalidate()
 
     def create_columns(self, table: str, ndjson_path: str | list[str]) -> None:
-        types = infer_types_file(ndjson_path)
-        self.catalog.add_columns(self.database, _check_ident(table), types)
+        self._add_columns(_check_ident(table), infer_types_file(ndjson_path))
+
+    def _add_columns(self, table: str, types: dict[str, str]) -> None:
+        self.catalog.add_columns(self.database, table, types)
         self.plan_cache.invalidate()
 
     def insert_ndjson(self, table: str, ndjson_path: str | list[str]) -> None:
@@ -930,12 +989,16 @@ class SparkDestination(DataFrameSerializers, Destination):
         across schema registration AND the data write, so two
         concurrent batches on one table can't interleave their
         read-modify-write of the schema JSON (the losing batch's new
-        columns would silently unregister). Accepts a file list."""
+        columns would silently unregister). Accepts a file list.
+        The batch's types are inferred once, strictly (a malformed
+        line fails the batch before any row is appended), and serve
+        both the column registration and the append."""
         table = _check_ident(table)
         with self.catalog.lock(self.database, table):
             self.create_empty_table(table)
-            self.create_columns(table, ndjson_path)
-            self.insert_ndjson_file(table, ndjson_path)
+            types = infer_types_file(ndjson_path)
+            self._add_columns(table, types)
+            self._append(table, ndjson_path, types)
 
     def insert_ndjson_file(self, table: str, ndjson_path: str | list[str]) -> None:
         """Bulk load one NDJSON micro-batch (A9) — one file or a list.
@@ -944,17 +1007,24 @@ class SparkDestination(DataFrameSerializers, Destination):
         cast to the registered column type — the documented
         cast-on-write policy: a value that does not cast becomes NULL
         (SURVEY §7 "type widening on conflict"). Unknown-to-catalog
-        columns are ignored here; create_columns runs first in the
-        worker, so in practice every batch column is registered.
+        columns are ignored here; the worker's ``insert_ndjson``
+        registers every batch column first.
         """
-        table = _check_ident(table)
+        # tolerant here: strictness is create_columns' job; this
+        # inference only lists which columns the batch carries
+        self._append(
+            _check_ident(table),
+            ndjson_path,
+            infer_types_file(ndjson_path, skip_malformed=True),
+        )
+
+    def _append(
+        self, table: str, ndjson_path: str | list[str], batch_types: dict[str, str]
+    ) -> None:
         with self.catalog.lock(self.database, table):
             info = self.catalog.get(self.database, table)
             if info is None:
                 raise KeyError(f"no such table: {table}")
-            # tolerant here: strictness is create_columns' job; this
-            # inference only lists which columns the batch carries
-            batch_types = infer_types_file(ndjson_path, skip_malformed=True)
             string_schema = to_struct({k: "string" for k in batch_types})
             # DROPMALFORMED: an unparseable line vanishes instead of
             # becoming an all-NULL row (matches inference skipping it)

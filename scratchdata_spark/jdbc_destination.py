@@ -260,8 +260,8 @@ class JDBCDestination(DataFrameSerializers, Destination):
             conn.close()
 
     # -------------------------------------------------------------- read
-    def query_df(self, query: str) -> DataFrame:
-        return self._reader(query=trim_query(query))
+    def query_df(self, query) -> DataFrame:
+        return self._reader(query=self._prepared(query).text)
 
     def query_df_typed(
         self, query: str, result_types: list[tuple[str, str]]
@@ -336,7 +336,7 @@ class JDBCDestination(DataFrameSerializers, Destination):
         """Batch insert: read tokens as strings, cast to the REMOTE
         table's schema (cast-on-write, non-castable → NULL), missing
         columns → NULL, then one batched JDBC write."""
-        from scratchdata_spark.jtypes import to_struct
+        from scratchdata_spark.jtypes import conform_to_struct, to_struct
 
         table = self._dbtable(table)
         target = self._reader(dbtable=table).schema
@@ -347,13 +347,7 @@ class JDBCDestination(DataFrameSerializers, Destination):
             .option("mode", "DROPMALFORMED")
             .json(ndjson_path)
         )
-        cols = []
-        for f in target.fields:
-            if f.name in raw.columns:
-                cols.append(F.col(f.name).try_cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        out = raw.select(*cols)
+        out = conform_to_struct(raw, target)
         from scratchdata_spark.catalog import ROW_ID
         from scratchdata_spark.ids import snowflake_column
 

@@ -77,10 +77,10 @@ def infer_types(lines: Iterable[str], skip_malformed: bool = False) -> dict[str,
     """Scan an NDJSON batch → {column: jsontype}.
 
     Strict by default, so a corrupt batch fails the job → retry →
-    dead-letter (``create_columns``). ``skip_malformed`` tolerates
-    unparseable lines: an insert's second pass only lists which
-    columns the batch carries, and its reader drops the same lines
-    (DROPMALFORMED)."""
+    dead-letter (``create_columns``, ``insert_ndjson``).
+    ``skip_malformed`` tolerates unparseable lines: a standalone
+    ``insert_ndjson_file`` only lists which columns the batch carries,
+    and its reader drops the same lines (DROPMALFORMED)."""
     counts: dict[str, dict[str, int]] = {}
     for line in lines:
         line = line.strip()
@@ -142,7 +142,7 @@ def conform_to_struct(df, struct: StructType):
     columns ``try_cast`` to the declared type (the cast-on-write
     policy, A9 — malformed values become NULL, the column never
     retypes), absent columns become typed NULLs. The single
-    implementation behind bulk NDJSON load (engine.py), cross-table
+    implementation behind bulk NDJSON load (engine.py, JDBC), cross-table
     copy (copy.py), and ``COPY … FROM`` (warehouse_dml.py)."""
     from pyspark.sql import functions as F
 

@@ -40,7 +40,7 @@ Execution model (designed for 100 TB):
   validation must NOT execute: ``validate_statement`` checks the
   statement shape, target-table rules, and the embedded SELECT's
   plan, with zero side effects; the single execution happens when
-  the serializer calls ``query_df``.
+  the request is served.
 
 DuckDB DML result parity: every statement returns a one-row
 ``count BIGINT`` DataFrame (rows written / deleted / updated;
@@ -278,9 +278,9 @@ def _source_df(dest, select_text: str):
     body = select_text.strip()
     if re.match(r"(?is)^VALUES\b", body):
         body = f"SELECT * FROM {body}"
-    # the statement text was literal-bridged ONCE at the query_df
-    # boundary; re-entering query_df would double the backslash
-    # doubling (r12 regression test)
+    # the statement text was literal-bridged ONCE when the request
+    # was prepared; re-entering query_df would bridge it again and
+    # double the backslash doubling (r12 regression test)
     return dest._query_df_prepared(body)
 
 
@@ -352,47 +352,14 @@ def _update_from_to_merge(query: str) -> str | None:
 # ------------------------------------------------------------ execute
 
 
-def execute(dest, query: str):
-    """Run a warehouse statement; returns the count DataFrame.
-    Callers route here from query_df AFTER statement_kind matched."""
-    kind = statement_kind(query)
+def execute(dest, query: str, kind: str):
+    """Run a warehouse statement of ``statement_kind`` ``kind``;
+    returns the count DataFrame."""
     if kind == "update":
         mq = _update_from_to_merge(query)
         if mq is not None:
             query, kind = mq, "merge"
-    if kind == "delete_using":
-        return _exec_delete_using(dest, query)
-    if kind == "ctas":
-        return _exec_ctas(dest, query)
-    if kind == "create":
-        return _exec_create(dest, query)
-    if kind == "insert":
-        return _exec_insert(dest, query)
-    if kind == "drop":
-        return _exec_drop(dest, query)
-    if kind == "truncate":
-        return _exec_truncate(dest, query)
-    if kind == "delete":
-        return _exec_delete(dest, query)
-    if kind == "update":
-        return _exec_update(dest, query)
-    if kind == "merge":
-        return _exec_merge(dest, query)
-    if kind == "copy_to":
-        return _exec_copy_to(dest, query)
-    if kind == "copy_from":
-        return _exec_copy_from(dest, query)
-    if kind == "create_view":
-        return _exec_create_view(dest, query)
-    if kind == "drop_view":
-        return _exec_drop_view(dest, query)
-    if kind == "alter_add":
-        return _exec_alter_add(dest, query)
-    if kind == "alter_drop":
-        return _exec_alter_drop(dest, query)
-    if kind == "compact":
-        return _exec_compact(dest, query)
-    raise ValueError(f"not a warehouse statement: {query!r}")
+    return _EXECUTORS[kind](dest, query)
 
 
 def validate(dest, query: str) -> None:
@@ -2515,3 +2482,23 @@ def _exec_merge(dest, query: str):
     finally:
         src.unpersist()
     return _count_df(dest, counts["matched"] + counts["inserted"])
+
+
+_EXECUTORS = {
+    "ctas": _exec_ctas,
+    "create": _exec_create,
+    "insert": _exec_insert,
+    "drop": _exec_drop,
+    "truncate": _exec_truncate,
+    "delete": _exec_delete,
+    "delete_using": _exec_delete_using,
+    "update": _exec_update,
+    "merge": _exec_merge,
+    "copy_to": _exec_copy_to,
+    "copy_from": _exec_copy_from,
+    "create_view": _exec_create_view,
+    "drop_view": _exec_drop_view,
+    "alter_add": _exec_alter_add,
+    "alter_drop": _exec_alter_drop,
+    "compact": _exec_compact,
+}

@@ -871,3 +871,34 @@ def test_describe_show_tables_duckdb_shapes(dest):
     # a column named "name" in ORDER BY still queries (guard scope)
     assert [tuple(r) for r in dest.query_df(
         "SELECT name FROM dsc ORDER BY name").collect()] == [("x",)]
+
+
+def test_insert_ndjson_infers_types_once(dest, tmp_path, monkeypatch):
+    """A batch insert infers its types once, strictly: the same map
+    registers the columns and drives the append, and a batch with a
+    malformed line still fails before any row is appended."""
+    from scratchdata_spark import engine
+
+    calls = []
+    infer = engine.infer_types_file
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs)
+        return infer(*args, **kwargs)
+
+    monkeypatch.setattr(engine, "infer_types_file", spy)
+    good = tmp_path / "good.ndjson"
+    good.write_text('{"__row_id": 1, "a": 1, "s": "x"}\n{"__row_id": 2, "a": 2.5}\n')
+    dest.insert_ndjson("once", str(good))
+    assert calls == [{}]
+    assert {c["name"]: c["type"] for c in dest.columns("once")} == {
+        "__row_id": "bigint", "a": "double", "s": "string",
+    }
+    bad = tmp_path / "bad.ndjson"
+    bad.write_text('{"__row_id": 3, "a": 3}\n{"a": \n')
+    del calls[:]
+    with pytest.raises(ValueError):
+        dest.insert_ndjson("once", str(bad))
+    assert calls == [{}]
+    rows = dest.query_df("select __row_id, a, s from once order by __row_id").collect()
+    assert [tuple(r) for r in rows] == [(1, 1.0, "x"), (2, 2.5, None)]

@@ -601,3 +601,128 @@ def test_compact_statement_admin_gated_over_http(app):
         "/api/data/query?api_key=admin&query=COMPACT TABLE cg MIN FILES 99",
     )
     assert code == 200 and json.loads(body)[0]["compacted"] is False
+
+
+def _count_calls(monkeypatch, owner, attr, keep=lambda *a, **k: True):
+    """Replace ``owner.attr`` by a pass-through that records the calls
+    ``keep`` accepts; returns the record."""
+    calls = []
+    orig = getattr(owner, attr)
+
+    def spy(*args, **kwargs):
+        if keep(*args, **kwargs):
+            calls.append(args)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(owner, attr, spy)
+    return calls
+
+
+def test_select_is_prepared_and_looked_up_once(app, monkeypatch):
+    """One HTTP SELECT prepares its text once and looks the plan cache
+    up once, on the cold request (a miss) and on the warm one (a hit):
+    the serializer writes the DataFrame validation built."""
+    import urllib.parse
+
+    from scratchdata_spark import dialect
+
+    code, _ = _req(app, "POST", "/api/data/insert/once?api_key=local", [{"v": 1}, {"v": 2}])
+    assert code == 200
+    app.drain()
+    dest = app.service.destinations["default"]
+    prepares = _count_calls(monkeypatch, dialect, "prepare_query_text")
+    lookups = _count_calls(monkeypatch, dest.plan_cache, "get")
+    path = "/api/data/query?api_key=local&query=" + urllib.parse.quote(
+        "select sum(v) as s from once"
+    )
+    for fmt in ("json", "json", "csv", "ndjson"):
+        del prepares[:], lookups[:]
+        code, body = _req(app, "GET", f"{path}&format={fmt}")
+        assert code == 200 and "3" in body
+        assert (len(prepares), len(lookups)) == (1, 1), fmt
+
+
+@pytest.mark.parametrize(
+    "sql", ["select current_timestamp() as t", "select rand() as r"]
+)
+def test_uncached_text_is_analyzed_once(app, monkeypatch, sql):
+    """A text the plan cache refuses (it reads the clock or draws
+    random values) reaches spark.sql and register_views once per
+    request: validation's DataFrame is the one served."""
+    import urllib.parse
+
+    dest = app.service.destinations["default"]
+    sqls = _count_calls(
+        monkeypatch, dest.spark, "sql", lambda text, *a, **k: text == sql
+    )
+    registers = _count_calls(monkeypatch, dest, "register_views")
+    code, body = _req(
+        app, "GET", "/api/data/query?api_key=local&query=" + urllib.parse.quote(sql)
+    )
+    assert code == 200 and len(json.loads(body)) == 1
+    assert (len(sqls), len(registers)) == (1, 1)
+
+
+def test_insert_statement_prepared_and_executed_once(app, monkeypatch):
+    """An INSERT over HTTP is validated without side effects, then
+    executed exactly once, from one preparation of its text."""
+    import urllib.parse
+
+    from scratchdata_spark import dialect, warehouse_dml
+
+    code, _ = _req(app, "POST", "/api/data/insert/ins_once?api_key=local", {"a": 1})
+    assert code == 200
+    app.drain()
+    prepares = _count_calls(monkeypatch, dialect, "prepare_query_text")
+    executes = _count_calls(monkeypatch, warehouse_dml, "execute")
+    code, body = _req(
+        app, "GET", "/api/data/query?api_key=local&query="
+        + urllib.parse.quote("insert into ins_once (a) values (5)"),
+    )
+    assert code == 200 and body == '[{"count":1}]'
+    assert (len(prepares), len(executes)) == (1, 1)
+    code, body = _req(
+        app, "GET", "/api/data/query?api_key=local&query="
+        + urllib.parse.quote("select a from ins_once order by a"),
+    )
+    assert code == 200 and json.loads(body) == [{"a": 1}, {"a": 5}]
+
+
+def test_jdbc_query_reads_remote_once_per_request(app, monkeypatch, spark):
+    """A JDBC destination builds its DataFrame (a remote schema probe
+    and query) once per request: validation's DataFrame is served."""
+    from scratchdata_spark.jdbc_destination import JDBCDestination
+
+    class ReaderSpy(JDBCDestination):
+        def __init__(self, spark):
+            super().__init__(spark, url="jdbc:fake://db")
+            self.reads = []
+
+        def _reader(self, *, query=None, dbtable=None, custom_schema=None):
+            self.reads.append(query)
+            return self.spark.sql("select 1 as a, 'x' as b")
+
+    spy = ReaderSpy(spark)
+    monkeypatch.setitem(app.service.destinations, "jdbc_spy", spy)
+    path = "/api/data/query?api_key=admin&destination_id=jdbc_spy&query=select%20a,%20b%20from%20t;"
+    for fmt, want in (
+        ("json", '[{"a":1,"b":"x"}]'),
+        ("ndjson", '{"a":1,"b":"x"}\n'),
+        ("csv", "a,b\r\n1,x\r\n"),
+    ):
+        del spy.reads[:]
+        code, body = _req(app, "GET", f"{path}&format={fmt}")
+        assert (code, body) == (200, want)
+        assert spy.reads == ["select a, b from t"]
+
+
+def test_select_over_missing_table_at_is_not_unknown_destination(app):
+    """A SELECT whose ``table_at`` names no table fails as that query's
+    error, not as the 404 of an unknown destination."""
+    import urllib.parse
+
+    code, body = _req(
+        app, "GET", "/api/data/query?api_key=local&query="
+        + urllib.parse.quote("select * from table_at('nosuch_tt', 1)"),
+    )
+    assert code == 500 and "nosuch_tt" in json.loads(body)["error"]
