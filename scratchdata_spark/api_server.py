@@ -606,5 +606,6 @@ class ApiServer:
 
     def stop(self) -> None:
         self.httpd.shutdown()
+        self.httpd.server_close()  # release the listening port now
         if self._thread:
             self._thread.join(timeout=5)

@@ -339,7 +339,7 @@ class ClickHouseBatchDestination(JDBCDestination):
     batched bulk-insert mechanics (``clickhouse/insert.go``) over the
     public HTTP interface.  Queries/DDL still ride JDBC (with the
     read-side type matrix available via :meth:`query_df_typed`); bulk
-    NDJSON loads go through :meth:`insert_ndjson_file` below."""
+    NDJSON loads go through :meth:`_append` below."""
 
     def __init__(
         self,
@@ -437,7 +437,7 @@ class ClickHouseBatchDestination(JDBCDestination):
         self.http.post(bytes(payload))
 
     # ------------------------------------------------------------ insert
-    def insert_ndjson_file(self, table: str, ndjson_path) -> None:
+    def _append(self, table: str, ndjson_path, batch_types=None) -> None:
         """InsertBatchFromNDJson (insert.go:278-299): infer the batch's
         column types, evolve the table, then one batched insert per
         file.  Raw rows never ride the JDBC link.  Both passes stream

@@ -130,12 +130,6 @@ def copy_data(
             dest.catalog.create_empty_table(dest.database, dest_table)
             dest.catalog.add_columns(dest.database, dest_table, types)
             info = dest.catalog.get(dest.database, dest_table)
-        # Invalidate now (schema may have grown) AND after the write
-        # lands: a query arriving mid-write would otherwise cache a plan
-        # pinned to the pre-copy file listing and serve stale results
-        # forever (insert_ndjson_file invalidates after, for the same
-        # reason).
-        dest.plan_cache.invalidate()
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
@@ -151,7 +145,6 @@ def copy_data(
         out.write.mode("append").parquet(
             dest.catalog.data_dir(dest.database, dest_table)
         )
-        dest.plan_cache.invalidate()
         return int(obs.get["n"])
 
     # generic path: stream NDJSON into disk-spooled newline-aligned

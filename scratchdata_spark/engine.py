@@ -20,9 +20,11 @@ the destination's ``PlanCache``. A hit is a DataFrame that already
 holds its physical plan, and the JSON/NDJSON ``to_json`` projection
 over it is built once and kept with it, so a warm request re-runs only
 the result stage of that plan (its shuffle and broadcast outputs are
-reused). Texts whose answer depends on the clock or on randomness are
-never cached. A miss re-registers only the tables whose state changed
-(``SparkDestination.register_views``).
+reused). An entry serves as long as the tables its plan reads and the
+stored views are unchanged, whoever wrote them; texts whose answer
+depends on the clock, on randomness or on files outside the warehouse
+are never cached. A miss re-registers only the tables whose state
+changed (``SparkDestination.register_views``).
 
 Result delivery: an answer whose executed plan has one partition is
 fetched with one ``collect()``; a larger answer streams through
@@ -42,8 +44,11 @@ import os
 import re
 import time
 from abc import ABC, abstractmethod
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import IO, Iterator
+from urllib.parse import urlsplit
+
+from py4j.protocol import Py4JError
 
 from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame, SparkSession
@@ -51,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.traceback_utils import SCCallSiteSync
 from pyspark.util import _load_from_socket
 
-from scratchdata_spark.catalog import ROW_ID, TableCatalog
+from scratchdata_spark.catalog import ROW_ID, TableCatalog, TableInfo
 from scratchdata_spark.jtypes import infer_types_file, to_struct
 
 # Per-(warehouse, database, table) compaction mutexes — process-wide so
@@ -152,27 +157,115 @@ class Destination(ABC):
         pass
 
 
-def plan_is_reusable(df: DataFrame) -> bool:
-    """False when re-running ``df`` may give a different answer even
-    though no table changed: its analyzed plan is nondeterministic
-    (``rand()``, ``uuid()``, ``shuffle()`` — the analyzer pins their
-    seed, so a reused plan repeats its first values), or it reads the
-    clock (``now()``, ``current_date``, ``current_timestamp``,
-    ``unix_timestamp()`` — the optimizer folds them to literals once
-    per plan). The clock test applies Catalyst's own
-    ``ComputeCurrentTime`` rule and checks whether it changed the plan,
-    so it covers subqueries and views like the optimizer does."""
+# a directory mtime less than this old may still change within its
+# timestamp tick (git's racy-index rule)
+_RACY_NS = 1_000_000_000
+
+# leaves that read no table: SELECT without FROM, range(), VALUES
+_NO_TABLE_LEAVES = frozenset({"OneRowRelation", "Range", "LocalRelation"})
+
+
+def plan_reads(df: DataFrame, table_roots: dict[str, str]) -> set[str] | None:
+    """The tables ``df`` reads, named through ``table_roots`` (absolute
+    table root → table name), or None when its answer may change
+    although none of them did, so it must never be cached:
+
+    - a nondeterministic plan (``rand()``, ``uuid()``, ``shuffle()``:
+      the analyzer pins their seed, so a reused plan repeats its first
+      values);
+    - a plan that reads the clock (``now()``, ``current_date``, ...:
+      the optimizer folds them to literals once per plan). Catalyst's
+      own ``ComputeCurrentTime`` rule is applied to see whether it
+      changes the plan, so subqueries and views are covered;
+    - an engine-built catalog shape (DESCRIBE, SHOW TABLES: literal
+      rows tagged ``_sd_local_result``);
+    - a leaf, in the plan or in a subquery expression, that is neither
+      a file relation whose root paths lie under table roots nor a
+      ``OneRowRelation``, ``Range`` or literal ``LocalRelation`` — e.g.
+      ``read_parquet`` of a directory outside the warehouse.
+
+    Stored views and ``table_at`` snapshots resolve to scans of their
+    base tables' directories."""
+    if getattr(df, "_sd_local_result", False):
+        return None
     analyzed = df._jdf.queryExecution().analyzed()
     if not analyzed.deterministic():
-        return False
+        return None
     rule = _compute_current_time(df.sparkSession._jvm)
-    return rule.apply(analyzed).fastEquals(analyzed)
+    if not rule.apply(analyzed).fastEquals(analyzed):
+        return None
+    tables = set()
+    for plan in [analyzed, *_seq(analyzed.subqueriesAll())]:
+        for leaf in _seq(plan.collectLeaves()):
+            kind = leaf.nodeName()
+            if kind in _NO_TABLE_LEAVES:
+                continue
+            if kind != "LogicalRelation":
+                return None
+            try:
+                roots = leaf.relation().location().rootPaths().mkString("\n")
+            except Py4JError:
+                return None  # not a file relation (JDBC, ...)
+            for uri in roots.split("\n"):
+                path = urlsplit(uri).path
+                while path not in table_roots:
+                    parent = os.path.dirname(path)
+                    if parent == path:
+                        return None
+                    path = parent
+                tables.add(table_roots[path])
+    return tables
+
+
+def _seq(seq) -> list:
+    """A Scala ``Seq`` from py4j as a Python list."""
+    return [seq.apply(i) for i in range(seq.size())]
 
 
 @functools.lru_cache(maxsize=None)
 def _compute_current_time(jvm):
     # one py4j round trip per package segment: resolve the rule once
     return jvm.org.apache.spark.sql.catalyst.optimizer.ComputeCurrentTime
+
+
+@dataclass(frozen=True)
+class _TableFingerprint:
+    """A table's catalog entry, current data dir, and the ``mtime_ns``
+    of its root (a generation flip creates a g<N> dir there) and of
+    its data dir (files landing in it). ``info``, the entry as read,
+    takes no part in comparisons."""
+
+    columns: str
+    generation: int
+    partition_col: str | None
+    data_dir: str
+    root_mtime: int
+    data_mtime: int
+    info: TableInfo = field(compare=False, repr=False)
+
+    @property
+    def mtime(self) -> int:
+        return max(self.root_mtime, self.data_mtime)
+
+
+@dataclass
+class _Snapshot:
+    """What a plan was analyzed over: the fingerprint of each table,
+    the parquet listing of each table whose fingerprint was racy (less
+    than 1 s old, taken before its scan was created), and the stored
+    views' (name, sql). ``register_views`` returns one for every table;
+    a ``PlanCache`` entry keeps the part its plan reads."""
+
+    tables: dict[str, _TableFingerprint]
+    listings: dict[str, list[str]]
+    views: dict[str, str]
+
+    def restrict(self, tables: set[str]) -> _Snapshot:
+        return _Snapshot(
+            {t: self.tables[t] for t in tables},
+            {t: f for t, f in self.listings.items() if t in tables},
+            self.views,
+        )
 
 
 class PlanCache:
@@ -187,45 +280,74 @@ class PlanCache:
     the result stage: the shuffle and broadcast outputs of the first
     execution are reused. Those shuffle files stay on local disk while
     the entry lives: Spark's context cleaner removes them only after the
-    entry is evicted (oldest first, beyond ``max_entries``) or
-    invalidated and its plan is garbage-collected.
+    entry is replaced, evicted (oldest first, beyond ``max_entries``)
+    or cleared, and its plan is garbage-collected.
 
-    Never cached (``plan_is_reusable``): texts whose analyzed plan is
-    nondeterministic or reads the clock. A reused plan would serve the
-    first answer's ``rand()`` values or timestamp forever, so those
-    texts are planned fresh on every request.
+    Validity: an entry serves exactly as long as the tables it reads
+    and the stored views are unchanged, whoever writes them. It keeps
+    the snapshot of the ``register_views`` pass before its build,
+    restricted to the tables its plan reads (``plan_reads``), and
+    ``get`` re-checks only those: a write to one table leaves plans
+    over other tables warm. Over a racy fingerprint the entry also
+    compares the tables' parquet listings, until a ``get`` more than
+    1 s after the fingerprint's mtimes finds them unchanged.
 
-    Invalidation: a cached plan pins the parquet file listing captured
-    at analysis time, so ANY write to the destination clears the cache
-    (coarse but correct; per-table invalidation would need plan-lineage
-    tracking for cross-table queries).
+    Never cached (``plan_reads`` is None): nondeterministic and clock
+    texts, engine-built catalog shapes, and plans with a leaf that
+    names no table, such as ``read_parquet`` outside the warehouse.
     """
 
-    def __init__(self, max_entries: int = 256):
+    def __init__(self, dest: SparkDestination, max_entries: int = 256):
+        self._dest = dest
         self._max = max_entries
-        self._plans: dict[str, DataFrame] = {}
-        # monotonic mutation epoch: every write path on the engine
-        # calls invalidate(), so this counter is a free O(1) "has any
-        # local mutation happened" signal — register_views keys its
-        # view-staleness fingerprint on it instead of re-walking every
-        # table's parquet file listing per query.
-        self.epoch = 0
+        self._plans: dict[str, tuple[DataFrame, _Snapshot]] = {}
 
     def get(self, key: str, build) -> DataFrame:
-        df = self._plans.get(key)
-        if df is None:
-            df = build()
-            if not plan_is_reusable(df):
-                return df
-            if len(self._plans) >= self._max:
-                # drop oldest insertion (dict preserves order)
-                self._plans.pop(next(iter(self._plans)))
-            self._plans[key] = df
+        """The cached DataFrame for ``key`` if its tables and the stored
+        views are unchanged; otherwise ``build()``, which returns the
+        DataFrame and the ``register_views`` snapshot it was analyzed
+        after."""
+        entry = self._plans.get(key)
+        if entry is not None:
+            if self._unchanged(entry[1]):
+                return entry[0]
+            self._plans.pop(key, None)
+        df, snap = build()
+        dest = self._dest
+        roots = {
+            os.path.abspath(dest.catalog.table_root(dest.database, t)): t
+            for t in snap.tables
+        }
+        tables = plan_reads(df, roots)
+        if tables is None:
+            return df
+        if len(self._plans) >= self._max:
+            # drop oldest insertion (dict preserves order)
+            self._plans.pop(next(iter(self._plans)), None)
+        self._plans[key] = (df, snap.restrict(tables))
         return df
 
+    def _unchanged(self, snap: _Snapshot) -> bool:
+        dest = self._dest
+        if dest.catalog.views(dest.database) != snap.views:
+            return False
+        if any(dest._table_fingerprint(t) != fp for t, fp in snap.tables.items()):
+            return False
+        if snap.listings:
+            settled = time.time_ns() - _RACY_NS > max(
+                snap.tables[t].mtime for t in snap.listings
+            )
+            for t, files in snap.listings.items():
+                if dest._list_parquet(snap.tables[t].data_dir) != files:
+                    return False
+            if settled:
+                # any later write moves a fingerprint's mtime
+                snap.listings = {}
+        return True
+
     def invalidate(self) -> None:
+        """Drop every entry."""
         self._plans.clear()
-        self.epoch += 1
 
 
 class DataFrameSerializers:
@@ -503,7 +625,7 @@ class SparkDestination(DataFrameSerializers, Destination):
         self.spark = spark
         self.catalog = catalog
         self.database = _check_ident(database)
-        self.plan_cache = PlanCache()
+        self.plan_cache = PlanCache(self)
         # COPY TO targets are confined under this dir when set (the
         # HTTP service always sets it — see warehouse_dml
         # _resolve_copy_target); None = unconfined embedded use
@@ -618,23 +740,19 @@ class SparkDestination(DataFrameSerializers, Destination):
             )
         return self._scan(info, os.path.join(root, f"g{generation}"))
 
-    def register_views(self) -> None:
+    def register_views(self) -> _Snapshot:
         """Expose every catalog table, then every stored view, as a temp
-        view for spark.sql.
+        view for spark.sql, and return the ``_Snapshot`` this pass saw.
 
         Tables: a table's temp view is re-created only when its
-        fingerprint changed — the catalog entry as read now (columns,
-        generation, partition column), its current data dir, the
-        ``mtime_ns`` of the table root (a flip creates a new g<N> dir
-        there) and of the data dir (files landing in it), and
-        ``plan_cache.epoch``. Every local write and drop bumps the
-        epoch via invalidate(); writes by another instance sharing the
-        warehouse dir show up through the generation and the two
-        mtimes. Creating a scan lists the table's files; an unchanged
-        table costs two catalog reads and two stats instead.
-        The fingerprints and the lock that serializes registration
-        live on the Spark session, next to the temp views they
-        describe, so destinations sharing a session cannot mistake
+        fingerprint (``_table_fingerprint``) changed. Writes by this
+        instance and by another instance sharing the warehouse dir both
+        show up in the catalog entry or the two mtimes: every writer
+        moves the data dir's mtime. Creating a scan lists the table's
+        files; an unchanged table costs two catalog reads and two stats
+        instead. The fingerprints and the lock that serializes
+        registration live on the Spark session, next to the temp views
+        they describe, so destinations sharing a session cannot mistake
         each other's registrations for their own.
 
         Racy mtimes (as git treats a racy index entry): a write landing
@@ -642,7 +760,9 @@ class SparkDestination(DataFrameSerializers, Destination):
         unchanged. So when either mtime is less than 1 s older than
         the registration, the fingerprint is not remembered and the
         next call registers the table again; a write by another
-        instance is therefore always visible at the next miss.
+        instance is therefore always visible at the next miss. Such a
+        table's parquet listing goes into the snapshot, taken before
+        its scan lists the files, for ``PlanCache`` to compare.
 
         Logical views (catalog.views — CREATE VIEW statements) are
         registered after the tables they read, looping until the
@@ -654,13 +774,13 @@ class SparkDestination(DataFrameSerializers, Destination):
 
         View registration eagerly ANALYZES each view's SQL, so the
         whole view set is fingerprint-cached too: on the (name, sql)
-        set, the epoch and every table's fingerprint, never a parquet
-        file listing (walking every table's files per query is
-        O(total files) and contradicts the many-files scale story).
-        DuckDB (the reference) re-resolves views per query. A pass
-        that leaves any table's fingerprint unremembered (racy) leaves
-        the view set's unremembered too, so stored views follow a
-        write in the same tick as their tables do.
+        set and every table's fingerprint, never a parquet file
+        listing (walking every table's files per query is O(total
+        files) and contradicts the many-files scale story). DuckDB
+        (the reference) re-resolves views per query. A pass that
+        leaves any table's fingerprint unremembered (racy) leaves the
+        view set's unremembered too, so stored views follow a write in
+        the same tick as their tables do.
 
         Appends into an existing partition subdir of a partitioned
         table move the data dir's mtime too: a direct Spark append
@@ -676,40 +796,45 @@ class SparkDestination(DataFrameSerializers, Destination):
             "_sd_register_lock", _threading.Lock()
         )
         with lock:
-            self._register_views_locked()
+            return self._register_views_locked()
 
-    def _register_views_locked(self) -> None:
+    def _table_fingerprint(self, table: str) -> _TableFingerprint | None:
+        """``table``'s fingerprint as of now; None when it is not in
+        the catalog."""
+        info = self.catalog.get(self.database, table)
+        if info is None:
+            return None
+        d = self.catalog.data_dir(self.database, table)
+        return _TableFingerprint(
+            json.dumps(info.columns),
+            info.generation,
+            info.partition_col,
+            d,
+            self._dir_mtime(self.catalog.table_root(self.database, table)),
+            self._dir_mtime(d),
+            info,
+        )
+
+    def _register_views_locked(self) -> _Snapshot:
         registered = self.spark.__dict__.setdefault("_sd_table_fps", {})
-        racy_after = time.time_ns() - 1_000_000_000
-        racy = False
-        state = []
+        racy_after = time.time_ns() - _RACY_NS
+        snap = _Snapshot({}, {}, {})
         for t in self.catalog.tables(self.database):
-            info = self.catalog.get(self.database, t)
-            if info is None:
+            fp = self._table_fingerprint(t)
+            if fp is None:
                 continue  # dropped since the listing
-            d = self.catalog.data_dir(self.database, t)
-            mtimes = (
-                self._dir_mtime(self.catalog.table_root(self.database, t)),
-                self._dir_mtime(d),
-            )
-            fp = (
-                json.dumps(info.columns),
-                info.generation,
-                info.partition_col,
-                d,
-                *mtimes,
-                self.plan_cache.epoch,
-            )
-            state.append((t, fp))
+            snap.tables[t] = fp
             if registered.get(t) == fp:
                 continue
-            self._scan(info, d).createOrReplaceTempView(t)
-            if max(mtimes) > racy_after:
+            racy = fp.mtime > racy_after
+            if racy:
+                snap.listings[t] = self._list_parquet(fp.data_dir)
+            self._scan(fp.info, fp.data_dir).createOrReplaceTempView(t)
+            if racy:
                 registered.pop(t, None)
-                racy = True
             else:
                 registered[t] = fp
-        views = self.catalog.views(self.database)
+        views = snap.views = self.catalog.views(self.database)
         # a view dropped from the catalog must leave the session too —
         # only names THIS destination registered are ever dropped
         for name in getattr(self, "_registered_views", set()) - set(views):
@@ -717,15 +842,11 @@ class SparkDestination(DataFrameSerializers, Destination):
         self._registered_views = set()
         if not views:
             self._views_fp = None
-            return
-        fp = hash((
-            tuple(sorted(views.items())),
-            self.plan_cache.epoch,
-            tuple(state),
-        ))
+            return snap
+        fp = hash((tuple(sorted(views.items())), tuple(snap.tables.items())))
         if fp == getattr(self, "_views_fp", None):
             self._registered_views = set(views)
-            return
+            return snap
         pending = dict(views)
         while pending:
             failed = {}
@@ -742,7 +863,8 @@ class SparkDestination(DataFrameSerializers, Destination):
         # broken view must be retried next call (its base table may
         # just have returned), and a racy table may change under an
         # unchanged fingerprint
-        self._views_fp = None if pending or racy else fp
+        self._views_fp = None if pending or snap.listings else fp
+        return snap
 
     @staticmethod
     def _dir_mtime(d: str) -> int:
@@ -821,56 +943,60 @@ class SparkDestination(DataFrameSerializers, Destination):
             self.register_views()
             return warehouse_dml.execute(self, stmt, kind)
 
-        def build() -> DataFrame:
-            self.register_views()
-            # time travel: table_at('name', N) reads a retained
-            # generation snapshot (read_generation docstring). The
-            # rewrite registers a view per (table, generation) and
-            # swaps the call for the view name BEFORE spark.sql —
-            # engine-specific surface, deliberately outside the
-            # DuckDB dialect fallback (DuckDB has no equivalent).
-            sql_text = self._rewrite_table_at(stmt)
-            # DESCRIBE / SHOW TABLES parse in stock Spark with
-            # SPARK's catalog shapes — the speaks-DuckDB contract
-            # intercepts them first (dialect.describe_form_df)
-            from scratchdata_spark.dialect import describe_form_df
-
-            shaped = describe_form_df(
-                self.spark,
-                sql_text,
-                tables=self._catalog_names,
-                run_sql=self._query_df_prepared,
-            )
-            if shaped is not None:
-                return shaped
-            try:
-                return self.spark.sql(sql_text)
-            except Exception as stock_err:
-                # Dialect compat is a FALLBACK: text that stock Spark
-                # accepts is never rewritten, so a valid Spark query
-                # can't be corrupted by the DuckDB bridging (every
-                # bridged token is a parse/analysis error here).
-                from scratchdata_spark.dialect import (
-                    expand_columns_macro,
-                    rewrite,
-                    statement_form_df,
-                )
-
-                form = statement_form_df(self.spark, sql_text)
-                if form is not None:
-                    return form
-                # COLUMNS() macros expand against the registered
-                # views' schemas (r13); unresolvable shapes pass
-                # through to rewrite's loud refusal
-                expanded = expand_columns_macro(
-                    sql_text, self._resolve_columns, escaped=True
-                )
-                rewritten = rewrite(expanded)
-                if rewritten == sql_text:
-                    raise stock_err
-                return self.spark.sql(rewritten)
+        def build() -> tuple[DataFrame, _Snapshot]:
+            snap = self.register_views()
+            return self._select_df(stmt), snap
 
         return self.plan_cache.get(stmt, build)
+
+    def _select_df(self, stmt: str) -> DataFrame:
+        """Analyze a query statement over the registered views."""
+        # time travel: table_at('name', N) reads a retained
+        # generation snapshot (read_generation docstring). The
+        # rewrite registers a view per (table, generation) and
+        # swaps the call for the view name BEFORE spark.sql —
+        # engine-specific surface, deliberately outside the
+        # DuckDB dialect fallback (DuckDB has no equivalent).
+        sql_text = self._rewrite_table_at(stmt)
+        # DESCRIBE / SHOW TABLES parse in stock Spark with
+        # SPARK's catalog shapes — the speaks-DuckDB contract
+        # intercepts them first (dialect.describe_form_df)
+        from scratchdata_spark.dialect import describe_form_df
+
+        shaped = describe_form_df(
+            self.spark,
+            sql_text,
+            tables=self._catalog_names,
+            run_sql=self._query_df_prepared,
+        )
+        if shaped is not None:
+            return shaped
+        try:
+            return self.spark.sql(sql_text)
+        except Exception as stock_err:
+            # Dialect compat is a FALLBACK: text that stock Spark
+            # accepts is never rewritten, so a valid Spark query
+            # can't be corrupted by the DuckDB bridging (every
+            # bridged token is a parse/analysis error here).
+            from scratchdata_spark.dialect import (
+                expand_columns_macro,
+                rewrite,
+                statement_form_df,
+            )
+
+            form = statement_form_df(self.spark, sql_text)
+            if form is not None:
+                return form
+            # COLUMNS() macros expand against the registered
+            # views' schemas (r13); unresolvable shapes pass
+            # through to rewrite's loud refusal
+            expanded = expand_columns_macro(
+                sql_text, self._resolve_columns, escaped=True
+            )
+            rewritten = rewrite(expanded)
+            if rewritten == sql_text:
+                raise stock_err
+            return self.spark.sql(rewritten)
 
     def _catalog_names(self) -> list[str]:
         """Table + view names of the engine's database, for SHOW
@@ -975,14 +1101,12 @@ class SparkDestination(DataFrameSerializers, Destination):
     # ------------------------------------------------------------- write
     def create_empty_table(self, table: str) -> None:
         self.catalog.create_empty_table(self.database, _check_ident(table))
-        self.plan_cache.invalidate()
 
     def create_columns(self, table: str, ndjson_path: str | list[str]) -> None:
         self._add_columns(_check_ident(table), infer_types_file(ndjson_path))
 
     def _add_columns(self, table: str, types: dict[str, str]) -> None:
         self.catalog.add_columns(self.database, table, types)
-        self.plan_cache.invalidate()
 
     def insert_ndjson(self, table: str, ndjson_path: str | list[str]) -> None:
         """Atomic batch insert: the per-table catalog lock is held
@@ -1044,8 +1168,6 @@ class SparkDestination(DataFrameSerializers, Destination):
             if info.partition_col:
                 writer = writer.partitionBy(info.partition_col)
             writer.parquet(self.catalog.data_dir(self.database, table))
-        # cached plans pinned the pre-insert file listing — drop them
-        self.plan_cache.invalidate()
 
     # ------------------------------------------------------ maintenance
     def set_partitioning(self, table: str, column: str | None) -> None:
@@ -1063,7 +1185,6 @@ class SparkDestination(DataFrameSerializers, Destination):
                 raise ValueError(f"unknown column: {column}")
         with self.catalog.lock(self.database, table):
             self.catalog.set_partitioning(self.database, table, column)
-        self.plan_cache.invalidate()
 
     @staticmethod
     def _list_parquet(d: str) -> list[str]:
@@ -1287,7 +1408,6 @@ class SparkDestination(DataFrameSerializers, Destination):
                     ),
                 )
             self.catalog.set_generation(self.database, table, new_gen)
-            self.plan_cache.invalidate()
         self._retire_generations(root, new_gen)
         return late
 

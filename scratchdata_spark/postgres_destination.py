@@ -104,7 +104,7 @@ COPY_DONE_FRAME = b"c" + struct.pack(">I", 4)
 class PostgresCopyDestination(JDBCDestination):
     """JDBCDestination specialized to Postgres with the reference's
     COPY bulk-insert mechanics.  Queries/DDL still ride JDBC; bulk
-    NDJSON loads stream through :meth:`insert_ndjson_file` below.
+    NDJSON loads stream through :meth:`_append` below.
 
     ``copy_transport`` is the wire seam; it must provide::
 
@@ -155,7 +155,7 @@ class PostgresCopyDestination(JDBCDestination):
             )
         return keys
 
-    def insert_ndjson_file(self, table: str, ndjson_path) -> None:
+    def _append(self, table: str, ndjson_path, batch_types=None) -> None:
         """InsertFromNDJsonFile (insert.go:83-155): stream the file
         line-by-line (bounded scanner), prepare COPY from the first
         row's keys, send every row as one CopyData frame with all

@@ -742,9 +742,6 @@ def _exec_ctas(dest, query: str):
                     dest.database, table,
                     _catalog_columns(target.fields), new_gen,
                 )
-                # inside the lock, like _flip_generation: no window
-                # where the flipped pointer serves a stale cached plan
-                dest.plan_cache.invalidate()
                 dest._retire_generations(root, new_gen)
         except Exception:
             # e.g. the table was dropped while we staged: nothing
@@ -758,7 +755,6 @@ def _exec_ctas(dest, query: str):
         _adopt_staged(
             dest, staging, dest.catalog.data_dir(dest.database, table)
         )
-    dest.plan_cache.invalidate()
     return _count_df(dest, n)
 
 
@@ -823,7 +819,6 @@ def _exec_create(dest, query: str):
             dest.catalog.set_primary_key(dest.database, table, pk)
         if defaults:
             dest.catalog.set_defaults(dest.database, table, defaults)
-    dest.plan_cache.invalidate()
     return _count_df(dest, 0)
 
 
@@ -1206,7 +1201,6 @@ def _exec_insert(dest, query: str):
             adopted = _adopt_staged(
                 dest, staging, dest.catalog.data_dir(dest.database, table)
             )
-        dest.plan_cache.invalidate()
         if returning:
             # read back EXACTLY the adopted part files (never the
             # whole table — a concurrent insert's rows must not leak
@@ -1253,7 +1247,6 @@ def _exec_insert(dest, query: str):
                 _adopt_staged(
                     dest, staging, dest.catalog.data_dir(dest.database, table)
                 )
-        dest.plan_cache.invalidate()
         return _count_df(dest, n)
 
     # upsert modes: ONE copy-on-write rewrite folds the merge —
@@ -1337,7 +1330,6 @@ def _exec_drop_table(dest, table: str) -> None:
         dest.spark.catalog.dropTempView(table)
     except Exception:
         pass
-    dest.plan_cache.invalidate()
 
 
 def _exec_drop(dest, query: str):
@@ -1974,7 +1966,6 @@ def _exec_copy_from(dest, query: str):
         _adopt_staged(
             dest, staging, dest.catalog.data_dir(dest.database, table)
         )
-    dest.plan_cache.invalidate()
     return _count_df(dest, n)
 
 
@@ -1994,7 +1985,6 @@ def _exec_create_view(dest, query: str):
         dest.database, name, sql.strip(), or_replace=bool(or_replace)
     )
     df.createOrReplaceTempView(name)
-    dest.plan_cache.invalidate()
     return _count_df(dest, 0)
 
 
@@ -2008,7 +1998,6 @@ def _exec_drop_view(dest, query: str):
         dest.spark.catalog.dropTempView(name)
     except Exception:
         pass
-    dest.plan_cache.invalidate()
     return _count_df(dest, 0)
 
 
@@ -2026,7 +2015,6 @@ def _exec_alter_add(dest, query: str):
         raise ValueError(f"column exists: {name}")
     field = StructType.fromDDL(f"`{name}` {type_ddl}")[0]
     _register_schema(dest, table, [field])
-    dest.plan_cache.invalidate()
     return _count_df(dest, 0)
 
 
@@ -2039,7 +2027,6 @@ def _exec_alter_drop(dest, query: str):
             return _count_df(dest, 0)
         raise ValueError(f"unknown column: {name}")
     dest.catalog.drop_column(dest.database, table, name)
-    dest.plan_cache.invalidate()
     return _count_df(dest, 0)
 
 

@@ -74,14 +74,19 @@ class WorkerPool:
             os.remove(path)
         # opportunistic small-file compaction: once the table's current
         # generation has accumulated auto_compact_files micro-batches,
-        # fold them into ~target-size files (engine.compact_table docs)
+        # fold them into ~target-size files (engine.compact_table docs).
+        # The batch is stored and its file gone: a compaction error is
+        # recorded, never turned into a retry of the batch.
         limit = self.config.auto_compact_files
         if (
             limit > 0
             and hasattr(dest, "compact_table")
             and dest.file_count(table) >= limit
         ):
-            dest.compact_table(table, min_files=limit)
+            try:
+                dest.compact_table(table, min_files=limit)
+            except Exception as e:  # noqa: BLE001
+                self.errors.append(f"compact {table}: {e}")
 
     def _process_copy(self, p: dict) -> None:
         src = self.destinations[p["source"]]
@@ -89,19 +94,23 @@ class WorkerPool:
         copy_data(src, p["query"], dst, p["table"], self.config)
 
     # ------------------------------------------------------------- loop
+    def _handle(self, msg: Message) -> bool:
+        """Run one claimed job: complete it, or record the error and
+        hand it to ``queue.fail`` (retried, dead-lettered after
+        ``max_attempts`` with its batch file kept). True on success."""
+        try:
+            self.process(msg)
+            self.queue.complete(msg.id)
+            return True
+        except Exception as e:  # noqa: BLE001 — job errors must not kill the pool
+            self.errors.append(f"{msg.type}#{msg.id}: {e}")
+            self.queue.fail(msg.id, str(e))
+            return False
+
     def _run(self) -> None:
         while not self._stop.is_set():
             msg = self.queue.dequeue()
-            if msg is None:
-                self._stop.wait(self.config.dequeue_timeout_seconds)
-                continue
-            try:
-                self.process(msg)
-                self.queue.complete(msg.id)
-            except Exception as e:  # noqa: BLE001 — job errors must not kill the pool
-                self.errors.append(f"{msg.type}#{msg.id}: {e}")
-                # release for retry, or dead-letter after max_attempts
-                self.queue.fail(msg.id, str(e))
+            if msg is None or not self._handle(msg):
                 self._stop.wait(self.config.dequeue_timeout_seconds)
 
     def start(self) -> None:
@@ -116,14 +125,8 @@ class WorkerPool:
             t.join(timeout=10)
 
     def drain(self) -> None:
-        """Synchronously process everything queued (tests/shutdown)."""
-        while True:
-            msg = self.queue.dequeue()
-            if msg is None:
-                return
-            try:
-                self.process(msg)
-                self.queue.complete(msg.id)
-            except Exception as e:  # noqa: BLE001
-                self.errors.append(f"{msg.type}#{msg.id}: {e}")
-                self.queue.complete(msg.id)  # don't loop forever in drain
+        """Synchronously process everything queued (tests/shutdown). A
+        failed job is retried within the same drain until it succeeds
+        or is dead-lettered, so the drain ends."""
+        while (msg := self.queue.dequeue()) is not None:
+            self._handle(msg)

@@ -452,6 +452,108 @@ def test_concurrent_misses_never_see_rows_disappear(dest):
     ]
 
 
+def _count(dest, sql):
+    return json.loads(_serve(dest, "json", sql))[0]["n"]
+
+
+def test_repeated_text_follows_another_instances_writes(spark, dest):
+    """A cached plan is valid only while the tables it reads are
+    unchanged: a repeated text sees rows another destination over the
+    same catalog (its own session) inserted — with aged directories,
+    with racy ones whose mtimes a write in the same tick leaves where
+    they were, and after a racy entry has settled."""
+    sql = "select count(*) n from x"
+    _insert(dest, "x", ['{"__row_id": 1, "v": 1}'])
+    other = SparkDestination(spark.newSession(), dest.catalog, dest.database)
+    dirs = {
+        dest.catalog.table_root(dest.database, "x"),
+        dest.catalog.data_dir(dest.database, "x"),
+    }
+
+    def set_mtimes(ns):
+        for d in dirs:
+            os.utime(d, ns=(ns, ns))
+
+    _age_dirs(dest, ["x"])
+    assert _count(dest, sql) == 1
+    assert dest.query_df(sql) is dest.query_df(sql)
+    _insert(other, "x", ['{"__row_id": 2, "v": 2}'])
+    assert _count(dest, sql) == 2
+
+    now = time.time_ns()
+    set_mtimes(now)
+    assert _count(dest, sql) == 2
+    assert dest.query_df(sql) is dest.query_df(sql)
+    _insert(other, "x", ['{"__row_id": 3, "v": 3}'])
+    set_mtimes(now)
+    assert _count(dest, sql) == 3
+
+    # racy at the build, settled at a later lookup that finds the
+    # same files; a write after that moves the mtimes
+    set_mtimes(time.time_ns() - 900_000_000)
+    assert _count(dest, sql) == 3
+    time.sleep(0.2)
+    assert _count(dest, sql) == 3
+    _insert(other, "x", ['{"__row_id": 4, "v": 4}'])
+    assert _count(dest, sql) == 4
+
+
+def test_write_to_one_table_keeps_plans_over_others_warm(dest, monkeypatch):
+    """An insert into table a re-plans and re-registers nothing for a
+    repeated text that reads only table b."""
+    _insert(dest, "a", ['{"__row_id": 1, "v": 1}'])
+    _insert(dest, "b", ['{"__row_id": 1, "w": 1}', '{"__row_id": 2, "w": 2}'])
+    _age_dirs(dest, ["a", "b"])
+    sql = "SELECT count(*) AS n, sum(w) AS s FROM b"
+    assert json.loads(_serve(dest, "json", sql)) == [{"n": 2, "s": 3}]
+    df = dest.query_df(sql)
+    _insert(dest, "a", ['{"__row_id": 2, "v": 2}'])
+    registered = _spy(monkeypatch, dest.spark, "createOrReplaceTempView")
+    planned = []
+    sql_fn = dest.spark.sql
+    monkeypatch.setattr(
+        dest.spark, "sql", lambda *a, **k: planned.append(a) or sql_fn(*a, **k)
+    )
+    assert dest.query_df(sql) is df
+    assert json.loads(_serve(dest, "json", sql)) == [{"n": 2, "s": 3}]
+    assert registered == [] and planned == []
+
+
+def test_stored_view_follows_another_instances_view_ddl(spark, dest):
+    """A repeated text over a stored view follows CREATE OR REPLACE
+    VIEW and DROP VIEW run by another destination; so does DESCRIBE
+    after the other destination adds a column."""
+    _insert(dest, "x", ['{"__row_id": 1, "v": 1}', '{"__row_id": 2, "v": 20}'])
+    _age_dirs(dest, ["x"])
+    _serve(dest, "json", "CREATE VIEW xv AS SELECT v FROM x")
+    other = SparkDestination(spark.newSession(), dest.catalog, dest.database)
+    sql = "SELECT count(*) AS n FROM xv"
+    assert _count(dest, sql) == 2
+    _serve(other, "json", "CREATE OR REPLACE VIEW xv AS SELECT v FROM x WHERE v > 10")
+    assert _count(dest, sql) == 1
+    _serve(other, "json", "DROP VIEW xv")
+    with pytest.raises(Exception, match="(?i)xv"):
+        dest.query_df(sql)
+
+    def described():
+        return [r["column_name"] for r in dest.query_df("DESCRIBE x").collect()]
+
+    assert "w" not in described()
+    _serve(other, "json", "ALTER TABLE x ADD COLUMN w BIGINT")
+    assert "w" in described()
+
+
+def test_read_parquet_outside_the_warehouse_sees_new_files(spark, dest, tmp_path):
+    """A repeated read_parquet text over a directory outside the
+    warehouse sees a file added to that directory."""
+    d = str(tmp_path / "outside")
+    spark.range(3).write.parquet(d)
+    sql = f"SELECT count(*) AS n FROM read_parquet('{d}')"
+    assert _count(dest, sql) == 3
+    spark.range(4).write.mode("append").parquet(d)
+    assert _count(dest, sql) == 7
+
+
 # ------------------------------------------------------------ compaction
 def _q(dest, sql):
     buf = io.StringIO()

@@ -726,3 +726,18 @@ def test_select_over_missing_table_at_is_not_unknown_destination(app):
         + urllib.parse.quote("select * from table_at('nosuch_tt', 1)"),
     )
     assert code == 500 and "nosuch_tt" in json.loads(body)["error"]
+
+
+def test_stopped_app_releases_its_port(spark, tmp_path):
+    """After App.stop() the port can be bound again at once."""
+    import socket
+
+    cfg = Config(api_keys={"local": "default"})
+    cfg.api.port = 0
+    a = build_app(spark, cfg, str(tmp_path / "app"))
+    a.server.start()
+    port = a.port
+    a.stop()
+    with socket.socket() as s:
+        s.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+        s.bind(("127.0.0.1", port))

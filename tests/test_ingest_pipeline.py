@@ -157,6 +157,76 @@ def test_queue_dead_letter(tmp_path):
     assert q.depth() == 0  # dead letters don't count as live work
 
 
+class _FlakyDest:
+    """Destination stub whose insert raises its first ``fails`` calls."""
+
+    def __init__(self, fails):
+        self.fails = fails
+        self.rows = []
+
+    def insert_ndjson(self, table, path):
+        if self.fails:
+            self.fails -= 1
+            raise RuntimeError("transient")
+        with open(path) as f:
+            self.rows += [json.loads(line) for line in f]
+
+
+def test_drain_retries_a_failed_batch(tmp_path):
+    """An insert that raises once is retried by the same drain(): its
+    rows land, its file is consumed, and errors records the failure."""
+    q = Queue(str(tmp_path / "q.db"))
+    dest = _FlakyDest(fails=1)
+    pool = WorkerPool(q, {"default": dest})
+    blob = tmp_path / "b.ndjson"
+    blob.write_text('{"a": 1}\n{"a": 2}\n')
+    q.enqueue("insert_data", {"table": "t", "path": str(blob)})
+    pool.drain()
+    assert dest.rows == [{"a": 1}, {"a": 2}]
+    assert len(pool.errors) == 1 and "transient" in pool.errors[0]
+    assert q.depth() == 0 and q.dead_letters() == []
+    assert not blob.exists()
+
+
+def test_drain_dead_letters_a_batch_that_always_fails(tmp_path):
+    """An insert that always raises ends in dead_letters() after
+    max_attempts tries within one drain(), and its file is kept."""
+    q = Queue(str(tmp_path / "q.db"), max_attempts=3)
+    dest = _FlakyDest(fails=10)
+    pool = WorkerPool(q, {"default": dest})
+    blob = tmp_path / "b.ndjson"
+    blob.write_text('{"a": 1}\n')
+    q.enqueue("insert_data", {"table": "t", "path": str(blob)})
+    pool.drain()
+    assert dest.fails == 7 and dest.rows == []
+    assert len(pool.errors) == 3
+    (dead,) = q.dead_letters()
+    assert dead.payload["path"] == str(blob) and dead.payload["__error"] == "transient"
+    assert q.depth() == 0
+    assert blob.exists()
+
+
+def test_failed_auto_compaction_keeps_the_stored_batch_done(tmp_path):
+    """A compaction error after the batch is stored is recorded, and
+    the batch is neither retried nor dead-lettered."""
+    q = Queue(str(tmp_path / "q.db"))
+    dest = _FlakyDest(fails=0)
+    dest.file_count = lambda table: 100
+
+    def compact_table(table, min_files):
+        raise RuntimeError("compaction failed")
+
+    dest.compact_table = compact_table
+    pool = WorkerPool(q, {"default": dest}, WorkersConfig(auto_compact_files=8))
+    blob = tmp_path / "b.ndjson"
+    blob.write_text('{"a": 1}\n')
+    q.enqueue("insert_data", {"table": "t", "path": str(blob)})
+    pool.drain()
+    assert dest.rows == [{"a": 1}]
+    assert list(pool.errors) == ["compact t: compaction failed"]
+    assert q.depth() == 0 and q.dead_letters() == []
+
+
 def test_concurrent_inserts_no_schema_race(spark, tmp_path):
     """Two threads inserting different new columns into one table must
     both register their columns (ADVICE fix: atomic insert_ndjson)."""

@@ -116,6 +116,35 @@ def test_insert_casts_to_remote_schema(spark, tmp_path):
     assert rows2[0]["__row_id"] is not None  # snowflake assigned
 
 
+def test_insert_ndjson_infers_types_once(spark, tmp_path, monkeypatch):
+    """A batch insert infers its types once, strictly: the same map
+    adds the remote columns and drives the write, and a batch with a
+    malformed line fails before anything is written."""
+    from scratchdata_spark import jdbc_destination
+
+    calls = []
+    infer = jdbc_destination.infer_types_file
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs)
+        return infer(*args, **kwargs)
+
+    monkeypatch.setattr(jdbc_destination, "infer_types_file", spy)
+    d = FakeJDBC(spark)
+    d.insert_ndjson("t", _ndjson(tmp_path, "ok.ndjson", [{"__row_id": 1, "msg": "x", "n": 7}]))
+    assert calls == [{}]
+    assert dict(d.remote_cols) == {"__row_id": "BIGINT", "msg": "VARCHAR", "n": "BIGINT"}
+    (table, rows), = d.written
+    assert table == "t" and rows[0]["msg"] == "x" and rows[0]["n"] == 7
+    bad = tmp_path / "bad.ndjson"
+    bad.write_text('{"__row_id": 2, "msg": "y"}\n{"msg": \n')
+    del calls[:]
+    with pytest.raises(ValueError):
+        d.insert_ndjson("t", str(bad))
+    assert calls == [{}]
+    assert len(d.written) == 1
+
+
 def test_copy_spark_to_jdbc(spark, tmp_path):
     """Cross-backend copy through the generic chunked path."""
     from scratchdata_spark.catalog import TableCatalog
