@@ -76,10 +76,6 @@ class BigQueryDestination(RowSerializers, Destination):
         self.blobstore = blobstore
         self.gcs_bucket = gcs_bucket
         self.delete_from_gcs = delete_from_gcs
-        # (path, mtime) → inferred types: the insert sequence calls
-        # create_columns then insert_ndjson_file on the same file; one
-        # inference pass instead of two full-file scans
-        self._types_cache: dict[tuple[str, float], dict[str, str]] = {}
 
     # ------------------------------------------------------------ query
     def _rows(self, text: str):
@@ -107,32 +103,6 @@ class BigQueryDestination(RowSerializers, Destination):
             f"CREATE TABLE IF NOT EXISTS {table} (__row_id BIGINT)"
         )
 
-    def _infer_types(self, path: str) -> dict[str, str]:
-        # st_mtime_ns + size: a file rewritten in place within the same
-        # second (1 s mtime granularity on some filesystems) must not
-        # return stale types (ADVICE r3)
-        st = os.stat(path)
-        key = (path, st.st_size, st.st_mtime_ns)
-        types = self._types_cache.get(key)
-        if types is None:
-            types = infer_types_file(path)
-            if len(self._types_cache) > 64:
-                self._types_cache.pop(next(iter(self._types_cache)))
-            self._types_cache[key] = types
-        return types
-
-    def create_columns(self, table: str, ndjson_path: str | list[str]) -> None:
-        _split_table(table)  # validates both parts
-        paths = [ndjson_path] if isinstance(ndjson_path, str) else list(ndjson_path)
-        types: dict[str, str] = {}
-        for p in paths:
-            types.update(self._infer_types(p))
-        for col, jt in types.items():
-            self.client.query(
-                f"ALTER TABLE `{table}` ADD COLUMN IF NOT EXISTS"
-                f" `{_check_column(col)}` {BQ_TYPES.get(jt, 'STRING')}"
-            )
-
     # ------------------------------------------------------------ insert
     def _gcs_key(self, table: str, path: str) -> str:
         """Store-relative key; the blobstore owns any bucket prefix
@@ -144,18 +114,27 @@ class BigQueryDestination(RowSerializers, Destination):
         full = f"{prefix}/{key}" if prefix else key
         return f"gs://{self.gcs_bucket}/{full}"
 
-    def insert_ndjson_file(self, table: str, ndjson_path: str | list[str]) -> None:
-        """Staged load (insert.go:109-163): put the NDJSON on GCS, run
-        one LOAD job referencing it, drop the staged object. At scale
-        this is the shape that works — the LOAD executes inside
-        BigQuery against columnar-converted staging, never streaming
-        rows through this process."""
-        _split_table(table)  # validates both parts
+    def insert_ndjson(self, table: str, ndjson_path: str | list[str]) -> None:
+        """Staged load (insert.go:109-163): infer each file once, add
+        the union of the files' columns, then per file put the NDJSON
+        on GCS, run one LOAD job with that file's column list, and
+        drop the staged object. At scale this is the shape that works
+        — the LOAD executes inside BigQuery against columnar-converted
+        staging, never streaming rows through this process."""
+        self.create_empty_table(table)  # validates both parts
         paths = [ndjson_path] if isinstance(ndjson_path, str) else list(ndjson_path)
-        for path in paths:
+        file_types = [infer_types_file(p) for p in paths]
+        union: dict[str, str] = {}
+        for types in file_types:
+            union.update(types)
+        for col, jt in union.items():
+            self.client.query(
+                f"ALTER TABLE `{table}` ADD COLUMN IF NOT EXISTS"
+                f" `{_check_column(col)}` {BQ_TYPES.get(jt, 'STRING')}"
+            )
+        for path, types in zip(paths, file_types):
             key = self._gcs_key(table, path)
             self.blobstore.put_file(path, key)
-            types = self._infer_types(path)
             columns = ", ".join(
                 f"`{_check_column(c)}` {BQ_TYPES.get(t, 'STRING')}"
                 for c, t in types.items()

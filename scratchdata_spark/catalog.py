@@ -96,9 +96,10 @@ class TableCatalog:
         return os.path.join(self.warehouse, "_catalog", database, f"{table}.json")
 
     def lock(self, database: str, table: str) -> threading.RLock:
-        # RLock: the insert path holds it across create_empty_table +
-        # create_columns + insert_ndjson_file, and insert_ndjson_file
-        # re-acquires it internally.
+        # held across a whole write: insert_ndjson's table creation,
+        # column registration and append, or a warehouse statement's
+        # schema change and file adoption. RLock: code holding it may
+        # call into a helper that takes it again.
         with self._global:
             return self._locks.setdefault((database, table), threading.RLock())
 

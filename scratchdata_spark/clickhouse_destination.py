@@ -5,12 +5,12 @@ already serves ClickHouse for queries (including the read-side rich-type
 matrix) and JDBC appends; what it lacks is the reference's insert
 mechanics (``clickhouse/insert.go``), the only bulk path it ships:
 
-1. **Type inference over the NDJSON batch** (insert.go:17-94): scan
-   every row's top-level values and classify per column with the
-   precedence ladder string > undefined > float > int > bool (default
-   string).  ``int`` vs ``float`` is decided on the raw token the way
-   Go's ``strconv.Atoi`` does — ``1.0`` and ``1e3`` are floats even
-   when integral.
+1. **Type inference over the NDJSON batch** (insert.go:17-94): the
+   shared ``jtypes`` ladder, string > undefined > float > int > bool
+   (default string), which decides ``int`` vs ``float`` the way Go's
+   ``strconv.Atoi`` does — ``1.0``, ``1e3`` and integers past int64
+   are floats.  ``insert_ndjson`` runs it once per batch, and every
+   file of the batch loads with that one column map.
 2. **Column evolution** (insert.go:96-121): one ``ALTER TABLE`` with a
    comma-joined ``ADD COLUMN IF NOT EXISTS "col" Type`` list, mapping
    int→Int64, bool→Boolean, float→Float64, string→String.
@@ -63,78 +63,7 @@ from pyspark.sql import SparkSession
 _LOG = logging.getLogger(__name__)
 
 from scratchdata_spark.engine import _check_ident
-from scratchdata_spark.jdbc_destination import JDBCDestination
-
-# ------------------------------------------------------------ inference
-
-_INT_TOKEN = re.compile(r"-?\d+")  # strconv.Atoi's accepted shape
-
-
-def infer_column_types(lines) -> dict[str, str]:
-    """JSON-type inference over an NDJSON batch — the ladder at
-    ``clickhouse/insert.go:70-93``: any string wins, then undefined
-    (nested/unknown → string), then float, then int, then bool; a
-    column that is null on every row is a string.  Returns columns in
-    first-seen order (see module note on map-iteration order)."""
-    counts: dict[str, dict[str, int]] = {}
-    for line in lines:
-        if isinstance(line, bytes):
-            line = line.decode("utf-8")
-        if not line.strip():
-            continue
-        obj = json.loads(line)
-        if not isinstance(obj, dict):
-            raise ValueError("clickhouse: NDJSON rows must be objects")
-        for k, v in obj.items():
-            c = counts.setdefault(
-                k, {"string": 0, "null": 0, "bool": 0, "int": 0,
-                    "float": 0, "undefined": 0}
-            )
-            if isinstance(v, str):
-                c["string"] += 1
-            elif v is None:
-                c["null"] += 1
-            elif isinstance(v, bool):  # before int — bool is an int subclass
-                c["bool"] += 1
-            elif isinstance(v, int):
-                # strconv.Atoi fails on int64 overflow, so the
-                # reference classifies e.g. 20-digit integers as float
-                # (insert.go:52-58); Python's arbitrary-precision int
-                # must mirror that or _wrap_int silently corrupts the
-                # value on insert (r10 advisor catch).
-                if -(1 << 63) <= v < (1 << 63):
-                    c["int"] += 1
-                else:
-                    c["float"] += 1
-            elif isinstance(v, float):
-                # json.loads only yields float when the raw token had a
-                # '.'/'e', exactly the rows Atoi rejects (insert.go:52)
-                c["float"] += 1
-            else:
-                c["undefined"] += 1  # objects/arrays (gjson JSON type)
-    out: dict[str, str] = {}
-    for name, c in counts.items():
-        if c["string"] > 0:
-            out[name] = "string"
-        elif c["undefined"] > 0:
-            out[name] = "string"
-        elif c["float"] > 0:
-            out[name] = "float"
-        elif c["int"] > 0:
-            out[name] = "int"
-        elif c["bool"] > 0:
-            out[name] = "bool"
-        else:
-            out[name] = "string"
-    return out
-
-
-_JSON_TO_CH = {
-    "int": "Int64",
-    "bool": "Boolean",
-    "float": "Float64",
-    "string": "String",
-}
+from scratchdata_spark.jdbc_destination import TYPE_MAPS, JDBCDestination
 
 # ------------------------------------------------------------- coercion
 
@@ -367,16 +296,15 @@ class ClickHouseBatchDestination(JDBCDestination):
         return f"{self.database}.{_check_ident(table)}"
 
     # --------------------------------------------------------- mechanics
-    def create_columns_with_types(
-        self, table: str, columns: dict[str, str]
-    ) -> None:
+    def _add_columns(self, table: str, types: dict[str, str]) -> None:
         """One ALTER with the comma-joined ADD COLUMN list
         (insert.go:96-121)."""
-        if not columns:
+        if not types:
             return
+        tmap = TYPE_MAPS["clickhouse"]
         parts = [
-            f'ADD COLUMN IF NOT EXISTS "{_check_ident(n)}" {_JSON_TO_CH[jt]}'
-            for n, jt in columns.items()
+            f'ADD COLUMN IF NOT EXISTS "{_check_ident(n)}" {tmap[jt]}'
+            for n, jt in types.items()
         ]
         self._execute(
             f"ALTER TABLE {self._qualified(table)} " + ", ".join(parts)
@@ -437,22 +365,20 @@ class ClickHouseBatchDestination(JDBCDestination):
         self.http.post(bytes(payload))
 
     # ------------------------------------------------------------ insert
-    def _append(self, table: str, ndjson_path, batch_types=None) -> None:
-        """InsertBatchFromNDJson (insert.go:278-299): infer the batch's
-        column types, evolve the table, then one batched insert per
-        file.  Raw rows never ride the JDBC link.  Both passes stream
-        the file line-by-line (the reference's bounded scanner,
-        insert.go:224-236) instead of materializing a line list, so
-        peak memory is the single coerced batch body, not ~3× the
-        spool file (r10 advisor catch)."""
+    def _append(self, table: str, ndjson_path, batch_types: dict[str, str]) -> None:
+        """InsertBatchFromNDJson (insert.go:278-299), after
+        ``insert_ndjson`` inferred the batch and evolved the table: one
+        batched insert per file with the batch's columns.  Raw rows
+        never ride the JDBC link.  Each file streams line-by-line (the
+        reference's bounded scanner, insert.go:224-236) instead of
+        materializing a line list, so peak memory is the single
+        coerced batch body, not ~3× the spool file (r10 advisor
+        catch)."""
         paths = (
             [ndjson_path] if isinstance(ndjson_path, str) else list(ndjson_path)
         )
         for path in paths:
             with open(path, "rb") as f:
-                columns = infer_column_types(line.rstrip(b"\n") for line in f)
-            self.create_columns_with_types(table, columns)
-            with open(path, "rb") as f:
                 self.insert_data(
-                    table, (line.rstrip(b"\n") for line in f), columns
+                    table, (line.rstrip(b"\n") for line in f), batch_types
                 )

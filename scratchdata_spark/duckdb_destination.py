@@ -223,22 +223,24 @@ class DuckDBDestination(RowSerializers, Destination):
 
     def create_empty_table(self, table: str) -> None:
         with self._lock:
-            self.conn.execute(
-                f'CREATE TABLE IF NOT EXISTS "{_check_ident(table)}" (__row_id BIGINT)'
-            )
+            self._create_empty_table(_check_ident(table))
 
-    def create_columns(self, table: str, ndjson_path: str) -> None:
+    def _create_empty_table(self, ident: str) -> None:
+        self.conn.execute(f'CREATE TABLE IF NOT EXISTS "{ident}" (__row_id BIGINT)')
+
+    def insert_ndjson(self, table: str, ndjson_path: str | list[str]) -> None:
+        """Create the table, add the batch's columns with the types
+        inferred once over the batch, then ``INSERT … BY NAME`` — one
+        write under the connection lock."""
+        ident = _check_ident(table)
         types = infer_types_file(ndjson_path)
-        self.create_empty_table(table)
         with self._lock:
+            self._create_empty_table(ident)
             for name, jt in types.items():
                 self.conn.execute(
-                    f'ALTER TABLE "{_check_ident(table)}" ADD COLUMN IF NOT EXISTS'
+                    f'ALTER TABLE "{ident}" ADD COLUMN IF NOT EXISTS'
                     f' "{_check_ident(name)}" {DUCKDB_TYPES[jt]}'
                 )
-
-    def insert_ndjson_file(self, table: str, ndjson_path: str) -> None:
-        with self._lock:
             if self._fs is not None:
                 # Confined connection: the engine can't read files
                 # (enable_external_access=false), so the bulk load
@@ -251,14 +253,14 @@ class DuckDBDestination(RowSerializers, Destination):
                 self.conn.register("__stage_ndjson", reader)
                 try:
                     self.conn.execute(
-                        f'INSERT INTO "{_check_ident(table)}" BY NAME'
+                        f'INSERT INTO "{ident}" BY NAME'
                         " SELECT * FROM __stage_ndjson"
                     )
                 finally:
                     self.conn.unregister("__stage_ndjson")
                 return
             self.conn.execute(
-                f'INSERT INTO "{_check_ident(table)}" BY NAME'
+                f'INSERT INTO "{ident}" BY NAME'
                 f" SELECT * FROM read_ndjson_auto(?)",
                 [ndjson_path],
             )

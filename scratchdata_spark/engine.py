@@ -1,11 +1,16 @@
 """Destination interface + the Spark destination (the default backend).
 
-Mirrors the reference's 9-method Destination interface
-(``pkg/destinations/destinations.go:27-40``): QueryJSON / QueryNDJson /
-QueryCSV / Tables / Columns / CreateEmptyTable / CreateColumns /
-InsertFromNDJsonFile / Close — kept as a Python ABC so other OLAP
-backends (DuckDB, JDBC engines) can slot in behind the same API,
-with Spark as the primary.
+Follows the reference's Destination interface
+(``pkg/destinations/destinations.go:27-40``) as a Python ABC so other
+OLAP backends (DuckDB, JDBC engines, BigQuery) slot in behind the same
+API, with Spark as the primary. The read half matches it (QueryJSON /
+QueryNDJson / QueryCSV / Tables / Columns / Close, plus ``query_df``).
+The write half is one call, ``insert_ndjson``, where the reference has
+three (CreateEmptyTable → CreateColumns → InsertFromNDJsonFile): the
+reference's worker always makes the three in that order, and as one
+call a backend infers the batch's types once, strictly, and feeds that
+one map to its column step and its load step, under whatever lock or
+transaction makes the whole write atomic.
 
 Query semantics: raw SQL passthrough, prepared once per request
 (``Destination.prepare`` → ``PreparedQuery``): the reference's trim
@@ -109,7 +114,9 @@ class PreparedQuery:
 
 class Destination(ABC):
     """One analytics backend holding many tables (unit of multi-tenancy).
-    The query methods take a text or a ``PreparedQuery``."""
+    The query methods take a text or a ``PreparedQuery``. Writing is
+    ``insert_ndjson`` alone (see the module docstring for why it is one
+    call); ``create_empty_table`` is the step backends build it from."""
 
     def prepare(self, query: str) -> PreparedQuery:
         """The request value for ``query``, trimmed as the reference
@@ -141,17 +148,12 @@ class Destination(ABC):
     def create_empty_table(self, table: str) -> None: ...
 
     @abstractmethod
-    def create_columns(self, table: str, ndjson_path: str) -> None: ...
-
-    @abstractmethod
-    def insert_ndjson_file(self, table: str, ndjson_path: str) -> None: ...
-
     def insert_ndjson(self, table: str, ndjson_path: str | list[str]) -> None:
-        """Full batch insert: ensure table, register columns, load.
-        Backends override to make the whole sequence atomic."""
-        self.create_empty_table(table)
-        self.create_columns(table, ndjson_path)
-        self.insert_ndjson_file(table, ndjson_path)
+        """Write one NDJSON batch (a file or a list of files): create the
+        table if absent, add the batch's new columns with the types
+        ``jtypes.infer_types_file`` infers once over the whole batch,
+        and load the rows. A malformed batch raises before any row is
+        written."""
 
     def close(self) -> None:  # pragma: no cover - trivial
         pass
@@ -750,10 +752,13 @@ class SparkDestination(DataFrameSerializers, Destination):
         show up in the catalog entry or the two mtimes: every writer
         moves the data dir's mtime. Creating a scan lists the table's
         files; an unchanged table costs two catalog reads and two stats
-        instead. The fingerprints and the lock that serializes
-        registration live on the Spark session, next to the temp views
-        they describe, so destinations sharing a session cannot mistake
-        each other's registrations for their own.
+        instead. A table of this database that the catalog no longer
+        lists, dropped here or by another instance, loses its temp
+        view, so naming it fails with table-not-found. The
+        fingerprints and the lock that serializes registration live on
+        the Spark session, next to the temp views they describe, so
+        destinations sharing a session cannot mistake each other's
+        registrations for their own.
 
         Racy mtimes (as git treats a racy index entry): a write landing
         in the same timestamp tick as the stat leaves the mtime
@@ -816,6 +821,8 @@ class SparkDestination(DataFrameSerializers, Destination):
         )
 
     def _register_views_locked(self) -> _Snapshot:
+        # table name → (database, fingerprint) of the temp view this
+        # session holds; the fingerprint is None while it is racy
         registered = self.spark.__dict__.setdefault("_sd_table_fps", {})
         racy_after = time.time_ns() - _RACY_NS
         snap = _Snapshot({}, {}, {})
@@ -824,16 +831,20 @@ class SparkDestination(DataFrameSerializers, Destination):
             if fp is None:
                 continue  # dropped since the listing
             snap.tables[t] = fp
-            if registered.get(t) == fp:
+            if registered.get(t) == (self.database, fp):
                 continue
             racy = fp.mtime > racy_after
             if racy:
                 snap.listings[t] = self._list_parquet(fp.data_dir)
             self._scan(fp.info, fp.data_dir).createOrReplaceTempView(t)
-            if racy:
-                registered.pop(t, None)
-            else:
-                registered[t] = fp
+            registered[t] = (self.database, None if racy else fp)
+        # a table dropped by any instance leaves the session, so a
+        # query naming it fails with table-not-found instead of
+        # scanning deleted files
+        for t, (db, _) in list(registered.items()):
+            if db == self.database and t not in snap.tables:
+                self.spark.catalog.dropTempView(t)
+                del registered[t]
         views = snap.views = self.catalog.views(self.database)
         # a view dropped from the catalog must leave the session too —
         # only names THIS destination registered are ever dropped
@@ -1102,14 +1113,8 @@ class SparkDestination(DataFrameSerializers, Destination):
     def create_empty_table(self, table: str) -> None:
         self.catalog.create_empty_table(self.database, _check_ident(table))
 
-    def create_columns(self, table: str, ndjson_path: str | list[str]) -> None:
-        self._add_columns(_check_ident(table), infer_types_file(ndjson_path))
-
-    def _add_columns(self, table: str, types: dict[str, str]) -> None:
-        self.catalog.add_columns(self.database, table, types)
-
     def insert_ndjson(self, table: str, ndjson_path: str | list[str]) -> None:
-        """Atomic batch insert: the per-table catalog lock is held
+        """Atomic batch insert (A9): the per-table catalog lock is held
         across schema registration AND the data write, so two
         concurrent batches on one table can't interleave their
         read-modify-write of the schema JSON (the losing batch's new
@@ -1121,53 +1126,39 @@ class SparkDestination(DataFrameSerializers, Destination):
         with self.catalog.lock(self.database, table):
             self.create_empty_table(table)
             types = infer_types_file(ndjson_path)
-            self._add_columns(table, types)
+            self.catalog.add_columns(self.database, table, types)
             self._append(table, ndjson_path, types)
-
-    def insert_ndjson_file(self, table: str, ndjson_path: str | list[str]) -> None:
-        """Bulk load one NDJSON micro-batch (A9) — one file or a list.
-
-        Read every field as string (exact token preservation), then
-        cast to the registered column type — the documented
-        cast-on-write policy: a value that does not cast becomes NULL
-        (SURVEY §7 "type widening on conflict"). Unknown-to-catalog
-        columns are ignored here; the worker's ``insert_ndjson``
-        registers every batch column first.
-        """
-        # tolerant here: strictness is create_columns' job; this
-        # inference only lists which columns the batch carries
-        self._append(
-            _check_ident(table),
-            ndjson_path,
-            infer_types_file(ndjson_path, skip_malformed=True),
-        )
 
     def _append(
         self, table: str, ndjson_path: str | list[str], batch_types: dict[str, str]
     ) -> None:
-        with self.catalog.lock(self.database, table):
-            info = self.catalog.get(self.database, table)
-            if info is None:
-                raise KeyError(f"no such table: {table}")
-            string_schema = to_struct({k: "string" for k in batch_types})
-            # DROPMALFORMED: an unparseable line vanishes instead of
-            # becoming an all-NULL row (matches inference skipping it)
-            raw = (
-                self.spark.read.schema(string_schema)
-                .option("mode", "DROPMALFORMED")
-                .json(ndjson_path)
-            )
-            from scratchdata_spark.jtypes import conform_to_struct
+        """Load the batch under ``insert_ndjson``'s lock. Every field is
+        read as a string (exact token preservation), then cast to the
+        registered column type — the documented cast-on-write policy:
+        a value that does not cast becomes NULL (SURVEY §7 "type
+        widening on conflict")."""
+        info = self.catalog.get(self.database, table)
+        if info is None:
+            raise KeyError(f"no such table: {table}")
+        string_schema = to_struct({k: "string" for k in batch_types})
+        # DROPMALFORMED: a line Spark's JSON parser rejects although
+        # inference parsed it vanishes instead of becoming an all-NULL row
+        raw = (
+            self.spark.read.schema(string_schema)
+            .option("mode", "DROPMALFORMED")
+            .json(ndjson_path)
+        )
+        from scratchdata_spark.jtypes import conform_to_struct
 
-            out = conform_to_struct(raw, info.struct())
-            # A5: assign a snowflake __row_id wherever the batch lacks one.
-            from scratchdata_spark.ids import snowflake_column
+        out = conform_to_struct(raw, info.struct())
+        # A5: assign a snowflake __row_id wherever the batch lacks one.
+        from scratchdata_spark.ids import snowflake_column
 
-            out = out.withColumn(ROW_ID, F.coalesce(F.col(ROW_ID), snowflake_column()))
-            writer = out.write.mode("append")
-            if info.partition_col:
-                writer = writer.partitionBy(info.partition_col)
-            writer.parquet(self.catalog.data_dir(self.database, table))
+        out = out.withColumn(ROW_ID, F.coalesce(F.col(ROW_ID), snowflake_column()))
+        writer = out.write.mode("append")
+        if info.partition_col:
+            writer = writer.partitionBy(info.partition_col)
+        writer.parquet(self.catalog.data_dir(self.database, table))
 
     # ------------------------------------------------------ maintenance
     def set_partitioning(self, table: str, column: str | None) -> None:

@@ -323,9 +323,6 @@ class JDBCDestination(DataFrameSerializers, Destination):
         self._add_columns(table, types)
         self._append(table, ndjson_path, types)
 
-    def create_columns(self, table: str, ndjson_path) -> None:
-        self._add_columns(table, infer_types_file(ndjson_path))
-
     def _add_columns(self, table: str, types: dict[str, str]) -> None:
         tmap = TYPE_MAPS[self.engine]
         have = {c["name"] for c in self.columns(table)}
@@ -343,22 +340,16 @@ class JDBCDestination(DataFrameSerializers, Destination):
                 if name not in {c["name"] for c in self.columns(table)}:
                     raise
 
-    def insert_ndjson_file(self, table: str, ndjson_path) -> None:
-        self._append(table, ndjson_path)
-
-    def _append(self, table: str, ndjson_path, batch_types=None) -> None:
-        """Batch load: read tokens as strings, cast to the REMOTE
-        table's schema (cast-on-write, non-castable → NULL), missing
-        columns → NULL, then one batched JDBC write. Without
-        ``batch_types`` a tolerant inference lists the batch's
-        columns (a malformed line is dropped). Subclasses with their
-        own load path override this and may ignore ``batch_types``."""
+    def _append(self, table: str, ndjson_path, batch_types: dict[str, str]) -> None:
+        """Batch load: read the batch's columns (``batch_types``) as
+        strings, cast to the REMOTE table's schema (cast-on-write,
+        non-castable → NULL), missing columns → NULL, then one batched
+        JDBC write. Subclasses with their own load path override this
+        and may ignore ``batch_types``."""
         from scratchdata_spark.jtypes import conform_to_struct, to_struct
 
         table = self._dbtable(table)
         target = self._reader(dbtable=table).schema
-        if batch_types is None:
-            batch_types = infer_types_file(ndjson_path, skip_malformed=True)
         string_schema = to_struct({k: "string" for k in batch_types})
         raw = (
             self.spark.read.schema(string_schema)

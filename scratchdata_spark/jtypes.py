@@ -7,7 +7,14 @@ NDJSON batch; mixed types resolve by precedence::
 
 (``types.go:65-84``; "undefined" — anything non-scalar — also maps to
 string). A number is ``int`` iff the raw token parses as an integer
-(``strconv.Atoi`` — so ``1.0`` is float, ``1`` is int; types.go:44-50).
+with ``strconv.Atoi`` (types.go:44-50): ``1.0`` and ``1e3`` are float,
+and so is an integer outside int64, where Atoi fails — a 20-digit
+integer is stored as a double instead of cast to a NULL long.
+
+Inference is strict and the one implementation every destination's
+``insert_ndjson`` runs, once per batch: an unparseable line or a row
+that is not a JSON object raises ``ValueError``, so a corrupt batch
+fails its job (retry → dead-letter) before any row is written.
 
 Physical mapping (SURVEY §1.2): string→StringType, int→LongType,
 float→DoubleType, bool→BooleanType.
@@ -46,6 +53,8 @@ SPARK_TYPES: dict[str, DataType] = {
 
 DUCKDB_TYPES = {"string": "STRING", "int": "BIGINT", "float": "DOUBLE", "bool": "BOOLEAN"}
 
+_INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
+
 
 def classify_value(raw: object) -> str:
     """jsontype of one parsed JSON value (types.go:35-53)."""
@@ -56,7 +65,9 @@ def classify_value(raw: object) -> str:
     if isinstance(raw, bool):  # bool before int: bool is an int subclass
         return "bool"
     if isinstance(raw, int):
-        return "int"
+        # strconv.Atoi fails past int64, so the reference types such a
+        # token float; a long column would store it as NULL
+        return "int" if _INT64_MIN <= raw <= _INT64_MAX else "float"
     if isinstance(raw, float):
         # json.loads produces float only for tokens with . / e; but a
         # whole-valued float token like 1.0 must stay float, matching
@@ -73,27 +84,18 @@ def merge_type_counts(counts: dict[str, int]) -> str:
     return "string"  # all-null (types.go:80-82)
 
 
-def infer_types(lines: Iterable[str], skip_malformed: bool = False) -> dict[str, str]:
-    """Scan an NDJSON batch → {column: jsontype}.
-
-    Strict by default, so a corrupt batch fails the job → retry →
-    dead-letter (``create_columns``, ``insert_ndjson``).
-    ``skip_malformed`` tolerates unparseable lines: a standalone
-    ``insert_ndjson_file`` only lists which columns the batch carries,
-    and its reader drops the same lines (DROPMALFORMED)."""
+def infer_types(lines: Iterable[str]) -> dict[str, str]:
+    """Scan an NDJSON batch → {column: jsontype}, columns in first-seen
+    order. Raises ``ValueError`` on a line that does not parse or a
+    row that is not an object."""
     counts: dict[str, dict[str, int]] = {}
     for line in lines:
         line = line.strip()
         if not line:
             continue
-        try:
-            obj = json.loads(line)
-        except ValueError:
-            if skip_malformed:
-                continue
-            raise
+        obj = json.loads(line)
         if not isinstance(obj, dict):
-            continue
+            raise ValueError("NDJSON rows must be objects")
         for k, v in obj.items():
             c = counts.setdefault(k, {})
             t = classify_value(v)
@@ -101,9 +103,7 @@ def infer_types(lines: Iterable[str], skip_malformed: bool = False) -> dict[str,
     return {k: merge_type_counts(c) for k, c in counts.items()}
 
 
-def infer_types_file(
-    path: str | list[str], skip_malformed: bool = False
-) -> dict[str, str]:
+def infer_types_file(path: str | list[str]) -> dict[str, str]:
     """Infer over one NDJSON file or a list of them."""
     paths = [path] if isinstance(path, str) else list(path)
 
@@ -112,7 +112,7 @@ def infer_types_file(
             with open(p, "r", encoding="utf-8") as f:
                 yield from f
 
-    return infer_types(_lines(), skip_malformed)
+    return infer_types(_lines())
 
 
 def to_struct(types: dict[str, str], row_id_col: str = "__row_id") -> StructType:

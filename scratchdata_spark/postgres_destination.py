@@ -30,8 +30,10 @@ Semantics notes (divergences loudly documented):
   the COPY ``\\N`` null token — gjson ``Result.String()`` returns ""
   for both (insert.go:123-125), so the reference loads them as empty
   VARCHARs / cast errors, never as SQL NULL.  Parity wins.
-* An unparsable line contributes "" for every key — gjson's parser
-  never errors, it returns empty results (same contract).
+* ``insert_ndjson`` infers the batch's types strictly first, so an
+  unparsable line or a non-object row fails the batch before any
+  transaction opens.  The COPY step itself keeps gjson's contract for
+  such a line ("" for every key — gjson's parser never errors).
 * An EMPTY file is a no-op here; the reference nil-pointer panics on
   it (``stmt.Exec()`` with ``stmt`` never prepared, insert.go:137) —
   reproducing a crash is not parity worth having.
@@ -155,7 +157,7 @@ class PostgresCopyDestination(JDBCDestination):
             )
         return keys
 
-    def _append(self, table: str, ndjson_path, batch_types=None) -> None:
+    def _append(self, table: str, ndjson_path, batch_types: dict[str, str]) -> None:
         """InsertFromNDJsonFile (insert.go:83-155): stream the file
         line-by-line (bounded scanner), prepare COPY from the first
         row's keys, send every row as one CopyData frame with all

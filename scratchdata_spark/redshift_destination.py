@@ -165,11 +165,10 @@ class RedshiftDestination(JDBCDestination):
         )
 
     # ------------------------------------------------------------ insert
-    def _append(self, table: str, ndjson_path, batch_types=None) -> None:
-        """Staged load: evolve columns for the batch (the reference
-        re-calls CreateColumns inside its insert — insert.go:84 — and
-        so does a load without ``batch_types``; ``insert_ndjson`` has
-        already added them), put the file on S3, one COPY per file,
+    def _append(self, table: str, ndjson_path, batch_types: dict[str, str]) -> None:
+        """Staged load, after ``insert_ndjson`` added the batch's
+        columns (the reference re-calls CreateColumns inside its
+        insert, insert.go:84): put each file on S3, one COPY per file,
         drop the staged object (insert.go:128-138).  The cluster reads
         the object directly — no rows ride this process or the JDBC
         link."""
@@ -178,8 +177,6 @@ class RedshiftDestination(JDBCDestination):
             [ndjson_path] if isinstance(ndjson_path, str) else list(ndjson_path)
         )
         for path in paths:
-            if batch_types is None:
-                self.create_columns(table, path)
             key = self._s3_key(table, path)
             self.blobstore.put_file(path, key)
             try:

@@ -1323,15 +1323,6 @@ def _exec_insert(dest, query: str):
 # ------------------------------------------------- DROP / copy-on-write
 
 
-def _exec_drop_table(dest, table: str) -> None:
-    dest.catalog.drop_table(dest.database, table)
-    # a stale temp view would keep resolving the deleted listing
-    try:
-        dest.spark.catalog.dropTempView(table)
-    except Exception:
-        pass
-
-
 def _exec_drop(dest, query: str):
     m = _DROP_RE.match(query)
     if_exists, table = m.groups()
@@ -1339,7 +1330,8 @@ def _exec_drop(dest, query: str):
         if if_exists:
             return _count_df(dest, 0)
         raise KeyError(f"no such table: {table}")
-    _exec_drop_table(dest, table)
+    # the session's temp view goes at the next register_views
+    dest.catalog.drop_table(dest.database, table)
     return _count_df(dest, 0)
 
 

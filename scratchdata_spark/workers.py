@@ -2,7 +2,9 @@
 
 Reference flow (``workers/workers.go:87-127``): download file →
 CreateEmptyTable → CreateColumns (whole-file type inference) →
-InsertFromNDJsonFile → delete file + queue row. Failures release the
+InsertFromNDJsonFile → delete file + queue row. Here the three
+destination calls are one, ``Destination.insert_ndjson``, which infers
+the file's types once and writes atomically. Failures release the
 claim (at-least-once; inserts replay — the reference has the same
 property).
 

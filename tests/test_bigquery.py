@@ -98,8 +98,8 @@ def test_table_name_must_be_dataset_qualified(dest):
 def test_create_columns_adds_typed_columns(dest):
     d, client, _, tmp = dest
     path = _ndjson(tmp, [{"n": 1, "x": 1.5, "ok": True, "s": "hi"}])
-    d.create_columns("ds.events", path)
-    stmts = sorted(client.queries)
+    d.insert_ndjson("ds.events", path)
+    stmts = sorted(q for q in client.queries if q.startswith("ALTER TABLE"))
     assert stmts == [
         "ALTER TABLE `ds.events` ADD COLUMN IF NOT EXISTS `n` INTEGER",
         "ALTER TABLE `ds.events` ADD COLUMN IF NOT EXISTS `ok` BOOLEAN",
@@ -111,7 +111,7 @@ def test_create_columns_adds_typed_columns(dest):
 def test_insert_stages_to_gcs_then_loads_then_deletes(dest):
     d, client, bucket, tmp = dest
     path = _ndjson(tmp, [{"n": 1}, {"n": 2}])
-    d.insert_ndjson_file("ds.events", path)
+    d.insert_ndjson("ds.events", path)
     load = [q for q in client.queries if q.startswith("LOAD DATA")]
     assert len(load) == 1
     assert (
@@ -127,7 +127,7 @@ def test_insert_keeps_staged_object_when_configured(dest):
     d, client, bucket, tmp = dest
     d.delete_from_gcs = False
     path = _ndjson(tmp, [{"n": 1}])
-    d.insert_ndjson_file("ds.events", path)
+    d.insert_ndjson("ds.events", path)
     assert list(bucket.objects) == ["staged/ds.events/batch.ndjson"]
 
 
@@ -176,9 +176,8 @@ def test_malicious_column_and_table_names_rejected(dest, tmp_path):
         d.create_empty_table("ds.events; DROP TABLE x")
     evil = _ndjson(tmp_path, [{"x` STRING); DROP TABLE ds.events; --": 1}])
     with pytest.raises(ValueError):
-        d.create_columns("ds.events", evil)
-    with pytest.raises(ValueError):
-        d.insert_ndjson_file("ds.events", evil)
+        d.insert_ndjson("ds.events", evil)
+    assert not [q for q in client.queries if q.startswith(("ALTER", "LOAD"))]
 
 
 def test_insert_infers_types_once_per_file(dest, tmp_path, monkeypatch):
@@ -194,6 +193,35 @@ def test_insert_infers_types_once_per_file(dest, tmp_path, monkeypatch):
 
     monkeypatch.setattr(bq, "infer_types_file", counting)
     path = _ndjson(tmp_path, [{"n": 1}])
-    d.create_columns("ds.events", path)
-    d.insert_ndjson_file("ds.events", path)
-    assert len(calls) == 1  # cached between the two steps
+    d.insert_ndjson("ds.events", path)
+    assert len(calls) == 1  # one map serves the ALTER and the LOAD
+
+
+def test_insert_infers_each_file_of_a_batch_once(dest, tmp_path, monkeypatch):
+    """A two-file batch: one inference per file, one ALTER per column
+    of their union, and each LOAD lists its own file's columns."""
+    d, client, _, _ = dest
+    calls = []
+    import scratchdata_spark.bigquery_destination as bq
+
+    real = bq.infer_types_file
+
+    def counting(path, *a, **k):
+        calls.append(path)
+        return real(path, *a, **k)
+
+    monkeypatch.setattr(bq, "infer_types_file", counting)
+    p1, p2 = tmp_path / "f1.ndjson", tmp_path / "f2.ndjson"
+    p1.write_text(json.dumps({"n": 1}) + "\n")
+    p2.write_text(json.dumps({"s": "x"}) + "\n")
+    d.insert_ndjson("ds.events", [str(p1), str(p2)])
+    assert calls == [str(p1), str(p2)]
+    assert sorted(q for q in client.queries if q.startswith("ALTER")) == [
+        "ALTER TABLE `ds.events` ADD COLUMN IF NOT EXISTS `n` INTEGER",
+        "ALTER TABLE `ds.events` ADD COLUMN IF NOT EXISTS `s` STRING",
+    ]
+    loads = [q for q in client.queries if q.startswith("LOAD DATA")]
+    assert [q.split(" FROM")[0] for q in loads] == [
+        "LOAD DATA INTO ds.events (`n` INTEGER)",
+        "LOAD DATA INTO ds.events (`s` STRING)",
+    ]

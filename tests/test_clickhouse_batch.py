@@ -1,5 +1,6 @@
 """ClickHouse batched bulk insert (clickhouse_destination.py — parity
-with ``clickhouse/insert.go``): NDJSON type inference ladder, one-ALTER
+with ``clickhouse/insert.go``): the NDJSON type inference ladder it
+shares with every destination (``jtypes``), one-ALTER
 column evolution, DESCRIBE-over-HTTP type fetch, the jsonToGoType
 coercion matrix, and the single-batch insert.  No live server in this
 container: a fake HTTP client captures payloads and serves canned
@@ -14,9 +15,9 @@ import pytest
 
 from scratchdata_spark.clickhouse_destination import (
     ClickHouseBatchDestination,
-    infer_column_types,
     json_to_ch_value,
 )
+from scratchdata_spark.jtypes import infer_types
 
 
 class FakeHTTP:
@@ -77,7 +78,7 @@ def test_inference_ladder_matches_reference():
             {"s": "y", "mixed": "one", "f": 2, "i": 3, "b": False, "n": None},
         ]
     )
-    t = infer_column_types(lines)
+    t = infer_types(lines)
     assert t == {
         "s": "string",
         "mixed": "string",  # any string wins over int
@@ -90,23 +91,23 @@ def test_inference_ladder_matches_reference():
 
 def test_inference_integral_float_token_stays_float():
     # Atoi rejects '1.0' and '1e3' → float even when integral
-    t = infer_column_types(_lines([{"a": 1.0}, {"a": 3}]))
+    t = infer_types(_lines([{"a": 1.0}, {"a": 3}]))
     assert t == {"a": "float"}
 
 
 def test_inference_nested_is_undefined_then_string():
-    t = infer_column_types(_lines([{"o": {"x": 1}, "a": [1, 2]}]))
+    t = infer_types(_lines([{"o": {"x": 1}, "a": [1, 2]}]))
     assert t == {"o": "string", "a": "string"}
 
 
 def test_inference_first_seen_order_and_union_of_keys():
-    t = infer_column_types(_lines([{"b": 1}, {"a": 2, "b": 3}]))
+    t = infer_types(_lines([{"b": 1}, {"a": 2, "b": 3}]))
     assert list(t) == ["b", "a"]
 
 
 def test_inference_rejects_non_object_rows():
     with pytest.raises(ValueError):
-        infer_column_types(["[1,2]"])
+        infer_types(["[1,2]"])
 
 
 # ------------------------------------------------------------- coercion
@@ -168,7 +169,7 @@ def test_decimal_serializes_exact_text():
 
 def test_create_columns_single_alter_with_joined_adds(ch):
     dest, http = ch
-    dest.create_columns_with_types(
+    dest._add_columns(
         "events", {"a": "int", "b": "string", "c": "float", "d": "bool"}
     )
     alters = [s for s in dest.stmts if s.startswith("ALTER TABLE")]
@@ -183,16 +184,16 @@ def test_create_columns_single_alter_with_joined_adds(ch):
 
 def test_create_columns_empty_is_noop(ch):
     dest, _ = ch
-    dest.create_columns_with_types("events", {})
+    dest._add_columns("events", {})
     assert dest.stmts == []
 
 
 def test_identifiers_validated(ch):
     dest, _ = ch
     with pytest.raises(ValueError):
-        dest.create_columns_with_types("ev;drop", {"a": "int"})
+        dest._add_columns("ev;drop", {"a": "int"})
     with pytest.raises(ValueError):
-        dest.create_columns_with_types("events", {'a" String --': "int"})
+        dest._add_columns("events", {'a" String --': "int"})
 
 
 # --------------------------------------------------------------- insert
@@ -207,7 +208,7 @@ def test_insert_flow_one_batch_in_column_order(ch, tmp_path):
     ]
     p = tmp_path / "b.ndjson"
     p.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-    dest.insert_ndjson_file("events", str(p))
+    dest.insert_ndjson("events", str(p))
 
     # evolution ran before the insert, with inferred types
     assert any("ADD COLUMN" in s for s in dest.stmts)
@@ -233,7 +234,7 @@ def test_insert_coerces_to_remote_types_not_inferred(ch, tmp_path):
     http.types["n"] = "UInt8"
     p = tmp_path / "b.ndjson"
     p.write_text(json.dumps({"n": 300}) + "\n")
-    dest.insert_ndjson_file("events", str(p))
+    dest.insert_ndjson("events", str(p))
     body = http.posts[-1].decode().splitlines()[1]
     assert json.loads(body) == [44]
 
@@ -242,7 +243,7 @@ def test_insert_empty_file_posts_nothing(ch, tmp_path):
     dest, http = ch
     p = tmp_path / "empty.ndjson"
     p.write_text("\n")
-    dest.insert_ndjson_file("events", str(p))
+    dest.insert_ndjson("events", str(p))
     assert [b for b in http.posts if b.startswith(b"INSERT")] == []
 
 
@@ -253,8 +254,34 @@ def test_insert_multiple_files_one_batch_each(ch, tmp_path):
         p = tmp_path / f"b{i}.ndjson"
         p.write_text(json.dumps({"a": i}) + "\n")
         ps.append(str(p))
-    dest.insert_ndjson_file("events", ps)
+    dest.insert_ndjson("events", ps)
     assert len([b for b in http.posts if b.startswith(b"INSERT")]) == 2
+
+
+def test_insert_ndjson_infers_a_two_file_batch_once(ch, tmp_path, monkeypatch):
+    """One inference per batch: its column map drives one ALTER and
+    every file's insert."""
+    from scratchdata_spark import jdbc_destination
+
+    calls = []
+    infer = jdbc_destination.infer_types_file
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return infer(*args, **kwargs)
+
+    monkeypatch.setattr(jdbc_destination, "infer_types_file", spy)
+    dest, http = ch
+    ps = []
+    for i, row in enumerate([{"a": 1}, {"b": "x"}]):
+        p = tmp_path / f"b{i}.ndjson"
+        p.write_text(json.dumps(row) + "\n")
+        ps.append(str(p))
+    dest.insert_ndjson("events", ps)
+    assert len(calls) == 1
+    assert len([s for s in dest.stmts if s.startswith("ALTER TABLE")]) == 1
+    inserts = [b.decode() for b in http.posts if b.startswith(b"INSERT")]
+    assert [json.loads(b.splitlines()[1]) for b in inserts] == [[1, ""], [0, "x"]]
 
 
 def test_describe_statement_shape(ch):
@@ -270,7 +297,7 @@ def test_unicode_rides_the_batch(ch, tmp_path):
     dest, http = ch
     p = tmp_path / "u.ndjson"
     p.write_text(json.dumps({"t": "héllo — ✓"}, ensure_ascii=False) + "\n")
-    dest.insert_ndjson_file("events", str(p))
+    dest.insert_ndjson("events", str(p))
     assert "héllo — ✓" in http.posts[-1].decode("utf-8")
 
 
@@ -279,7 +306,7 @@ def test_decimal_values_ride_as_strings(ch, tmp_path):
     http.types["d"] = "Decimal(18, 4)"
     p = tmp_path / "d.ndjson"
     p.write_text(json.dumps({"d": 2.5}) + "\n")
-    dest.insert_ndjson_file("events", str(p))
+    dest.insert_ndjson("events", str(p))
     body = http.posts[-1].decode().splitlines()[1]
     assert json.loads(body) == ["2.5"]
     assert Decimal(json.loads(body)[0]) == Decimal("2.5")
@@ -403,7 +430,7 @@ def test_inference_ladder_properties(rows):
     string (or nested) occurrence forces string; float beats int;
     row order never matters."""
     lines = [json.dumps(r) for r in rows]
-    t = infer_column_types(lines)
+    t = infer_types(lines)
     assert set(t) == {k for r in rows for k in r}
     for col, kind in t.items():
         vals = [r[col] for r in rows if col in r]
@@ -419,7 +446,7 @@ def test_inference_ladder_properties(rows):
         else:
             assert kind == "string"  # all-null column
     # row order affects first-seen column ORDER only, never the kinds
-    t2 = infer_column_types(list(reversed(lines)))
+    t2 = infer_types(list(reversed(lines)))
     assert dict(sorted(t2.items())) == dict(sorted(t.items()))
 
 
@@ -450,12 +477,12 @@ def test_inference_int64_overflow_counts_as_float():
     # strconv.Atoi fails past int64, so the reference's ladder calls a
     # 20-digit integer a float; Python's unbounded int must mirror it
     # or _wrap_int corrupts the value on insert (r10 advisor catch).
-    t = infer_column_types(_lines([{"a": 99999999999999999999}]))
+    t = infer_types(_lines([{"a": 99999999999999999999}]))
     assert t == {"a": "float"}
-    t = infer_column_types(_lines([{"a": -(2**63) - 1}]))
+    t = infer_types(_lines([{"a": -(2**63) - 1}]))
     assert t == {"a": "float"}
     # the int64 boundary itself still parses via Atoi → int
-    t = infer_column_types(_lines([{"lo": -(2**63), "hi": 2**63 - 1}]))
+    t = infer_types(_lines([{"lo": -(2**63), "hi": 2**63 - 1}]))
     assert t == {"lo": "int", "hi": "int"}
 
 

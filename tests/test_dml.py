@@ -14,6 +14,7 @@ import pytest
 
 from scratchdata_spark.catalog import TableCatalog
 from scratchdata_spark.engine import SparkDestination
+from scratchdata_spark.jtypes import infer_types_file
 
 
 @pytest.fixture()
@@ -314,9 +315,9 @@ def test_partition_pruned_delete(spark, tmp_path):
     seed = tmp_path / "p.ndjson"
     seed.write_text(nd + "\n")
     d.create_empty_table("pt")
-    d.create_columns("pt", str(seed))
+    d.catalog.add_columns("dml", "pt", {"part": "string", "v": "int"})
     d.set_partitioning("pt", "part")
-    d.insert_ndjson_file("pt", str(seed))
+    d.insert_ndjson("pt", str(seed))
 
     cur = cat.data_dir("dml", "pt")
     files_before = {
@@ -354,9 +355,9 @@ def test_partition_pruned_update(spark, tmp_path):
     seed = tmp_path / "u.ndjson"
     seed.write_text(nd + "\n")
     d.create_empty_table("ut")
-    d.create_columns("ut", str(seed))
+    d.catalog.add_columns("dml", "ut", {"part": "string", "v": "int"})
     d.set_partitioning("ut", "part")
-    d.insert_ndjson_file("ut", str(seed))
+    d.insert_ndjson("ut", str(seed))
     cur = cat.data_dir("dml", "ut")
     x_files = {f for f in d._list_parquet(cur) if f.startswith("part=x/")}
 
@@ -1285,9 +1286,9 @@ def _partitioned(spark, tmp_path, name, rows, part_col):
     seed = tmp_path / f"{name}.ndjson"
     seed.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
     d.create_empty_table(name)
-    d.create_columns(name, str(seed))
+    d.catalog.add_columns("dml", name, infer_types_file(str(seed)))
     d.set_partitioning(name, part_col)
-    d.insert_ndjson_file(name, str(seed))
+    d.insert_ndjson(name, str(seed))
     return d
 
 

@@ -27,9 +27,7 @@ def _insert(dest, table, lines):
     with os.fdopen(fd, "w") as f:
         f.write("\n".join(lines) + "\n")
     try:
-        dest.create_empty_table(table)
-        dest.create_columns(table, path)
-        dest.insert_ndjson_file(table, path)
+        dest.insert_ndjson(table, path)
     finally:
         os.remove(path)
 
@@ -394,7 +392,7 @@ def test_partition_appends_stay_visible_to_the_next_miss(spark, dest):
         return [r["v"] for r in json.loads(_serve(dest, "json", sql))]
 
     dest.create_empty_table("pt")
-    dest.create_columns("pt", _write_tmp(['{"day": "d1", "v": 0}']))
+    dest.catalog.add_columns(dest.database, "pt", {"day": "string", "v": "int"})
     dest.set_partitioning("pt", "day")
     _insert(dest, "pt", ['{"__row_id": 1, "day": "d1", "v": 1}'])
     other = SparkDestination(spark.newSession(), dest.catalog, dest.database)
@@ -454,6 +452,24 @@ def test_concurrent_misses_never_see_rows_disappear(dest):
 
 def _count(dest, sql):
     return json.loads(_serve(dest, "json", sql))[0]["n"]
+
+
+def test_table_dropped_by_another_instance_leaves_this_session(spark, dest):
+    """After another destination over the same catalog (its own
+    session) drops a table, naming it here fails with Spark's
+    table-not-found error, for a repeated text and for a new one,
+    instead of failing at execution over the deleted files."""
+    _insert(dest, "x", ['{"__row_id": 1, "v": 1}'])
+    _insert(dest, "keep", ['{"__row_id": 1, "v": 1}'])
+    assert _count(dest, "select count(*) n from x") == 1
+    other = SparkDestination(spark.newSession(), dest.catalog, dest.database)
+    _serve(other, "json", "DROP TABLE x")
+    for sql in ("select count(*) n from x", "select count(v) n from x"):
+        with pytest.raises(Exception, match=r"TABLE_OR_VIEW_NOT_FOUND[\s\S]*`x`"):
+            _serve(dest, "json", sql)
+    assert _count(dest, "select count(*) n from keep") == 1
+    _insert(other, "x", ['{"__row_id": 2, "v": 2}'])
+    assert _count(dest, "select count(*) n from x") == 1
 
 
 def test_repeated_text_follows_another_instances_writes(spark, dest):
@@ -646,8 +662,7 @@ def test_partitioned_table_roundtrip_and_pruning(dest):
 
     dest.create_empty_table("pt")
     # register the partition column first (empty-table requirement)
-    _insert_schema_only = '{"day": "2024-01-01", "v": 0}'
-    dest.create_columns("pt", _write_tmp([_insert_schema_only]))
+    dest.catalog.add_columns(dest.database, "pt", {"day": "string", "v": "int"})
     dest.set_partitioning("pt", "day")
     for day, v in [("2024-01-01", 1), ("2024-01-01", 2), ("2024-01-02", 3)]:
         _insert(dest, "pt", [f'{{"day": "{day}", "v": {v}}}'])
@@ -675,7 +690,7 @@ def test_partitioned_compaction_preserves_layout(dest):
     import os
 
     dest.create_empty_table("pc")
-    dest.create_columns("pc", _write_tmp(['{"day": "d1", "v": 0}']))
+    dest.catalog.add_columns(dest.database, "pc", {"day": "string", "v": "int"})
     dest.set_partitioning("pc", "day")
     for i in range(6):
         _insert(dest, "pc", [f'{{"day": "d{i % 2}", "v": {i}}}'])
@@ -689,15 +704,6 @@ def test_partitioned_compaction_preserves_layout(dest):
     after = json.loads(_q(dest, "SELECT day, sum(v) AS s FROM pc GROUP BY day ORDER BY day"))
     assert after == before
     assert dest.file_count("pc") < out["files_in"]
-
-
-def _write_tmp(lines):
-    import tempfile, os
-
-    fd, path = tempfile.mkstemp(suffix=".ndjson")
-    with os.fdopen(fd, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    return path
 
 
 def test_compact_catches_up_files_inserted_during_rewrite(dest):
@@ -973,6 +979,19 @@ def test_describe_show_tables_duckdb_shapes(dest):
     # a column named "name" in ORDER BY still queries (guard scope)
     assert [tuple(r) for r in dest.query_df(
         "SELECT name FROM dsc ORDER BY name").collect()] == [("x",)]
+
+
+def test_int_past_int64_is_stored_as_a_double(dest, tmp_path):
+    """An integer outside int64 is typed float, as strconv.Atoi fails
+    on it, so its column is a double holding the value, not a long
+    holding NULL."""
+    p = tmp_path / "big.ndjson"
+    p.write_text('{"a": 12345678901234567890, "b": 1}\n')
+    dest.insert_ndjson("big", str(p))
+    types = {c["name"]: c["type"] for c in dest.columns("big")}
+    assert types["a"] == "double" and types["b"] == "bigint"
+    [row] = dest.query_df("select a, b from big").collect()
+    assert (row.a, row.b) == (1.2345678901234567e19, 1)
 
 
 def test_insert_ndjson_infers_types_once(dest, tmp_path, monkeypatch):

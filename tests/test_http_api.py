@@ -496,13 +496,7 @@ def test_partitioning_route(app):
     # pre-register via the destination directly.
     d = app.service.destinations["default"]
     d.create_empty_table("plogs")
-    import tempfile, os as _os
-
-    fd, p = tempfile.mkstemp(suffix=".ndjson")
-    with _os.fdopen(fd, "w") as f:
-        f.write('{"day": "d0", "v": 0}\n')
-    d.create_columns("plogs", p)
-    _os.remove(p)
+    d.catalog.add_columns(d.database, "plogs", {"day": "string", "v": "int"})
 
     code, _ = _req(app, "POST", "/api/tables/plogs/partitioning?api_key=local&column=day")
     assert code == 401  # non-admin refused

@@ -97,9 +97,7 @@ def test_copy_spark_to_spark(spark, tmp_path):
     dst = SparkDestination(spark, cat, "dst")
     f = tmp_path / "in.ndjson"
     f.write_text('{"__row_id":1,"v":10}\n{"__row_id":2,"v":20}\n')
-    src.create_empty_table("t")
-    src.create_columns("t", str(f))
-    src.insert_ndjson_file("t", str(f))
+    src.insert_ndjson("t", str(f))
     n = copy_data(src, "select v * 2 as v2 from t", dst, "t2")
     assert n == 2
     vals = sorted(r.v2 for r in dst.query_df("select v2 from t2").collect())
@@ -112,9 +110,7 @@ def test_copy_spark_to_duckdb(spark, tmp_path):
     duck = DuckDBDestination()
     f = tmp_path / "in.ndjson"
     f.write_text('{"__row_id":1,"msg":"hello","n":1.5}\n')
-    src.create_empty_table("t")
-    src.create_columns("t", str(f))
-    src.insert_ndjson_file("t", str(f))
+    src.insert_ndjson("t", str(f))
     n = copy_data(src, "select msg, n from t", duck, "t_copy", WorkersConfig())
     assert n == 1
     buf = io.StringIO()
@@ -126,14 +122,34 @@ def test_duckdb_destination_roundtrip(tmp_path):
     duck = DuckDBDestination()
     f = tmp_path / "x.ndjson"
     f.write_text('{"msg": "hello world"}\n')
-    duck.create_empty_table("tbl")
-    duck.create_columns("tbl", str(f))
-    duck.insert_ndjson_file("tbl", str(f))
+    duck.insert_ndjson("tbl", str(f))
     buf = io.StringIO()
     duck.query_json("select msg from tbl", buf)
     assert json.loads(buf.getvalue()) == [{"msg": "hello world"}]
     assert "tbl" in duck.tables()
     assert {"name": "msg", "type": "VARCHAR"} in duck.columns("tbl")
+
+
+def test_duckdb_insert_ndjson_infers_types_once(tmp_path, monkeypatch):
+    from scratchdata_spark import duckdb_destination
+
+    calls = []
+    infer = duckdb_destination.infer_types_file
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return infer(*args, **kwargs)
+
+    monkeypatch.setattr(duckdb_destination, "infer_types_file", spy)
+    duck = DuckDBDestination()
+    f = tmp_path / "x.ndjson"
+    f.write_text('{"n": 1, "s": "a"}\n{"n": 2}\n')
+    duck.insert_ndjson("tbl", str(f))
+    assert calls == [(str(f),)]
+    assert {"name": "n", "type": "BIGINT"} in duck.columns("tbl")
+    buf = io.StringIO()
+    duck.query_json("select n, s from tbl order by n", buf)
+    assert json.loads(buf.getvalue()) == [{"n": 1, "s": "a"}, {"n": 2, "s": None}]
 
 
 def test_queue_dead_letter(tmp_path):

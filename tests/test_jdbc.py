@@ -86,27 +86,28 @@ def test_schema_evolution_and_type_map(spark, tmp_path):
     d = FakeJDBC(spark)
     d.create_empty_table("t")
     p = _ndjson(tmp_path, "a.ndjson", [{"msg": "x", "n": 1, "f": 2.5, "b": True}])
-    d.create_columns("t", p)
+    d.insert_ndjson("t", p)
     added = {n: t for n, t in d.remote_cols}
     assert added["msg"] == "VARCHAR" and added["n"] == "BIGINT"
     assert added["f"] == "DOUBLE PRECISION" and added["b"] == "BOOLEAN"
     # second batch: existing columns never re-ALTER
-    n_ddl = len(d.ddl)
-    d.create_columns("t", _ndjson(tmp_path, "b.ndjson", [{"msg": "y", "new1": 3}]))
-    assert len(d.ddl) == n_ddl + 1  # only new1
+    def alters():
+        return [s for s in d.ddl if s.startswith("ALTER TABLE")]
+
+    n_ddl = len(alters())
+    d.insert_ndjson("t", _ndjson(tmp_path, "b.ndjson", [{"msg": "y", "new1": 3}]))
+    assert len(alters()) == n_ddl + 1  # only new1
 
 
 def test_insert_casts_to_remote_schema(spark, tmp_path):
     d = FakeJDBC(spark)
     d.create_empty_table("t")
     p1 = _ndjson(tmp_path, "c1.ndjson", [{"__row_id": 5, "msg": "ok", "n": 7}])
-    d.create_columns("t", p1)  # n registers as BIGINT
-    d.insert_ndjson_file("t", p1)
+    d.insert_ndjson("t", p1)  # n registers as BIGINT
     # second batch: n arrives as a non-numeric string; the existing
     # BIGINT column never retypes — the value casts to NULL on write
     p2 = _ndjson(tmp_path, "c2.ndjson", [{"msg": "notnum", "n": "oops"}])
-    d.create_columns("t", p2)
-    d.insert_ndjson_file("t", p2)
+    d.insert_ndjson("t", p2)
     assert dict(d.remote_cols)["n"] == "BIGINT"  # never retyped
     table, rows = d.written[0]
     assert table == "t"
@@ -143,6 +144,16 @@ def test_insert_ndjson_infers_types_once(spark, tmp_path, monkeypatch):
         d.insert_ndjson("t", str(bad))
     assert calls == [{}]
     assert len(d.written) == 1
+
+
+def test_int_past_int64_is_written_not_nulled(spark, tmp_path):
+    d = FakeJDBC(spark)
+    d.insert_ndjson(
+        "t", _ndjson(tmp_path, "big.ndjson", [{"a": 12345678901234567890, "b": 1}])
+    )
+    assert dict(d.remote_cols)["a"] == "DOUBLE PRECISION"
+    (_, rows), = d.written
+    assert rows[0]["a"] == 1.2345678901234567e19 and rows[0]["b"] == 1
 
 
 def test_copy_spark_to_jdbc(spark, tmp_path):
@@ -283,14 +294,11 @@ def _live_jdbc_roundtrip(tmp_path, dest, quote: str):
         '{"user_id": 2, "name": "bob", "score": 2.5}\n'
     )
     try:
-        dest.create_empty_table(table)
-        dest.create_columns(table, str(nd))
-        dest.insert_ndjson_file(table, str(nd))
+        dest.insert_ndjson(table, str(nd))
         # second insert with a NEW column: schema evolution live
         nd2 = tmp_path / "rows2.ndjson"
         nd2.write_text('{"user_id": 3, "name": "eve", "extra": "x"}\n')
-        dest.create_columns(table, str(nd2))
-        dest.insert_ndjson_file(table, str(nd2))
+        dest.insert_ndjson(table, str(nd2))
         cols = {c["name"] for c in dest.columns(table)}
         assert {"user_id", "name", "score", "extra"} <= cols
         out = io.StringIO()

@@ -263,9 +263,9 @@ def test_partition_pruning_partitioned_table(spark, tmp_path):
     fd, path = tempfile.mkstemp(suffix=".ndjson")
     with os.fdopen(fd, "w") as f:
         f.write('{"day": "d0", "v": 1}\n')
-    d.create_columns("pp", path)
+    d.catalog.add_columns("db", "pp", {"day": "string", "v": "int"})
     d.set_partitioning("pp", "day")
-    d.insert_ndjson_file("pp", path)
+    d.insert_ndjson("pp", path)
     os.remove(path)
     fd, path = tempfile.mkstemp(suffix=".ndjson")
     with os.fdopen(fd, "w") as f:

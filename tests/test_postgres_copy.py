@@ -62,13 +62,23 @@ class FakeTransport:
         return out
 
 
+class LocalDDL(PostgresCopyDestination):
+    """Answers the JDBC DDL seams locally (the test_redshift pattern),
+    so ``insert_ndjson``'s table and column steps need no server and
+    only the COPY reaches the fake transport."""
+
+    def _execute(self, sql):
+        pass
+
+    def columns(self, table):
+        return []
+
+
 @pytest.fixture()
 def pg(spark):
     t = FakeTransport()
     return (
-        PostgresCopyDestination(
-            spark, "jdbc:postgresql://fake:5432/db", copy_transport=t
-        ),
+        LocalDDL(spark, "jdbc:postgresql://fake:5432/db", copy_transport=t),
         t,
     )
 
@@ -119,7 +129,7 @@ def test_copy_data_frame_shape():
 def test_insert_flow_sequence_and_statement(pg, tmp_path):
     dest, t = pg
     path = _file(tmp_path, [{"a": 1, "b": "x"}, {"a": 2, "b": "y"}])
-    dest.insert_ndjson_file("events", path)
+    dest.insert_ndjson("events", path)
     kinds = [c[0] for c in t.calls]
     assert kinds == [
         "begin", "start_copy", "send", "send", "send", "end_copy", "commit",
@@ -138,7 +148,7 @@ def test_all_values_sent_as_strings(pg, tmp_path):
         tmp_path,
         [{"i": 7, "f": 1.5, "b": True, "n": None, "o": {"k": [1, 2]}}],
     )
-    dest.insert_ndjson_file("t", path)
+    dest.insert_ndjson("t", path)
     assert t.rows() == ['7\t1.5\ttrue\t\t{"k":[1,2]}\n']
 
 
@@ -150,17 +160,22 @@ def test_first_row_keys_project_later_rows(pg, tmp_path):
         tmp_path,
         [{"a": 1, "b": 2}, {"b": 20, "c": 99}, {"a": 3}],
     )
-    dest.insert_ndjson_file("t", path)
+    dest.insert_ndjson("t", path)
     assert t.calls[1][1].endswith('("a", "b") FROM STDIN')
     assert t.rows() == ["1\t2\n", "\t20\n", "3\t\n"]
 
 
 def test_unparsable_line_sends_empty_strings(pg, tmp_path):
-    # gjson never errors: a garbage line yields "" per key
+    # gjson never errors: a garbage line yields "" per key. The COPY
+    # step is driven directly: insert_ndjson's strict inference
+    # refuses the batch before any transaction opens.
     dest, t = pg
     p = tmp_path / "bad.ndjson"
     p.write_text('{"a": 1}\nnot json at all\n{"a": 2}\n')
-    dest.insert_ndjson_file("t", str(p))
+    with pytest.raises(ValueError):
+        dest.insert_ndjson("t", str(p))
+    assert t.calls == []
+    dest._append("t", str(p), {"a": "int"})
     assert t.rows() == ["1\n", "\n", "2\n"]
 
 
@@ -168,7 +183,7 @@ def test_empty_file_is_noop(pg, tmp_path):
     dest, t = pg
     p = tmp_path / "empty.ndjson"
     p.write_text("\n\n")
-    dest.insert_ndjson_file("t", str(p))
+    dest.insert_ndjson("t", str(p))
     assert t.calls == []  # no txn opened (divergence documented)
 
 
@@ -176,8 +191,12 @@ def test_keyless_first_row_raises_before_txn(pg, tmp_path):
     dest, t = pg
     p = tmp_path / "arr.ndjson"
     p.write_text("[1,2]\n")
+    # insert_ndjson's inference refuses a non-object row first; the
+    # COPY step's own check is driven directly
+    with pytest.raises(ValueError, match="must be objects"):
+        dest.insert_ndjson("t", str(p))
     with pytest.raises(ValueError, match="no keys"):
-        dest.insert_ndjson_file("t", str(p))
+        dest._append("t", str(p), {})
     assert t.calls == []
 
 
@@ -188,7 +207,7 @@ def test_line_cap_fails_insert_and_rolls_back(pg, tmp_path, monkeypatch):
     dest, t = pg
     path = _file(tmp_path, [{"a": 1}, {"a": "x" * 100}])
     with pytest.raises(ValueError, match="scanner cap"):
-        dest.insert_ndjson_file("t", path)
+        dest.insert_ndjson("t", path)
     assert t.calls[-1] == ("rollback",)
     assert ("commit",) not in t.calls
 
@@ -197,14 +216,14 @@ def test_multiple_files_one_transaction_each(pg, tmp_path):
     dest, t = pg
     p1 = _file(tmp_path, [{"a": 1}], "f1.ndjson")
     p2 = _file(tmp_path, [{"a": 2}], "f2.ndjson")
-    dest.insert_ndjson_file("t", [p1, p2])
+    dest.insert_ndjson("t", [p1, p2])
     kinds = [c[0] for c in t.calls]
     assert kinds.count("begin") == 2 and kinds.count("commit") == 2
 
 
 def test_schema_qualifies_ddl_and_copy(spark, tmp_path):
     t = FakeTransport()
-    dest = PostgresCopyDestination(
+    dest = LocalDDL(
         spark, "jdbc:postgresql://fake:5432/db",
         copy_transport=t, schema="ingest",
     )
@@ -212,7 +231,7 @@ def test_schema_qualifies_ddl_and_copy(spark, tmp_path):
     dest._execute = stmts.append
     dest.create_empty_table("ev")
     assert stmts == ['CREATE TABLE IF NOT EXISTS "ingest"."ev" ("__row_id" BIGINT)']
-    dest.insert_ndjson_file("ev", _file(tmp_path, [{"a": 1}]))
+    dest.insert_ndjson("ev", _file(tmp_path, [{"a": 1}]))
     assert t.calls[1][1].startswith('COPY "ingest"."ev" ')
 
 

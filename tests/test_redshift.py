@@ -62,7 +62,7 @@ def test_insert_stages_then_copies_then_deletes(rs, tmp_path):
     dest, store = rs
     dest.create_empty_table("events")
     path = _ndjson(tmp_path, "b1.ndjson", [{"a": 1, "b": "x"}])
-    dest.insert_ndjson_file("events", path)
+    dest.insert_ndjson("events", path)
     copies = [s for s in dest.stmts if s.startswith("COPY ")]
     assert len(copies) == 1
     c = copies[0]
@@ -83,7 +83,7 @@ def test_insert_evolves_columns_before_copy(rs, tmp_path):
     dest, _ = rs
     dest.create_empty_table("t")
     path = _ndjson(tmp_path, "b.ndjson", [{"n": 1, "f": 1.5, "ok": True}])
-    dest.insert_ndjson_file("t", path)
+    dest.insert_ndjson("t", path)
     adds = [s for s in dest.stmts if "ADD COLUMN" in s]
     # reference re-calls createColumns inside the insert (insert.go:84)
     assert any('"n" BIGINT' in s for s in adds)
@@ -99,7 +99,7 @@ def test_insert_keeps_staged_object_when_configured(spark, tmp_path):
     dest = FakeRedshift(spark, store, delete_from_s3=False)
     dest.create_empty_table("t")
     path = _ndjson(tmp_path, "keep.ndjson", [{"a": 1}])
-    dest.insert_ndjson_file("t", path)
+    dest.insert_ndjson("t", path)
     assert store.list() == ["t/keep.ndjson"]
 
 
@@ -115,7 +115,7 @@ def test_iam_role_clause_and_blobstore_prefix(spark, tmp_path):
         schema="ingest",
     )
     dest.create_empty_table("t")
-    dest.insert_ndjson_file("t", _ndjson(tmp_path, "x.ndjson", [{"a": 1}]))
+    dest.insert_ndjson("t", _ndjson(tmp_path, "x.ndjson", [{"a": 1}]))
     c = next(s for s in dest.stmts if s.startswith("COPY"))
     assert c.startswith('COPY "ingest"."t" FROM ')
     assert "'s3://stage-bucket/crawl/stage/t/x.ndjson'" in c
@@ -128,7 +128,7 @@ def test_multi_file_insert_one_copy_each(rs, tmp_path):
     dest.create_empty_table("t")
     p1 = _ndjson(tmp_path, "p1.ndjson", [{"a": 1}])
     p2 = _ndjson(tmp_path, "p2.ndjson", [{"a": 2}])
-    dest.insert_ndjson_file("t", [p1, p2])
+    dest.insert_ndjson("t", [p1, p2])
     copies = [s for s in dest.stmts if s.startswith("COPY")]
     assert len(copies) == 2
     assert "p1.ndjson" in copies[0] and "p2.ndjson" in copies[1]
@@ -148,7 +148,7 @@ def test_malicious_names_rejected(rs, tmp_path):
     dest, _ = rs
     path = _ndjson(tmp_path, "b.ndjson", [{"a": 1}])
     with pytest.raises(ValueError):
-        dest.insert_ndjson_file('t"; DROP TABLE x; --', path)
+        dest.insert_ndjson('t"; DROP TABLE x; --', path)
     with pytest.raises(ValueError):
         FakeRedshift(dest.spark, dest.blobstore, schema='p"; --')
 
@@ -219,7 +219,7 @@ def test_staged_object_cleaned_up_when_copy_fails(spark, tmp_path):
     dest.create_empty_table("t")
     path = _ndjson(tmp_path, "bad.ndjson", [{"a": 1}])
     with pytest.raises(RuntimeError, match="stl_load_errors"):
-        dest.insert_ndjson_file("t", path)
+        dest.insert_ndjson("t", path)
     assert store.list() == []
 
 
@@ -252,5 +252,5 @@ def test_key_basename_injection_rejected(rs, tmp_path):
     bad = tmp_path / "x'; DROP TABLE y; --.ndjson"
     bad.write_text('{"a": 1}\n')
     with pytest.raises(ValueError, match="prefix"):
-        dest.insert_ndjson_file("t", str(bad))
+        dest.insert_ndjson("t", str(bad))
     assert not [s for s in dest.stmts if s.startswith("COPY")]

@@ -22,8 +22,11 @@ with SPARK_GRAFT_SF_DIR naming the data directory.
   control machine drift.
 
 A timed query gets one warm pass (codegen + JIT), then
-SPARK_GRAFT_BENCH_REPS reps (default 3). AQE follows the bench default
-(off; SPARK_GRAFT_BENCH_AQE=1 measures the production AQE-on config).
+SPARK_GRAFT_BENCH_REPS reps (default 3). ``ab`` adds a second warm
+pass, one rep run and discarded, before its timed reps: after a single
+warm pass the first timed rep ran 11–22% slower than the rest
+(sf0.01, 4-core Linux box). AQE follows the bench default (off;
+SPARK_GRAFT_BENCH_AQE=1 measures the production AQE-on config).
 """
 
 from __future__ import annotations
@@ -68,6 +71,7 @@ def _plans(spark, mode, tag, only, sf_dir, reps) -> None:
 def _ab(spark, label, names, sf_dir, reps) -> None:
     for name in names:
         _fetch(_fresh(name, spark, sf_dir))  # warm pass
+        timed_reps(spark, name, sf_dir, 1)  # second warm pass, discarded
         runs = timed_reps(spark, name, sf_dir, reps)
         print(json.dumps({"label": label, "query": name,
                           "best": round(min(runs), 4),
