@@ -87,6 +87,23 @@ class Service:
             "worker_errors", "Recent job errors held in memory",
             lambda: len(workers.errors),
         )
+        for outcome, help_ in (
+            ("hits", "Plan-cache lookups that found a valid entry"),
+            ("misses", "Plan-cache lookups that built the plan"),
+            ("answer_hits", "Plan-cache hits written from a kept answer"),
+        ):
+            self.metrics.add_counter(
+                f"plan_cache_{outcome}_total", help_, "destination",
+                lambda outcome=outcome: self._plan_cache_counts(outcome),
+            )
+
+    def _plan_cache_counts(self, outcome: str) -> dict[str, int]:
+        """``outcome``'s count per destination that has a plan cache."""
+        return {
+            name: dest.plan_cache.counts[outcome]
+            for name, dest in list(self.destinations.items())
+            if hasattr(dest, "plan_cache")
+        }
 
     # ------------------------------------------- destination/key CRUD
     def create_destination(self, name: str, type_: str, settings: dict) -> dict:
@@ -229,7 +246,8 @@ class _ChunkedOut:
     larger one from ``toLocalIterator`` partition by partition
     (``engine.DataFrameSerializers``) — and each filled buffer goes
     straight to the socket as one chunk (the Spark analogue of the
-    reference's fifo pump, ``duckdb/query.go:15-116``).
+    reference's fifo pump, ``duckdb/query.go:15-116``). A plan-cache
+    hit's kept answer arrives as one text of at most 64 KB.
     """
 
     def __init__(self, wfile, chunk_size: int = 64 * 1024):

@@ -7,7 +7,8 @@ alternative, and cross-backend ``copy_data`` works between them).
 Mirrors the reference's DuckDB driver behavior:
 * CREATE TABLE IF NOT EXISTS t (__row_id BIGINT)   (duckdb/insert.go:72-76)
 * ALTER TABLE ADD COLUMN per inferred jsontype     (duckdb/insert.go:12-26)
-* INSERT ... BY NAME from read_ndjson              (duckdb/insert.go:56-70)
+* INSERT ... BY NAME from read_ndjson              (duckdb/insert.go:56-70),
+  each column read as the batch's inferred type
 * JSON/NDJSON/CSV serialization                    (duckdb/query.go)
 """
 
@@ -230,17 +231,23 @@ class DuckDBDestination(RowSerializers, Destination):
 
     def insert_ndjson(self, table: str, ndjson_path: str | list[str]) -> None:
         """Create the table, add the batch's columns with the types
-        inferred once over the batch, then ``INSERT … BY NAME`` — one
-        write under the connection lock."""
+        inferred once over the batch, then ``INSERT … BY NAME`` from a
+        ``read_ndjson`` that reads each column as that type, so DuckDB
+        never re-infers the file — one write under the connection
+        lock."""
         ident = _check_ident(table)
         types = infer_types_file(ndjson_path)
+        columns = {_check_ident(n): DUCKDB_TYPES[jt] for n, jt in types.items()}
         with self._lock:
             self._create_empty_table(ident)
-            for name, jt in types.items():
+            for name, sql_type in columns.items():
                 self.conn.execute(
                     f'ALTER TABLE "{ident}" ADD COLUMN IF NOT EXISTS'
-                    f' "{_check_ident(name)}" {DUCKDB_TYPES[jt]}'
+                    f' "{name}" {sql_type}'
                 )
+            if not columns:
+                return  # an empty batch: no rows to load
+            read = "SELECT * FROM read_ndjson(?, columns = ?)"
             if self._fs is not None:
                 # Confined connection: the engine can't read files
                 # (enable_external_access=false), so the bulk load
@@ -248,7 +255,7 @@ class DuckDBDestination(RowSerializers, Destination):
                 # server-controlled spool file, not user input — and
                 # streams across as Arrow.
                 reader = self._fs.execute(
-                    "SELECT * FROM read_ndjson_auto(?)", [ndjson_path]
+                    read, [ndjson_path, columns]
                 ).fetch_record_batch()
                 self.conn.register("__stage_ndjson", reader)
                 try:
@@ -260,9 +267,7 @@ class DuckDBDestination(RowSerializers, Destination):
                     self.conn.unregister("__stage_ndjson")
                 return
             self.conn.execute(
-                f'INSERT INTO "{ident}" BY NAME'
-                f" SELECT * FROM read_ndjson_auto(?)",
-                [ndjson_path],
+                f'INSERT INTO "{ident}" BY NAME {read}', [ndjson_path, columns]
             )
 
     def close(self) -> None:

@@ -23,13 +23,16 @@ text the same way. Spark's parser is the validator.
 Serving path: ``query_df`` returns the DataFrame for a query from
 the destination's ``PlanCache``. A hit is a DataFrame that already
 holds its physical plan, and the JSON/NDJSON ``to_json`` projection
-over it is built once and kept with it, so a warm request re-runs only
-the result stage of that plan (its shuffle and broadcast outputs are
-reused). An entry serves as long as the tables its plan reads and the
-stored views are unchanged, whoever wrote them; texts whose answer
-depends on the clock, on randomness or on files outside the warehouse
-are never cached. A miss re-registers only the tables whose state
-changed (``SparkDestination.register_views``).
+over it is built once and kept with it. A hit in a format whose answer
+was at most 64 KB when first written (``ANSWER_CAP``) writes the text
+the entry kept and runs no Spark job; any other hit re-runs only the
+result stage of that plan (its shuffle and broadcast outputs are
+reused). An entry, and the answers it keeps, serves as long as the
+tables its plan reads and the stored views are unchanged, whoever
+wrote them; texts whose answer depends on the clock, on randomness or
+on files outside the warehouse are never cached, so never kept. A miss
+re-registers only the tables whose state changed
+(``SparkDestination.register_views``).
 
 Result delivery: an answer whose executed plan has one partition is
 fetched with one ``collect()``; a larger answer streams through
@@ -38,7 +41,10 @@ materializes on the driver (the moral equivalent of the reference's
 fifo streaming, ``duckdb/query.go:15-116``). Streaming costs ~40 ms per
 partition: the JVM serves each partition in small frames on a socket
 with Nagle on while the Python reader delays its ACK, so the common
-small answer is collected instead.
+small answer is collected instead. While a cached plan's answer is
+written, a copy of it is kept up to 64 KB per format, so kept answers
+take at most 256 entries × 3 formats × 64 KB = 48 MB; a larger answer
+is streamed again on every request.
 """
 
 from __future__ import annotations
@@ -271,19 +277,25 @@ class _Snapshot:
 
 
 class PlanCache:
-    """Prepared-statement-style reuse of query plans, keyed by the
-    prepared query text.
+    """Prepared-statement-style reuse of query plans and of their small
+    answers, keyed by the prepared query text.
 
     An entry is the DataFrame a query text built. Its ``QueryExecution``
     plans once, on the first execution, and keeps the physical plan;
     the JSON serializer's ``to_json`` projection is memoized on the
-    same DataFrame (``DataFrameSerializers``). A warm request therefore
-    skips parsing, analysis, optimization and planning, and runs only
-    the result stage: the shuffle and broadcast outputs of the first
+    same DataFrame (``DataFrameSerializers``). ``get`` also gives every
+    DataFrame it stores an empty answers dict (``_sd_answers``), where
+    the serializers keep the text each format wrote when it was at most
+    ``ANSWER_CAP`` (64 KB). A warm request in a format with a kept
+    answer writes that text and runs no Spark job; otherwise it skips
+    parsing, analysis, optimization and planning, and runs only the
+    result stage: the shuffle and broadcast outputs of the first
     execution are reused. Those shuffle files stay on local disk while
     the entry lives: Spark's context cleaner removes them only after the
     entry is replaced, evicted (oldest first, beyond ``max_entries``)
-    or cleared, and its plan is garbage-collected.
+    or cleared, and its plan is garbage-collected. Kept answers go with
+    the entry, so they take at most 256 entries × 3 formats × 64 KB =
+    48 MB.
 
     Validity: an entry serves exactly as long as the tables it reads
     and the stored views are unchanged, whoever writes them. It keeps
@@ -292,17 +304,30 @@ class PlanCache:
     ``get`` re-checks only those: a write to one table leaves plans
     over other tables warm. Over a racy fingerprint the entry also
     compares the tables' parquet listings, until a ``get`` more than
-    1 s after the fingerprint's mtimes finds them unchanged.
+    1 s after the fingerprint's mtimes finds them unchanged. A kept
+    answer is what re-executing the entry's plan would write, since
+    both read the file listing fixed when the plan was analyzed.
 
-    Never cached (``plan_reads`` is None): nondeterministic and clock
-    texts, engine-built catalog shapes, and plans with a leaf that
-    names no table, such as ``read_parquet`` outside the warehouse.
+    Never cached (``plan_reads`` is None), so never answered from a
+    kept text: nondeterministic and clock texts, engine-built catalog
+    shapes, and plans with a leaf that names no table, such as
+    ``read_parquet`` outside the warehouse.
+
+    ``counts`` holds the lookups so far: ``hits``, ``misses`` (every
+    ``build()``, cacheable or not) and ``answer_hits`` (hits written
+    from a kept answer, counted by the serializers).
     """
 
     def __init__(self, dest: SparkDestination, max_entries: int = 256):
         self._dest = dest
         self._max = max_entries
         self._plans: dict[str, tuple[DataFrame, _Snapshot]] = {}
+        self.counts = {"hits": 0, "misses": 0, "answer_hits": 0}
+        self._count_lock = _threading.Lock()
+
+    def count(self, outcome: str) -> None:
+        with self._count_lock:
+            self.counts[outcome] += 1
 
     def get(self, key: str, build) -> DataFrame:
         """The cached DataFrame for ``key`` if its tables and the stored
@@ -312,8 +337,10 @@ class PlanCache:
         entry = self._plans.get(key)
         if entry is not None:
             if self._unchanged(entry[1]):
+                self.count("hits")
                 return entry[0]
             self._plans.pop(key, None)
+        self.count("misses")
         df, snap = build()
         dest = self._dest
         roots = {
@@ -323,6 +350,7 @@ class PlanCache:
         tables = plan_reads(df, roots)
         if tables is None:
             return df
+        df._sd_answers = {}
         if len(self._plans) >= self._max:
             # drop oldest insertion (dict preserves order)
             self._plans.pop(next(iter(self._plans)), None)
@@ -352,15 +380,53 @@ class PlanCache:
         self._plans.clear()
 
 
+# the largest answer text, in UTF-8 bytes, that a ``PlanCache`` entry
+# keeps per format
+ANSWER_CAP = 64 * 1024
+
+
+class _KeepingWriter:
+    """Passes text through to ``out`` and keeps a copy of it until the
+    copy would pass ``ANSWER_CAP``; ``text()`` is the copy, or None
+    past the cap."""
+
+    def __init__(self, out: IO[str]):
+        self._out = out
+        self._parts: list[str] | None = []
+        self._size = 0
+
+    def write(self, s: str) -> int:
+        if self._parts is not None:
+            self._size += len(s.encode())
+            if self._size > ANSWER_CAP:
+                self._parts = None
+            else:
+                self._parts.append(s)
+        return self._out.write(s)
+
+    def text(self) -> str | None:
+        return None if self._parts is None else "".join(self._parts)
+
+
 class DataFrameSerializers:
     """JSON / NDJSON / CSV serializers (A13–A15) for any backend
     exposing ``query_df`` — shared by the Spark and JDBC destinations.
 
+    Kept answers: a DataFrame that ``PlanCache`` holds carries an
+    answers dict. When a format finds its text there, the request
+    writes that text and runs no Spark job. Otherwise the answer
+    streams as below, and a copy of the text is kept in the dict if the
+    whole answer is at most ``ANSWER_CAP`` (64 KB) and the write ended
+    without an exception; the copy stops at the cap, so a large answer
+    is streamed on every request and never held. A DataFrame without
+    the dict (uncacheable texts, DML results, the JDBC destination)
+    never keeps an answer.
+
     JSON and NDJSON run ``to_json`` in the JVM over a projection of the
     query's DataFrame. The projection is built once per DataFrame and
     memoized on it, so for a ``PlanCache`` hit it is already planned and
-    a warm request re-runs only its result stage; CSV executes the
-    DataFrame itself.
+    a request without a kept answer re-runs only its result stage; CSV
+    executes the DataFrame itself.
 
     How rows are fetched is decided once per DataFrame and memoized
     with it (``_collects``): a driver-local result (DML counts, command
@@ -380,6 +446,25 @@ class DataFrameSerializers:
     def _answer(self, query) -> DataFrame:
         query = self._prepared(query)
         return query.df if query.df is not None else self.query_df(query)
+
+    def _serve(self, query, out: IO[str], fmt: str, write) -> None:
+        """Write ``query``'s answer as ``fmt`` with ``write(df, out)``,
+        or from the text its plan-cache entry kept (class docstring)."""
+        df = self._answer(query)
+        answers = getattr(df, "_sd_answers", None)
+        if answers is None:
+            write(df, out)
+            return
+        text = answers.get(fmt)
+        if text is not None:
+            self.plan_cache.count("answer_hits")
+            out.write(text)
+            return
+        keeping = _KeepingWriter(out)
+        write(df, keeping)
+        text = keeping.text()
+        if text is not None:
+            answers[fmt] = text
 
     @staticmethod
     def _fetch_rows(out: DataFrame, collect: bool):
@@ -452,22 +537,30 @@ class DataFrameSerializers:
         )
 
     def query_json(self, query, out: IO[str]) -> None:
+        self._serve(query, out, "json", self._write_json)
+
+    def query_ndjson(self, query, out: IO[str]) -> None:
+        self._serve(query, out, "ndjson", self._write_ndjson)
+
+    def query_csv(self, query, out: IO[str]) -> None:
+        self._serve(query, out, "csv", self._write_csv)
+
+    def _write_json(self, df: DataFrame, out: IO[str]) -> None:
         out.write("[")
-        for i, row in enumerate(self._json_rows(self._answer(query))):
+        for i, row in enumerate(self._json_rows(df)):
             if i:
                 out.write(",")
             out.write(row)
         out.write("]")
 
-    def query_ndjson(self, query, out: IO[str]) -> None:
-        for row in self._json_rows(self._answer(query)):
+    def _write_ndjson(self, df: DataFrame, out: IO[str]) -> None:
+        for row in self._json_rows(df):
             out.write(row)
             out.write("\n")
 
-    def query_csv(self, query, out: IO[str]) -> None:
+    def _write_csv(self, df: DataFrame, out: IO[str]) -> None:
         import csv
 
-        df = self._answer(query)
         writer = csv.writer(out)
         writer.writerow(df.columns)  # deterministic column order
         # (fixes the reference's BigQuery map-iteration bug, query.go:112-180)

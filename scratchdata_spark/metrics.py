@@ -10,6 +10,9 @@ Mirrors the reference's instrument set:
   (``pkg/api/data.go:20-24``)
 * ``insert_array_length`` docs per request, linear 1+50i ×10
   (``data.go:26-30``)
+
+plus callback gauges and counters sampled at scrape time (queue depth,
+plan-cache hits and misses per destination).
 """
 
 from __future__ import annotations
@@ -137,11 +140,37 @@ class Gauge:
         )
 
 
+class SampledCounter:
+    """Callback counter with one label: ``fn`` returns {label value:
+    count} at scrape time, read from counts the counted object keeps
+    (each destination's plan cache); a series restarts from 0 when its
+    object is replaced."""
+
+    def __init__(self, name: str, help_: str, label: str, fn):
+        self.name = name
+        self.help = help_
+        self.label = label
+        self.fn = fn
+
+    def render(self) -> str:
+        lines = [f"# HELP {self.name} {self.help}",
+                 f"# TYPE {self.name} counter"]
+        try:
+            series = self.fn()
+        except Exception:  # noqa: BLE001 — a scrape must never 500
+            series = {}
+        for value, count in sorted(series.items()):
+            lines.append(
+                f"{self.name}{_fmt_labels({self.label: value})} {_fmt_num(count)}"
+            )
+        return "\n".join(lines)
+
+
 class Metrics:
     """The gateway's instrument set + /metrics rendering."""
 
     def __init__(self):
-        self.gauges: list[Gauge] = []
+        self.sampled: list[Gauge | SampledCounter] = []
         self.latency = Histogram(
             "latency", "Request latency",
             exponential_buckets_range(0.05, 30, 20), ("route", "status_code"),
@@ -170,7 +199,10 @@ class Metrics:
         self.requests.inc(route=route, status_code=str(status))
 
     def add_gauge(self, name: str, help_: str, fn) -> None:
-        self.gauges.append(Gauge(name, help_, fn))
+        self.sampled.append(Gauge(name, help_, fn))
+
+    def add_counter(self, name: str, help_: str, label: str, fn) -> None:
+        self.sampled.append(SampledCounter(name, help_, label, fn))
 
     def render(self) -> str:
         parts = [
@@ -180,5 +212,5 @@ class Metrics:
             self.insert_array_length.render(),
             self.requests.render(),
         ]
-        parts.extend(g.render() for g in self.gauges)
+        parts.extend(g.render() for g in self.sampled)
         return "\n".join(parts) + "\n"

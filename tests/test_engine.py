@@ -221,10 +221,28 @@ def test_clock_texts_are_never_cached(dest):
     assert dest.query_df(fixed) is dest.query_df(fixed)
 
 
+def _jobs(dest, fn):
+    """fn()'s result and the number of Spark jobs it ran (its job
+    group's count)."""
+    sc = dest.spark.sparkContext
+    group = f"counted-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_FORMATS = ("json", "ndjson", "csv")
+
+
 def test_warm_request_reuses_planned_projection(dest):
-    """A cache hit serves the same bytes as the cold request in every
-    format, and a warm JSON request re-runs only the result stage: one
-    Spark job. A write still makes the next request see new rows."""
+    """A cache hit writes the cold request's bytes in every format:
+    NULL fields, CSV's ``null`` and the column order survive, and a
+    small answer is written from the text the cold request kept, with
+    no Spark job. A write still makes the next request see new rows."""
     lines = [
         json.dumps({"__row_id": i, "k": i % 3, "a b": None if i % 3 == 2 else i})
         for i in range(1, 31)
@@ -234,27 +252,49 @@ def test_warm_request_reuses_planned_projection(dest):
         "SELECT k, count(*) AS n, sum(`a b`) AS `s``x` FROM wr"
         " GROUP BY k ORDER BY k"
     )
-    cold = {fmt: _serve(dest, fmt, sql) for fmt in ("json", "ndjson", "csv")}
+    cold = {}
+    for fmt in _FORMATS:
+        cold[fmt], jobs = _jobs(dest, lambda: _serve(dest, fmt, sql))
+        assert jobs >= 1, fmt
     assert json.loads(cold["json"])[2] == {"k": 2, "n": 10, "s`x": None}
+    assert cold["ndjson"].splitlines()[2] == '{"k":2,"n":10,"s`x":null}'
     assert cold["csv"].splitlines()[0] == "k,n,s`x"
     assert cold["csv"].splitlines()[3] == "2,10,null"
-    for fmt in ("json", "ndjson", "csv"):
-        assert _serve(dest, fmt, sql) == cold[fmt], fmt
-
-    sc = dest.spark.sparkContext
-    group = "warm-json-request"
-    sc.setJobGroup(group, group)
-    try:
-        assert _serve(dest, "json", sql) == cold["json"]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    for fmt in _FORMATS:
+        assert _jobs(dest, lambda: _serve(dest, fmt, sql)) == (cold[fmt], 0), fmt
 
     _insert(dest, "wr", ['{"__row_id": 31, "k": 7, "a b": 5}'])
     rows = json.loads(_serve(dest, "json", sql))
     assert rows[-1] == {"k": 7, "n": 1, "s`x": 5}
     assert _values("csv", _serve(dest, "csv", sql), "k")[-1] == "7"
+    assert json.loads(_serve(dest, "ndjson", sql).splitlines()[-1])["k"] == 7
+
+
+# the text around the padding in each format for one row {"s": <pad>}
+_PAD_FRAME = {"json": len('[{"s":""}]'), "ndjson": len('{"s":""}\n'), "csv": len("s\r\n\r\n")}
+
+
+@pytest.mark.parametrize("fmt", _FORMATS)
+def test_answer_over_the_cap_is_not_kept(dest, fmt):
+    """An answer of exactly ANSWER_CAP UTF-8 bytes is kept, so its warm
+    request runs no job; one byte more, or the same number of
+    characters where one is two bytes in UTF-8, is not kept: its warm
+    request re-runs the planned result stage, exactly one job, and
+    writes the same bytes."""
+    from scratchdata_spark.engine import ANSWER_CAP
+
+    _insert(dest, "one", ['{"__row_id": 1}'])
+    n = ANSWER_CAP - _PAD_FRAME[fmt]
+    for pad, chars, kept in [
+        (f"repeat('x', {n})", ANSWER_CAP, True),
+        (f"repeat('x', {n + 1})", ANSWER_CAP + 1, False),
+        # the kept answer's length in characters, one byte over in UTF-8
+        (f"concat('é', repeat('x', {n - 1}))", ANSWER_CAP, False),
+    ]:
+        sql = f"SELECT {pad} AS s FROM one"
+        cold = _serve(dest, fmt, sql)
+        assert len(cold) == chars
+        assert _jobs(dest, lambda: _serve(dest, fmt, sql)) == (cold, 0 if kept else 1)
 
 
 def _spy(monkeypatch, spark, method, keep=lambda *a: True):
@@ -275,9 +315,11 @@ def _spy(monkeypatch, spark, method, keep=lambda *a: True):
 
 def test_one_partition_answers_are_collected(dest, monkeypatch):
     """An answer whose executed plan has one partition is fetched with
-    collect(), cold and warm, in every format, with the same bytes as
-    the streamed path served; a multi-partition answer still streams
-    through toLocalIterator, once per request."""
+    collect() in every format, with the same bytes as the streamed
+    path served, and its warm request writes the kept text. A
+    multi-partition answer streams through toLocalIterator: a small one
+    on its cold request only, one over ANSWER_CAP once per request,
+    cold and warm."""
     _insert(dest, "op", [
         json.dumps({"__row_id": i, "v": i, **({"g": g} if g else {})})
         for i, g in enumerate(["x,y", "z", None, "x,y", "z", None], start=1)
@@ -302,13 +344,93 @@ def test_one_partition_answers_are_collected(dest, monkeypatch):
     assert streams == []
 
     spread = "SELECT /*+ REPARTITION(3, v) */ v FROM op"
-    for fmt in ("json", "ndjson", "csv"):
+    wide = "SELECT /*+ REPARTITION(3, v) */ v, repeat('x', 20000) AS pad FROM op"
+    for fmt in _FORMATS:
         dest.plan_cache.invalidate()
-        for _ in range(2):
-            before = len(streams)
-            body = _serve(dest, fmt, spread)
-            assert len(streams) == before + 1, fmt
-            assert sorted(map(int, _values(fmt, body, "v"))) == [1, 2, 3, 4, 5, 6]
+        for sql, per_request in [(spread, [1, 0]), (wide, [1, 1])]:
+            for n in per_request:
+                before = len(streams)
+                body = _serve(dest, fmt, sql)
+                assert len(streams) == before + n, (fmt, sql)
+                assert sorted(map(int, _values(fmt, body, "v"))) == [1, 2, 3, 4, 5, 6]
+
+
+def test_failed_write_keeps_no_answer(dest):
+    """A write that fails partway (the client went away) keeps nothing:
+    the next request runs the plan again and writes the whole answer,
+    and only that complete write is kept."""
+
+    class Dropped(io.StringIO):
+        def write(self, s):
+            if self.tell() > 3:
+                raise BrokenPipeError("client went away")
+            return super().write(s)
+
+    _insert(dest, "fw", [json.dumps({"__row_id": i, "v": i}) for i in range(1, 6)])
+    sql = "SELECT v FROM fw ORDER BY v"
+    for fmt in _FORMATS:
+        with pytest.raises(BrokenPipeError):
+            getattr(dest, f"query_{fmt}")(sql, Dropped())
+        body, jobs = _jobs(dest, lambda: _serve(dest, fmt, sql))
+        assert jobs >= 1 and _values(fmt, body, "v") in ([1, 2, 3, 4, 5], list("12345"))
+        assert _jobs(dest, lambda: _serve(dest, fmt, sql)) == (body, 0), fmt
+
+
+def test_kept_answers_follow_every_change(spark, dest):
+    """A kept answer serves only while its plan-cache entry lives: in
+    every format, the request after a local insert, another instance's
+    write (aged and racy directories), a stored-view change and a
+    drop shows the change."""
+    _insert(dest, "x", ['{"__row_id": 1, "v": 1}'])
+    _serve(dest, "json", "CREATE VIEW xv AS SELECT v FROM x WHERE v > 1")
+    other = SparkDestination(spark.newSession(), dest.catalog, dest.database)
+    dirs = {
+        dest.catalog.table_root(dest.database, "x"),
+        dest.catalog.data_dir(dest.database, "x"),
+    }
+
+    def counts(sql):
+        """count(*) of ``sql`` in every format, after checking that a
+        repeated request is written from the kept answer."""
+        out = {}
+        for fmt in _FORMATS:
+            body = _serve(dest, fmt, sql)
+            assert _jobs(dest, lambda: _serve(dest, fmt, sql)) == (body, 0), fmt
+            out[fmt] = int(_values(fmt, body, "n")[0])
+        assert len(set(out.values())) == 1, out
+        return out["json"]
+
+    def set_mtimes(ns):
+        for d in dirs:
+            os.utime(d, ns=(ns, ns))
+
+    table, view = "SELECT count(*) AS n FROM x", "SELECT count(*) AS n FROM xv"
+    _age_dirs(dest, ["x"])
+    assert (counts(table), counts(view)) == (1, 0)
+    _insert(dest, "x", ['{"__row_id": 2, "v": 2}'])
+    assert (counts(table), counts(view)) == (2, 1)
+    _age_dirs(dest, ["x"])
+    assert counts(table) == 2
+    _insert(other, "x", ['{"__row_id": 3, "v": 3}'])
+    assert (counts(table), counts(view)) == (3, 2)
+
+    # racy: the other instance's write lands in the registration's
+    # mtime tick. The tick is set ahead of the clock so that it stays
+    # racy through the twelve requests of ``counts`` (an entry stops
+    # comparing listings once its tick is 1 s old).
+    tick = time.time_ns() + 30 * 1_000_000_000
+    set_mtimes(tick)
+    assert (counts(table), counts(view)) == (3, 2)
+    _insert(other, "x", ['{"__row_id": 4, "v": 4}'])
+    set_mtimes(tick)
+    assert (counts(table), counts(view)) == (4, 3)
+
+    _serve(other, "json", "CREATE OR REPLACE VIEW xv AS SELECT v FROM x WHERE v > 3")
+    assert counts(view) == 1
+    _serve(other, "json", "DROP TABLE x")
+    for fmt in _FORMATS:
+        with pytest.raises(Exception, match=r"TABLE_OR_VIEW_NOT_FOUND[\s\S]*`x`"):
+            _serve(dest, fmt, table)
 
 
 def _age_dirs(dest, tables, seconds=60):

@@ -75,9 +75,10 @@ def test_duckdb_dialect_text_through_http(app):
 
 
 def test_concurrent_requests_share_cached_plan(app):
-    """Four clients repeat one cached text, so every request after the
-    first re-runs the same planned DataFrame from its own thread: every
-    body is identical and none fails."""
+    """Eight clients repeat one cached text, so every request after the
+    first is written from the answer its plan-cache entry kept, from
+    its own thread: every body is identical, none fails, and the
+    plan cache counts each of them as a hit and an answer hit."""
     import sys
     import threading
     import urllib.parse
@@ -91,13 +92,15 @@ def test_concurrent_requests_share_cached_plan(app):
     code, expected = _req(app, "GET", path)
     assert code == 200 and len(json.loads(expected)) == 4
 
+    counts = app.service.destinations["default"].plan_cache.counts
+    before = dict(counts)
     results = []
 
     def client():
-        for _ in range(20):
+        for _ in range(10):
             results.append(_req(app, "GET", path))
 
-    threads = [threading.Thread(target=client) for _ in range(4)]
+    threads = [threading.Thread(target=client) for _ in range(8)]
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
@@ -111,6 +114,11 @@ def test_concurrent_requests_share_cached_plan(app):
     assert len(results) == 80
     assert all(code < 500 for code, _ in results)
     assert {body for _, body in results} == {expected}
+    assert counts == {
+        "hits": before["hits"] + 80,
+        "misses": before["misses"],
+        "answer_hits": before["answer_hits"] + 80,
+    }
 
 
 def test_insert_query_roundtrip_and_evolution(app):
@@ -460,6 +468,42 @@ def test_metrics_endpoint(app):
     assert "insert_bytes_count" in body and "requests_total" in body
     # route labels are patterns, not raw paths (bounded cardinality)
     assert "/api/data/insert/{table}" in body
+
+
+def test_metrics_plan_cache_counters(app):
+    """/metrics counts plan-cache hits, misses and hits written from a
+    kept answer per destination: a fresh text is a miss, and repeating
+    it is a hit served from the answer the first request kept."""
+    import re as _re
+    import urllib.parse
+
+    def counters():
+        _, body = _req(app, "GET", "/metrics")
+        out = {}
+        for outcome in ("hits", "misses", "answer_hits"):
+            name = f"plan_cache_{outcome}_total"
+            assert f"# TYPE {name} counter" in body
+            m = _re.search(rf'^{name}{{destination="default"}} (\d+)$', body, _re.M)
+            out[outcome] = int(m.group(1))
+        return out
+
+    _req(app, "POST", "/api/data/insert/pcm?api_key=local", [{"v": 1}, {"v": 2}])
+    app.drain()
+    path = "/api/data/query?api_key=local&query=" + urllib.parse.quote(
+        "select sum(v) as s from pcm"
+    )
+    before = counters()
+    code, cold = _req(app, "GET", path)
+    assert code == 200 and json.loads(cold) == [{"s": 3}]
+    after_miss = counters()
+    assert after_miss == {**before, "misses": before["misses"] + 1}
+    code, warm = _req(app, "GET", path)
+    assert code == 200 and warm == cold
+    assert counters() == {
+        **after_miss,
+        "hits": after_miss["hits"] + 1,
+        "answer_hits": after_miss["answer_hits"] + 1,
+    }
 
 
 def test_compact_route(app):

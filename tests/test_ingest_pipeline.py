@@ -152,6 +152,59 @@ def test_duckdb_insert_ndjson_infers_types_once(tmp_path, monkeypatch):
     assert json.loads(buf.getvalue()) == [{"n": 1, "s": "a"}, {"n": 2, "s": None}]
 
 
+def _duck_load(tmp_path, confined, as_list, lines):
+    """A DuckDB destination (confined: loads through the staging
+    instance) after one ``insert_ndjson`` of ``lines`` into ``tbl``,
+    given as a file or a one-file list."""
+    duck = DuckDBDestination(
+        ":memory:", export_root=str(tmp_path / "exp") if confined else None
+    )
+    f = tmp_path / "x.ndjson"
+    f.write_text("".join(json.dumps(line) + "\n" for line in lines))
+    duck.insert_ndjson("tbl", [str(f)] if as_list else str(f))
+    return duck
+
+
+def _duck_rows(duck, sql):
+    buf = io.StringIO()
+    duck.query_json(sql, buf)
+    return json.loads(buf.getvalue())
+
+
+_DUCK_PATHS = pytest.mark.parametrize(
+    "confined,as_list", [(False, False), (False, True), (True, False), (True, True)]
+)
+
+
+@_DUCK_PATHS
+def test_duckdb_int_past_int64_loads_as_double(tmp_path, confined, as_list):
+    """The load reads a column as the batch's inferred type: an int
+    past int64 (typed float) loads as a DOUBLE where DuckDB's own
+    inference failed the batch."""
+    duck = _duck_load(tmp_path, confined, as_list, [
+        {"__row_id": 1, "a": 12345678901234567890}, {"__row_id": 2, "a": 1},
+    ])
+    assert {"name": "a", "type": "DOUBLE"} in duck.columns("tbl")
+    assert _duck_rows(duck, "select a from tbl order by __row_id") == [
+        {"a": 1.2345678901234567e19}, {"a": 1.0},
+    ]
+
+
+@_DUCK_PATHS
+def test_duckdb_object_then_string_column_keeps_the_string(
+    tmp_path, confined, as_list
+):
+    """A column holding an object in one row and a string in the next
+    (typed string) stores the string as written, not JSON-quoted."""
+    duck = _duck_load(tmp_path, confined, as_list, [
+        {"__row_id": 1, "c": {"x": 1}}, {"__row_id": 2, "c": "s"},
+    ])
+    assert {"name": "c", "type": "VARCHAR"} in duck.columns("tbl")
+    assert _duck_rows(duck, "select c from tbl order by __row_id") == [
+        {"c": '{"x":1}'}, {"c": "s"},
+    ]
+
+
 def test_queue_dead_letter(tmp_path):
     """A poison message retries max_attempts times, then dead-letters
     instead of spinning the pool forever (ADVICE fix)."""
