@@ -223,6 +223,19 @@ class TableCatalog:
                 " new column name"
             )
 
+    @staticmethod
+    def check_droppable(info: TableInfo, name: str) -> None:
+        """Refuse an ALTER TABLE DROP COLUMN that drop_column cannot
+        make."""
+        if name == ROW_ID:
+            raise ValueError("__row_id is engine-internal")
+        if not any(c["name"] == name for c in info.columns):
+            raise ValueError(f"unknown column: {name}")
+        if info.partition_col == name:
+            raise ValueError("cannot drop the partition column")
+        if name in info.primary_key:
+            raise ValueError("cannot drop a PRIMARY KEY column")
+
     def set_defaults(self, database: str, table: str, defaults: dict) -> None:
         """Record per-column DEFAULT expressions (SQL text) from
         CREATE TABLE; INSERT fills omitted columns from them."""
@@ -255,16 +268,8 @@ class TableCatalog:
         info = self.get(database, table)
         if info is None:
             raise KeyError(f"no such table: {table}")
-        if name == ROW_ID:
-            raise ValueError("__row_id is engine-internal")
-        before = len(info.columns)
+        self.check_droppable(info, name)
         info.columns = [c for c in info.columns if c["name"] != name]
-        if len(info.columns) == before:
-            raise ValueError(f"unknown column: {name}")
-        if info.partition_col == name:
-            raise ValueError("cannot drop the partition column")
-        if name in info.primary_key:
-            raise ValueError("cannot drop a PRIMARY KEY column")
         info.dropped = sorted({*info.dropped, name})
         self._put(info)
         return info

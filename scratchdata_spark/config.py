@@ -32,7 +32,6 @@ class WorkersConfig:
 class ApiConfig:
     host: str = "127.0.0.1"
     port: int = 3000
-    max_age_seconds: int = 180  # share-link default TTL units are caller-set
     # reference DashboardConfig.ExternalURL — rendered into request
     # links and the API-key page; "" → relative links only
     external_url: str = ""

@@ -20,8 +20,11 @@ from __future__ import annotations
 import os
 import tempfile
 
+from scratchdata_spark.catalog import ROW_ID
 from scratchdata_spark.config import WorkersConfig
 from scratchdata_spark.engine import Destination, SparkDestination
+from scratchdata_spark.jtypes import conform_to_struct
+from scratchdata_spark.warehouse_dml import _jsontype_of, _with_row_id
 
 
 class CopyTooLargeError(RuntimeError):
@@ -111,21 +114,16 @@ def copy_data(
     ):
         # Same cluster (possibly different child sessions): distributed
         # write straight into the destination's table directory.
-        df = source.query_df(query)
+        # a source's __row_id is never carried: ids are assigned here,
+        # as CTAS, INSERT and COPY FROM assign them, so two copies of
+        # one source cannot duplicate an id
+        df = source.query_df(query).drop(ROW_ID)
         # distributed write path: infer jsontypes from the result
         # schema, register columns, then append with cast-on-write.
-        types = {}
-        for f in df.schema.fields:
-            s = f.dataType.simpleString()
-            types[f.name] = (
-                "int"
-                if s in ("tinyint", "smallint", "int", "bigint")
-                else "float"
-                if s in ("float", "double")
-                else "bool"
-                if s == "boolean"
-                else "string"
-            )
+        types = {
+            f.name: _jsontype_of(f.dataType) or "string"
+            for f in df.schema.fields
+        }
         with dest.catalog.lock(dest.database, dest_table):
             dest.catalog.create_empty_table(dest.database, dest_table)
             dest.catalog.add_columns(dest.database, dest_table, types)
@@ -133,13 +131,11 @@ def copy_data(
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        from scratchdata_spark.jtypes import conform_to_struct
-
         # Observation: the row count rides the write job itself — the
         # plan executes exactly once (a separate .count() would re-run
         # the whole source query; VERDICT r1 "What's wrong" #4).
         obs = Observation("copy_rows")
-        out = conform_to_struct(df, info.struct()).observe(
+        out = _with_row_id(conform_to_struct(df, info.struct())).observe(
             obs, F.count(F.lit(1)).alias("n")
         )
         out.write.mode("append").parquet(

@@ -1120,57 +1120,21 @@ class SparkDestination(DataFrameSerializers, Destination):
 
     def validate_statement(self, query: str | PreparedQuery) -> bool:
         """True if ``query`` is a warehouse DML/DDL statement or a
-        script, after side-effect-free validation (shape, target table,
-        embedded SELECT analysis). The HTTP layer calls this BEFORE
-        streaming: query_df would EXECUTE the statement, and the API's
-        validate-then-serialize shape would run it twice."""
+        script, after side-effect-free validation: each statement is
+        planned by the same step that executes it, and the plan is
+        discarded (``warehouse_dml.validate``). The HTTP layer calls
+        this BEFORE streaming: query_df would EXECUTE the statement,
+        and the API's validate-then-serialize shape would run it
+        twice. What may still fail after the 200 is data-dependent:
+        INSERT's NULL conflict keys and MERGE's cardinality guard. A
+        single query returns False with no analysis."""
         from scratchdata_spark import warehouse_dml
 
         statements = self._prepared(query).statements
-        if len(statements) > 1:
-            # validate each DML statement WITHOUT executing; plain
-            # SELECT parts are left to execution, and a failure that
-            # names a table an EARLIER script statement creates is
-            # expected (it doesn't exist yet) — everything else is a
-            # genuine error surfaced before the HTTP 200
-            self.register_views()
-            pending: set[str] = set()
-            for part, kind in statements:
-                if kind is not None:
-                    try:
-                        warehouse_dml.validate(self, part)
-                    except Exception as err:  # noqa: BLE001
-                        # only a missing-table error naming a table an
-                        # EARLIER script statement creates is expected.
-                        # The name must appear QUOTED (Spark backticks
-                        # the identifier) or after our own "no such
-                        # table:" prefix — a bare \b match would hit
-                        # words in Spark's boilerplate ('catalog',
-                        # 'schema', 'spelling') for tables so named.
-                        msg = str(err)
-                        expected = any(
-                            re.search(rf"[`'\"]{re.escape(n)}[`'\"]", msg)
-                            or re.search(
-                                rf"(?i)no such table:\s*{re.escape(n)}\b", msg
-                            )
-                            for n in pending
-                        )
-                        if not expected:
-                            raise
-                for rx, gi in (
-                    (warehouse_dml._CTAS_RE, 3),
-                    (warehouse_dml._CREATE_DEF_RE, 2),
-                    (warehouse_dml._CREATE_VIEW_RE, 2),
-                ):
-                    m = rx.match(part)
-                    if m:
-                        pending.add(m.group(gi))
-            return True
-        [(stmt, kind)] = statements
-        if kind is None:
+        if len(statements) == 1 and statements[0][1] is None:
             return False
         self.register_views()
-        warehouse_dml.validate(self, stmt)
+        warehouse_dml.validate(self, statements)
         return True
 
     # ---------------------------------------------------------- metadata
@@ -1503,7 +1467,7 @@ class SparkDestination(DataFrameSerializers, Destination):
         cutoff rather than one exact index so lowering the retention
         later also cleans generations an earlier, larger window left
         behind. Shared by the compaction/rewrite flip above and the
-        CREATE OR REPLACE adoption (warehouse_dml._exec_ctas)."""
+        CREATE OR REPLACE adoption (warehouse_dml._plan_ctas)."""
         import shutil
 
         cutoff = new_gen - max(2, int(self.retain_generations))

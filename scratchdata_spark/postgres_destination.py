@@ -32,12 +32,12 @@ Semantics notes (divergences loudly documented):
   VARCHARs / cast errors, never as SQL NULL.  Parity wins.
 * ``insert_ndjson`` infers the batch's types strictly first, so an
   unparsable line or a non-object row fails the batch before any
-  transaction opens.  The COPY step itself keeps gjson's contract for
-  such a line ("" for every key — gjson's parser never errors).
+  transaction opens (where gjson would send "" for every key of such
+  a line).
 * An EMPTY file is a no-op here; the reference nil-pointer panics on
   it (``stmt.Exec()`` with ``stmt`` never prepared, insert.go:137) —
   reproducing a crash is not parity worth having.
-* A first row with no keys (non-object, or ``{}``) raises: the
+* A first row with no keys (``{}``) raises: the
   reference would prepare ``COPY s.t () FROM STDIN`` and fail
   server-side with a syntax error; failing loudly client-side is the
   same outcome with a better message.
@@ -187,13 +187,7 @@ class PostgresCopyDestination(JDBCDestination):
                     line = raw.rstrip(b"\r\n")
                     if not line.strip():
                         continue
-                    try:
-                        obj = json.loads(line)
-                        if not isinstance(obj, dict):
-                            obj = {}
-                    except ValueError:
-                        # gjson never errors: unparsable → empty results
-                        obj = {}
+                    obj = json.loads(line)
                     if keys is None:
                         keys = self._first_row_keys(obj)
                         in_txn = True

@@ -36,11 +36,16 @@ Execution model (designed for 100 TB):
   string stats may be writer-truncated and are never used), so even
   an unpartitioned table's point delete rewrites only the files
   whose value range can contain matches.
-* The API validates before it streams (api_server._run_query), so
-  validation must NOT execute: ``validate_statement`` checks the
-  statement shape, target-table rules, and the embedded SELECT's
-  plan, with zero side effects; the single execution happens when
-  the request is served.
+* One check per statement: each kind's planner (``_PLANNERS``)
+  parses the text once and makes every check and analysis that
+  writes nothing, then returns a ``run()`` that only writes. The API
+  validates before it streams (api_server._run_query): ``validate``
+  plans and discards, with zero side effects, and the single
+  execution (``execute``: plan, then run) happens when the request
+  is served. After the 200 only data-dependent guards can refuse a
+  statement — INSERT's NULL conflict keys and MERGE's cardinality
+  guard, which need a Spark job over the rows — or a re-read under a
+  lock that finds the table changed.
 
 DuckDB DML result parity: every statement returns a one-row
 ``count BIGINT`` DataFrame (rows written / deleted / updated;
@@ -49,6 +54,7 @@ DuckDB DML result parity: every statement returns a one-row
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
@@ -274,8 +280,13 @@ def _expr(dest, df, text: str):
 
 def _source_df(dest, select_text: str):
     """DataFrame for the statement's embedded SELECT/VALUES — through
-    query_df, so the dialect fallback and plan cache apply."""
+    query_df, so the dialect fallback and plan cache apply. A nested
+    warehouse STATEMENT is refused, as DuckDB refuses it: planning
+    would execute it, during zero-side-effect validation AND again
+    when the outer statement runs."""
     body = select_text.strip()
+    if statement_kind(normalize(body)) is not None:
+        raise ValueError("a source must be a SELECT query, not a statement")
     if re.match(r"(?is)^VALUES\b", body):
         body = f"SELECT * FROM {body}"
     # the statement text was literal-bridged ONCE when the request
@@ -307,9 +318,10 @@ def _split_where(dest, set_clause: str) -> tuple[str, str | None]:
     )
 
 
-def _update_from_to_merge(query: str) -> str | None:
+def _update_from_to_merge(table, t_alias, rest: str) -> str | None:
     """``UPDATE t SET … FROM src [WHERE cond]`` (the Postgres/DuckDB
-    joined update) rewritten as the equivalent MERGE statement —
+    joined update; ``rest`` is the text after SET) rewritten as the
+    equivalent MERGE statement —
     returns None when the UPDATE has no depth-0 FROM (the plain form;
     a FROM inside a scalar-subquery assignment sits at depth > 0 and
     never splits).  Delegating to MERGE gives the joined update the
@@ -326,10 +338,6 @@ def _update_from_to_merge(query: str) -> str | None:
         _unmask_literals,
     )
 
-    m = _UPDATE_RE.match(query)
-    if m is None:
-        return None
-    table, t_alias, rest = m.groups()
     masked, lits = _mask_literals(rest)
     froms = list(_d0_matches(masked, r"\bFROM\b"))
     if not froms:
@@ -349,198 +357,74 @@ def _update_from_to_merge(query: str) -> str | None:
     )
 
 
-# ------------------------------------------------------------ execute
+# ------------------------------------------------------- plan / execute
+#
+# ``_plan_<kind>(dest, query)`` parses once, checks everything that
+# needs no write, and returns ``run()``, which only writes (module
+# docstring, "One check per statement").
 
 
 def execute(dest, query: str, kind: str):
-    """Run a warehouse statement of ``statement_kind`` ``kind``;
-    returns the count DataFrame."""
-    if kind == "update":
-        mq = _update_from_to_merge(query)
-        if mq is not None:
-            query, kind = mq, "merge"
-    return _EXECUTORS[kind](dest, query)
+    """Plan a warehouse statement of ``statement_kind`` ``kind``, then
+    run it; returns the count DataFrame."""
+    return _PLANNERS[kind](dest, query)()
 
 
-def validate(dest, query: str) -> None:
-    """Zero-side-effect validation ON WAREHOUSE STATE: statement
-    shape, target rules, and the embedded SELECT's analysis. The API
-    calls this before it commits to a 200; execution happens exactly
-    once, later. (Analyzing a view/SELECT over ``table_at()`` does
-    register session-scoped ``__at_*`` temp views — an idempotent
-    session-catalog convenience, not a warehouse mutation.)"""
-    kind = statement_kind(query)
-    if kind == "update":
-        # the joined form validates through the MERGE machinery it
-        # executes through (one parser, one set of checks)
-        mq = _update_from_to_merge(query)
-        if mq is not None:
-            query, kind = mq, "merge"
-    if kind == "delete_using":
-        table, t_alias, src, s_alias, cond = _parse_delete_using(dest, query)
-        frame = (
-            dest.table_df(table)
-            .alias(t_alias)
-            .crossJoin(src.alias(s_alias).limit(0))
+def validate(dest, statements) -> None:
+    """Plan every warehouse statement of ``statements`` (a
+    ``PreparedQuery.statements`` list) and discard the plans: the same
+    checks execution makes before it writes, with zero side effects
+    ON WAREHOUSE STATE. The API calls this before it commits to a 200;
+    execution happens exactly once, later. (Analyzing a view/SELECT
+    over ``table_at()`` does register session-scoped ``__at_*`` temp
+    views — an idempotent session-catalog convenience, not a
+    warehouse mutation.)
+
+    In a script each statement is planned against the state BEFORE
+    the script, so a failure that names a table or view an EARLIER
+    statement creates or drops is expected (``create table t …;
+    insert into t …`` or ``drop table t; create table t …``); any
+    other failure raises. Plain SELECT parts are left to execution."""
+    pending: set[str] = set()
+    for stmt, kind in statements:
+        if kind is None:
+            continue
+        try:
+            names = getattr(_PLANNERS[kind](dest, stmt), "names", ())
+        except Exception as err:  # noqa: BLE001
+            if not _names_pending(str(err), pending):
+                raise
+            names = getattr(err, "names", ())
+        pending.update(names)
+
+
+def _names_pending(msg: str, pending: set[str]) -> bool:
+    """The error names a pending table/view. The name must appear
+    QUOTED (Spark backticks the identifier) or after one of this
+    module's own prefixes — a bare \\b match would hit words in
+    Spark's boilerplate ('catalog', 'schema', 'spelling') for tables
+    so named."""
+    return any(
+        re.search(rf"[`'\"]{re.escape(n)}[`'\"]", msg)
+        or re.search(
+            r"(?i)(?:no such table|table exists|no such view|view exists):"
+            rf"\s*{re.escape(n)}\b",
+            msg,
         )
-        _expr(dest, frame, cond)  # join predicate analyzed pre-200
-        return
-    if kind == "ctas":
-        m = _CTAS_RE.match(query)
-        _check_ident(dest, m.group(3))
-        _check_no_view(dest, m.group(3))
-        if (
-            dest.catalog.get(dest.database, m.group(3)) is not None
-            and not m.group(1)
-            and not m.group(2)
-        ):
-            raise ValueError(f"table exists: {m.group(3)}")
-        _source_df(dest, m.group(4))  # analyze only
-    elif kind == "create":
-        m = _CREATE_DEF_RE.match(query)
-        _check_ident(dest, m.group(2))
-        _check_no_view(dest, m.group(2))
-        clean, pk, defaults = _parse_column_defs(m.group(3))
-        struct = StructType.fromDDL(clean)  # loud on bad column defs
-        names = {f.name for f in struct.fields}
-        for c in pk:
-            if c not in names:
-                raise ValueError(f"unknown PRIMARY KEY column: {c}")
-        for c, d in defaults.items():
-            if c not in names:
-                raise ValueError(f"unknown DEFAULT column: {c}")
-            _expr(dest, dest.spark.range(1), d)  # default analyzed pre-200
-    elif kind == "insert":
-        (or_mode, table, col_list, body,
-         conflict_cols, action, returning) = _masked_match(_INSERT_RE, query)
-        if returning and (or_mode or action):
-            raise ValueError(
-                "RETURNING is supported on plain INSERT only — conflict"
-                " modes would have to report which rows actually landed"
-            )
-        info = _require_table(dest, table)
-        src = _insert_source(dest, info, col_list, body)
-        _insert_projection(info, src, col_list)  # arity/name checks
-        _conflict_spec(info, or_mode, conflict_cols, action)
-        if returning:
-            # every RETURNING expression analyzed pre-200
-            frame = dest.table_df(table).limit(0)
-            frame.select(*_returning_cols(info, returning)).schema
-    elif kind == "drop":
-        m = _DROP_RE.match(query)
-        if not m.group(1):
-            _require_table(dest, m.group(2))
-    elif kind == "truncate":
-        _require_table(dest, _TRUNCATE_RE.match(query).group(1))
-    elif kind == "compact":
-        m = _COMPACT_RE.match(query)
-        info = _require_table(dest, m.group(1))
-        if m.group(2) is not None:
-            cols = _split_cols(m.group(2))
-            if not cols:
-                raise ValueError("CLUSTER BY needs at least one column")
-            known = {c["name"] for c in info.columns}
-            bad = [c for c in cols if c not in known]
-            if bad:
-                raise ValueError(f"unknown sort column(s): {bad}")
-    elif kind == "delete":
-        m = _DELETE_RE.match(query)
-        info = _require_table(dest, m.group(1))
-        if m.group(2):
-            _analyze_pred(dest, m.group(1), m.group(2))
-    elif kind == "update":
-        m = _UPDATE_RE.match(query)
-        info = _require_table(dest, m.group(1))
-        set_clause, pred = _split_where(dest, m.group(3))
-        assigns = _update_assignments(info, set_clause)
-        tdf = dest.table_df(m.group(1))
-        if m.group(2):
-            tdf = tdf.alias(m.group(2))
-        for text in assigns.values():
-            _expr(dest, tdf, text)  # SET rhs analyzed too, not just names
-        if pred:
-            _expr(dest, tdf, pred)
-    elif kind == "merge":
-        (info, table, t_alias, src, s_alias, on_text, matched, not_matched) = (
-            _parse_merge(dest, query)
-        )
-        # analyze every expression the execution would compile — the
-        # HTTP validate-then-stream shape must fail BEFORE the 200,
-        # not mid-stream (same eagerness as the UPDATE branch)
-        t0 = dest.table_df(table).alias(t_alias)
-        frame = t0.crossJoin(src.alias(s_alias).limit(0))
-        _expr(dest, frame, on_text)
-        fields = {f.name: f for f in info.struct().fields}
-        for pred, act in matched:
-            if pred:
-                _expr(dest, frame, pred)
-            if act[0] == "update":
-                for c, rhs in act[1].items():
-                    _expr(dest, frame, rhs).cast(fields[c].dataType)
-        sframe = src.alias(s_alias).limit(0)
-        for pred, cols, vals in not_matched:
-            if pred:
-                _expr(dest, sframe, pred)
-            if cols is not None:
-                from scratchdata_spark.dialect import (
-                    _split_top_level_commas_text,
-                )
+        for n in pending
+    )
 
-                for v in _split_top_level_commas_text(vals):
-                    _expr(dest, sframe, v)
-    elif kind == "copy_to":
-        m = _COPY_TO_RE.match(query)
-        _copy_source_df(dest, m.group(1))  # analyze only
-        _copy_format(m.group(2), m.group(3))  # loud on unknown formats
-        _resolve_copy_target(dest, m.group(2))  # confinement, pre-200
-    elif kind == "copy_from":
-        import glob as _glob
 
-        m = _COPY_FROM_RE.match(query)
-        _require_table(dest, m.group(1))
-        fmt, opts = _copy_format(m.group(2), m.group(3), stmt="COPY FROM")
-        if fmt == "csv" and opts.get("HEADER", "true").lower() == "false":
-            raise ValueError(
-                "COPY FROM: HEADER false is unsupported — the load"
-                " aligns by column NAME, which headerless CSV cannot"
-                " provide"
-            )
-        src = _copy_from_source(dest, m.group(2))
-        # glob.glob covers literal paths too; Spark's reader expands
-        # */? patterns, so a valid glob must pass validation
-        if not _glob.glob(src):
-            raise FileNotFoundError(f"COPY FROM source not found: {src}")
-    elif kind == "create_view":
-        m = _CREATE_VIEW_RE.match(query)
-        _check_ident(dest, m.group(2))
-        if dest.catalog.get(dest.database, m.group(2)) is not None:
-            raise ValueError(f"table exists: {m.group(2)}")
-        if not m.group(1) and m.group(2) in dest.catalog.views(dest.database):
-            raise ValueError(f"view exists: {m.group(2)}")
-        dest.view_df(m.group(3))  # analyze only
-    elif kind == "drop_view":
-        m = _DROP_VIEW_RE.match(query)
-        if not m.group(1) and m.group(2) not in dest.catalog.views(
-            dest.database
-        ):
-            raise KeyError(f"no such view: {m.group(2)}")
-    elif kind == "alter_add":
-        m = _ALTER_ADD_RE.match(query)
-        info = _require_table(dest, m.group(1))
-        StructType.fromDDL(f"`{m.group(3)}` {m.group(4)}")  # loud on bad type
-        dest.catalog.check_not_dropped(info, m.group(3))
-        if not m.group(2) and any(
-            c["name"] == m.group(3) for c in info.columns
-        ):
-            raise ValueError(f"column exists: {m.group(3)}")
-    elif kind == "alter_drop":
-        m = _ALTER_DROP_RE.match(query)
-        info = _require_table(dest, m.group(1))
-        have = {c["name"] for c in info.columns}
-        if not m.group(2) and m.group(3) not in have:
-            raise ValueError(f"unknown column: {m.group(3)}")
-    else:
-        raise ValueError(f"not a warehouse statement: {query!r}")
+@contextlib.contextmanager
+def _naming(*names: str):
+    """Checks of a statement that creates or drops ``names``: a failure
+    carries the names, as the statement's ``run`` does, since a
+    script's later statements may refer to them (``validate``)."""
+    try:
+        yield
+    except Exception as err:
+        err.names = names
+        raise
 
 
 def _check_ident(dest, name: str) -> str:
@@ -562,10 +446,6 @@ def _check_no_view(dest, name: str) -> None:
     the table in every query while inserts write invisible rows."""
     if name in dest.catalog.views(dest.database):
         raise ValueError(f"view exists: {name}")
-
-
-def _analyze_pred(dest, table: str, pred: str) -> None:
-    _expr(dest, dest.table_df(table), pred)  # analysis only
 
 
 def _staged_write(dest, out, partition_col) -> tuple[str, int]:
@@ -630,7 +510,7 @@ def _adopt_staged(dest, staging: str, data_dir: str) -> list[str]:
 
 def _jsontype_of(dt) -> str | None:
     # integral/float widths widen to the ingest jsontypes (bigint /
-    # double) — the written data is cast to match, see _exec_ctas
+    # double) — the written data is cast to match, see _plan_ctas
     return {
         "tinyint": "int",
         "smallint": "int",
@@ -679,18 +559,20 @@ def _target_struct(src_schema) -> StructType:
     return StructType(fields)
 
 
-def _exec_ctas(dest, query: str):
-    m = _CTAS_RE.match(query)
-    or_replace, if_not_exists, table, select_text, no_data = m.groups()
-    _check_ident(dest, table)
-    _check_no_view(dest, table)
-    existing = dest.catalog.get(dest.database, table)
-    if existing is not None:
-        if if_not_exists:
-            return _count_df(dest, 0)
-        if not or_replace:
-            raise ValueError(f"table exists: {table}")
-    src = _source_df(dest, select_text)
+def _plan_ctas(dest, query: str):
+    or_replace, if_not_exists, table, select_text, no_data = (
+        _CTAS_RE.match(query).groups()
+    )
+    with _naming(table):
+        _check_ident(dest, table)
+        _check_no_view(dest, table)
+        existing = dest.catalog.get(dest.database, table)
+        if existing is not None:
+            if if_not_exists:
+                return _noop(dest)
+            if not or_replace:
+                raise ValueError(f"table exists: {table}")
+        src = _source_df(dest, select_text)
     if no_data:
         # CTAS … WITH NO DATA: the SELECT contributes only its SCHEMA
         # (SQL standard / Postgres semantics); limit(0) keeps the
@@ -711,51 +593,62 @@ def _exec_ctas(dest, query: str):
     out = _with_row_id(src).select(
         *[F.col(f"`{f.name}`").cast(f.dataType).alias(f.name) for f in target.fields]
     )
-    # materialize to staging BEFORE touching the target: OR REPLACE …
-    # FROM <self> must read the old data in full while it still exists
-    staging, n = _staged_write(dest, out, None)
-    if existing is not None:
-        # Crash-atomic replace (r10 DML review finding #10, closed
-        # r11): the staged result becomes the NEXT generation of the
-        # SAME table root, adopted by the compaction machinery's
-        # pointer flip — schema, generation, and the reset of
-        # partitioning/tombstones/PK land in ONE atomic catalog write
-        # (catalog.replace_table). The old generation stays fully
-        # live until that write, so a crash at ANY point leaves the
-        # old table readable; it is then retained like a compaction
-        # parent (readers in flight, time travel) and retires on
-        # later flips. The old drop-then-recreate sequence lost the
-        # table if the process died between the two steps.
-        comp_lock = dest._compaction_lock(table)
-        try:
-            with comp_lock, dest.catalog.lock(dest.database, table):
-                info = _require_table(dest, table)  # fresh pointer
-                root = dest.catalog.table_root(dest.database, table)
-                new_gen = info.generation + 1
-                new_dir = os.path.join(root, f"g{new_gen}")
-                # a replace that crashed between adoption and the meta
-                # write may have left a partial g{new_gen}: clear it so
-                # orphaned part files cannot pollute this generation
-                shutil.rmtree(new_dir, ignore_errors=True)
-                _adopt_staged(dest, staging, new_dir)
-                dest.catalog.replace_table(
-                    dest.database, table,
-                    _catalog_columns(target.fields), new_gen,
-                )
-                dest._retire_generations(root, new_gen)
-        except Exception:
-            # e.g. the table was dropped while we staged: nothing
-            # sweeps _staging, so the spooled result must not leak
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
+
+    def run():
+        # materialize to staging BEFORE touching the target: OR REPLACE …
+        # FROM <self> must read the old data in full while it still exists
+        staging, n = _staged_write(dest, out, None)
+        if existing is not None:
+            # Crash-atomic replace (r10 DML review finding #10, closed
+            # r11): the staged result becomes the NEXT generation of the
+            # SAME table root, adopted by the compaction machinery's
+            # pointer flip — schema, generation, and the reset of
+            # partitioning/tombstones/PK land in ONE atomic catalog write
+            # (catalog.replace_table). The old generation stays fully
+            # live until that write, so a crash at ANY point leaves the
+            # old table readable; it is then retained like a compaction
+            # parent (readers in flight, time travel) and retires on
+            # later flips. The old drop-then-recreate sequence lost the
+            # table if the process died between the two steps.
+            comp_lock = dest._compaction_lock(table)
+            try:
+                with comp_lock, dest.catalog.lock(dest.database, table):
+                    info = _require_table(dest, table)  # fresh pointer
+                    root = dest.catalog.table_root(dest.database, table)
+                    new_gen = info.generation + 1
+                    new_dir = os.path.join(root, f"g{new_gen}")
+                    # a replace that crashed between adoption and the meta
+                    # write may have left a partial g{new_gen}: clear it so
+                    # orphaned part files cannot pollute this generation
+                    shutil.rmtree(new_dir, ignore_errors=True)
+                    _adopt_staged(dest, staging, new_dir)
+                    dest.catalog.replace_table(
+                        dest.database, table,
+                        _catalog_columns(target.fields), new_gen,
+                    )
+                    dest._retire_generations(root, new_gen)
+            except Exception:
+                # e.g. the table was dropped while we staged: nothing
+                # sweeps _staging, so the spooled result must not leak
+                shutil.rmtree(staging, ignore_errors=True)
+                raise
+            return _count_df(dest, n)
+        with dest.catalog.lock(dest.database, table):
+            dest.catalog.create_empty_table(dest.database, table)
+            _register_schema(dest, table, target.fields)
+            _adopt_staged(
+                dest, staging, dest.catalog.data_dir(dest.database, table)
+            )
         return _count_df(dest, n)
-    with dest.catalog.lock(dest.database, table):
-        dest.catalog.create_empty_table(dest.database, table)
-        _register_schema(dest, table, target.fields)
-        _adopt_staged(
-            dest, staging, dest.catalog.data_dir(dest.database, table)
-        )
-    return _count_df(dest, n)
+
+    run.names = (table,)
+    return run
+
+
+def _noop(dest):
+    """The plan of a statement whose IF [NOT] EXISTS leaves nothing to
+    do."""
+    return lambda: _count_df(dest, 0)
 
 
 def _catalog_columns(fields) -> list[dict]:
@@ -792,34 +685,45 @@ def _normalize_default(dest, text: str) -> str:
         return spark_text
 
 
-def _exec_create(dest, query: str):
-    m = _CREATE_DEF_RE.match(query)
-    if_not_exists, table, defs = m.groups()
-    _check_ident(dest, table)
-    _check_no_view(dest, table)
-    if dest.catalog.get(dest.database, table) is not None:
-        if if_not_exists:
-            return _count_df(dest, 0)
-        raise ValueError(f"table exists: {table}")
+def _plan_create(dest, query: str):
+    if_not_exists, table, defs = _CREATE_DEF_RE.match(query).groups()
+    with _naming(table):
+        _check_ident(dest, table)
+        _check_no_view(dest, table)
+        if dest.catalog.get(dest.database, table) is not None:
+            if if_not_exists:
+                return _noop(dest)
+            raise ValueError(f"table exists: {table}")
     clean, pk, defaults = _parse_column_defs(defs)
-    struct = StructType.fromDDL(clean)
+    struct = StructType.fromDDL(clean)  # loud on bad column defs
+    names = {f.name for f in struct.fields}
+    for c in pk:
+        if c not in names:
+            raise ValueError(f"unknown PRIMARY KEY column: {c}")
+    for c in defaults:
+        if c not in names:
+            raise ValueError(f"unknown DEFAULT column: {c}")
     # normalize defaults to plain Spark SQL at RECORD time (r12
-    # advisor catch): validate() analyzes them through _expr's
-    # DuckDB-fallback path, but application is raw F.expr — a
-    # DuckDB-flavored default (DEFAULT ord('a'), DEFAULT 0::INT8)
-    # passed CREATE validation and then failed EVERY partial-column
-    # INSERT at analysis.  Same try-then-rewrite contract as _expr.
+    # advisor catch): application is raw F.expr, so a DuckDB-flavored
+    # default (DEFAULT ord('a'), DEFAULT 0::INT8) stored verbatim
+    # would fail EVERY partial-column INSERT at analysis.  Same
+    # try-then-rewrite contract as _expr.
     defaults = {
         c: _normalize_default(dest, d) for c, d in defaults.items()
     }
-    with dest.catalog.lock(dest.database, table):
-        dest.catalog.create_empty_table(dest.database, table)
-        _register_schema(dest, table, struct.fields)
-        if pk:
-            dest.catalog.set_primary_key(dest.database, table, pk)
-        if defaults:
-            dest.catalog.set_defaults(dest.database, table, defaults)
-    return _count_df(dest, 0)
+
+    def run():
+        with dest.catalog.lock(dest.database, table):
+            dest.catalog.create_empty_table(dest.database, table)
+            _register_schema(dest, table, struct.fields)
+            if pk:
+                dest.catalog.set_primary_key(dest.database, table, pk)
+            if defaults:
+                dest.catalog.set_defaults(dest.database, table, defaults)
+        return _count_df(dest, 0)
+
+    run.names = (table,)
+    return run
 
 
 def _with_row_id(df):
@@ -1158,7 +1062,7 @@ def _returning_cols(info, returning: str):
     return cols
 
 
-def _exec_insert(dest, query: str):
+def _plan_insert(dest, query: str):
     (or_mode, table, col_list, select_text,
      conflict_cols, action, returning) = _masked_match(_INSERT_RE, query)
     if returning and (or_mode or action):
@@ -1171,168 +1075,182 @@ def _exec_insert(dest, query: str):
     renamed, cols = _insert_projection(info, src, col_list)
     batch = renamed.select(*cols)  # target columns, __row_id pending
     keys, mode, set_cols = _conflict_spec(info, or_mode, conflict_cols, action)
+    ret_cols = None
+    if returning:
+        ret_cols = _returning_cols(info, returning)
+        dest.table_df(table).limit(0).select(*ret_cols).schema  # analyzed
 
-    if mode is not None:
-        # NULL conflict keys break every mode's contract: SQL equality
-        # never matches NULL against the stored NULL row, so a retried
-        # OR IGNORE re-inserts the "duplicate" it exists to prevent
-        # and upserts treat the row as fresh every run (r10 review
-        # catch).  DuckDB rejects NULL primary keys outright — match
-        # it, loudly, before anything is written.
-        null_key = None
-        for k in keys:
-            c = F.col(k).isNull()
-            null_key = c if null_key is None else (null_key | c)
-        if not batch.filter(null_key).isEmpty():
-            raise ValueError(
-                "ON CONFLICT: NULL in a conflict key column — null-key"
-                " rows can never match and would re-insert on every"
-                " retry (DuckDB rejects NULL keys too)"
-            )
-
-    if mode is None:
-        out = _with_row_id(batch)
-        out = out.select(*[f.name for f in info.struct().fields])
-        # stage first (count observed in the same pass), adopt by
-        # rename: a self-referential INSERT INTO t SELECT … FROM t
-        # reads a listing pinned before any new file lands live
-        staging, n = _staged_write(dest, out, info.partition_col)
-        with dest.catalog.lock(dest.database, table):
-            adopted = _adopt_staged(
-                dest, staging, dest.catalog.data_dir(dest.database, table)
-            )
-        if returning:
-            # read back EXACTLY the adopted part files (never the
-            # whole table — a concurrent insert's rows must not leak
-            # into this statement's RETURNING); distributed scan, no
-            # driver collect, basePath recovers partition columns.
-            # Lifetime note (r12 review): the frame reads fixed paths
-            # LAZILY, protected by generation retention (current +
-            # parent) — it survives ONE concurrent copy-on-write flip
-            # and fails LOUDLY (file-not-found) after two, never
-            # silently re-reads other rows.  The API path serializes
-            # immediately, so the window only matters to an embedded
-            # caller holding the frame across its own writes.
-            struct = info.struct()
-            if not adopted:
-                rdf = dest.spark.createDataFrame([], struct)
-            else:
-                rdf = (
-                    dest.spark.read.schema(struct)
-                    .option(
-                        "basePath",
-                        dest.catalog.data_dir(dest.database, table),
-                    )
-                    .parquet(*adopted)
+    def run():
+        if mode is not None:
+            # NULL conflict keys break every mode's contract: SQL equality
+            # never matches NULL against the stored NULL row, so a retried
+            # OR IGNORE re-inserts the "duplicate" it exists to prevent
+            # and upserts treat the row as fresh every run (r10 review
+            # catch).  DuckDB rejects NULL primary keys outright — match
+            # it, loudly, before anything is written.
+            null_key = None
+            for k in keys:
+                c = F.col(k).isNull()
+                null_key = c if null_key is None else (null_key | c)
+            if not batch.filter(null_key).isEmpty():
+                raise ValueError(
+                    "ON CONFLICT: NULL in a conflict key column — null-key"
+                    " rows can never match and would re-insert on every"
+                    " retry (DuckDB rejects NULL keys too)"
                 )
-            return rdf.select(*_returning_cols(info, returning))
-        return _count_df(dest, n)
 
-    if mode == "nothing":
-        # idempotent append: drop in-batch key dups, then keep only
-        # rows whose keys are absent from the table — only key
-        # columns cross the anti-join, never the payload. The whole
-        # read-check-write holds the COMPACTION lock: two concurrent
-        # retries must not both pass the absence check (the exact
-        # duplicate this statement exists to prevent)
-        with dest._compaction_lock(table):
-            deduped = batch.dropDuplicates(keys)
-            deduped = deduped.join(
-                dest.table_df(table).select(*keys), keys, "left_anti"
-            )
-            out = _with_row_id(deduped)
+        if mode is None:
+            out = _with_row_id(batch)
             out = out.select(*[f.name for f in info.struct().fields])
+            # stage first (count observed in the same pass), adopt by
+            # rename: a self-referential INSERT INTO t SELECT … FROM t
+            # reads a listing pinned before any new file lands live
             staging, n = _staged_write(dest, out, info.partition_col)
             with dest.catalog.lock(dest.database, table):
-                _adopt_staged(
+                adopted = _adopt_staged(
                     dest, staging, dest.catalog.data_dir(dest.database, table)
                 )
+            if ret_cols is not None:
+                # read back EXACTLY the adopted part files (never the
+                # whole table — a concurrent insert's rows must not leak
+                # into this statement's RETURNING); distributed scan, no
+                # driver collect, basePath recovers partition columns.
+                # Lifetime note (r12 review): the frame reads fixed paths
+                # LAZILY, protected by generation retention (current +
+                # parent) — it survives ONE concurrent copy-on-write flip
+                # and fails LOUDLY (file-not-found) after two, never
+                # silently re-reads other rows.  The API path serializes
+                # immediately, so the window only matters to an embedded
+                # caller holding the frame across its own writes.
+                struct = info.struct()
+                if not adopted:
+                    rdf = dest.spark.createDataFrame([], struct)
+                else:
+                    rdf = (
+                        dest.spark.read.schema(struct)
+                        .option(
+                            "basePath",
+                            dest.catalog.data_dir(dest.database, table),
+                        )
+                        .parquet(*adopted)
+                    )
+                return rdf.select(*ret_cols)
+            return _count_df(dest, n)
+
+        if mode == "nothing":
+            # idempotent append: drop in-batch key dups, then keep only
+            # rows whose keys are absent from the table — only key
+            # columns cross the anti-join, never the payload. The whole
+            # read-check-write holds the COMPACTION lock: two concurrent
+            # retries must not both pass the absence check (the exact
+            # duplicate this statement exists to prevent)
+            with dest._compaction_lock(table):
+                deduped = batch.dropDuplicates(keys)
+                deduped = deduped.join(
+                    dest.table_df(table).select(*keys), keys, "left_anti"
+                )
+                out = _with_row_id(deduped)
+                out = out.select(*[f.name for f in info.struct().fields])
+                staging, n = _staged_write(dest, out, info.partition_col)
+                with dest.catalog.lock(dest.database, table):
+                    _adopt_staged(
+                        dest, staging, dest.catalog.data_dir(dest.database, table)
+                    )
+            return _count_df(dest, n)
+
+        # upsert modes: ONE copy-on-write rewrite folds the merge —
+        # replace: old rows losing their key + the whole new batch;
+        # update: old rows keep their __row_id, listed columns replaced
+        # from the batch (single left-outer scan with a match flag), plus
+        # genuinely new batch rows appended
+        from pyspark import StorageLevel
+
+        keyed = batch.dropDuplicates(keys).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        n = keyed.count()
+        if n == 0:
+            keyed.unpersist()
+            return _count_df(dest, 0)
+        field_order = [f.name for f in info.struct().fields]
+        fields = {f.name: f for f in info.struct().fields}
+
+        def transform(src2, info2):
+            new_rows = _with_row_id(keyed).select(*field_order)
+            if mode == "replace":
+                keep = src2.join(keyed.select(*keys), keys, "left_anti")
+                return keep.unionByName(new_rows)
+            bsel = keyed.select(
+                *[F.col(k) for k in keys],
+                *[F.col(c).alias(f"__new_{c}") for c in set_cols],
+                F.lit(True).alias("__matched"),
+            )
+            merged = src2.join(bsel, keys, "left_outer").select(
+                *[
+                    F.when(
+                        F.col("__matched"),
+                        F.col(f"__new_{f}").cast(fields[f].dataType),
+                    )
+                    .otherwise(F.col(f))
+                    .alias(f)
+                    if f in set_cols
+                    else F.col(f)
+                    for f in field_order
+                ]
+            )
+            inserts = _with_row_id(
+                keyed.join(src2.select(*keys), keys, "left_anti")
+            ).select(*field_order)
+            return merged.unionByName(inserts)
+
+        # file/partition pruning: a conflicting row must carry a batch
+        # key, so for a single integer key the [min, max] of the batch's
+        # keys is a sound reach bound — files/partitions outside it adopt
+        # by rename (conservative: in-range files without the exact keys
+        # still rewrite). The batch is already cast to the target schema
+        # (_insert_projection), so the helper's both-sides-integral check
+        # reduces to the key column's declared type here.
+        prune_pred = (
+            _key_range_prune(keyed, keys[0], fields[keys[0]])
+            if len(keys) == 1
+            else None
+        )
+        prune_fn, file_pred = _key_range_prune_fn(dest, prune_pred)
+        try:
+            _cow_rewrite(
+                dest,
+                table,
+                transform,
+                prune_fn=prune_fn,
+                file_prune_pred=file_pred,
+                want_counts=False,
+                empty_touch_is_noop=False,
+            )
+        finally:
+            keyed.unpersist()
         return _count_df(dest, n)
 
-    # upsert modes: ONE copy-on-write rewrite folds the merge —
-    # replace: old rows losing their key + the whole new batch;
-    # update: old rows keep their __row_id, listed columns replaced
-    # from the batch (single left-outer scan with a match flag), plus
-    # genuinely new batch rows appended
-    from pyspark import StorageLevel
-
-    batch = batch.dropDuplicates(keys).persist(StorageLevel.MEMORY_AND_DISK)
-    n = batch.count()
-    if n == 0:
-        batch.unpersist()
-        return _count_df(dest, 0)
-    field_order = [f.name for f in info.struct().fields]
-    fields = {f.name: f for f in info.struct().fields}
-
-    def transform(src2, info2):
-        new_rows = _with_row_id(batch).select(*field_order)
-        if mode == "replace":
-            keep = src2.join(batch.select(*keys), keys, "left_anti")
-            return keep.unionByName(new_rows)
-        bsel = batch.select(
-            *[F.col(k) for k in keys],
-            *[F.col(c).alias(f"__new_{c}") for c in set_cols],
-            F.lit(True).alias("__matched"),
-        )
-        merged = src2.join(bsel, keys, "left_outer").select(
-            *[
-                F.when(
-                    F.col("__matched"),
-                    F.col(f"__new_{f}").cast(fields[f].dataType),
-                )
-                .otherwise(F.col(f))
-                .alias(f)
-                if f in set_cols
-                else F.col(f)
-                for f in field_order
-            ]
-        )
-        inserts = _with_row_id(
-            batch.join(src2.select(*keys), keys, "left_anti")
-        ).select(*field_order)
-        return merged.unionByName(inserts)
-
-    # file/partition pruning: a conflicting row must carry a batch
-    # key, so for a single integer key the [min, max] of the batch's
-    # keys is a sound reach bound — files/partitions outside it adopt
-    # by rename (conservative: in-range files without the exact keys
-    # still rewrite). The batch is already cast to the target schema
-    # (_insert_projection), so the helper's both-sides-integral check
-    # reduces to the key column's declared type here.
-    prune_pred = (
-        _key_range_prune(batch, keys[0], fields[keys[0]])
-        if len(keys) == 1
-        else None
-    )
-    prune_fn, file_pred = _key_range_prune_fn(dest, prune_pred)
-    try:
-        _cow_rewrite(
-            dest,
-            table,
-            transform,
-            prune_fn=prune_fn,
-            file_prune_pred=file_pred,
-            want_counts=False,
-            empty_touch_is_noop=False,
-        )
-    finally:
-        batch.unpersist()
-    return _count_df(dest, n)
+    return run
 
 
 # ------------------------------------------------- DROP / copy-on-write
 
 
-def _exec_drop(dest, query: str):
-    m = _DROP_RE.match(query)
-    if_exists, table = m.groups()
-    if dest.catalog.get(dest.database, table) is None:
-        if if_exists:
-            return _count_df(dest, 0)
-        raise KeyError(f"no such table: {table}")
-    # the session's temp view goes at the next register_views
-    dest.catalog.drop_table(dest.database, table)
-    return _count_df(dest, 0)
+def _plan_drop(dest, query: str):
+    if_exists, table = _DROP_RE.match(query).groups()
+    with _naming(table):
+        if dest.catalog.get(dest.database, table) is None:
+            if if_exists:
+                return _noop(dest)
+            raise KeyError(f"no such table: {table}")
+
+    def run():
+        # the session's temp view goes at the next register_views
+        dest.catalog.drop_table(dest.database, table)
+        return _count_df(dest, 0)
+
+    run.names = (table,)
+    return run
 
 
 def _prunable_partitions(dest, info, pred_text, cond, cur_dir):
@@ -1676,40 +1594,54 @@ def _cow_rewrite(
         return before, after, matched
 
 
-def _exec_truncate(dest, query: str):
+def _plan_truncate(dest, query: str):
     table = _TRUNCATE_RE.match(query).group(1)
     _require_table(dest, table)
-    _cow_rewrite(
-        dest, table, lambda src, info: src.limit(0), want_counts=False
-    )
-    return _count_df(dest, 0)
+
+    def run():
+        _cow_rewrite(
+            dest, table, lambda src, info: src.limit(0), want_counts=False
+        )
+        return _count_df(dest, 0)
+
+    return run
 
 
-def _exec_delete(dest, query: str):
-    m = _DELETE_RE.match(query)
-    table, pred = m.groups()
+def _plan_delete(dest, query: str):
+    table, pred = _DELETE_RE.match(query).groups()
     _require_table(dest, table)
     cond = (
         F.coalesce(_expr(dest, dest.table_df(table), pred), F.lit(False))
         if pred
         else F.lit(True)
     )
-    before, after, _ = _cow_rewrite(
-        dest,
-        table,
-        lambda src, info: src.filter(~cond),
-        prune_fn=lambda info, cur_dir: _prunable_partitions(
-            dest, info, pred, cond, cur_dir
-        ),
-        file_prune_pred=pred,
-    )
-    return _count_df(dest, before - after)
+
+    def run():
+        before, after, _ = _cow_rewrite(
+            dest,
+            table,
+            lambda src, info: src.filter(~cond),
+            prune_fn=lambda info, cur_dir: _prunable_partitions(
+                dest, info, pred, cond, cur_dir
+            ),
+            file_prune_pred=pred,
+        )
+        return _count_df(dest, before - after)
+
+    return run
 
 
-def _parse_delete_using(dest, query: str):
-    """(table, t_alias, source_df, s_alias, cond_text) for the joined
-    delete — source resolution mirrors MERGE's USING (a table name or
-    a parenthesized query)."""
+def _plan_delete_using(dest, query: str):
+    """``DELETE FROM t USING src WHERE cond`` (Postgres/DuckDB joined
+    delete): target rows with AT LEAST ONE source row satisfying the
+    predicate are removed — a LEFT ANTI join inside the same CoW
+    rewrite plain DELETE uses.  The source resolves like MERGE's
+    USING (a table name or a parenthesized query).  Multiple source
+    matches are harmless for deletion (the row is gone either way), so
+    no cardinality guard applies, unlike UPDATE … FROM.  No
+    partition/footer pruning: the predicate spans two relations, so
+    the rewrite is whole-table (the same documented contract as
+    MERGE)."""
     table, t_alias, using, s_alias, cond = _masked_match(
         _DELETE_USING_RE, query
     )
@@ -1724,19 +1656,6 @@ def _parse_delete_using(dest, query: str):
     t_alias = t_alias or table
     if t_alias == s_alias:
         raise ValueError("DELETE USING: target and source aliases collide")
-    return table, t_alias, src, s_alias, cond
-
-
-def _exec_delete_using(dest, query: str):
-    """``DELETE FROM t USING src WHERE cond`` (Postgres/DuckDB joined
-    delete): target rows with AT LEAST ONE source row satisfying the
-    predicate are removed — a LEFT ANTI join inside the same CoW
-    rewrite plain DELETE uses.  Multiple source matches are harmless
-    for deletion (the row is gone either way), so no cardinality
-    guard applies, unlike UPDATE … FROM.  No partition/footer pruning:
-    the predicate spans two relations, so the rewrite is whole-table
-    (the same documented contract as MERGE)."""
-    table, t_alias, src, s_alias, cond = _parse_delete_using(dest, query)
     tdf = dest.table_df(table).alias(t_alias)
     sdf = src.alias(s_alias)
     pred = _expr(dest, tdf.crossJoin(sdf.limit(0)), cond)
@@ -1748,8 +1667,11 @@ def _exec_delete_using(dest, query: str):
             .select(*[F.col(f.name) for f in info.struct().fields])
         )
 
-    before, after, _ = _cow_rewrite(dest, table, transform)
-    return _count_df(dest, before - after)
+    def run():
+        before, after, _ = _cow_rewrite(dest, table, transform)
+        return _count_df(dest, before - after)
+
+    return run
 
 
 # ------------------------------------------------------------- COPY TO
@@ -1757,15 +1679,7 @@ def _exec_delete_using(dest, query: str):
 
 def _copy_source_df(dest, source: str):
     if source.startswith("("):
-        inner = source[1:-1]
-        # a nested warehouse STATEMENT would execute during the API's
-        # zero-side-effect validation AND again at serialization —
-        # COPY's source must be a query, exactly like DuckDB requires
-        if statement_kind(normalize(inner)) is not None:
-            raise ValueError(
-                "COPY source must be a SELECT query, not a statement"
-            )
-        return dest._query_df_prepared(inner)  # already literal-bridged
+        return _source_df(dest, source[1:-1])
     _require_table(dest, source)
     return dest.table_df(source)
 
@@ -1837,7 +1751,7 @@ def _resolve_copy_target(dest, path: str) -> str:
     )
 
 
-def _exec_copy_to(dest, query: str):
+def _plan_copy_to(dest, query: str):
     """DuckDB's export statement: ``COPY <table|(query)> TO 'path'
     [(FORMAT …, HEADER, DELIMITER ',', PER_THREAD_OUTPUT)]``.
 
@@ -1848,49 +1762,56 @@ def _exec_copy_to(dest, query: str):
     ``path`` becomes a directory of part files — DuckDB's own
     many-files mode, and the only shape that makes sense for a
     100 TB extract."""
-    m = _COPY_TO_RE.match(query)
-    source, path, opts_text = m.groups()
+    source, path, opts_text = _COPY_TO_RE.match(query).groups()
     df = _copy_source_df(dest, source)
     fmt, opts = _copy_format(path, opts_text)
-    path = _resolve_copy_target(dest, path)
-    from pyspark.sql import Observation
+    path = _resolve_copy_target(dest, path)  # confinement, pre-200
 
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    per_thread = "PER_THREAD_OUTPUT" in opts
-    out_dir = path if per_thread else path + ".__spark_tmp__"
-    # repartition(1), NOT coalesce(1): an empty result folds to a
-    # zero-partition plan under coalesce and writes no part file at
-    # all — the single-file contract needs one task to always run so
-    # even an empty export is a VALID parquet/csv-with-header file
-    writer = (df if per_thread else df.repartition(1)).write.mode("overwrite")
-    if fmt == "csv":
-        writer = writer.option(
-            "header", opts.get("HEADER", "true")
-        ).option("delimiter", opts.get("DELIMITER", ","))
-        writer.csv(out_dir)
-    elif fmt == "json":
-        writer.json(out_dir)
-    else:
-        writer.parquet(out_dir)
-    n = int(obs.get["n"] or 0)
-    if not per_thread:
-        part = next(
-            (
-                f
-                for f in sorted(os.listdir(out_dir))
-                if f.startswith("part-")
-            ),
-            None,
+    def run():
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        out = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        per_thread = "PER_THREAD_OUTPUT" in opts
+        out_dir = path if per_thread else path + ".__spark_tmp__"
+        # repartition(1), NOT coalesce(1): an empty result folds to a
+        # zero-partition plan under coalesce and writes no part file at
+        # all — the single-file contract needs one task to always run so
+        # even an empty export is a VALID parquet/csv-with-header file
+        writer = (out if per_thread else out.repartition(1)).write.mode(
+            "overwrite"
         )
-        if part is None:
-            # should not happen with repartition(1); a 0-byte parquet
-            # would be invalid, so fail loudly rather than emit one
+        if fmt == "csv":
+            writer = writer.option(
+                "header", opts.get("HEADER", "true")
+            ).option("delimiter", opts.get("DELIMITER", ","))
+            writer.csv(out_dir)
+        elif fmt == "json":
+            writer.json(out_dir)
+        else:
+            writer.parquet(out_dir)
+        n = int(obs.get["n"] or 0)
+        if not per_thread:
+            part = next(
+                (
+                    f
+                    for f in sorted(os.listdir(out_dir))
+                    if f.startswith("part-")
+                ),
+                None,
+            )
+            if part is None:
+                    # should not happen with repartition(1); a 0-byte parquet
+                    # would be invalid, so fail loudly rather than emit one
+                shutil.rmtree(out_dir, ignore_errors=True)
+                raise RuntimeError(
+                    f"COPY TO produced no output file: {path}"
+                )
+            os.replace(os.path.join(out_dir, part), path)
             shutil.rmtree(out_dir, ignore_errors=True)
-            raise RuntimeError(f"COPY TO produced no output file: {path}")
-        os.replace(os.path.join(out_dir, part), path)
-        shutil.rmtree(out_dir, ignore_errors=True)
-    return _count_df(dest, n)
+        return _count_df(dest, n)
+
+    return run
 
 
 def _copy_from_source(dest, path: str) -> str:
@@ -1906,7 +1827,7 @@ def _copy_from_source(dest, path: str) -> str:
     return path
 
 
-def _exec_copy_from(dest, query: str):
+def _plan_copy_from(dest, query: str):
     """DuckDB's import statement: ``COPY <table> FROM 'path'
     [(FORMAT parquet|csv|json, HEADER, DELIMITER ',')]``.
 
@@ -1916,22 +1837,28 @@ def _exec_copy_from(dest, query: str):
     cast-on-write policy (try_cast to the declared type, malformed →
     NULL — engine.py A9). Appends through the same staged-write +
     adopt-by-rename path as INSERT…SELECT, so a failed load leaves
-    no partial files and `__row_id`s are assigned engine-side."""
-    m = _COPY_FROM_RE.match(query)
-    table, path, opts_text = m.groups()
+    no partial files and `__row_id`s are assigned engine-side. The
+    plan reads the source file's schema (a read, not a write)."""
+    import glob as _glob
+
+    table, path, opts_text = _COPY_FROM_RE.match(query).groups()
     info = _require_table(dest, table)
     fmt, opts = _copy_format(path, opts_text, stmt="COPY FROM")
+    if fmt == "csv" and opts.get("HEADER", "true").lower() == "false":
+        raise ValueError(
+            "COPY FROM: HEADER false is unsupported — the load"
+            " aligns by column NAME, which headerless CSV cannot"
+            " provide"
+        )
     src_path = _copy_from_source(dest, path)
+    # glob.glob covers literal paths too; Spark's reader expands
+    # */? patterns, so a valid glob must pass
+    if not _glob.glob(src_path):
+        raise FileNotFoundError(f"COPY FROM source not found: {src_path}")
     reader = dest.spark.read
     if fmt == "parquet":
         src = reader.parquet(src_path)
     elif fmt == "csv":
-        if opts.get("HEADER", "true").lower() == "false":
-            raise ValueError(
-                "COPY FROM: HEADER false is unsupported — the load"
-                " aligns by column NAME, which headerless CSV cannot"
-                " provide"
-            )
         src = (
             reader.option("header", True)
             .option("sep", opts.get("DELIMITER", ","))
@@ -1953,49 +1880,66 @@ def _exec_copy_from(dest, query: str):
     out = _with_row_id(
         conform_to_struct(src, info.struct()).drop(ROW_ID)
     ).select(*[f.name for f in info.struct().fields])
-    staging, n = _staged_write(dest, out, info.partition_col)
-    with dest.catalog.lock(dest.database, table):
-        _adopt_staged(
-            dest, staging, dest.catalog.data_dir(dest.database, table)
-        )
-    return _count_df(dest, n)
+
+    def run():
+        staging, n = _staged_write(dest, out, info.partition_col)
+        with dest.catalog.lock(dest.database, table):
+            _adopt_staged(
+                dest, staging, dest.catalog.data_dir(dest.database, table)
+            )
+        return _count_df(dest, n)
+
+    return run
 
 
 # ---------------------------------------------------- views + ALTER
 
 
-def _exec_create_view(dest, query: str):
+def _plan_create_view(dest, query: str):
     """Catalog-persisted logical view: the SQL text survives across
     sessions and re-registers as a temp view per session
     (engine.register_views) — spark.sql's CREATE VIEW would die with
     the session and be invisible to other tenants' engines."""
-    m = _CREATE_VIEW_RE.match(query)
-    or_replace, name, sql = m.groups()
-    _check_ident(dest, name)
-    df = dest.view_df(sql)  # the text must analyze NOW, not at first read
-    dest.catalog.create_view(
-        dest.database, name, sql.strip(), or_replace=bool(or_replace)
-    )
-    df.createOrReplaceTempView(name)
-    return _count_df(dest, 0)
+    or_replace, name, sql = _CREATE_VIEW_RE.match(query).groups()
+    with _naming(name):
+        _check_ident(dest, name)
+        if dest.catalog.get(dest.database, name) is not None:
+            raise ValueError(f"table exists: {name}")
+        if not or_replace and name in dest.catalog.views(dest.database):
+            raise ValueError(f"view exists: {name}")
+        df = dest.view_df(sql)  # the text must analyze NOW, not at first read
+
+    def run():
+        dest.catalog.create_view(
+            dest.database, name, sql.strip(), or_replace=bool(or_replace)
+        )
+        df.createOrReplaceTempView(name)
+        return _count_df(dest, 0)
+
+    run.names = (name,)
+    return run
 
 
-def _exec_drop_view(dest, query: str):
-    m = _DROP_VIEW_RE.match(query)
-    if_exists, name = m.groups()
-    found = dest.catalog.drop_view(dest.database, name)
-    if not found and not if_exists:
-        raise KeyError(f"no such view: {name}")
-    try:
-        dest.spark.catalog.dropTempView(name)
-    except Exception:
-        pass
-    return _count_df(dest, 0)
+def _plan_drop_view(dest, query: str):
+    if_exists, name = _DROP_VIEW_RE.match(query).groups()
+    with _naming(name):
+        if not if_exists and name not in dest.catalog.views(dest.database):
+            raise KeyError(f"no such view: {name}")
+
+    def run():
+        dest.catalog.drop_view(dest.database, name)
+        try:
+            dest.spark.catalog.dropTempView(name)
+        except Exception:
+            pass
+        return _count_df(dest, 0)
+
+    run.names = (name,)
+    return run
 
 
-def _exec_alter_add(dest, query: str):
-    m = _ALTER_ADD_RE.match(query)
-    table, if_not_exists, name, type_ddl = m.groups()
+def _plan_alter_add(dest, query: str):
+    table, if_not_exists, name, type_ddl = _ALTER_ADD_RE.match(query).groups()
     info = _require_table(dest, table)
     # explicit DDL refuses tombstoned names (ingest silently skips
     # them instead — catalog.add_columns); IF NOT EXISTS does not
@@ -2003,37 +1947,42 @@ def _exec_alter_add(dest, query: str):
     dest.catalog.check_not_dropped(info, name)
     if any(c["name"] == name for c in info.columns):
         if if_not_exists:
-            return _count_df(dest, 0)
+            return _noop(dest)
         raise ValueError(f"column exists: {name}")
     field = StructType.fromDDL(f"`{name}` {type_ddl}")[0]
-    _register_schema(dest, table, [field])
-    return _count_df(dest, 0)
+
+    def run():
+        _register_schema(dest, table, [field])
+        return _count_df(dest, 0)
+
+    return run
 
 
-def _exec_alter_drop(dest, query: str):
-    m = _ALTER_DROP_RE.match(query)
-    table, if_exists, name = m.groups()
+def _plan_alter_drop(dest, query: str):
+    table, if_exists, name = _ALTER_DROP_RE.match(query).groups()
     info = _require_table(dest, table)
-    if not any(c["name"] == name for c in info.columns):
-        if if_exists:
-            return _count_df(dest, 0)
-        raise ValueError(f"unknown column: {name}")
-    dest.catalog.drop_column(dest.database, table, name)
-    return _count_df(dest, 0)
+    if if_exists and not any(c["name"] == name for c in info.columns):
+        return _noop(dest)
+    dest.catalog.check_droppable(info, name)
+
+    def run():
+        dest.catalog.drop_column(dest.database, table, name)
+        return _count_df(dest, 0)
+
+    return run
 
 
 def _split_cols(text: str) -> list[str]:
     return [c.strip().strip('`"') for c in text.split(",") if c.strip()]
 
 
-def _exec_compact(dest, query: str):
+def _plan_compact(dest, query: str):
     """COMPACT TABLE t [CLUSTER BY (a, b)] [MIN FILES n] — the SQL
     twin of the admin compaction route (engine.compact_table; CLUSTER
     BY maps to sort_cols range clustering). Answers with the
     compaction summary as a one-row frame."""
-    m = _COMPACT_RE.match(query)
-    table, cols_text, min_files = m.groups()
-    _require_table(dest, table)
+    table, cols_text, min_files = _COMPACT_RE.match(query).groups()
+    info = _require_table(dest, table)
     sort_cols = None
     if cols_text is not None:
         sort_cols = _split_cols(cols_text)
@@ -2041,26 +1990,34 @@ def _exec_compact(dest, query: str):
             # an empty CLUSTER BY () silently compacting unclustered
             # would fake the footer-pruning guarantee the user asked for
             raise ValueError("CLUSTER BY needs at least one column")
-    out = dest.compact_table(
-        table,
-        min_files=int(min_files) if min_files else 8,
-        sort_cols=sort_cols,
-    )
-    from scratchdata_spark.dialect import local_result_df
+        known = {c["name"] for c in info.columns}
+        bad = [c for c in sort_cols if c not in known]
+        if bad:
+            raise ValueError(f"unknown sort column(s): {bad}")
 
-    # driver-built one-row result as a LocalRelation (no-job collect)
-    return local_result_df(
-        dest.spark,
-        [(
-            bool(out.get("compacted")),
-            int(out.get("files_in", out.get("files", 0))),
-            int(out.get("files_out", out.get("files", 0))),
-            int(out.get("generation", 0)) or None,
-            out.get("reason"),
-        )],
-        "compacted boolean, files_in int, files_out int,"
-        " generation int, reason string",
-    )
+    def run():
+        out = dest.compact_table(
+            table,
+            min_files=int(min_files) if min_files else 8,
+            sort_cols=sort_cols,
+        )
+        from scratchdata_spark.dialect import local_result_df
+
+        # driver-built one-row result as a LocalRelation (no-job collect)
+        return local_result_df(
+            dest.spark,
+            [(
+                bool(out.get("compacted")),
+                int(out.get("files_in", out.get("files", 0))),
+                int(out.get("files_out", out.get("files", 0))),
+                int(out.get("generation", 0)) or None,
+                out.get("reason"),
+            )],
+            "compacted boolean, files_in int, files_out int,"
+            " generation int, reason string",
+        )
+
+    return run
 
 
 # -------------------------------------------------------------- UPDATE
@@ -2085,9 +2042,11 @@ def _update_assignments(info, set_clause: str) -> dict[str, str]:
     return out
 
 
-def _exec_update(dest, query: str):
-    m = _UPDATE_RE.match(query)
-    table, alias, rest = m.groups()
+def _plan_update(dest, query: str):
+    table, alias, rest = _UPDATE_RE.match(query).groups()
+    mq = _update_from_to_merge(table, alias, rest)
+    if mq is not None:
+        return _plan_merge(dest, mq)
     info = _require_table(dest, table)
     set_clause, pred = _split_where(dest, rest)
     assigns = _update_assignments(info, set_clause)
@@ -2102,6 +2061,7 @@ def _exec_update(dest, query: str):
     set_cols = {
         name: _expr(dest, tdf, text) for name, text in assigns.items()
     }
+
     def transform(src, info):
         fields = {f.name: f for f in info.struct().fields}
         cols = []
@@ -2116,41 +2076,77 @@ def _exec_update(dest, query: str):
                 cols.append(F.col(f.name))
         return src.select(*cols)
 
-    # matched count runs on the locked snapshot inside _cow_rewrite —
-    # a pre-lock count scan could disagree with the rows actually
-    # rewritten under concurrent DML (UPDATE rewrites everything
-    # anyway, so the rewrite pass dominates; an Observation metric
-    # would fold away with trivial predicates, see _cow_rewrite)
-    _, _, n = _cow_rewrite(
-        dest,
-        table,
-        transform,
-        prune_fn=lambda info, cur_dir: _prunable_partitions(
-            dest, info, pred, cond, cur_dir
-        ),
-        file_prune_pred=pred,
-        count_pred=cond,
-        src_alias=alias,
-    )
-    return _count_df(dest, n)
+    def run():
+        # matched count runs on the locked snapshot inside _cow_rewrite —
+        # a pre-lock count scan could disagree with the rows actually
+        # rewritten under concurrent DML (UPDATE rewrites everything
+        # anyway, so the rewrite pass dominates; an Observation metric
+        # would fold away with trivial predicates, see _cow_rewrite)
+        _, _, n = _cow_rewrite(
+            dest,
+            table,
+            transform,
+            prune_fn=lambda info, cur_dir: _prunable_partitions(
+                dest, info, pred, cond, cur_dir
+            ),
+            file_prune_pred=pred,
+            count_pred=cond,
+            src_alias=alias,
+        )
+        return _count_df(dest, n)
+
+    return run
 
 
 # --------------------------------------------------------------- MERGE
 
 
-def _parse_merge(dest, query: str):
-    """Parse MERGE INTO … USING … ON … WHEN … into
-    (table, t_alias, source_df, s_alias, on_text, matched, not_matched)
-    where matched = [(pred|None, ("update", {col: expr}) | ("delete",))]
-    and not_matched = [(pred|None, col_list|None, values_text|None)]
-    (col_list None + values None = INSERT * by-name). Clauses apply
-    first-match-wins in written order, per the SQL standard."""
+def _merge_any_pred(dest, frame, not_matched):
+    """OR of the WHEN NOT MATCHED predicates (None = always true),
+    compiled against ``frame`` for the single stats pass."""
+    out = None
+    for pred, _cols, _vals in not_matched:
+        pc = _expr(dest, frame, pred) if pred else F.lit(True)
+        out = pc if out is None else (out | pc)
+    return out
+
+
+def _plan_merge(dest, query: str):
+    """MERGE INTO over one copy-on-write rewrite (same flip tail as
+    UPDATE/DELETE/upserts): target left-joins the source on the ON
+    condition with WHEN clauses applied first-match-wins; a target
+    row matching MULTIPLE source rows raises (SQL-standard
+    cardinality rule, enforced with a window count + assert_true —
+    silently picking one would corrupt the table). WHEN NOT MATCHED
+    inserts are the source anti-join, projected by name (INSERT *) or
+    through the listed column expressions. Counts report matched
+    targets + inserted rows, measured on the locked snapshot.
+
+    The parse yields matched = [(pred|None, ("update", {col: expr}) |
+    ("delete",))] and not_matched = [(pred|None, col_list|None,
+    value_texts|None)] (col_list None + values None = INSERT *
+    by-name). Clauses apply first-match-wins in written order, per the
+    SQL standard.
+
+    Scale shape: one shuffle join on the ON condition (AQE picks
+    broadcast when the source is small), one window over target row
+    ids for the cardinality check, inserts re-use the same source.
+    The rewrite is whole-table (no partition pruning yet — the ON
+    text is arbitrary); the statement exists for correctness parity,
+    batch upserts should prefer INSERT … ON CONFLICT which prunes.
+    """
+    from pyspark import StorageLevel
+
+    from scratchdata_spark.dialect import (
+        _mask_literals,
+        _split_top_level_commas_text,
+        _unmask_literals,
+    )
+
     # parse over MASKED text: a string literal containing 'WHEN
     # MATCHED' (or 'ON'/'USING' keywords) must not truncate the
     # non-greedy clause captures (r10 review catch); each captured
     # group unmasks back to its original literals
-    from scratchdata_spark.dialect import _mask_literals, _unmask_literals
-
     masked_q, _lits = _mask_literals(query)
     m = _MERGE_RE.match(masked_q)
     if m is None:
@@ -2188,12 +2184,16 @@ def _parse_merge(dest, query: str):
                 if im is None:
                     raise ValueError(f"MERGE: bad INSERT clause: {action!r}")
                 cols = [c.strip() for c in im.group(1).split(",")]
-                not_matched.append((pred, cols, im.group(2)))
+                vlist = _split_top_level_commas_text(im.group(2))
+                if len(vlist) != len(cols) or len(set(cols)) != len(cols):
+                    raise ValueError(
+                        f"MERGE: INSERT arity mismatch:"
+                        f" {len(cols)} columns, {len(vlist)} values"
+                    )
+                not_matched.append((pred, cols, vlist))
         elif up == "DELETE":
             matched.append((pred, ("delete",)))
         elif up.startswith("UPDATE"):
-            from scratchdata_spark.dialect import _split_top_level_commas_text
-
             set_text = re.match(r"(?is)UPDATE\s+SET\s+(.+)$", action).group(1)
             assigns = {}
             for item in _split_top_level_commas_text(set_text):
@@ -2220,7 +2220,8 @@ def _parse_merge(dest, query: str):
             "MERGE: unparsed WHEN clauses:"
             f" {_unmask_literals(whens_m, _lits)!r}"
         )
-    fields = {f.name for f in info.struct().fields}
+    field_order = [f.name for f in info.struct().fields]
+    fields = {f.name: f for f in info.struct().fields}
     for _pred, act in matched:
         if act[0] == "update":
             for c in act[1]:
@@ -2237,68 +2238,22 @@ def _parse_merge(dest, query: str):
     else:
         src = _source_df(dest, f"SELECT * FROM {using}")
         s_alias = s_alias or using
-    return info, table, t_alias, src, s_alias, on_text, matched, not_matched
-
-
-def _merge_any_pred(dest, frame, not_matched):
-    """OR of the WHEN NOT MATCHED predicates (None = always true),
-    compiled against ``frame`` for the single stats pass."""
-    out = None
-    for pred, _cols, _vals in not_matched:
-        pc = _expr(dest, frame, pred) if pred else F.lit(True)
-        out = pc if out is None else (out | pc)
-    return out
-
-
-def _exec_merge(dest, query: str):
-    """MERGE INTO over one copy-on-write rewrite (same flip tail as
-    UPDATE/DELETE/upserts): target left-joins the source on the ON
-    condition with WHEN clauses applied first-match-wins; a target
-    row matching MULTIPLE source rows raises (SQL-standard
-    cardinality rule, enforced with a window count + assert_true —
-    silently picking one would corrupt the table). WHEN NOT MATCHED
-    inserts are the source anti-join, projected by name (INSERT *) or
-    through the listed column expressions. Counts report matched
-    targets + inserted rows, measured on the locked snapshot.
-
-    Scale shape: one shuffle join on the ON condition (AQE picks
-    broadcast when the source is small), one window over target row
-    ids for the cardinality check, inserts re-use the same source.
-    The rewrite is whole-table (no partition pruning yet — the ON
-    text is arbitrary); the statement exists for correctness parity,
-    batch upserts should prefer INSERT … ON CONFLICT which prunes.
-    """
-    from pyspark import StorageLevel
-
-    (info, table, t_alias, src, s_alias, on_text, matched, not_matched) = (
-        _parse_merge(dest, query)
+    # analyze every expression the rewrite compiles, over an empty join
+    # of target and source — a typo must fail here, before the 200
+    frame = dest.table_df(table).alias(t_alias).crossJoin(
+        src.alias(s_alias).limit(0)
     )
-    field_order = [f.name for f in info.struct().fields]
-    fields = {f.name: f for f in info.struct().fields}
-    src = src.persist(StorageLevel.MEMORY_AND_DISK)
+    _expr(dest, frame, on_text)
+    for pred, act in matched:
+        if pred:
+            _expr(dest, frame, pred)
+        for rhs in act[1].values() if act[0] == "update" else ():
+            _expr(dest, frame, rhs)
+    sframe = src.alias(s_alias).limit(0)
+    for pred, _cols, vlist in not_matched:
+        for text in ([pred] if pred else []) + (vlist or []):
+            _expr(dest, sframe, text)
     counts = {"matched": 0, "inserted": 0}
-
-    # Key-range pruning (sound for a pure alias-qualified equi-key ON
-    # with INTEGRAL columns on BOTH sides — _key_range_prune enforces
-    # that; the same reach bound upserts use): a target row outside
-    # the source's [min, max] key range cannot match ANY source row,
-    # so it cannot be updated, deleted, or affect the anti-join — its
-    # file adopts by rename. A point-merge then rewrites one file,
-    # not the corpus.
-    prune_pred = None
-    m_on = re.match(
-        rf"^\s*({_IDENT})\.({_IDENT})\s*=\s*({_IDENT})\.({_IDENT})\s*$",
-        on_text,
-    )
-    if m_on is not None:
-        a1, c1, a2, c2 = m_on.groups()
-        tcol = scol = None
-        if a1 == t_alias and a2 == s_alias:
-            tcol, scol = c1, c2
-        elif a2 == t_alias and a1 == s_alias:
-            tcol, scol = c2, c1
-        if tcol is not None and tcol in fields and scol in src.columns:
-            prune_pred = _key_range_prune(src, scol, fields[tcol])
 
     def transform(tsrc, info2):
         t = tsrc.alias(t_alias)
@@ -2384,17 +2339,7 @@ def _exec_merge(dest, query: str):
                         if f != ROW_ID
                     ]
                 else:
-                    from scratchdata_spark.dialect import (
-                        _split_top_level_commas_text,
-                    )
-
-                    vlist = _split_top_level_commas_text(vals)
-                    if len(vlist) != len(cols) or len(set(cols)) != len(cols):
-                        raise ValueError(
-                            f"MERGE: INSERT arity mismatch:"
-                            f" {len(cols)} columns, {len(vlist)} values"
-                        )
-                    exprs = dict(zip(cols, vlist))
+                    exprs = dict(zip(cols, vals))
                     proj = [
                         (
                             _expr(dest, part, exprs[f]).cast(
@@ -2448,36 +2393,61 @@ def _exec_merge(dest, query: str):
             merged.unionByName(inserts) if inserts is not None else merged
         )
 
-    prune_fn, file_pred = _key_range_prune_fn(dest, prune_pred)
-    try:
-        _cow_rewrite(
-            dest, table, transform,
-            prune_fn=prune_fn,
-            file_prune_pred=file_pred,
-            want_counts=False,
-            # inserts must run even when no target file is reachable
-            empty_touch_is_noop=False,
-        )
-    finally:
-        src.unpersist()
-    return _count_df(dest, counts["matched"] + counts["inserted"])
+    def run():
+        src.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+        # Key-range pruning (sound for a pure alias-qualified equi-key ON
+        # with INTEGRAL columns on BOTH sides — _key_range_prune enforces
+        # that; the same reach bound upserts use): a target row outside
+        # the source's [min, max] key range cannot match ANY source row,
+        # so it cannot be updated, deleted, or affect the anti-join — its
+        # file adopts by rename. A point-merge then rewrites one file,
+        # not the corpus.
+            prune_pred = None
+            m_on = re.match(
+                rf"^\s*({_IDENT})\.({_IDENT})\s*=\s*({_IDENT})\.({_IDENT})\s*$",
+                on_text,
+            )
+            if m_on is not None:
+                a1, c1, a2, c2 = m_on.groups()
+                tcol = scol = None
+                if a1 == t_alias and a2 == s_alias:
+                    tcol, scol = c1, c2
+                elif a2 == t_alias and a1 == s_alias:
+                    tcol, scol = c2, c1
+                if tcol in fields and scol in src.columns:
+                    prune_pred = _key_range_prune(src, scol, fields[tcol])
+            prune_fn, file_pred = _key_range_prune_fn(dest, prune_pred)
+            _cow_rewrite(
+                dest, table, transform,
+                prune_fn=prune_fn,
+                file_prune_pred=file_pred,
+                want_counts=False,
+                # inserts must run even when no target file is reachable
+                empty_touch_is_noop=False,
+            )
+        finally:
+            src.unpersist()
+        return _count_df(dest, counts["matched"] + counts["inserted"])
+
+    return run
 
 
-_EXECUTORS = {
-    "ctas": _exec_ctas,
-    "create": _exec_create,
-    "insert": _exec_insert,
-    "drop": _exec_drop,
-    "truncate": _exec_truncate,
-    "delete": _exec_delete,
-    "delete_using": _exec_delete_using,
-    "update": _exec_update,
-    "merge": _exec_merge,
-    "copy_to": _exec_copy_to,
-    "copy_from": _exec_copy_from,
-    "create_view": _exec_create_view,
-    "drop_view": _exec_drop_view,
-    "alter_add": _exec_alter_add,
-    "alter_drop": _exec_alter_drop,
-    "compact": _exec_compact,
+_PLANNERS = {
+    "ctas": _plan_ctas,
+    "create": _plan_create,
+    "insert": _plan_insert,
+    "drop": _plan_drop,
+    "truncate": _plan_truncate,
+    "delete": _plan_delete,
+    "delete_using": _plan_delete_using,
+    "update": _plan_update,
+    "merge": _plan_merge,
+    "copy_to": _plan_copy_to,
+    "copy_from": _plan_copy_from,
+    "create_view": _plan_create_view,
+    "drop_view": _plan_drop_view,
+    "alter_add": _plan_alter_add,
+    "alter_drop": _plan_alter_drop,
+    "compact": _plan_compact,
 }

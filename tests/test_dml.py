@@ -487,13 +487,22 @@ def test_ingest_skips_tombstoned_column(dest, tmp_path):
 def test_copy_rejects_nested_statement(dest, tmp_path):
     """COPY (delete from t) must be refused — a nested statement
     would execute during zero-side-effect validation AND again at
-    serialization."""
+    serialization. The same holds for every embedded source: a CTAS
+    body, a MERGE or DELETE USING subquery."""
     before = run(dest, "select count(*) as n from t")[0]["n"]
-    with pytest.raises(Exception, match="must be a SELECT"):
-        run(dest, f"copy (delete from t) to '{tmp_path}/x.json'")
-    with pytest.raises(Exception, match="must be a SELECT"):
-        dest.validate_statement(f"copy (delete from t) to '{tmp_path}/x.json'")
+    for q in (
+        f"copy (delete from t) to '{tmp_path}/x.json'",
+        "create table x as delete from t where v = 0",
+        "merge into t using (delete from t where v = 1) s on true"
+        " when matched then delete",
+        "delete from t using (delete from t where v = 2) s where true",
+    ):
+        with pytest.raises(Exception, match="must be a SELECT"):
+            dest.validate_statement(q)
+        with pytest.raises(Exception, match="must be a SELECT"):
+            run(dest, q)
     assert run(dest, "select count(*) as n from t") == [{"n": before}]
+    assert dest.tables() == ["t"]
 
 
 def test_table_cannot_shadow_view_and_vice_versa(dest):
@@ -531,18 +540,86 @@ def test_empty_copy_to_writes_valid_files(dest, tmp_path):
     assert open(c).readline().strip() == "g"
 
 
+def _warehouse_state(dest):
+    """Every file under the warehouse (catalog entries, stored views,
+    data dirs) with its size and mtime."""
+    import os
+
+    root = dest.catalog.warehouse
+    return {
+        os.path.relpath(os.path.join(dirpath, f), root): (
+            os.stat(os.path.join(dirpath, f)).st_size,
+            os.stat(os.path.join(dirpath, f)).st_mtime_ns,
+        )
+        for dirpath, _dirs, files in os.walk(root)
+        for f in files
+    }
+
+
+def _refused_alike(dest, q, match):
+    """Validation and execution refuse ``q`` with the same error, and
+    neither changes the warehouse."""
+    before = _warehouse_state(dest)
+    errors = []
+    for call in (dest.validate_statement, dest.query_df):
+        with pytest.raises(Exception, match=match) as err:
+            call(q)
+        errors.append((type(err.value), str(err.value).splitlines()[0]))
+    assert errors[0] == errors[1], q
+    assert _warehouse_state(dest) == before, q
+
+
 def test_validation_covers_view_and_alter_failures(dest):
     """Every failure mode must surface at validation, before the
-    HTTP layer commits to a 200."""
+    HTTP layer commits to a 200, with the error execution raises."""
     run(dest, "create view vv as select 1 as x")
-    with pytest.raises(ValueError, match="view exists"):
-        dest.validate_statement("create view vv as select 2 as y")
-    with pytest.raises(ValueError, match="column exists"):
-        dest.validate_statement("alter table t add column v STRING")
+    _refused_alike(dest, "create view vv as select 2 as y", "view exists")
+    _refused_alike(dest, "create view t as select 1 as x", "table exists")
+    _refused_alike(dest, "drop view nosuch", "no such view")
+    _refused_alike(dest, "alter table t add column v STRING", "column exists")
+    _refused_alike(dest, "alter table t drop column nosuch", "unknown column")
+    _refused_alike(dest, "alter table t drop column __row_id", "engine-internal")
     run(dest, "alter table t add column gone INT")
     run(dest, "alter table t drop column gone")
-    with pytest.raises(ValueError, match="resurrect"):
-        dest.validate_statement("alter table t add column gone INT")
+    _refused_alike(dest, "alter table t add column gone INT", "resurrect")
+
+
+def test_each_statement_kind_is_refused_alike(dest, tmp_path):
+    """One failing statement per kind: validation runs the same plan
+    step execution runs, so both raise the same error and neither
+    writes — a CREATE with an unknown PRIMARY KEY column leaves no
+    table behind."""
+    extra = tmp_path / "extra.parquet"
+    dest.spark.createDataFrame(
+        [("x", 1, 2)], "g string, v long, nope long"
+    ).write.parquet(str(extra))
+    for q, match in (
+        ("create table t as select 1 as x", "table exists: t"),
+        ("create table t (a INT)", "table exists: t"),
+        ("create table u (a INT, primary key (zz))", "PRIMARY KEY column: zz"),
+        ("create table u (a INT default nosuch_fn(1))", "nosuch_fn"),
+        ("insert into t values ('q', 1, 2)", "arity"),
+        ("insert into t values ('q', 1) returning nosuch", "nosuch"),
+        ("drop table nosuch", "no such table: nosuch"),
+        ("truncate nosuch", "no such table: nosuch"),
+        ("delete from t where nosuch = 1", "nosuch"),
+        ("delete from t using t as t where true", "aliases collide"),
+        ("update t set nosuch = 1", "unknown column: nosuch"),
+        (
+            "update t set v = s.x from (select 1 as x) s where t.nosuch = s.x",
+            "nosuch",
+        ),
+        (
+            "merge into t using (select 'zz' as g, 1 as nv) s on t.g = s.g"
+            " when not matched then insert (g) values (s.g, s.nv)",
+            "arity",
+        ),
+        (f"copy t to '{tmp_path}/out.xyz'", "unsupported format"),
+        (f"copy t from '{extra}'", "not on t"),
+        ("compact table t cluster by (nope)", "unknown sort column"),
+    ):
+        _refused_alike(dest, q, match)
+    assert dest.tables() == ["t"]
 
 
 def test_file_level_pruned_delete(spark, tmp_path):
@@ -835,6 +912,16 @@ def test_multi_statement_script(spark, tmp_path):
     # a genuinely broken later statement still fails validation
     with pytest.raises(Exception):
         d.validate_statement("select 1; insert into nosuch select 1")
+    # a script may drop a table and create it again, in either form
+    for create, n in (
+        ("create table s2 (k INT)", 0),
+        ("create table s2 as select 5 as k", 1),
+    ):
+        q = f"drop table s2; {create}; select count(*) as n from s2"
+        before = run(d, "select * from s2")
+        assert d.validate_statement(q) is True
+        assert run(d, "select * from s2") == before
+        assert run(d, q) == [{"n": n}]
     # semicolons inside string literals never split
     assert run(d, "select 'a;b' as s") == [{"s": "a;b"}]
 
@@ -1209,10 +1296,8 @@ def test_compact_table_statement(dest, tmp_path):
 def test_compact_statement_rejects_empty_cluster_by(dest):
     with pytest.raises(ValueError, match="at least one column"):
         dest.query_df("COMPACT TABLE t CLUSTER BY ()")
-    from scratchdata_spark import warehouse_dml as W
-
     with pytest.raises(ValueError, match="at least one column"):
-        W.validate(dest, W.normalize("COMPACT TABLE t CLUSTER BY ( , )"))
+        dest.validate_statement("COMPACT TABLE t CLUSTER BY ( , )")
 
 
 def test_copy_from_round_trip(dest, tmp_path):
@@ -1251,10 +1336,54 @@ def test_copy_from_round_trip(dest, tmp_path):
     ) == [{"v": None}]  # NULL v explicit (r11: reference writers emit it)
 
     # validation: missing file fails before execution
-    from scratchdata_spark import warehouse_dml as W
-
     with pytest.raises(FileNotFoundError):
-        W.validate(dest, W.normalize(f"COPY t2 FROM '{tmp_path}/ghost.parquet'"))
+        dest.validate_statement(f"COPY t2 FROM '{tmp_path}/ghost.parquet'")
+
+
+def test_http_refused_ddl_answers_500_before_headers(spark, tmp_path):
+    """CREATE over an existing table and COPY FROM a file with a
+    column the table lacks are refused by validation: a 500 with a
+    JSON error, never a 200 whose body is cut off."""
+    import urllib.error
+    import urllib.parse
+    import urllib.request
+
+    from scratchdata_spark.config import Config
+    from scratchdata_spark.service import build_app
+
+    cfg = Config(api_keys={"k": "default"})
+    cfg.sink.max_file_age_seconds = 3600
+    cfg.api.port = 0  # any free port
+    app = build_app(spark, cfg, str(tmp_path / "app3"))
+    app.server.start()
+    try:
+        base = f"http://127.0.0.1:{app.port}"
+        r = urllib.request.Request(
+            base + "/api/data/insert/ht?api_key=k",
+            data=json.dumps([{"x": 1}]).encode(),
+            method="POST",
+        )
+        urllib.request.urlopen(r, timeout=60).close()
+        app.drain()
+        extra = tmp_path / "src.parquet"
+        spark.createDataFrame([(1, 2)], "x long, nope long").write.parquet(
+            str(extra)
+        )
+        for sql, match in (
+            ("create table ht (a int)", "table exists: ht"),
+            (f"copy ht from '{extra}'", "not on ht"),
+        ):
+            url = (
+                base + "/api/data/query?api_key=k&query="
+                + urllib.parse.quote(sql)
+            )
+            with pytest.raises(urllib.error.HTTPError) as err:
+                urllib.request.urlopen(url, timeout=60)
+            with err.value as resp:
+                assert resp.code == 500, sql
+                assert match in json.loads(resp.read())["error"]
+    finally:
+        app.server.stop()
 
 
 # ------------------------------------------------ r10 review findings

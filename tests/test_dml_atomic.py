@@ -1,4 +1,4 @@
-"""CREATE OR REPLACE crash-atomicity (warehouse_dml._exec_ctas — r10
+"""CREATE OR REPLACE crash-atomicity (warehouse_dml._plan_ctas — r10
 DML review finding #10, closed r11): the staged replacement adopts as
 the NEXT generation of the same table root and the schema + generation
 pointer swap in ONE atomic catalog write, so a process killed at ANY

@@ -104,6 +104,28 @@ def test_copy_spark_to_spark(spark, tmp_path):
     assert vals == [20, 40]
 
 
+def test_copy_spark_to_spark_assigns_row_ids(spark, tmp_path):
+    """The same-cluster copy assigns fresh ``__row_id``s: a source's
+    ids are never carried (two copies of ``select *`` must not
+    duplicate them), and a projection without the column gets ids
+    too."""
+    cat = TableCatalog(str(tmp_path / "wh"))
+    src = SparkDestination(spark, cat, "src")
+    dst = SparkDestination(spark, cat, "dst")
+    f = tmp_path / "in.ndjson"
+    f.write_text('{"v":10}\n{"v":20}\n')
+    src.insert_ndjson("t", str(f))
+    for _ in range(2):
+        assert copy_data(src, "select * from t", dst, "twice") == 2
+    assert copy_data(src, "select v from t", dst, "proj") == 2
+    for table, n in (("twice", 4), ("proj", 2)):
+        row = dst.query_df(
+            "select count(*) as n, count(__row_id) as ids,"
+            f" count(distinct __row_id) as distinct_ids from {table}"
+        ).first()
+        assert (row.n, row.ids, row.distinct_ids) == (n, n, n)
+
+
 def test_copy_spark_to_duckdb(spark, tmp_path):
     cat = TableCatalog(str(tmp_path / "wh"))
     src = SparkDestination(spark, cat, "src2")
