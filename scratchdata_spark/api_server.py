@@ -178,7 +178,9 @@ class Service:
         """Flatten the request's documents, give each row a ``__row_id``
         and buffer them in the sink. All or nothing, one write per
         table per request: every document is checked to be a JSON
-        object before any row is written. Returns the row count."""
+        object, and every key and string to encode to UTF-8 (a lone
+        surrogate escape such as ``\\ud800`` does not), before any row
+        is written. Returns the row count."""
         try:
             parsed = json.loads(body)
         except json.JSONDecodeError as e:
@@ -194,10 +196,14 @@ class Service:
                 if item.row.get("__row_id") is None:
                     item.row["__row_id"] = next_row_id()
                 lines.setdefault(item.table, []).append(
-                    json.dumps(item.row, default=str)
+                    json.dumps(item.row, default=str, ensure_ascii=False)
                 )
-        for tbl, rows in lines.items():
-            self.sink.write_data(destination, tbl, ("\n".join(rows) + "\n").encode())
+        try:
+            data = {t: ("\n".join(r) + "\n").encode() for t, r in lines.items()}
+        except UnicodeEncodeError as e:
+            raise ValueError(f"document is not valid UTF-8: {e}") from e
+        for tbl, payload in data.items():
+            self.sink.write_data(destination, tbl, payload)
         return sum(map(len, lines.values()))
 
     # ------------------------------------------------------------- query

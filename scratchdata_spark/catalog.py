@@ -17,6 +17,20 @@ columns read as NULL — Spark's parquet reader handles subsetting).
 Writes append new parquet files only; per-table locks serialize
 concurrent schema changes (the reference serializes per-(db,table)
 too, ``filesystem.go:330-334``).
+
+Commit point: every entry write (``TableCatalog._put``) stamps a fresh
+random ``commit`` id, and every write that adds or removes a table's
+files ends with one entry write, under the table lock after the files
+are in place (``TableCatalog.commit``, a generation flip or
+``replace_table``). A commit re-reads the entry, so a change another
+instance made while the files were written is kept, not reverted.
+A reader that reads the entry before listing the
+files sees at least that commit's files, and any later write, by any
+instance sharing the warehouse dir, changes the entry: comparing
+entries is the whole freshness rule (``engine.PlanCache``,
+``SparkDestination.register_views``); file timestamps play no part. A
+writer that dies between its files and its commit leaves files that
+new scans list but cached plans miss until the table's next commit.
 """
 
 from __future__ import annotations
@@ -24,6 +38,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql.types import LongType, StructField, StructType
@@ -56,6 +71,9 @@ class TableInfo:
     # constraints it must not be silently dropped (r11 DML
     # differential probe catch)
     defaults: dict = field(default_factory=dict)
+    # the id of the catalog write that made this entry: fresh and
+    # random per write, so two instances' writes never share one
+    commit: str = ""
 
     def struct(self) -> StructType:
         fields = []
@@ -86,9 +104,15 @@ class TableCatalog:
         """Current-generation data directory. Readers and writers both
         resolve through this, so a compaction pointer flip (atomic
         JSON replace) redirects every subsequent scan and insert."""
-        root = self.table_root(database, table)
         info = self.get(database, table)
-        if info is None or info.generation == 0:
+        if info is None:
+            return self.table_root(database, table)
+        return self.data_dir_of(info)
+
+    def data_dir_of(self, info: TableInfo) -> str:
+        """The data directory of the generation ``info`` points at."""
+        root = self.table_root(info.database, info.name)
+        if info.generation == 0:
             return root
         return os.path.join(root, f"g{info.generation}")
 
@@ -119,9 +143,11 @@ class TableCatalog:
             meta.get("dropped", []),
             meta.get("primary_key", []),
             meta.get("defaults", {}),
+            meta.get("commit", ""),
         )
 
     def _put(self, info: TableInfo) -> None:
+        info.commit = uuid.uuid4().hex
         path = self._meta_path(info.database, info.name)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = path + ".tmp"
@@ -134,10 +160,22 @@ class TableCatalog:
                     "dropped": info.dropped,
                     "primary_key": info.primary_key,
                     "defaults": info.defaults,
+                    "commit": info.commit,
                 },
                 f,
             )
         os.replace(tmp, path)
+
+    def commit(self, database: str, table: str) -> None:
+        """Commit the files a write has put in the table's data dir:
+        write the entry, read afresh, under a new commit id. Call
+        under the table lock, after the files are in place. The fresh
+        read keeps any entry change made while the files were written
+        (another instance's ALTER or generation flip)."""
+        info = self.get(database, table)
+        if info is None:
+            raise KeyError(f"no such table: {database}.{table}")
+        self._put(info)
 
     def set_partitioning(self, database: str, table: str, column: str | None) -> None:
         """Declare hive-style directory partitioning for a table. Only
@@ -203,13 +241,15 @@ class TableCatalog:
         """
         info = self.get(database, table) or self.create_empty_table(database, table)
         have = {c["name"] for c in info.columns}
+        n = len(info.columns)
         for name, jt in types.items():
             # tombstoned names are SKIPPED, not refused: a producer
             # still posting the dropped field must not break ingest —
             # only the explicit ALTER ADD path refuses (warehouse_dml)
             if name not in have and name not in info.dropped:
                 info.columns.append({"name": name, "jsontype": jt})
-        self._put(info)
+        if len(info.columns) > n:
+            self._put(info)
         return info
 
     @staticmethod
@@ -282,10 +322,12 @@ class TableCatalog:
         Same append-only, never-retype contract as add_columns."""
         info = self.get(database, table) or self.create_empty_table(database, table)
         have = {c["name"] for c in info.columns}
+        n = len(info.columns)
         for name, ddl in types.items():
             if name not in have and name not in info.dropped:
                 info.columns.append({"name": name, "sparktype": ddl})
-        self._put(info)
+        if len(info.columns) > n:
+            self._put(info)
         return info
 
     # -------------------------------------------------- logical views

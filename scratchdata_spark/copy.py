@@ -124,23 +124,22 @@ def copy_data(
             f.name: _jsontype_of(f.dataType) or "string"
             for f in df.schema.fields
         }
-        with dest.catalog.lock(dest.database, dest_table):
-            dest.catalog.create_empty_table(dest.database, dest_table)
-            dest.catalog.add_columns(dest.database, dest_table, types)
-            info = dest.catalog.get(dest.database, dest_table)
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        # Observation: the row count rides the write job itself — the
-        # plan executes exactly once (a separate .count() would re-run
-        # the whole source query; VERDICT r1 "What's wrong" #4).
-        obs = Observation("copy_rows")
-        out = _with_row_id(conform_to_struct(df, info.struct())).observe(
-            obs, F.count(F.lit(1)).alias("n")
-        )
-        out.write.mode("append").parquet(
-            dest.catalog.data_dir(dest.database, dest_table)
-        )
+        # the lock spans the append and its commit, as in insert_ndjson
+        with dest.catalog.lock(dest.database, dest_table):
+            dest.catalog.create_empty_table(dest.database, dest_table)
+            info = dest.catalog.add_columns(dest.database, dest_table, types)
+            # Observation: the row count rides the write job itself — the
+            # plan executes exactly once (a separate .count() would re-run
+            # the whole source query; VERDICT r1 "What's wrong" #4).
+            obs = Observation("copy_rows")
+            out = _with_row_id(conform_to_struct(df, info.struct())).observe(
+                obs, F.count(F.lit(1)).alias("n")
+            )
+            out.write.mode("append").parquet(dest.catalog.data_dir_of(info))
+            dest.catalog.commit(dest.database, dest_table)
         return int(obs.get["n"])
 
     # generic path: stream NDJSON into disk-spooled newline-aligned

@@ -131,7 +131,7 @@ class DuckDBDestination(RowSerializers, Destination):
                 continue
             m = _COPY_TO_RE.match(stmt)
             if m is not None:
-                resolved = _resolve_copy_target(self, m.group(2))
+                resolved = _resolve_copy_target(self, m.group(2), makedirs=True)
                 out.append(("copy_to", m.group(1), resolved, m.group(3)))
                 continue
             m = _COPY_FROM_RE.match(stmt)

@@ -31,7 +31,7 @@ reused). An entry, and the answers it keeps, serves as long as the
 tables its plan reads and the stored views are unchanged, whoever
 wrote them; texts whose answer depends on the clock, on randomness or
 on files outside the warehouse are never cached, so never kept. A miss
-re-registers only the tables whose state changed
+re-registers only the tables whose catalog entry changed
 (``SparkDestination.register_views``).
 
 Result delivery: an answer whose executed plan has one partition is
@@ -53,9 +53,8 @@ import functools
 import json
 import os
 import re
-import time
 from abc import ABC, abstractmethod
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import IO, Iterator
 from urllib.parse import urlsplit
 
@@ -165,10 +164,6 @@ class Destination(ABC):
         pass
 
 
-# a directory mtime less than this old may still change within its
-# timestamp tick (git's racy-index rule)
-_RACY_NS = 1_000_000_000
-
 # leaves that read no table: SELECT without FROM, range(), VALUES
 _NO_TABLE_LEAVES = frozenset({"OneRowRelation", "Range", "LocalRelation"})
 
@@ -236,44 +231,18 @@ def _compute_current_time(jvm):
     return jvm.org.apache.spark.sql.catalyst.optimizer.ComputeCurrentTime
 
 
-@dataclass(frozen=True)
-class _TableFingerprint:
-    """A table's catalog entry, current data dir, and the ``mtime_ns``
-    of its root (a generation flip creates a g<N> dir there) and of
-    its data dir (files landing in it). ``info``, the entry as read,
-    takes no part in comparisons."""
-
-    columns: str
-    generation: int
-    partition_col: str | None
-    data_dir: str
-    root_mtime: int
-    data_mtime: int
-    info: TableInfo = field(compare=False, repr=False)
-
-    @property
-    def mtime(self) -> int:
-        return max(self.root_mtime, self.data_mtime)
-
-
 @dataclass
 class _Snapshot:
-    """What a plan was analyzed over: the fingerprint of each table,
-    the parquet listing of each table whose fingerprint was racy (less
-    than 1 s old, taken before its scan was created), and the stored
-    views' (name, sql). ``register_views`` returns one for every table;
-    a ``PlanCache`` entry keeps the part its plan reads."""
+    """What a plan was analyzed over: the catalog entry of each table,
+    read before its scan was created, and the stored views' (name,
+    sql). ``register_views`` returns one for every table; a
+    ``PlanCache`` entry keeps the part its plan reads."""
 
-    tables: dict[str, _TableFingerprint]
-    listings: dict[str, list[str]]
+    tables: dict[str, TableInfo]
     views: dict[str, str]
 
     def restrict(self, tables: set[str]) -> _Snapshot:
-        return _Snapshot(
-            {t: self.tables[t] for t in tables},
-            {t: f for t, f in self.listings.items() if t in tables},
-            self.views,
-        )
+        return _Snapshot({t: self.tables[t] for t in tables}, self.views)
 
 
 class PlanCache:
@@ -301,12 +270,11 @@ class PlanCache:
     and the stored views are unchanged, whoever writes them. It keeps
     the snapshot of the ``register_views`` pass before its build,
     restricted to the tables its plan reads (``plan_reads``), and
-    ``get`` re-checks only those: a write to one table leaves plans
-    over other tables warm. Over a racy fingerprint the entry also
-    compares the tables' parquet listings, until a ``get`` more than
-    1 s after the fingerprint's mtimes finds them unchanged. A kept
-    answer is what re-executing the entry's plan would write, since
-    both read the file listing fixed when the plan was analyzed.
+    ``get`` re-reads only those tables' catalog entries: every write
+    commits a new entry (``catalog`` module doc), and a write to one
+    table leaves plans over other tables warm. A kept answer is what
+    re-executing the entry's plan would write, since both read the
+    file listing fixed when the plan was analyzed.
 
     Never cached (``plan_reads`` is None), so never answered from a
     kept text: nondeterministic and clock texts, engine-built catalog
@@ -361,19 +329,10 @@ class PlanCache:
         dest = self._dest
         if dest.catalog.views(dest.database) != snap.views:
             return False
-        if any(dest._table_fingerprint(t) != fp for t, fp in snap.tables.items()):
-            return False
-        if snap.listings:
-            settled = time.time_ns() - _RACY_NS > max(
-                snap.tables[t].mtime for t in snap.listings
-            )
-            for t, files in snap.listings.items():
-                if dest._list_parquet(snap.tables[t].data_dir) != files:
-                    return False
-            if settled:
-                # any later write moves a fingerprint's mtime
-                snap.listings = {}
-        return True
+        return all(
+            dest.catalog.get(dest.database, t) == info
+            for t, info in snap.tables.items()
+        )
 
     def invalidate(self) -> None:
         """Drop every entry."""
@@ -707,6 +666,12 @@ class SparkDestination(DataFrameSerializers, Destination):
     merged schema (missing columns NULL), so reads are a plain
     pushdown-friendly parquet scan with an explicit schema — no footer
     merging, no repartition of historical data on schema change.
+
+    Freshness: every write that adds or removes a table's files ends
+    with one catalog write under the table lock, after its files are
+    in place (``catalog`` module doc). Cached plans and registered
+    scans are valid exactly while the catalog entries they were built
+    over are unchanged, by whichever instance shares the warehouse.
     """
 
     def __init__(
@@ -840,27 +805,19 @@ class SparkDestination(DataFrameSerializers, Destination):
         view for spark.sql, and return the ``_Snapshot`` this pass saw.
 
         Tables: a table's temp view is re-created only when its
-        fingerprint (``_table_fingerprint``) changed. Writes by this
-        instance and by another instance sharing the warehouse dir both
-        show up in the catalog entry or the two mtimes: every writer
-        moves the data dir's mtime. Creating a scan lists the table's
-        files; an unchanged table costs two catalog reads and two stats
-        instead. A table of this database that the catalog no longer
-        lists, dropped here or by another instance, loses its temp
-        view, so naming it fails with table-not-found. The
-        fingerprints and the lock that serializes registration live on
+        catalog entry changed. The entry is read before the scan is
+        created (creating it lists the table's files), and every
+        write, by this instance or by another sharing the warehouse
+        dir, commits a new entry after its files are in place
+        (``catalog`` module doc); so the scan holds at least the files
+        of the commit it was registered under, and an unchanged table
+        costs one catalog read. A table of this database that the
+        catalog no longer lists, dropped here or by another instance,
+        loses its temp view, so naming it fails with table-not-found.
+        The entries and the lock that serializes registration live on
         the Spark session, next to the temp views they describe, so
         destinations sharing a session cannot mistake each other's
         registrations for their own.
-
-        Racy mtimes (as git treats a racy index entry): a write landing
-        in the same timestamp tick as the stat leaves the mtime
-        unchanged. So when either mtime is less than 1 s older than
-        the registration, the fingerprint is not remembered and the
-        next call registers the table again; a write by another
-        instance is therefore always visible at the next miss. Such a
-        table's parquet listing goes into the snapshot, taken before
-        its scan lists the files, for ``PlanCache`` to compare.
 
         Logical views (catalog.views — CREATE VIEW statements) are
         registered after the tables they read, looping until the
@@ -871,24 +828,15 @@ class SparkDestination(DataFrameSerializers, Destination):
         stale results.
 
         View registration eagerly ANALYZES each view's SQL, so the
-        whole view set is fingerprint-cached too: on the (name, sql)
-        set and every table's fingerprint, never a parquet file
-        listing (walking every table's files per query is O(total
-        files) and contradicts the many-files scale story). DuckDB
-        (the reference) re-resolves views per query. A pass that
-        leaves any table's fingerprint unremembered (racy) leaves the
-        view set's unremembered too, so stored views follow a write in
-        the same tick as their tables do.
-
-        Appends into an existing partition subdir of a partitioned
-        table move the data dir's mtime too: a direct Spark append
-        creates and removes its ``_temporary`` dir there, and a staged
-        DML write touches it after adoption (warehouse_dml
-        ``_adopt_staged``).
+        whole view set is cached too: on the (name, sql) set and every
+        table's commit id, never a parquet file listing (walking every
+        table's files per query is O(total files) and contradicts the
+        many-files scale story). DuckDB (the reference) re-resolves
+        views per query.
         """
         # one registration at a time per session (the scope of the
-        # temp views and their fingerprints): a slower concurrent call
-        # must not re-create an older scan after a newer fingerprint
+        # temp views and their catalog entries): a slower concurrent
+        # call must not re-create an older scan after a newer entry
         # was stored for it
         lock = self.spark.__dict__.setdefault(
             "_sd_register_lock", _threading.Lock()
@@ -896,41 +844,21 @@ class SparkDestination(DataFrameSerializers, Destination):
         with lock:
             return self._register_views_locked()
 
-    def _table_fingerprint(self, table: str) -> _TableFingerprint | None:
-        """``table``'s fingerprint as of now; None when it is not in
-        the catalog."""
-        info = self.catalog.get(self.database, table)
-        if info is None:
-            return None
-        d = self.catalog.data_dir(self.database, table)
-        return _TableFingerprint(
-            json.dumps(info.columns),
-            info.generation,
-            info.partition_col,
-            d,
-            self._dir_mtime(self.catalog.table_root(self.database, table)),
-            self._dir_mtime(d),
-            info,
-        )
-
     def _register_views_locked(self) -> _Snapshot:
-        # table name → (database, fingerprint) of the temp view this
-        # session holds; the fingerprint is None while it is racy
+        # table name → (database, catalog entry) of the temp view this
+        # session holds
         registered = self.spark.__dict__.setdefault("_sd_table_fps", {})
-        racy_after = time.time_ns() - _RACY_NS
-        snap = _Snapshot({}, {}, {})
+        snap = _Snapshot({}, {})
         for t in self.catalog.tables(self.database):
-            fp = self._table_fingerprint(t)
-            if fp is None:
+            info = self.catalog.get(self.database, t)
+            if info is None:
                 continue  # dropped since the listing
-            snap.tables[t] = fp
-            if registered.get(t) == (self.database, fp):
+            snap.tables[t] = info
+            if registered.get(t) == (self.database, info):
                 continue
-            racy = fp.mtime > racy_after
-            if racy:
-                snap.listings[t] = self._list_parquet(fp.data_dir)
-            self._scan(fp.info, fp.data_dir).createOrReplaceTempView(t)
-            registered[t] = (self.database, None if racy else fp)
+            scan = self._scan(info, self.catalog.data_dir_of(info))
+            scan.createOrReplaceTempView(t)
+            registered[t] = (self.database, info)
         # a table dropped by any instance leaves the session, so a
         # query naming it fails with table-not-found instead of
         # scanning deleted files
@@ -947,7 +875,10 @@ class SparkDestination(DataFrameSerializers, Destination):
         if not views:
             self._views_fp = None
             return snap
-        fp = hash((tuple(sorted(views.items())), tuple(snap.tables.items())))
+        fp = (
+            tuple(sorted(views.items())),
+            tuple((t, info.commit) for t, info in snap.tables.items()),
+        )
         if fp == getattr(self, "_views_fp", None):
             self._registered_views = set(views)
             return snap
@@ -963,21 +894,10 @@ class SparkDestination(DataFrameSerializers, Destination):
             if len(failed) == len(pending):
                 break  # nothing resolved this pass: remaining are broken
             pending = failed
-        # cache only a fully-registered set over remembered tables: a
-        # broken view must be retried next call (its base table may
-        # just have returned), and a racy table may change under an
-        # unchanged fingerprint
-        self._views_fp = None if pending or snap.listings else fp
+        # cache only a fully-registered set: a broken view must be
+        # retried next call (its base table may just have returned)
+        self._views_fp = None if pending else fp
         return snap
-
-    @staticmethod
-    def _dir_mtime(d: str) -> int:
-        """mtime_ns of a directory, -1 when absent — one stat call,
-        the cross-instance half of a table's fingerprint."""
-        try:
-            return os.stat(d).st_mtime_ns
-        except OSError:
-            return -1
 
     def _rewrite_table_at(self, sql: str) -> str:
         """Swap table_at('t', N) calls (outside literals/comments) for
@@ -1172,10 +1092,11 @@ class SparkDestination(DataFrameSerializers, Destination):
 
     def insert_ndjson(self, table: str, ndjson_path: str | list[str]) -> None:
         """Atomic batch insert (A9): the per-table catalog lock is held
-        across schema registration AND the data write, so two
-        concurrent batches on one table can't interleave their
-        read-modify-write of the schema JSON (the losing batch's new
-        columns would silently unregister). Accepts a file list.
+        across schema registration, the data write and its commit
+        (``TableCatalog.commit``), so two concurrent batches on one
+        table can't interleave their read-modify-write of the schema
+        JSON (the losing batch's new columns would silently
+        unregister). Accepts a file list.
         The batch's types are inferred once, strictly (a malformed
         line fails the batch before any row is appended), and serve
         both the column registration and the append."""
@@ -1183,20 +1104,18 @@ class SparkDestination(DataFrameSerializers, Destination):
         with self.catalog.lock(self.database, table):
             self.create_empty_table(table)
             types = infer_types_file(ndjson_path)
-            self.catalog.add_columns(self.database, table, types)
-            self._append(table, ndjson_path, types)
+            info = self.catalog.add_columns(self.database, table, types)
+            self._append(info, ndjson_path, types)
+            self.catalog.commit(self.database, table)
 
     def _append(
-        self, table: str, ndjson_path: str | list[str], batch_types: dict[str, str]
+        self, info: TableInfo, ndjson_path: str | list[str], batch_types: dict[str, str]
     ) -> None:
-        """Load the batch under ``insert_ndjson``'s lock. Every field is
-        read as a string (exact token preservation), then cast to the
-        registered column type — the documented cast-on-write policy:
-        a value that does not cast becomes NULL (SURVEY §7 "type
-        widening on conflict")."""
-        info = self.catalog.get(self.database, table)
-        if info is None:
-            raise KeyError(f"no such table: {table}")
+        """Load the batch into ``info``'s table under ``insert_ndjson``'s
+        lock. Every field is read as a string (exact token
+        preservation), then cast to the registered column type — the
+        documented cast-on-write policy: a value that does not cast
+        becomes NULL (SURVEY §7 "type widening on conflict")."""
         string_schema = to_struct({k: "string" for k in batch_types})
         # DROPMALFORMED: a line Spark's JSON parser rejects although
         # inference parsed it vanishes instead of becoming an all-NULL row
@@ -1215,7 +1134,7 @@ class SparkDestination(DataFrameSerializers, Destination):
         writer = out.write.mode("append")
         if info.partition_col:
             writer = writer.partitionBy(info.partition_col)
-        writer.parquet(self.catalog.data_dir(self.database, table))
+        writer.parquet(self.catalog.data_dir_of(info))
 
     # ------------------------------------------------------ maintenance
     def set_partitioning(self, table: str, column: str | None) -> None:

@@ -141,13 +141,14 @@ def conform_to_struct(df, struct: StructType):
     """Project ``df`` onto ``struct``'s fields by NAME: present
     columns ``try_cast`` to the declared type (the cast-on-write
     policy, A9 — malformed values become NULL, the column never
-    retypes), absent columns become typed NULLs. The single
+    retypes), absent columns become typed NULLs. Names are quoted, so
+    a key such as ``a.b`` is one column, not a struct field. The single
     implementation behind bulk NDJSON load (engine.py, JDBC), cross-table
     copy (copy.py), and ``COPY … FROM`` (warehouse_dml.py)."""
     from pyspark.sql import functions as F
 
     return df.select(*[
-        F.col(f.name).try_cast(f.dataType).alias(f.name)
+        F.col("`" + f.name.replace("`", "``") + "`").try_cast(f.dataType).alias(f.name)
         if f.name in df.columns
         else F.lit(None).cast(f.dataType).alias(f.name)
         for f in struct.fields

@@ -479,16 +479,11 @@ def _staged_write(dest, out, partition_col) -> tuple[str, int]:
     return staging, int(obs.get["n"] or 0)
 
 
-def _adopt_staged(dest, staging: str, data_dir: str) -> list[str]:
-    """Rename the staged parquet files into the live directory —
-    Spark part-file names carry a job UUID, so appends can't collide.
+def _adopt_staged(staging: str, data_dir: str) -> list[str]:
+    """Rename the staged parquet files into ``data_dir`` — Spark
+    part-file names carry a job UUID, so appends can't collide.
     Returns the adopted destination paths (INSERT … RETURNING reads
-    exactly these files back, never the whole table).
-
-    Files renamed into an existing partition subdir move only that
-    subdir's mtime, so the data dir is touched afterwards: another
-    instance's ``register_views`` fingerprints the data dir's mtime,
-    not every subdir's."""
+    exactly these files back, never the whole table)."""
     adopted: list[str] = []
     for dirpath, _dirs, names in os.walk(staging):
         for f in names:
@@ -499,10 +494,23 @@ def _adopt_staged(dest, staging: str, data_dir: str) -> list[str]:
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.replace(os.path.join(dirpath, f), dst)
             adopted.append(dst)
-    if adopted:
-        os.utime(data_dir)
-    shutil.rmtree(staging, ignore_errors=True)
     return adopted
+
+
+def _append_staged(dest, staging: str, table: str) -> list[str]:
+    """Append the staged files to ``table``: under the table lock,
+    adopt them into the data dir of the entry as read there, then
+    commit (``TableCatalog.commit``). The staging dir goes either way;
+    a table dropped meanwhile fails with ``no such table``."""
+    try:
+        with dest.catalog.lock(dest.database, table):
+            info = _require_table(dest, table)
+            adopted = _adopt_staged(staging, dest.catalog.data_dir_of(info))
+            if adopted:
+                dest.catalog.commit(dest.database, table)
+            return adopted
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 # ------------------------------------------------------ CREATE / CTAS
@@ -621,24 +629,21 @@ def _plan_ctas(dest, query: str):
                     # write may have left a partial g{new_gen}: clear it so
                     # orphaned part files cannot pollute this generation
                     shutil.rmtree(new_dir, ignore_errors=True)
-                    _adopt_staged(dest, staging, new_dir)
+                    _adopt_staged(staging, new_dir)
                     dest.catalog.replace_table(
                         dest.database, table,
                         _catalog_columns(target.fields), new_gen,
                     )
                     dest._retire_generations(root, new_gen)
-            except Exception:
+            finally:
                 # e.g. the table was dropped while we staged: nothing
                 # sweeps _staging, so the spooled result must not leak
                 shutil.rmtree(staging, ignore_errors=True)
-                raise
             return _count_df(dest, n)
         with dest.catalog.lock(dest.database, table):
             dest.catalog.create_empty_table(dest.database, table)
             _register_schema(dest, table, target.fields)
-            _adopt_staged(
-                dest, staging, dest.catalog.data_dir(dest.database, table)
-            )
+            _append_staged(dest, staging, table)
         return _count_df(dest, n)
 
     run.names = (table,)
@@ -1106,10 +1111,7 @@ def _plan_insert(dest, query: str):
             # rename: a self-referential INSERT INTO t SELECT … FROM t
             # reads a listing pinned before any new file lands live
             staging, n = _staged_write(dest, out, info.partition_col)
-            with dest.catalog.lock(dest.database, table):
-                adopted = _adopt_staged(
-                    dest, staging, dest.catalog.data_dir(dest.database, table)
-                )
+            adopted = _append_staged(dest, staging, table)
             if ret_cols is not None:
                 # read back EXACTLY the adopted part files (never the
                 # whole table — a concurrent insert's rows must not leak
@@ -1152,10 +1154,7 @@ def _plan_insert(dest, query: str):
                 out = _with_row_id(deduped)
                 out = out.select(*[f.name for f in info.struct().fields])
                 staging, n = _staged_write(dest, out, info.partition_col)
-                with dest.catalog.lock(dest.database, table):
-                    _adopt_staged(
-                        dest, staging, dest.catalog.data_dir(dest.database, table)
-                    )
+                _append_staged(dest, staging, table)
             return _count_df(dest, n)
 
         # upsert modes: ONE copy-on-write rewrite folds the merge —
@@ -1245,8 +1244,10 @@ def _plan_drop(dest, query: str):
             raise KeyError(f"no such table: {table}")
 
     def run():
-        # the session's temp view goes at the next register_views
-        dest.catalog.drop_table(dest.database, table)
+        # the session's temp view goes at the next register_views;
+        # the lock waits out a write's files-then-commit
+        with dest.catalog.lock(dest.database, table):
+            dest.catalog.drop_table(dest.database, table)
         return _count_df(dest, 0)
 
     run.names = (table,)
@@ -1733,21 +1734,22 @@ def confine_path_under_root(
     return resolved
 
 
-def _resolve_copy_target(dest, path: str) -> str:
+def _resolve_copy_target(dest, path: str, makedirs: bool = False) -> str:
     """Confine COPY TO targets to the destination's export root.
 
     A query API key must not be a filesystem-write primitive: an
     unconfined path lets any key holder overwrite the catalog JSON,
     the metadata sqlite, or another tenant's warehouse files via
     os.replace. When ``dest.export_root`` is set (the HTTP service
-    always sets it), paths confine via :func:`confine_path_under_root`.
-    Embedded/library use with export_root=None keeps the unconfined
-    behavior."""
+    always sets it), paths confine via :func:`confine_path_under_root`,
+    which creates the root only when ``makedirs`` (a write, not a
+    validation, is about to happen). Embedded/library use with
+    export_root=None keeps the unconfined behavior."""
     root = getattr(dest, "export_root", None)
     if root is None:
         return path
     return confine_path_under_root(
-        root, path, "COPY TO target", makedirs=True
+        root, path, "COPY TO target", makedirs=makedirs
     )
 
 
@@ -1762,14 +1764,17 @@ def _plan_copy_to(dest, query: str):
     ``path`` becomes a directory of part files — DuckDB's own
     many-files mode, and the only shape that makes sense for a
     100 TB extract."""
-    source, path, opts_text = _COPY_TO_RE.match(query).groups()
+    source, target, opts_text = _COPY_TO_RE.match(query).groups()
     df = _copy_source_df(dest, source)
-    fmt, opts = _copy_format(path, opts_text)
-    path = _resolve_copy_target(dest, path)  # confinement, pre-200
+    fmt, opts = _copy_format(target, opts_text)
+    _resolve_copy_target(dest, target)  # confinement, pre-200
 
     def run():
         from pyspark.sql import Observation
 
+        # confined again once the root exists: a symlink made since
+        # the plan step must not redirect the write
+        path = _resolve_copy_target(dest, target, makedirs=True)
         obs = Observation()
         out = df.observe(obs, F.count(F.lit(1)).alias("n"))
         per_thread = "PER_THREAD_OUTPUT" in opts
@@ -1883,10 +1888,7 @@ def _plan_copy_from(dest, query: str):
 
     def run():
         staging, n = _staged_write(dest, out, info.partition_col)
-        with dest.catalog.lock(dest.database, table):
-            _adopt_staged(
-                dest, staging, dest.catalog.data_dir(dest.database, table)
-            )
+        _append_staged(dest, staging, table)
         return _count_df(dest, n)
 
     return run
@@ -1952,7 +1954,8 @@ def _plan_alter_add(dest, query: str):
     field = StructType.fromDDL(f"`{name}` {type_ddl}")[0]
 
     def run():
-        _register_schema(dest, table, [field])
+        with dest.catalog.lock(dest.database, table):
+            _register_schema(dest, table, [field])
         return _count_df(dest, 0)
 
     return run
@@ -1966,7 +1969,8 @@ def _plan_alter_drop(dest, query: str):
     dest.catalog.check_droppable(info, name)
 
     def run():
-        dest.catalog.drop_column(dest.database, table, name)
+        with dest.catalog.lock(dest.database, table):
+            dest.catalog.drop_column(dest.database, table, name)
         return _count_df(dest, 0)
 
     return run

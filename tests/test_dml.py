@@ -997,6 +997,21 @@ def test_copy_to_confined_to_export_root(spark, tmp_path):
     assert not outside.exists()
 
 
+def test_copy_to_validation_creates_no_export_root(spark, tmp_path):
+    """Validating a COPY TO writes nothing, not even the export root;
+    executing it creates the root and writes the file."""
+    cat = TableCatalog(str(tmp_path / "wh"))
+    root = tmp_path / "exports"
+    d = SparkDestination(spark.newSession(), cat, "dml", export_root=str(root))
+    p = tmp_path / "seed.ndjson"
+    p.write_text(json.dumps({"g": "a", "v": 1}) + "\n")
+    d.insert_ndjson("t", str(p))
+    assert d.validate_statement("copy t to 'x.csv'")
+    assert not root.exists()
+    assert run(d, "copy t to 'x.csv'") == [{"count": 1}]
+    assert (root / "x.csv").is_file()
+
+
 def test_update_count_matches_snapshot(dest):
     """UPDATE's reported count is computed on the locked snapshot the
     rewrite transforms (not a separate pre-lock scan)."""

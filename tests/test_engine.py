@@ -415,9 +415,8 @@ def test_kept_answers_follow_every_change(spark, dest):
     assert (counts(table), counts(view)) == (3, 2)
 
     # racy: the other instance's write lands in the registration's
-    # mtime tick. The tick is set ahead of the clock so that it stays
-    # racy through the twelve requests of ``counts`` (an entry stops
-    # comparing listings once its tick is 1 s old).
+    # mtime tick. The tick is set ahead of the clock, and put back
+    # after the write, so the mtimes say nothing of it.
     tick = time.time_ns() + 30 * 1_000_000_000
     set_mtimes(tick)
     assert (counts(table), counts(view)) == (3, 2)
@@ -599,7 +598,7 @@ def test_repeated_text_follows_another_instances_writes(spark, dest):
     unchanged: a repeated text sees rows another destination over the
     same catalog (its own session) inserted — with aged directories,
     with racy ones whose mtimes a write in the same tick leaves where
-    they were, and after a racy entry has settled."""
+    they were, and with mtimes just under a second old."""
     sql = "select count(*) n from x"
     _insert(dest, "x", ['{"__row_id": 1, "v": 1}'])
     other = SparkDestination(spark.newSession(), dest.catalog, dest.database)
@@ -626,14 +625,70 @@ def test_repeated_text_follows_another_instances_writes(spark, dest):
     set_mtimes(now)
     assert _count(dest, sql) == 3
 
-    # racy at the build, settled at a later lookup that finds the
-    # same files; a write after that moves the mtimes
+    # mtimes just under a second old at the build, a lookup after
+    # they pass a second, then a write
     set_mtimes(time.time_ns() - 900_000_000)
     assert _count(dest, sql) == 3
     time.sleep(0.2)
     assert _count(dest, sql) == 3
     _insert(other, "x", ['{"__row_id": 4, "v": 4}'])
     assert _count(dest, sql) == 4
+
+
+def test_another_instances_write_is_seen_with_unmoved_mtimes(spark, dest):
+    """Another instance's insert is seen by a repeated text and by a
+    new text, in every format, also when the table's directory mtimes
+    are put back to their values before it (as on a coarse-timestamp
+    or clock-skewed shared file system): readers compare the catalog
+    entry the insert commits, not the file system's timestamps."""
+    _insert(dest, "x", ['{"__row_id": 1, "v": 1}'])
+    other = SparkDestination(spark.newSession(), dest.catalog, dest.database)
+    _age_dirs(dest, ["x"])
+    aged = {
+        d: os.stat(d).st_mtime_ns
+        for d in (
+            dest.catalog.table_root(dest.database, "x"),
+            dest.catalog.data_dir(dest.database, "x"),
+        )
+    }
+    repeated, new = "select count(*) n from x", "select count(v) n from x"
+    for fmt in _FORMATS:
+        assert _values(fmt, _serve(dest, fmt, repeated), "n") in ([1], ["1"])
+    _insert(other, "x", ['{"__row_id": 2, "v": 2}'])
+    for d, ns in aged.items():
+        os.utime(d, ns=(ns, ns))
+    for sql in (repeated, new):
+        for fmt in _FORMATS:
+            assert _values(fmt, _serve(dest, fmt, sql), "n") in ([2], ["2"]), (sql, fmt)
+
+
+def test_schema_change_during_an_insert_survives_its_commit(spark, dest, monkeypatch):
+    """An insert's commit writes the catalog entry as it stands after
+    the append, so an ADD COLUMN and a DROP COLUMN that another
+    instance (its own catalog object, so its own locks) runs while the
+    append writes its files both survive the commit."""
+    _insert(dest, "x", ['{"__row_id": 1, "v": 1, "w": 1}'])
+    other = SparkDestination(
+        spark.newSession(), TableCatalog(dest.catalog.warehouse), dest.database
+    )
+    append = SparkDestination._append
+
+    def append_racing_alter(self, *args):
+        append(self, *args)
+        if self is dest:
+            _serve(other, "json", "ALTER TABLE x ADD COLUMN c BIGINT")
+            _serve(other, "json", "ALTER TABLE x DROP COLUMN w")
+
+    monkeypatch.setattr(SparkDestination, "_append", append_racing_alter)
+    _insert(dest, "x", ['{"__row_id": 2, "v": 2}'])
+    info = dest.catalog.get(dest.database, "x")
+    assert [c["name"] for c in info.columns] == ["__row_id", "v", "c"]
+    assert info.dropped == ["w"]
+    monkeypatch.undo()
+    assert json.loads(_serve(dest, "json", "select v, c from x order by v")) == [
+        {"v": 1, "c": None},
+        {"v": 2, "c": None},
+    ]
 
 
 def test_write_to_one_table_keeps_plans_over_others_warm(dest, monkeypatch):

@@ -779,3 +779,28 @@ def test_stopped_app_releases_its_port(spark, tmp_path):
     with socket.socket() as s:
         s.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
         s.bind(("127.0.0.1", port))
+
+
+def test_dotted_key_is_one_column(app):
+    """A key with a dot is stored as one column of that name, not read
+    as a struct field."""
+    body = json.dumps([{"k": 1, "a.b": 5}]).encode()
+    assert app.service.insert("default", "dotted", body, "horizontal") == 1
+    app.drain()
+    dest = app.service.destinations["default"]
+    assert [r[0] for r in dest.query_df('select "a.b" from dotted').collect()] == [5]
+
+
+def test_lone_surrogate_refused_before_any_row_is_written(app):
+    """A document whose key or string value does not encode to UTF-8
+    (a lone surrogate escape) is refused with 400, and no row of the
+    request is written."""
+    for doc in ({"s": "a\ud800b"}, {"k\udc00": 1}):
+        code, body = _req(
+            app, "POST", "/api/data/insert/surr?api_key=local", [{"s": "ok"}, doc]
+        )
+        assert code == 400 and "UTF-8" in json.loads(body)["error"]
+        with pytest.raises(ValueError, match="UTF-8"):
+            app.service.insert("default", "surr", json.dumps(doc).encode(), "horizontal")
+    app.drain()
+    assert "surr" not in app.service.destinations["default"].tables()
